@@ -1,213 +1,17 @@
 package graft
 
-import graft.functions.{BloomMightContain, CentArgmin, FdMergeAgg, FdSketchAgg, HyperplaneSignature, KllErrBound, KllIsExact, KllMergeAgg, KllN, KllQuantile, KllRank, KllSketchAgg, MgDelta, MgEstimate, MgMergeAgg, MgN, MgSketchAgg, MinHashSignature, RollingGramHashes, SimHashSignature, ThetaAnotBEstimate, ThetaEstimate, ThetaIntersectEstimate, ThetaSketchAgg, ThetaUnionAgg}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** The spark-submit-time registration path for the engine's native
-  * expressions: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * makes `minhash60` / `simhash60` / `hypersig` available to every
-  * session (including pure-SQL users) without any code call. The
-  * in-code `register(...)` helpers on each function object are the
-  * same seam for an already-built session.
+/** Gives a session graft's native SQL functions ([[Registry.functions]]).
+  *
+  * `--conf spark.sql.extensions=graft.GraftExtensions` gives every
+  * session the functions, pure-SQL users included, without a code call.
+  * The optimizer rules are not injected here: call
+  * [[GraftSession.install]]`(spark)` once on the session to add them
+  * ([[GraftSession.install]] says why they go there).
+  * [[GraftSession.build]] does both.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("minhash60"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSignature(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHashSignature].getName, "simhash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHashSignature(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hypersig"),
-      new ExpressionInfo(classOf[HyperplaneSignature].getName, "hypersig"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HyperplaneSignature(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cent_argmin_l2"),
-      new ExpressionInfo(classOf[CentArgmin].getName, "cent_argmin_l2"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CentArgmin(exprs.head, exprs(1), cosine = false)))
-    ext.injectFunction((
-      FunctionIdentifier("cent_argmin_cos"),
-      new ExpressionInfo(classOf[CentArgmin].getName, "cent_argmin_cos"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CentArgmin(exprs.head, exprs(1), cosine = true)))
-    // Spark's internal bloom pair, exposed for explicit semi-join
-    // reduction from pure SQL (see graft.functions.Bloom — the in-code
-    // seam q_join_bloom uses).
-    ext.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(exprs.head)))
-    // The probe is OUR BloomMightContain, not Spark's: the built-in's
-    // codegen emits an ambiguous `(Long)` cast that Janino rejects
-    // whenever the probe folds to a negative literal, silently dropping
-    // the projection to interpreted mode (see graft.functions.BloomProbe).
-    // Theta sketch family: mergeable distinct sketches that support
-    // set INTERSECTION from state (HLL cannot) — see graft.functions
-    // .Theta and q_theta_intersect.
-    ext.injectFunction((
-      FunctionIdentifier("theta_sketch_agg"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "theta_sketch_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ThetaSketchAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("theta_union_agg"),
-      new ExpressionInfo(classOf[ThetaUnionAgg].getName, "theta_union_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ThetaUnionAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "theta_estimate"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ThetaEstimate(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("theta_intersect_estimate"),
-      new ExpressionInfo(classOf[ThetaIntersectEstimate].getName,
-        "theta_intersect_estimate"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ThetaIntersectEstimate(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("theta_anotb_estimate"),
-      new ExpressionInfo(classOf[ThetaAnotBEstimate].getName,
-        "theta_anotb_estimate"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ThetaAnotBEstimate(exprs.head, exprs(1))))
-    // KLL-style rank/quantile sketch family: the mergeable
-    // quantile state the exact-percentile rows swap to at 100 TB —
-    // see graft.functions.Kll and q_kll_quantiles.
-    ext.injectFunction((
-      FunctionIdentifier("kll_sketch_agg"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "kll_sketch_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KllSketchAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("kll_merge_agg"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "kll_merge_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KllMergeAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("kll_quantile"),
-      new ExpressionInfo(classOf[KllQuantile].getName, "kll_quantile"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KllQuantile(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("kll_rank"),
-      new ExpressionInfo(classOf[KllRank].getName, "kll_rank"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KllRank(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("kll_n"),
-      new ExpressionInfo(classOf[KllN].getName, "kll_n"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KllN(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("kll_is_exact"),
-      new ExpressionInfo(classOf[KllIsExact].getName, "kll_is_exact"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KllIsExact(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("kll_err_bound"),
-      new ExpressionInfo(classOf[KllErrBound].getName, "kll_err_bound"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KllErrBound(exprs.head)))
-    // Misra-Gries heavy-hitter summary: the guaranteed-frequent face
-    // beside CMS — see graft.functions.MisraGries and q_mg_heavy.
-    ext.injectFunction((
-      FunctionIdentifier("mg_sketch_agg"),
-      new ExpressionInfo(classOf[MgSketchAgg].getName, "mg_sketch_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MgSketchAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("mg_merge_agg"),
-      new ExpressionInfo(classOf[MgMergeAgg].getName, "mg_merge_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MgMergeAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("mg_estimate"),
-      new ExpressionInfo(classOf[MgEstimate].getName, "mg_estimate"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MgEstimate(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("mg_delta"),
-      new ExpressionInfo(classOf[MgDelta].getName, "mg_delta"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MgDelta(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mg_n"),
-      new ExpressionInfo(classOf[MgN].getName, "mg_n"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MgN(exprs.head)))
-    // Frequent Directions spectral sketch: mergeable l×d PCA state
-    // with a carried shrinkage certificate — see graft.functions
-    // .FreqDir and q_embed_pca_fd.
-    ext.injectFunction((
-      FunctionIdentifier("fd_sketch_agg"),
-      new ExpressionInfo(classOf[FdSketchAgg].getName, "fd_sketch_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FdSketchAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("fd_merge_agg"),
-      new ExpressionInfo(classOf[FdMergeAgg].getName, "fd_merge_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FdMergeAgg.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("rollhash60"),
-      new ExpressionInfo(classOf[RollingGramHashes].getName, "rollhash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RollingGramHashes(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomMightContain(exprs.head, exprs(1))))
-    // Optimizer rule: JOIN ... ON levenshtein(a,b) <= 1 plans as a
-    // deletion-neighborhood equi-join instead of a nested loop (the
-    // in-code seam is graft.plans.FuzzyJoinBlocking.register).
-    ext.injectOptimizerRule(_ => graft.plans.FuzzyJoinBlocking)
-    // Optimizer rule: JOIN ... ON bit_count(a # b) <= r plans as a
-    // pigeonhole banded equi-join instead of a nested loop (the
-    // in-code seam is graft.plans.HammingBandJoin.register).
-    ext.injectOptimizerRule(_ => graft.plans.HammingBandJoin)
-    // Optimizer rule: JOIN ... ON size(array_intersect(a, b)) >= T
-    // plans as a prefix-filtered token equi-join (AllPairs/PPJoin)
-    // instead of a nested loop (the in-code seam is
-    // graft.plans.OverlapJoinBlocking.register).
-    ext.injectOptimizerRule(_ => graft.plans.OverlapJoinBlocking)
-    // Optimizer rule: JOIN ... ON p >= lo AND p <= hi (range/interval
-    // theta join) plans as a binned equi-join instead of a nested
-    // loop (the in-code seam is graft.plans.RangeBinJoin.register).
-    ext.injectOptimizerRule(_ => graft.plans.RangeBinJoin)
-    // Optimizer rule: JOIN ... ON a.lo <= b.hi AND b.lo <= a.hi
-    // (interval-overlap theta join) plans as a binned equi-join with
-    // a canonical shared-bucket filter (the in-code seam is
-    // graft.plans.IntervalOverlapJoin.register).
-    ext.injectOptimizerRule(_ => graft.plans.IntervalOverlapJoin)
-    // Optimizer rule: JOIN ... ON cosine_sim(a, b) >= t plans as a
-    // hyperplane-signature banded equi-join with exact verify — the
-    // LSH recall contract (pigeonhole-exact within the signature
-    // radius) is documented on the rule, every fire logs it, and the
-    // default trigger is the engine's fused cosine_sim ONLY (the
-    // spelled-out ANSI dot/norm form needs the opt-in conf
-    // spark.graft.cosine_band_join.spelled); kill-switch conf
-    // spark.graft.cosine_band_join.enabled (the in-code seam is
-    // graft.plans.CosineBandJoin.register).
-    ext.injectOptimizerRule(_ => graft.plans.CosineBandJoin)
-    // NOTE (r16): r15 additionally injected Spark's ColumnPruning +
-    // CollapseProject here to strip columns the rewrites orphan.
-    // Reverted — the pruning rules reshape the rewrites' output every
-    // fixpoint iteration, the fired-guards stop recognizing their own
-    // output, and planning explodes (see GraftSession for the
-    // measured A/B). The rewrites project their own output instead.
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Registry.functions.foreach(ext.injectFunction)
 }

@@ -14,6 +14,11 @@ import org.apache.spark.sql.SparkSession
   *    (PARQUET_TYPE_ILLEGAL). Set once here — NOT mutated per-read —
   *    so it can never change planning behavior mid-session.
   *    [[Tables.events]] documents the dependency.
+  *  - graft's [[Registry]]: [[GraftExtensions]] gives the session the
+  *    native functions and [[install]] adds the optimizer rules. A
+  *    session built elsewhere gets the same by setting
+  *    `spark.sql.extensions=graft.GraftExtensions` and calling
+  *    `GraftSession.install(spark)` once.
   */
 object GraftSession {
   def build(cpus: String): SparkSession = {
@@ -56,38 +61,38 @@ object GraftSession {
       // interval. Entry points that iterate many queries additionally
       // sweep explicitly via [[releaseCachedBlocks]].
       .config("spark.cleaner.periodicGC.interval", "2min")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Engine optimizer rules are part of the session contract, active
-    // from the first query — NOT registered lazily inside a query
-    // builder, which would make plans (and bench timings) depend on
-    // which query happened to run first. The spark-submit twin is
-    // `--conf spark.sql.extensions=graft.GraftExtensions`.
-    graft.plans.FuzzyJoinBlocking.register(spark)
-    graft.plans.HammingBandJoin.register(spark)
-    graft.plans.OverlapJoinBlocking.register(spark)
-    graft.plans.RangeBinJoin.register(spark)
-    graft.plans.IntervalOverlapJoin.register(spark)
-    graft.plans.CosineBandJoin.register(spark)
-    // REVERTED (r16): r15 appended Spark's ColumnPruning +
-    // CollapseProject to this fixpoint batch so columns the rewrites
-    // orphan would be pruned. That change shipped UNVALIDATED (the
-    // r15 closing test suite never completed) and is a planning
-    // catastrophe on residual-heavy rewritten joins: the pruning
-    // rules reshape the rewrite's output every batch iteration, the
-    // rewriters' fired-guards stop recognizing their own output, the
-    // plan grows per iteration, and logical optimization of
-    // IntervalRuleSpec's 3x3 NaN/Inf interval join goes from 0.4 s to
-    // >170 s (measured r16, PlanIterProbe A/B) — which is what hung
-    // the driver's r15 test stage (tests_ok=false) and every local
-    // suite run since. The orphaned-column hygiene the append bought
-    // is instead done explicitly INSIDE the rewrite (OverlapJoinBlocking
-    // projects the candidate join down to live columns itself).
-    // cosine_sim itself registers eagerly too: the CosineBandJoin
-    // rule matches the expression, so it must resolve in any session
-    // the rules are active in (not just after an ANN query ran).
-    graft.functions.CosSim.register(spark)
+    install(spark)
     spark
+  }
+
+  /** Adds graft's optimizer rules ([[Registry.rules]], in table order)
+    * to the session's `experimental.extraOptimizations`, skipping any
+    * already there. [[build]] calls it; a session that gets its
+    * functions from `spark.sql.extensions=graft.GraftExtensions` calls
+    * it once before its first query. Rules added lazily inside a query
+    * builder instead would make plans, and bench timings, depend on
+    * which query ran first.
+    *
+    * Spark runs `extraOptimizations` as the "User Provided Optimizers"
+    * batch, after operator optimization and holding only these rules.
+    * The other seam, `SparkSessionExtensions.injectOptimizerRule`, puts
+    * them in the "Operator Optimization" fixed-point batches beside
+    * ColumnPruning and CollapseProject. Those reshape a rewrite's output
+    * on every iteration, the rewrites' fired-guards stop recognizing
+    * their own output, and the plan grows until the batch hits its
+    * iteration cap: optimizing IntervalRuleSpec's 3x3 NaN/Inf interval
+    * join there takes far longer than the 5 s ExtensionsSpec allows,
+    * against under a second here. The rewrites prune the columns they
+    * orphan themselves (see OverlapJoinBlocking). ExtensionsSpec pins
+    * the placement.
+    */
+  def install(spark: SparkSession): Unit = {
+    val present = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      present ++ Registry.rules.filterNot(present.contains)
   }
 
   /** Drop every cached/localCheckpointed RDD's blocks (r16).

@@ -159,28 +159,13 @@ object CentAssign {
     if (found) java.lang.Long.valueOf(bestId) else null
   }
 
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cent_argmin_l2",
-      Portable.arity("cent_argmin_l2", 2)(
-        es => CentArgmin(es(0), es(1), cosine = false)),
-      "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cent_argmin_cos",
-      Portable.arity("cent_argmin_cos", 2)(
-        es => CentArgmin(es(0), es(1), cosine = true)),
-      "built-in")
-  }
-
   /** `cent_argmin_l2(vecCol, csCol)` over named columns. */
   def argminL2(s: SparkSession, vecCol: String, csCol: String): Column = {
-    register(s)
     expr(s"cent_argmin_l2(${Portable.quoted(vecCol)}, ${Portable.quoted(csCol)})")
   }
 
   /** `cent_argmin_cos(vecCol, csCol)` over named columns. */
   def argminCos(s: SparkSession, vecCol: String, csCol: String): Column = {
-    register(s)
     expr(s"cent_argmin_cos(${Portable.quoted(vecCol)}, ${Portable.quoted(csCol)})")
   }
 }

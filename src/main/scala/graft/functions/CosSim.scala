@@ -91,15 +91,8 @@ object CosSim {
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      Portable.arity("cosine_sim", 2)(es => CosineSim(es(0), es(1))),
-      "built-in")
-
   /** `cosine_sim(aCol, bCol)` over named columns of the input frame. */
   def cosineSim(s: SparkSession, aCol: String, bCol: String): Column = {
-    register(s)
     expr(s"cosine_sim(${Portable.quoted(aCol)}, ${Portable.quoted(bCol)})")
   }
 }

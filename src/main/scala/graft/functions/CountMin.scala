@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -140,16 +139,6 @@ object CountMin {
           s"$fn needs w in [4, 2^22], d in [1, 16], got ($wv, $dv)")
       else TypeCheckResult.TypeCheckSuccess
     }
-  }
-
-  def register(s: SparkSession): Unit = {
-    val r = s.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("cms_sketch_agg",
-      CmsSketchAgg.fromArgs(_), "built-in")
-    r.createOrReplaceTempFunction("cms_merge_agg",
-      exprs => CmsMergeAgg(exprs.head), "built-in")
-    r.createOrReplaceTempFunction("cms_estimate",
-      exprs => CmsEstimate(exprs.head, exprs(1)), "built-in")
   }
 }
 

@@ -56,10 +56,6 @@ object DpNoise {
       // The key seeds nothing here by design — a key-seeded "crypto"
       // draw would be the stand-in again. Registered-function seam,
       // the CentAssign column-API convention.
-      org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-        .createOrReplaceTempFunction("secure_uniform",
-          Portable.arity("secure_uniform", 0)(_ => SecureUniform()),
-          "built-in")
       expr("secure_uniform()")
   }
 
@@ -76,14 +72,9 @@ object DpNoise {
     * child is evaluated into one local in both the interpreted and
     * codegen paths) and computes the full inverse CDF from that
     * single value. */
-  def laplace(source: Source, key: Column, scale: Double): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction("laplace_unit",
-        Portable.arity("laplace_unit", 1)(exprs => LaplaceUnit(exprs.head)),
-        "built-in")
+  def laplace(source: Source, key: Column, scale: Double): Column =
     round(lit(-scale) *
       call_function("laplace_unit", uniformOpen(source, key)), 6)
-  }
 
   /** Gumbel(0, 1) noise −ln(−ln u), 6dp-rounded — the Gumbel-max
     * trick's per-candidate draw for exponential-mechanism selection

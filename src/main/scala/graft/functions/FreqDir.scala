@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -303,13 +302,6 @@ object FreqDir {
     val (vals, vecs) = jacobiEigen(st.gram())
     val v = Array.tabulate(st.d)(r => vecs(r)(0))
     (vals(0), v)
-  }
-
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fd_sketch_agg", FdSketchAgg.fromArgs(_), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fd_merge_agg", FdMergeAgg.fromArgs(_), "built-in")
   }
 }
 

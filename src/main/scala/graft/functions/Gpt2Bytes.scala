@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -72,10 +71,4 @@ object Gpt2Bytes {
     }
     UTF8String.fromString(sb.toString)
   }
-
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bytes_to_unicode",
-      Portable.arity("bytes_to_unicode", 1)(es => BytesToUnicode(es(0))),
-      "built-in")
 }

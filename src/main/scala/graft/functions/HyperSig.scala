@@ -95,14 +95,7 @@ object HyperSig {
     sig
   }
 
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hypersig",
-      Portable.arity("hypersig", 1)(es => HyperplaneSignature(es(0))),
-      "built-in")
-
   def hypersig(s: SparkSession, embeddingCol: String): Column = {
-    register(s)
     expr(s"hypersig(${Portable.quoted(embeddingCol)})")
   }
 }

@@ -114,24 +114,15 @@ object JaroWinkler {
     jaro + l * PrefixScale * (1 - jaro)
   }
 
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      Portable.arity("jaro_winkler", 2)(es => JaroWinklerSim(es(0), es(1))),
-      "built-in")
-
-  /** Column-API entry point: registers on the active session and
-    * returns `jaro_winkler(aCol, bCol)`. Names are backtick-quoted
-    * ([[Portable.quoted]]) so spaces/dots/hyphens parse back to the
-    * flat attributes the caller named. */
+  /** Column-API entry point: `jaro_winkler(aCol, bCol)`. Names are
+    * backtick-quoted ([[Portable.quoted]]) so spaces/dots/hyphens
+    * parse back to the flat attributes the caller named. */
   def jaroWinkler(s: SparkSession, aCol: String, bCol: String): Column = {
-    register(s)
     expr(s"jaro_winkler(${Portable.quoted(aCol)}, ${Portable.quoted(bCol)})")
   }
 
   /** Column-typed overload — no name interpolation at all. */
   def jaroWinkler(s: SparkSession, a: Column, b: Column): Column = {
-    register(s)
     call_function("jaro_winkler", a, b)
   }
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -317,24 +316,6 @@ object Kll {
         else TypeCheckResult.TypeCheckSuccess
       }
     }
-  }
-
-  def register(s: SparkSession): Unit = {
-    val r = s.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("kll_sketch_agg",
-      KllSketchAgg.fromArgs(_), "built-in")
-    r.createOrReplaceTempFunction("kll_merge_agg",
-      KllMergeAgg.fromArgs(_), "built-in")
-    r.createOrReplaceTempFunction("kll_quantile",
-      exprs => KllQuantile(exprs.head, exprs(1)), "built-in")
-    r.createOrReplaceTempFunction("kll_rank",
-      exprs => KllRank(exprs.head, exprs(1)), "built-in")
-    r.createOrReplaceTempFunction("kll_n",
-      exprs => KllN(exprs.head), "built-in")
-    r.createOrReplaceTempFunction("kll_is_exact",
-      exprs => KllIsExact(exprs.head), "built-in")
-    r.createOrReplaceTempFunction("kll_err_bound",
-      exprs => KllErrBound(exprs.head), "built-in")
   }
 }
 

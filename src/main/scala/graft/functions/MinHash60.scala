@@ -116,20 +116,10 @@ object MinHash60 {
     new GenericArrayData(mins)
   }
 
-  /** Register `minhash60` in the session's function registry
-    * (idempotent) — the public extension seam; SparkSessionExtensions
-    * .injectFunction is the spark-submit-time equivalent. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash60",
-      Portable.arity("minhash60", 1)(es => MinHashSignature(es(0))),
-      "built-in")
-
-  /** Column-API entry point: registers on the active session and
-    * resolves through the parser, which keeps this library off
-    * Spark's private[sql] Column/Expression bridge. */
+  /** Column-API entry point: resolves `minhash60` through the parser,
+    * which keeps this library off Spark's private[sql]
+    * Column/Expression bridge. */
   def minhash60(s: SparkSession, shinglesCol: String): Column = {
-    register(s)
     expr(s"minhash60(${Portable.quoted(shinglesCol)})")
   }
 }

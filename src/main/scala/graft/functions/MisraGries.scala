@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -231,22 +230,6 @@ object MisraGries {
   def delta(bytes: Array[Byte]): Long = deserialize(bytes).delta
 
   def count(bytes: Array[Byte]): Long = deserialize(bytes).n
-
-  def register(s: SparkSession): Unit = {
-    val r = s.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("mg_sketch_agg",
-      MgSketchAgg.fromArgs(_), "built-in")
-    r.createOrReplaceTempFunction("mg_merge_agg",
-      MgMergeAgg.fromArgs(_), "built-in")
-    r.createOrReplaceTempFunction("mg_estimate",
-      exprs => MgEstimate(exprs.head, exprs(1)), "built-in")
-    r.createOrReplaceTempFunction("mg_delta",
-      exprs => MgDelta(exprs.head), "built-in")
-    r.createOrReplaceTempFunction("mg_n",
-      exprs => MgN(exprs.head), "built-in")
-    r.createOrReplaceTempFunction("mg_entries",
-      exprs => MgEntries(exprs.head), "built-in")
-  }
 
   private[functions] def checkK(kExpr: Expression,
       fn: String): TypeCheckResult = {

@@ -80,7 +80,7 @@ object Portable {
   def quoted(name: String): String =
     "`" + name.replace("`", "``") + "`"
 
-  /** Arity-checked builder for `functionRegistry` registration: a
+  /** Arity-checked builder for the [[graft.Registry]] table: a
     * wrong-arity SQL call gets a descriptive analysis-time
     * IllegalArgumentException instead of a bare
     * IndexOutOfBoundsException escaping from `exprs(1)`. */

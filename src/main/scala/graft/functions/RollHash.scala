@@ -110,16 +110,8 @@ object RollHash {
     new GenericArrayData(out)
   }
 
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rollhash60",
-      Portable.arity("rollhash60", 2)(es => RollingGramHashes(es(0), es(1))),
-      "built-in")
-
-  /** Column-API entry point: registers on the active session and
-    * returns `rollhash60(textCol, k)`. */
+  /** Column-API entry point: `rollhash60(textCol, k)`. */
   def rollhash60(s: SparkSession, textCol: String, k: Int): Column = {
-    register(s)
     expr(s"rollhash60(${Portable.quoted(textCol)}, $k)")
   }
 

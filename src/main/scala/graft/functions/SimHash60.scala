@@ -81,14 +81,7 @@ object SimHash60 {
     sig
   }
 
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60",
-      Portable.arity("simhash60", 1)(es => SimHashSignature(es(0))),
-      "built-in")
-
   def simhash60(s: SparkSession, tokensCol: String): Column = {
-    register(s)
     expr(s"simhash60(${Portable.quoted(tokensCol)})")
   }
 }

@@ -188,26 +188,6 @@ object SortedIntersect {
       lbRec(a, if (found) lo + 1 else lo, ar, b, mid + 1, br, depth + 1)
   }
 
-  /** SQL-name seam (used by SortedIntersectSpec to drive both eval
-    * paths; the optimizer rule plants the expressions directly). */
-  def register(s: org.apache.spark.sql.SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      Portable.arity("sorted_intersect_count", 2)(es =>
-        SortedIntersectCount(es(0), es(1))),
-      "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_first",
-      Portable.arity("sorted_intersect_first", 2)(es =>
-        SortedIntersectFirst(es(0), es(1))),
-      "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_suffix_hamming_lb",
-      Portable.arity("sorted_suffix_hamming_lb", 4)(es =>
-        SortedSuffixHammingLB(es(0), es(1), es(2), es(3))),
-      "built-in")
-  }
-
   /** |a ∩ b| by two-pointer merge; see the contract above. */
   def count(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, Intersection, SetOperation, Sketches, Union}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -115,7 +114,7 @@ case class ThetaSketchAgg(
 object ThetaSketchAgg {
   def apply(child: Expression): ThetaSketchAgg = new ThetaSketchAgg(child)
 
-  /** 1-or-2-argument SQL face shared by both registration seams. */
+  /** 1-or-2-argument SQL face (the [[graft.Registry]] builder). */
   def fromArgs(exprs: Seq[Expression]): ThetaSketchAgg = exprs match {
     case Seq(c) => new ThetaSketchAgg(c)
     case Seq(c, k) => ThetaSketchAgg(c, k)
@@ -190,7 +189,7 @@ case class ThetaUnionAgg(
 object ThetaUnionAgg {
   def apply(child: Expression): ThetaUnionAgg = new ThetaUnionAgg(child)
 
-  /** 1-or-2-argument SQL face shared by both registration seams. */
+  /** 1-or-2-argument SQL face (the [[graft.Registry]] builder). */
   def fromArgs(exprs: Seq[Expression]): ThetaUnionAgg = exprs match {
     case Seq(c) => new ThetaUnionAgg(c)
     case Seq(c, k) => ThetaUnionAgg(c, k)
@@ -310,19 +309,5 @@ object Theta {
     d.setA(Sketches.wrapCompactSketch(Memory.wrap(a)))
     d.notB(Sketches.wrapCompactSketch(Memory.wrap(b)))
     Math.round(d.getResult(true, null, true).getEstimate)
-  }
-
-  def register(s: SparkSession): Unit = {
-    val r = s.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("theta_sketch_agg",
-      ThetaSketchAgg.fromArgs(_), "built-in")
-    r.createOrReplaceTempFunction("theta_union_agg",
-      ThetaUnionAgg.fromArgs(_), "built-in")
-    r.createOrReplaceTempFunction("theta_estimate",
-      exprs => ThetaEstimate(exprs.head), "built-in")
-    r.createOrReplaceTempFunction("theta_intersect_estimate",
-      exprs => ThetaIntersectEstimate(exprs.head, exprs(1)), "built-in")
-    r.createOrReplaceTempFunction("theta_anotb_estimate",
-      exprs => ThetaAnotBEstimate(exprs.head, exprs(1)), "built-in")
   }
 }

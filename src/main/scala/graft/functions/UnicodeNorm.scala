@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.text.Normalizer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -56,8 +55,4 @@ object UnicodeNorm {
     if (Normalizer.isNormalized(str, Normalizer.Form.NFC)) s
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
   }
-
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
 }

@@ -2227,7 +2227,6 @@ object AnnOps {
            |ORDER BY vec_a, vec_b""".stripMargin
       },
     ) { (s, dir) =>
-      graft.plans.CosineBandJoin.register(s)
       val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val pert = e.select((col("vec_id") + lit(100000L)).as("vec_id"),
         expr("transform(embedding, (x, i) -> " +
@@ -2280,8 +2279,6 @@ object AnnOps {
            |ORDER BY vec_a, vec_b""".stripMargin
       },
     ) { (s, dir) =>
-      graft.functions.CosSim.register(s)
-      graft.plans.CosineBandJoin.register(s)
       Tables.embeddings(s, dir).select("vec_id", "embedding")
         .createOrReplaceTempView("emb_sql_cos")
       s.sql(AnnOps.SqlCosText)
@@ -2577,7 +2574,6 @@ object AnnOps {
            |  CAST(1 AS BIGINT) AS rayleigh_ok,
            |  CAST(1 AS BIGINT) AS trace_ok""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.FreqDir.register(s)
       val fdL = 16
       val emb = Tables.embeddings(s, dir)
       // The production pass: ONE scan → per-LABEL l×d partials (the

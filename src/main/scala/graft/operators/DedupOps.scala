@@ -158,7 +158,6 @@ object DedupOps {
     // The verify is the merge-walk count over sorted payloads (the
     // optimizer rule's size-only kernel — SortedIntersectSpec pins
     // ≡ size(array_intersect)), not a per-candidate hash-set build.
-    graft.functions.SortedIntersect.register(s)
     val ns = expr("sorted_intersect_count(ta, tb)")
     candIds
       .join(payloads.select(col("doc_id").as("doc_a"),
@@ -1468,7 +1467,6 @@ object DedupOps {
           |SELECT lang, count(*) AS n_new FROM survivors
           |GROUP BY lang ORDER BY lang""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.Bloom.register(s)
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") < 400)
         .select(md5(col("text")).as("h")).distinct()
@@ -1598,7 +1596,6 @@ object DedupOps {
           |  ON levenshtein(a.p_name, b.p_name) <= 1 AND a.p_name < b.p_name
           |ORDER BY name_a, name_b""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.FuzzyJoinBlocking.register(s)
       val names = Tables.part(s, dir).select(col("p_name")).distinct()
       names.select(col("p_name").as("name_a"))
         .join(names.select(col("p_name").as("name_b")),
@@ -1636,7 +1633,6 @@ object DedupOps {
           |  ON levenshtein(a.p_name, b.p_name) <= 2 AND a.p_name < b.p_name
           |GROUP BY ed ORDER BY ed""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.FuzzyJoinBlocking.register(s)
       val names = Tables.part(s, dir).select(col("p_name")).distinct()
       names.select(col("p_name").as("name_a"))
         .join(names.select(col("p_name").as("name_b")),
@@ -1707,7 +1703,6 @@ object DedupOps {
            |  CAST(sum(doc_a + doc_b) AS BIGINT) AS id_checksum
            |FROM p GROUP BY n_shared ORDER BY n_shared""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.OverlapJoinBlocking.register(s)
       val d = Tables.documents(s, dir).select(col("doc_id"),
         array_distinct(expr("filter(split(lower(text), ' '), x -> x <> '')"))
           .as("toks"))
@@ -1768,7 +1763,6 @@ object DedupOps {
           |FROM p GROUP BY n_shared, n_union
           |ORDER BY n_shared, n_union""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.OverlapJoinBlocking.register(s)
       val d = Tables.documents(s, dir).select(col("doc_id"),
         array_distinct(expr("filter(split(lower(text), ' '), x -> x <> '')"))
           .as("toks"))
@@ -1825,7 +1819,6 @@ object DedupOps {
           |FROM p GROUP BY n_shared, n_union
           |ORDER BY n_shared, n_union""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.OverlapJoinBlocking.register(s)
       Tables.documents(s, dir).createOrReplaceTempView("documents")
       s.sql(DedupOps.SqlJaccardText)
     },

@@ -2598,7 +2598,6 @@ object EventsOps {
           |FROM med m JOIN mad d USING (event_type)
           |ORDER BY m.event_type""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.Kll.register(s)
       val ev = Tables.events(s, dir).select("event_type", "value")
       // Pass 1 — value sketch per type (exact median rides along as
       // the oracle-matched value).
@@ -3549,7 +3548,6 @@ object EventsOps {
         "behavior beyond)",
       Some(thetaIntersectSql),
     ) { (s, dir) =>
-      graft.functions.Theta.register(s)
       val ev = thetaEvents(s, dir)
       val tu = ev.select("event_type", "user_id").distinct()
       // Stage 1 — the per-(day, type) sketch state a pipeline persists.
@@ -3597,7 +3595,6 @@ object EventsOps {
           |FROM n LEFT JOIN x USING (event_type)
           |ORDER BY event_type""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.Theta.register(s)
       val tu = thetaEvents(s, dir).select("event_type", "user_id").distinct()
       val exact = tu
         .withColumn("nt", count(lit(1))
@@ -4203,7 +4200,6 @@ object EventsOps {
            |  CAST(max(ov) AS BIGINT) AS max_overlap_s
            |FROM p""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.IntervalOverlapJoin.register(s)
       val sess = sessionized(s, dir)
         .groupBy("user_id", "session_seq")
         .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
@@ -4254,7 +4250,6 @@ object EventsOps {
            |  CAST(count(*) AS BIGINT) AS n_pairs
            |FROM p GROUP BY 1 ORDER BY ov_bucket""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.IntervalOverlapJoin.register(s)
       sessionized(s, dir)
         .groupBy("user_id", "session_seq")
         .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
@@ -5087,7 +5082,6 @@ object EventsOps {
           |  CAST(1 AS BIGINT) AS within_bound
           |FROM top ORDER BY n_events DESC, user_id""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.CountMin.register(s)
       val e = Tables.events(s, dir).select(col("user_id"))
       val sk = e.agg(expr("cms_sketch_agg(user_id)").as("sk"),
         count(lit(1)).as("n_total"))
@@ -5135,7 +5129,6 @@ object EventsOps {
           |FROM events GROUP BY event_type ORDER BY event_type"""
           .stripMargin),
     ) { (s, dir) =>
-      graft.functions.MisraGries.register(s)
       val ev = Tables.events(s, dir)
         .select(col("event_type"), to_date(col("ts")).as("day"),
           col("user_id"))
@@ -5202,7 +5195,6 @@ object EventsOps {
           |FROM events GROUP BY event_type ORDER BY event_type"""
           .stripMargin),
     ) { (s, dir) =>
-      graft.functions.MisraGries.register(s)
       val ev = Tables.events(s, dir).select(col("event_type"), col("user_id"))
       // Exact-window face: raw rows vs the (event_type, count) rollup.
       val typeRaw = ev.agg(expr("mg_sketch_agg(event_type, 8)").as("raw_sk"))
@@ -5265,7 +5257,6 @@ object EventsOps {
           |  CAST(1 AS BIGINT) AS within_bound
           |FROM top ORDER BY n_events DESC, user_id""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.CountMin.register(s)
       val e = Tables.events(s, dir).select(col("user_id"))
       val raw = e.agg(expr("cms_sketch_agg(user_id)").as("raw_sk"),
         count(lit(1)).as("n_total"))
@@ -8039,7 +8030,6 @@ object EventsOps {
         |  CAST(1 AS BIGINT) AS wau_within_5pct
         |FROM w GROUP BY day ORDER BY day""".stripMargin),
   ) { (s, dir) =>
-    graft.functions.Theta.register(s)
     val ev = Tables.events(s, dir)
       .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
       .distinct()
@@ -8104,7 +8094,6 @@ object EventsOps {
         |  CAST(1 AS BIGINT) AS p90_bracket_ok
         |FROM w GROUP BY day ORDER BY day""".stripMargin),
   ) { (s, dir) =>
-    graft.functions.Kll.register(s)
     val ev = Tables.events(s, dir)
       .select(date_trunc("day", col("ts")).as("day"), col("value"))
     // The persisted state: one rank sketch row per day.

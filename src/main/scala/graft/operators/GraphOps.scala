@@ -617,7 +617,6 @@ object GraphOps {
            |FROM cnt CROSS JOIN fin ORDER BY step""".stripMargin
       },
     ) { (s, dir) =>
-      graft.functions.Theta.register(s)
       val edges = edgesOf(s, dir).select("a", "b").localCheckpoint()
       val items = edges.select(col("a").as("item"))
         .unionByName(edges.select(col("b").as("item"))).distinct()
@@ -710,7 +709,6 @@ object GraphOps {
            |FROM cnt ORDER BY item""".stripMargin
       },
     ) { (s, dir) =>
-      graft.functions.Theta.register(s)
       val edges = edgesOf(s, dir).select("a", "b").localCheckpoint()
       val items = edges.select(col("a").as("item"))
         .unionByName(edges.select(col("b").as("item"))).distinct()

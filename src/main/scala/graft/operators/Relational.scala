@@ -387,7 +387,6 @@ object Relational {
            |  ON l_quantity >= lo AND l_quantity < hi
            |GROUP BY band ORDER BY band""".stripMargin),
     ) { (s, dir) =>
-      graft.plans.RangeBinJoin.register(s)
       import s.implicits._
       val bands = Seq(
         ("p0", 1.0, 8.0), ("p1", 8.0, 21.0),
@@ -783,7 +782,6 @@ object Relational {
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
           .stripMargin),
     ) { (s, dir) =>
-      graft.functions.Kll.register(s)
       val li = Tables.lineitem(s, dir).select("l_returnflag", "l_quantity")
       // Pass 1 — the production pass: sketch per group (the exact
       // percentiles ride along only as the oracle-matched values).
@@ -851,7 +849,6 @@ object Relational {
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
           .stripMargin),
     ) { (s, dir) =>
-      graft.functions.Kll.register(s)
       // The (value, count) state table — the only thing the sketch
       // pass ever reads.
       val rollup = Tables.lineitem(s, dir)
@@ -1154,7 +1151,6 @@ object Relational {
            |WHERE o_totalprice > 400000
            |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.Bloom.register(s)
       Tables.orders(s, dir).filter(col("o_totalprice") > 400000)
         .createOrReplaceTempView("bloom_orders")
       Tables.lineitem(s, dir)
@@ -1786,7 +1782,6 @@ object Relational {
           |FROM (VALUES (1),(2),(3),(4),(5),(6),(7)) t(i) ORDER BY i"""
           .stripMargin),
     ) { (s, dir) =>
-      graft.functions.Kll.register(s)
       val li = Tables.lineitem(s, dir).select("l_extendedprice")
       // Pass 1 — the production pass: one scan, one 1-row sketch agg;
       // all 7 boundaries read off the same sketch.
@@ -2122,7 +2117,6 @@ object Relational {
            |  CAST(1 AS BIGINT) AS skipped_files
            |FROM events CROSS JOIN t""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.Bloom.register(s)
       val out = Scratch.dir()
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), col("value"))
@@ -2189,7 +2183,6 @@ object Relational {
            |FROM lineitem
            |WHERE l_orderkey = (SELECT max(l_orderkey) FROM lineitem)""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.Bloom.register(s)
       val out = Scratch.dir()
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"),
@@ -2557,7 +2550,6 @@ object Relational {
     * (staged before band/grid derivation); see the registry entry. */
   private[graft] def snmLinkage(names: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.JaroWinkler.register(names.sparkSession)
     val wB = Window.partitionBy(substring(col("name"), 1, 15))
       .orderBy("name")
     val nb = names.select(col("name"),

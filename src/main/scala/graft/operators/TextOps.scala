@@ -1284,7 +1284,6 @@ object TextOps {
           |    AS BIGINT) AS all_composed
           |FROM n GROUP BY lang ORDER BY lang""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.UnicodeNorm.register(s)
       Tables.documents(s, dir)
         .select(col("lang"),
           regexp_replace(col("text"), "e", "é").as("dec_text"),
@@ -2951,7 +2950,6 @@ object TextOps {
            |ORDER BY mode""".stripMargin
       },
     ) { (s, dir) =>
-      graft.functions.Gpt2Bytes.register(s)
       val docs = Tables.documents(s, dir)
         .withColumn("text",
           concat(col("text"), lit(" café straße")))

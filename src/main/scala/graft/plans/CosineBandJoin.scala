@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.functions.{CosineSim, HyperplaneSignature}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -440,14 +439,5 @@ object CosineBandJoin extends Rule[LogicalPlan] with PredicateHelper {
             val verify = (needCos :+ canonical).reduce(And)
             Project(j.output, Filter(verify, blocked))
         }
-    }
-
-  /** In-code seam for an already-built session (the spark-submit-time
-    * seam is `--conf spark.sql.extensions=graft.GraftExtensions`).
-    * Idempotent. */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(CosineBandJoin)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ CosineBandJoin
     }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -178,13 +177,4 @@ object FuzzyJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
           Project(j.output, Filter(And(cond, canonical), blocked))
       }
   }
-
-  /** In-code seam for an already-built session (the
-    * spark-submit-time seam is `--conf spark.sql.extensions=
-    * graft.GraftExtensions`). Idempotent. */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(FuzzyJoinBlocking)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ FuzzyJoinBlocking
-    }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -154,13 +153,4 @@ object HammingBandJoin extends Rule[LogicalPlan] with PredicateHelper {
           Project(j.output, Filter(And(cond, canonical), blocked))
       }
   }
-
-  /** In-code seam for an already-built session (the spark-submit-time
-    * seam is `--conf spark.sql.extensions=graft.GraftExtensions`).
-    * Idempotent. */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(HammingBandJoin)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ HammingBandJoin
-    }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -198,13 +197,4 @@ object IntervalOverlapJoin extends Rule[LogicalPlan] with PredicateHelper {
           else Union(branches, byName = false, allowMissingCol = false)
       }
   }
-
-  /** In-code seam for an already-built session (the spark-submit-time
-    * seam is `--conf spark.sql.extensions=graft.GraftExtensions`).
-    * Idempotent. */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(IntervalOverlapJoin)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ IntervalOverlapJoin
-    }
 }

@@ -1038,13 +1038,4 @@ object OverlapJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
         case Some((filtered, _)) => Project(j.output, filtered)
       }
   }
-
-  /** In-code seam for an already-built session (the spark-submit-time
-    * seam is `--conf spark.sql.extensions=graft.GraftExtensions`).
-    * Idempotent. */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(OverlapJoinBlocking)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ OverlapJoinBlocking
-    }
 }

@@ -1258,7 +1258,6 @@ object StreamOps {
         "partials slot",
       Some(graft.operators.EventsOps.thetaIntersectSql),
     ) { (s, dir) =>
-      graft.functions.Theta.register(s)
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val scratch = Scratch.dir()
       val q = s.readStream.schema(rawSchema)
@@ -1267,7 +1266,6 @@ object StreamOps {
         .parquet(s"$dir/events.parquet*")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          graft.functions.Theta.register(batch.sparkSession)
           Tables.normalizeTs(batch)
             .select(col("event_type"), col("user_id"))
             .groupBy("event_type")
@@ -1315,7 +1313,6 @@ object StreamOps {
           |  CAST(1 AS BIGINT) AS stream_equals_batch
           |FROM top ORDER BY n_events DESC, user_id""".stripMargin),
     ) { (s, dir) =>
-      graft.functions.CountMin.register(s)
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val scratch = Scratch.dir()
       val q = s.readStream.schema(rawSchema)
@@ -1324,7 +1321,6 @@ object StreamOps {
         .parquet(s"$dir/events.parquet*")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          graft.functions.CountMin.register(batch.sparkSession)
           batch.select(col("user_id"))
             .agg(expr("cms_sketch_agg(user_id)").as("sk"))
             .withColumn("batch_id", lit(bid))
@@ -1384,7 +1380,6 @@ object StreamOps {
           .stripMargin),
     ) { (s, dir) =>
       import java.nio.file.{Files, Paths}
-      graft.functions.Kll.register(s)
       val ev = Tables.events(s, dir)
       val scratch = Scratch.dir()
       val srcDir = Paths.get(scratch, "src")
@@ -1401,7 +1396,6 @@ object StreamOps {
         .parquet(srcDir.toString)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          graft.functions.Kll.register(batch.sparkSession)
           batch.select(col("event_type"), col("value"))
             .groupBy("event_type")
             .agg(expr("kll_sketch_agg(value, 256)").as("sk"))
@@ -1476,7 +1470,6 @@ object StreamOps {
           |FROM events GROUP BY event_type ORDER BY event_type"""
           .stripMargin),
     ) { (s, dir) =>
-      graft.functions.MisraGries.register(s)
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val scratch = Scratch.dir()
       val q = s.readStream.schema(rawSchema)
@@ -1485,7 +1478,6 @@ object StreamOps {
         .parquet(s"$dir/events.parquet*")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          graft.functions.MisraGries.register(batch.sparkSession)
           batch.select(col("event_type"))
             .agg(expr("mg_sketch_agg(event_type, 8)").as("sk"))
             .withColumn("batch_id", lit(bid))

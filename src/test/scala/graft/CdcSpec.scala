@@ -41,7 +41,6 @@ class CdcSpec extends AnyFunSuite {
     // rolling pass iterates CODE POINTS, matching DuckDB's ascii() and
     // the oracle's substr-by-character indexing.
     val texts = Seq(lcgText(500), "héllo wörld", "日本語のテキスト処理", "a😀b😀c d")
-    RollHash.register(spark)
     val got = texts.toDF("text")
       .select(col("text"), expr(s"rollhash60(text, ${TextOps.CdcK})").as("hs"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap

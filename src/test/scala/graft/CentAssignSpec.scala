@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.CentAssign
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,7 +50,6 @@ class CentAssignSpec extends AnyFunSuite {
   }
 
   private def check(df: org.apache.spark.sql.DataFrame): Unit = {
-    CentAssign.register(spark)
     for ((fn, cos) <- Seq("cent_argmin_l2" -> false, "cent_argmin_cos" -> true)) {
       val rows = df
         .withColumn("fused", expr(s"$fn(embedding, cs)"))
@@ -91,7 +89,6 @@ class CentAssignSpec extends AnyFunSuite {
     val bad = c.clone(); bad(3) = Float.NaN
     val cents = Seq(CentF(0L, bad), CentF(1L, c.map(x => x + 0.5f))).toDF()
     val df = packedDf(Seq(0L -> c), cents)
-    CentAssign.register(spark)
     val r = df.withColumn("l2", expr("cent_argmin_l2(embedding, cs)"))
       .withColumn("cos", expr("cent_argmin_cos(embedding, cs)"))
       .select("l2", "cos").head()
@@ -106,7 +103,6 @@ class CentAssignSpec extends AnyFunSuite {
     // must pick 3. Centroid 9 is far away.
     val cents = Seq(CentF(5L, c), CentF(9L, c.map(x => x + 10.0f)), CentF(3L, c)).toDF()
     val df = packedDf(Seq(0L -> c), cents)
-    CentAssign.register(spark)
     val r = df.withColumn("l2", expr("cent_argmin_l2(embedding, cs)"))
       .withColumn("cos", expr("cent_argmin_cos(embedding, cs)"))
       .select("l2", "cos").head()

@@ -16,7 +16,6 @@ class CmsSpec extends AnyFunSuite {
 
   test("linear: byte-identical sketch at any partitioning") {
     import spark.implicits._
-    CountMin.register(spark)
     val keys = (0L until 5000L).map(i => i % 97)
     def sketchAt(parts: Int): Array[Byte] =
       keys.toDF("k").repartition(parts)
@@ -34,7 +33,6 @@ class CmsSpec extends AnyFunSuite {
 
   test("forced collisions (w=4): never underestimates, bound holds") {
     import spark.implicits._
-    CountMin.register(spark)
     val keys = (0L until 2000L).map(i => i % 40) // 40 keys on 4 buckets
     val sk = keys.toDF("k").agg(expr("cms_sketch_agg(k, 4, 4)"))
       .collect().head.getAs[Array[Byte]](0)
@@ -48,7 +46,6 @@ class CmsSpec extends AnyFunSuite {
 
   test("weighted face: rollup bytes equal the raw-row bytes at any split") {
     import spark.implicits._
-    CountMin.register(spark)
     val keys = (0L until 5000L).map(i => i % 97)
     val raw = keys.toDF("k").repartition(1)
       .agg(expr("cms_sketch_agg(k)")).collect().head.getAs[Array[Byte]](0)
@@ -65,7 +62,6 @@ class CmsSpec extends AnyFunSuite {
 
   test("cms_merge_agg rollup equals the one-shot sketch exactly") {
     import spark.implicits._
-    CountMin.register(spark)
     val df = (0L until 3000L).map(i => (i % 5, i % 211)).toDF("g", "k")
     val partials = df.groupBy("g").agg(expr("cms_sketch_agg(k)").as("sk"))
     val rolled = partials.agg(expr("cms_merge_agg(sk)"))

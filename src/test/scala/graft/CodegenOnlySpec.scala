@@ -197,10 +197,6 @@ class CodegenOnlySpec extends AnyFunSuite {
     // Fully-foldable arguments exercise constant folding plus the
     // projection paths over whatever survives folding — the class of
     // shape where both historical breaks hid.
-    CentAssign.register(spark); CosSim.register(spark)
-    MinHash60.register(spark); SimHash60.register(spark)
-    HyperSig.register(spark); RollHash.register(spark)
-    JaroWinkler.register(spark); UnicodeNorm.register(spark)
     val sql =
       """SELECT minhash60(array('a b c', 'b c d')) AS mh,
         |  simhash60(array('a', 'b')) AS sh,
@@ -233,7 +229,6 @@ class CodegenOnlySpec extends AnyFunSuite {
     // xxhash64(42L) folds to a negative long literal — the exact shape
     // that made Spark's built-in BloomFilterMightContain emit
     // uncompilable Java and silently interpret the projection.
-    Bloom.register(spark)
     spark.range(100).createOrReplaceTempView("bloom_cg_t")
     withStrictCodegen {
       val row = spark.sql(
@@ -249,10 +244,6 @@ class CodegenOnlySpec extends AnyFunSuite {
 
   test("all ten functions run end-to-end under CODEGEN_ONLY with whole-stage fallback off") {
     import spark.implicits._
-    CentAssign.register(spark); CosSim.register(spark)
-    MinHash60.register(spark); SimHash60.register(spark)
-    HyperSig.register(spark); Bloom.register(spark); RollHash.register(spark)
-    JaroWinkler.register(spark); UnicodeNorm.register(spark)
     val bloomHex = bloomBytes.map("%02X".format(_)).mkString
     val df = Seq((emb.toArray, emb2.toArray, Seq("a", "b", "a c"), 42L, "rolling"))
       .toDF("e1", "e2", "toks", "k", "txt")

@@ -17,11 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CosineRuleSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = TestSpark.spark
-    CosineBandJoin.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private val Dim = 64
 
@@ -296,7 +292,6 @@ class CosineRuleSpec extends AnyFunSuite {
     // through the parser/analyzer path, with the banded join's
     // marker columns present.
     import spark.implicits._
-    graft.functions.CosSim.register(spark)
     val dir = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
     spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding")

@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.concurrent.duration._
+import scala.concurrent.{Await, Future}
 
 /** Builds a session WITH spark.sql.extensions=graft.GraftExtensions
   * and exercises each injected function from pure SQL — the
@@ -9,6 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * from the default slot first or getOrCreate would return it (and
   * extensions only apply at session construction); it is restored
   * afterwards for the remaining suites.
+  *
+  * The later tests pin that both session kinds, [[GraftSession.build]]
+  * and the extension plus [[GraftSession.install]], get the whole
+  * [[Registry]] table the same way.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -70,6 +79,79 @@ class ExtensionsSpec extends AnyFunSuite {
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)
+    }
+  }
+
+  /** Runs `body` in a session `make` builds fresh, with the shared
+    * test session displaced as in the test above and restored after. */
+  private def inFresh[T](make: => SparkSession)(body: SparkSession => T): T = {
+    val shared = TestSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try body(make)
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  /** The two ways a session gets graft's table: built in code, or
+    * given the functions by the extension and the rules by install. */
+  private val sessionKinds: Seq[(String, () => SparkSession)] = Seq(
+    "GraftSession.build" -> (() => GraftSession.build("2")),
+    "GraftExtensions + install" -> { () =>
+      val s = SparkSession.builder()
+        .master("local[2]")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      GraftSession.install(s)
+      s
+    })
+
+  test("both session kinds hold the rules only in User Provided Optimizers and plan the NaN/Inf interval join fast") {
+    for ((kind, make) <- sessionKinds) inFresh(make()) { s =>
+      val placed = s.sessionState.optimizer.batches.flatMap(b =>
+        b.rules.filter(Registry.rules.contains).map(b.name -> _))
+      assert(placed == Registry.rules.map("User Provided Optimizers" -> _), kind)
+      // IntervalRuleSpec's NaN/Inf join, the shape whose optimization
+      // does not converge when the rules share a batch with
+      // ColumnPruning and CollapseProject.
+      import s.implicits._
+      val l = Seq(("L0", 0.0, 4000.0), ("Ln", Double.NaN, Double.NaN),
+        ("Li", 0.0, Double.PositiveInfinity)).toDF("la", "lo1", "hi1")
+      val r = Seq(("R0", 3500.0, 10000.0), ("Rn", 100.0, Double.NaN),
+        ("Ri", Double.NegativeInfinity, 50.0)).toDF("rb", "lo2", "hi2")
+      val joined = l.join(r, col("lo1") <= col("hi2") && col("lo2") <= col("hi1"))
+      val optimize = Future(joined.queryExecution.optimizedPlan)(
+        scala.concurrent.ExecutionContext.global)
+      Await.result(optimize, 5.seconds)
+    }
+  }
+
+  test("both session kinds resolve every table function, and wrong arity names the function") {
+    val names = Registry.functions.map(_._1.funcName)
+    assert(names.distinct == names)
+    val listed = sessionKinds.map { case (kind, make) =>
+      inFresh(make()) { s =>
+        val reg = s.sessionState.functionRegistry
+        assert(names.filterNot(n => reg.functionExists(FunctionIdentifier(n))).isEmpty, kind)
+        val e = intercept[IllegalArgumentException](s.sql("SELECT minhash60()"))
+        assert(e.getMessage.contains("minhash60"), kind)
+        reg.listFunction().toSet
+      }
+    }
+    assert(listed.distinct.size == 1)
+  }
+
+  test("a fresh GraftSession.build session resolves the Theta names to graft's before any query") {
+    inFresh(GraftSession.build("2")) { s =>
+      def infoClass(name: String): Option[String] =
+        s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name))
+          .map(_.getClassName)
+      assert(infoClass("theta_sketch_agg").contains(
+        classOf[graft.functions.ThetaSketchAgg].getName))
+      assert(infoClass("theta_union_agg").contains(
+        classOf[graft.functions.ThetaUnionAgg].getName))
     }
   }
 }

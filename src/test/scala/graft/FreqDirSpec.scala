@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FreqDirSpec extends AnyFunSuite {
 
-  private lazy val spark = { val s = TestSpark.spark; FreqDir.register(s); s }
+  private lazy val spark = TestSpark.spark
 
   private val D = 16
 

@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FuzzyRuleSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = TestSpark.spark
-    FuzzyJoinBlocking.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private def lev(a: String, b: String): Int = {
     val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>

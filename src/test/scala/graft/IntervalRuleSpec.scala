@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IntervalRuleSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = TestSpark.spark
-    IntervalOverlapJoin.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private val G = IntervalOverlapJoin.BinWidth
 

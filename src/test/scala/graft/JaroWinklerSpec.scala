@@ -38,7 +38,6 @@ class JaroWinklerSpec extends AnyFunSuite {
 
   test("codegen and interpreted paths agree; nulls propagate") {
     import spark.implicits._
-    JaroWinkler.register(spark)
     val df = Seq(("martha", "marhta"), ("dwayne", "duane"),
       ("abcdxxxx", "abcdyyyy"), (null, "x"))
       .toDF("a", "b")

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KllSpec extends AnyFunSuite {
 
-  private lazy val spark = { val s = TestSpark.spark; Kll.register(s); s }
+  private lazy val spark = TestSpark.spark
 
   /** Deterministic pseudo-random doubles (hash mix, no RNG). */
   private def mixed(n: Int): IndexedSeq[Double] =

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MisraGriesSpec extends AnyFunSuite {
 
-  private lazy val spark = { val s = TestSpark.spark; MisraGries.register(s); s }
+  private lazy val spark = TestSpark.spark
 
   private def sketchOf(keys: Seq[String], parts: Int, k: Int): Array[Byte] = {
     import spark.implicits._

@@ -14,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OverlapDfOrderSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = TestSpark.spark
-    OverlapJoinBlocking.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private val T = 3
 

@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OverlapRuleSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = TestSpark.spark
-    OverlapJoinBlocking.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   // split()-produced arrays are the rule's target shape (null-free
   // elements — the containsNull=false scope guard).

@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RangeRuleSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = TestSpark.spark
-    RangeBinJoin.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private val pts: Seq[Double] = Seq(0.5, 1.0, 7.9, 8.0, 15.0, 20.9, 21.0,
     36.5, 37.0, 50.0, 51.0, -3.0, -9.0)

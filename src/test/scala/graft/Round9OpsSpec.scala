@@ -248,7 +248,6 @@ class Round9OpsSpec extends AnyFunSuite {
 
   test("q_bloom_skipping: the bloom manifest prunes most files for a point probe") {
     import org.apache.spark.sql.functions._
-    graft.functions.Bloom.register(spark)
     val out = graft.operators.Scratch.dir()
     val li = graft.Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_shipdate").cast("timestamp").as("sd"))

@@ -30,7 +30,6 @@ class SortedIntersectSpec extends AnyFunSuite {
       Seq((Seq.empty[String], Seq.empty[String]),
         (Seq("a"), Seq.empty[String]),
         (vocab.sorted, vocab.sorted))
-    graft.functions.SortedIntersect.register(spark)
     val df = pairs.toDF("a", "b").select(
       col("a"), col("b"),
       expr("sorted_intersect_count(a, b)").as("cnt"),
@@ -67,7 +66,6 @@ class SortedIntersectSpec extends AnyFunSuite {
       val (sa, sb) = (a.toSet, b.toSet)
       (sa.diff(sb).size + sb.diff(sa).size)
     }
-    graft.functions.SortedIntersect.register(spark)
     val rows = cases.toDF("a", "b", "fa", "fb").select(
       col("a"), col("b"), col("fa"), col("fb"),
       expr("sorted_suffix_hamming_lb(a, b, fa, fb)").as("lb"))

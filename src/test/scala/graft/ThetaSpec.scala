@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ThetaSpec extends AnyFunSuite {
 
-  private lazy val spark = { val s = TestSpark.spark; Theta.register(s); s }
+  private lazy val spark = TestSpark.spark
 
   test("exact mode: estimate IS the distinct count") {
     import spark.implicits._
@@ -101,7 +101,6 @@ class ThetaSpec extends AnyFunSuite {
       .parquet(s"$root/src/*")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        Theta.register(batch.sparkSession)
         batch.groupBy("event_type")
           .agg(expr("theta_sketch_agg(user_id)").as("sk"))
           .withColumn("batch_id", lit(bid))

@@ -36,7 +36,6 @@ class UnicodeNormSpec extends AnyFunSuite {
 
   test("codegen and interpreted paths agree; nulls propagate") {
     import spark.implicits._
-    UnicodeNorm.register(spark)
     val df = Seq(Decomposed, "x", null).toDF("t")
     val got = df.selectExpr("nfc_normalize(t) AS v").collect()
     assert(got(0).getString(0) == Composed)
