@@ -51,9 +51,10 @@ object Registry {
     fn("jaro_winkler", 2)(es => JaroWinklerSim(es(0), es(1))),
     fn("cent_argmin_l2", 2)(es => CentArgmin(es(0), es(1), cosine = false)),
     fn("cent_argmin_cos", 2)(es => CentArgmin(es(0), es(1), cosine = true)),
-    // Text normalization.
+    // Text normalization and character histograms.
     fn("nfc_normalize", 1)(es => NfcNormalize(es(0))),
     fn("bytes_to_unicode", 1)(es => BytesToUnicode(es(0))),
+    fn("char_counts", 2)(es => CharCounts(es(0), es(1))),
     // Merge-walk kernels. OverlapJoinBlocking plants these expressions
     // directly; the names serve SQL callers.
     fn("sorted_intersect_count", 2)(es => SortedIntersectCount(es(0), es(1))),

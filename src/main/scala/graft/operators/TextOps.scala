@@ -37,6 +37,11 @@ object TextOps {
 
   private val toks = split(lower(col("text")), " ", -1)
 
+  /** Code points of `text` other than the space: the "other" bucket of
+    * a one-character `char_counts` histogram. */
+  private val nonSpaceChars =
+    element_at(call_function("char_counts", col("text"), lit(" ")), 2)
+
   /** Max document frequency a 5-gram may have before it is treated as
     * a stop-gram and excluded from decontamination matching. Same
     * rationale as [[DedupOps.MaxShingleDf]]: a stop-gram makes the
@@ -1188,8 +1193,7 @@ object TextOps {
         nTok.cast("long").as("n_tokens"),
         size(regexp_extract_all(lower(col("text")), lit("[a-z]+|[0-9]+"), lit(0)))
           .cast("long").as("n_subtokens"),
-        round(length(regexp_replace(col("text"), " ", "")).cast("double") / nTok, 6)
-          .as("mean_tok_len"),
+        round(nonSpaceChars.cast("double") / nTok, 6).as("mean_tok_len"),
         round(size(filter(toks, w => w === "the" || w === "a")).cast("double") / nTok, 6)
           .as("stopword_ratio"),
         round(size(array_distinct(toks)).cast("double") / nTok, 6)
@@ -1403,8 +1407,7 @@ object TextOps {
         nTok.cast("long").as("n_tokens"),
         size(filter(toks, w => w === "the" || w === "a")).cast("long").as("stopword_n"),
         array_max(transform(toks, w => length(w))).cast("long").as("max_tok_len"),
-        (length(regexp_replace(col("text"), " ", "")).cast("double") / nTok)
-          .as("mean_tok_len"),
+        (nonSpaceChars.cast("double") / nTok).as("mean_tok_len"),
         (size(array_distinct(toks)).cast("double") / nTok).as("ttr"),
       ).select(
         col("doc_id"), col("n_tokens"), col("stopword_n"), col("max_tok_len"),
@@ -2421,8 +2424,10 @@ object TextOps {
       "character-entropy quality signal (the Gopher-style gibberish / " +
         "boilerplate detector): Shannon entropy over a FIXED alphabet " +
         s"(${Alphabet.length} chars + an 'other' bucket) computed as " +
-        "pure per-row expression work — each count is one " +
-        "length-minus-replace, so the corpus NEVER explodes into " +
+        "pure per-row expression work — the Spark side counts every " +
+        "bucket in one byte pass (`char_counts`), the DuckDB oracle " +
+        "as one length-minus-replace per character, so the corpus " +
+        "NEVER explodes into " +
         "per-character rows (at 100 TB a char-keyed explode is " +
         "byte-count-sized; this is zero-shuffle). Per-symbol terms " +
         "n·log2(n) are 6dp-rounded into integer micro-units and " +
@@ -2454,17 +2459,11 @@ object TextOps {
            |FROM t ORDER BY doc_id""".stripMargin
       },
     ) { (s, dir) =>
-      val ks = array(Alphabet.map(c =>
-        (length(col("text"))
-          - length(regexp_replace(col("text"), java.util.regex.Pattern.quote(c.toString), "")))
-          .cast("long")): _*)
       Tables.documents(s, dir)
         .filter(length(col("text")) > 0)
         .select(col("doc_id"),
-          length(col("text")).cast("long").as("n_chars"), ks.as("ks"))
-        .withColumn("ks",
-          concat(col("ks"), array(col("n_chars") - aggregate(col("ks"),
-            lit(0L), (acc, x) => acc + x))))
+          length(col("text")).cast("long").as("n_chars"),
+          call_function("char_counts", col("text"), lit(Alphabet.mkString)).as("ks"))
         .withColumn("s", aggregate(
           filter(col("ks"), x => x > 0),
           lit(0L),

@@ -10,10 +10,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Loud-failure regression gate for the codegen of ALL ten custom
-  * Catalyst expressions (cent_argmin_l2, cent_argmin_cos, cosine_sim,
-  * minhash60, simhash60, hypersig, bloom_might_contain, rollhash60,
-  * jaro_winkler, nfc_normalize).
+/** Loud-failure regression gate for the codegen of graft's custom
+  * Catalyst expressions (the codegen'd ones among `Registry.functions`).
   *
   * Why this exists: broken `doGenCode` output does NOT fail the
   * build — Spark catches the Janino CompileException, logs one WARN,
@@ -111,6 +109,10 @@ class CodegenOnlySpec extends AnyFunSuite {
       ("nfc_normalize",
         NfcNormalize(BoundReference(0, StringType, nullable = true)),
         new GenericInternalRow(Array[Any](UTF8String.fromString("caf\u00e9 e\u0301")))),
+      ("char_counts",
+        CharCounts(BoundReference(0, StringType, nullable = true),
+          Literal(UTF8String.fromString("ac "), StringType)),
+        new GenericInternalRow(Array[Any](UTF8String.fromString("caf\u00e9 Cab")))),
       ("bloom_might_contain(col)",
         BloomMightContain(bloomLit, BoundReference(0, LongType, nullable = false)),
         new GenericInternalRow(Array[Any](42L))),
@@ -263,7 +265,8 @@ class CodegenOnlySpec extends AnyFunSuite {
       expr(s"bloom_might_contain(unhex('$bloomHex'), k)").as("g"),
       expr("rollhash60(txt, 4)").as("h"),
       expr("jaro_winkler(txt, 'rolled')").as("i"),
-      expr("nfc_normalize(txt)").as("j"))
+      expr("nfc_normalize(txt)").as("j"),
+      expr("char_counts(txt, 'lo')").as("k"))
     val baseline = sel.collect()
     withStrictCodegen {
       val strict = sel.collect()

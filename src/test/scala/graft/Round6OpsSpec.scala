@@ -41,6 +41,7 @@ class Round6OpsSpec extends AnyFunSuite {
       (0L, "aaaaaaaa"),            // single symbol -> H = 0
       (1L, "abababab"),            // two equal symbols -> H = 1
       (2L, "aabb##%%"),            // a,b in alphabet; #,% pool in 'other'
+      (3L, "abZ\u00e9"),           // Z and 2-byte e-acute: 'other' = 2 code points
     )
     docs.map { case (i, t) => (i, t, "en", s"src$i", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -49,13 +50,20 @@ class Round6OpsSpec extends AnyFunSuite {
   }
 
   test("q_entropy: planted distributions hit exact Shannon values; 'other' pools") {
-    val rows = run("q_entropy", entDir).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val df = run("q_entropy", entDir)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("regexp_replace"), s"per-character regex pass in plan:\n$plan")
+    val collected = df.collect()
+    val rows = collected.map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(math.abs(rows(0L) - 0.0) < 1e-6, s"uniform single char, got ${rows(0L)}")
     assert(math.abs(rows(1L) - 1.0) < 1e-6, s"two equal symbols, got ${rows(1L)}")
     // doc 2: a=2/8, b=2/8, other=4/8 -> H = 2*(1/4*2) + 1/2*1 = 1.5
     assert(math.abs(rows(2L) - 1.5) < 1e-6,
       s"out-of-alphabet chars must pool into one bucket, got ${rows(2L)}")
+    // doc 3: a=1/4, b=1/4, other=2/4 (code points, not bytes) -> H = 1.5
+    assert(collected.find(_.getLong(0) == 3L).get.getLong(1) == 4L)
+    assert(math.abs(rows(3L) - 1.5) < 1e-6,
+      s"'other' must count code points, got ${rows(3L)}")
   }
 
   test("q_bpe_pairs counts adjacent pairs weighted by word frequency") {
