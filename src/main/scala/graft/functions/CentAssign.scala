@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -160,12 +160,12 @@ object CentAssign {
   }
 
   /** `cent_argmin_l2(vecCol, csCol)` over named columns. */
-  def argminL2(s: SparkSession, vecCol: String, csCol: String): Column = {
+  def argminL2(vecCol: String, csCol: String): Column = {
     expr(s"cent_argmin_l2(${Portable.quoted(vecCol)}, ${Portable.quoted(csCol)})")
   }
 
   /** `cent_argmin_cos(vecCol, csCol)` over named columns. */
-  def argminCos(s: SparkSession, vecCol: String, csCol: String): Column = {
+  def argminCos(vecCol: String, csCol: String): Column = {
     expr(s"cent_argmin_cos(${Portable.quoted(vecCol)}, ${Portable.quoted(csCol)})")
   }
 }

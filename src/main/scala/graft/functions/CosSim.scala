@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -92,7 +92,7 @@ object CosSim {
   }
 
   /** `cosine_sim(aCol, bCol)` over named columns of the input frame. */
-  def cosineSim(s: SparkSession, aCol: String, bCol: String): Column = {
+  def cosineSim(aCol: String, bCol: String): Column = {
     expr(s"cosine_sim(${Portable.quoted(aCol)}, ${Portable.quoted(bCol)})")
   }
 }

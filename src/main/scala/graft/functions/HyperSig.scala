@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -95,7 +95,7 @@ object HyperSig {
     sig
   }
 
-  def hypersig(s: SparkSession, embeddingCol: String): Column = {
+  def hypersig(embeddingCol: String): Column = {
     expr(s"hypersig(${Portable.quoted(embeddingCol)})")
   }
 }

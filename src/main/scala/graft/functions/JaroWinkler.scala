@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -117,12 +117,12 @@ object JaroWinkler {
   /** Column-API entry point: `jaro_winkler(aCol, bCol)`. Names are
     * backtick-quoted ([[Portable.quoted]]) so spaces/dots/hyphens
     * parse back to the flat attributes the caller named. */
-  def jaroWinkler(s: SparkSession, aCol: String, bCol: String): Column = {
+  def jaroWinkler(aCol: String, bCol: String): Column = {
     expr(s"jaro_winkler(${Portable.quoted(aCol)}, ${Portable.quoted(bCol)})")
   }
 
   /** Column-typed overload — no name interpolation at all. */
-  def jaroWinkler(s: SparkSession, a: Column, b: Column): Column = {
+  def jaroWinkler(a: Column, b: Column): Column = {
     call_function("jaro_winkler", a, b)
   }
 }

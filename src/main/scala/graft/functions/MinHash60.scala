@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -119,7 +119,7 @@ object MinHash60 {
   /** Column-API entry point: resolves `minhash60` through the parser,
     * which keeps this library off Spark's private[sql]
     * Column/Expression bridge. */
-  def minhash60(s: SparkSession, shinglesCol: String): Column = {
+  def minhash60(shinglesCol: String): Column = {
     expr(s"minhash60(${Portable.quoted(shinglesCol)})")
   }
 }

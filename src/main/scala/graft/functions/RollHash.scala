@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -111,7 +111,7 @@ object RollHash {
   }
 
   /** Column-API entry point: `rollhash60(textCol, k)`. */
-  def rollhash60(s: SparkSession, textCol: String, k: Int): Column = {
+  def rollhash60(textCol: String, k: Int): Column = {
     expr(s"rollhash60(${Portable.quoted(textCol)}, $k)")
   }
 

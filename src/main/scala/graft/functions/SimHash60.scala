@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -81,7 +81,7 @@ object SimHash60 {
     sig
   }
 
-  def simhash60(s: SparkSession, tokensCol: String): Column = {
+  def simhash60(tokensCol: String): Column = {
     expr(s"simhash60(${Portable.quoted(tokensCol)})")
   }
 }

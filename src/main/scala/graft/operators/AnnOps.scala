@@ -237,8 +237,8 @@ object AnnOps {
     * [[graft.functions.CosSim]] expression (one codegen'd pass) —
     * bit-identical to the three-fold higher-order form it replaced,
     * which CosSimSpec asserts. */
-  private def cosSim(s: SparkSession, a: String, b: String): Column =
-    round(graft.functions.CosSim.cosineSim(s, a, b), 6)
+  private def cosSim(a: String, b: String): Column =
+    round(graft.functions.CosSim.cosineSim(a, b), 6)
 
   /** Per-probe top-k over a (probe_id, neighbor_id, cos_sim) frame:
     * row_number window = per-partition heap + one shuffle of survivors. */
@@ -255,8 +255,8 @@ object AnnOps {
     * band b = bits [8b, 8b+8) of the signature — identical to the
     * composed per-plane form (HyperSigSpec proves it).
     */
-  private def bandColsFused(s: SparkSession): Seq[Column] = {
-    val sig = HyperSig.hypersig(s, "embedding")
+  private def bandColsFused: Seq[Column] = {
+    val sig = HyperSig.hypersig("embedding")
     (0 until NumBands).map { b =>
       shiftright(sig, b * BandBits).bitwiseAND(lit((1L << BandBits) - 1))
     }
@@ -645,7 +645,7 @@ object AnnOps {
     val packed = broadcast(packCents(cents))
     def assign(df: org.apache.spark.sql.DataFrame) = df.crossJoin(packed)
       .withColumn("cell_id",
-        graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+        graft.functions.CentAssign.argminL2("embedding", "cs"))
       .select(col("vec_id"), col("cell_id"), col("embedding"))
     // Test side probes its nprobe nearest cells; the reported cell_id
     // stays the primary one (rn=1 twin in the oracle).
@@ -661,7 +661,7 @@ object AnnOps {
     // ride through the match aggregation. Train lives in ONE cell, so
     // a pair meets at most once even under multi-probe routing.
     val sims = tProbes.join(r, Seq("cell_id"))
-      .select(col("vec_id"), cosSim(s, "te", "re").as("cs"))
+      .select(col("vec_id"), cosSim("te", "re").as("cs"))
       .filter(col("cs") >= threshold)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_train_matches"), max(col("cs")).as("max_cos"))
@@ -696,7 +696,7 @@ object AnnOps {
     val packed = broadcast(packCents(cents))
     val assign = e.crossJoin(packed)
       .withColumn("cent_id",
-        graft.functions.CentAssign.argminCos(s, "embedding", "cs"))
+        graft.functions.CentAssign.argminCos("embedding", "cs"))
       .select(col("vec_id"), col("embedding"), col("cent_id"))
     val probeCells = e.filter(col("vec_id") < NumProbes)
       .withColumn("vn", sqrt(normSq(col("embedding"))))
@@ -766,7 +766,7 @@ object AnnOps {
     val packed = broadcast(packCents(cents))
     val corpus = e.crossJoin(packed)
       .withColumn("cell_id",
-        graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+        graft.functions.CentAssign.argminL2("embedding", "cs"))
       .select(col("cell_id"), col("vec_id").as("neighbor_id"),
         col("embedding").as("ne"))
     val queries = e.withColumn("vn2", normSq(col("embedding")))
@@ -779,7 +779,7 @@ object AnnOps {
     queries.join(corpus, Seq("cell_id"))
       .filter(col("neighbor_id") =!= col("vec_id"))
       .select(col("vec_id"), col("neighbor_id"),
-        cosSim(s, "qe", "ne").as("cos_sim"))
+        cosSim("qe", "ne").as("cos_sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= KnnK)
   }
@@ -868,7 +868,7 @@ object AnnOps {
       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     e.crossJoin(broadcast(packCents(cents)))
       .withColumn("cent_id",
-        graft.functions.CentAssign.argminL2(e.sparkSession, "embedding", "cs"))
+        graft.functions.CentAssign.argminL2("embedding", "cs"))
       .select(col("cent_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("cent_id"), col("pos").cast("long").as("pos"),
         col("v").cast("double").as("val"))
@@ -1003,7 +1003,7 @@ object AnnOps {
       rankTopK(broadcast(probes)
         .join(e, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
     },
 
     Q(
@@ -1077,7 +1077,7 @@ object AnnOps {
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val bands = e.select(col("vec_id"), col("embedding"),
-        posexplode(array(bandColsFused(s): _*)).as(Seq("band_id", "band_val")))
+        posexplode(array(bandColsFused: _*)).as(Seq("band_id", "band_val")))
       val probes = bands.filter(col("vec_id") < NumProbes)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
           col("band_id"), col("band_val"))
@@ -1089,7 +1089,7 @@ object AnnOps {
           col("b.vec_id").as("neighbor_id"), col("b.embedding").as("ne"))
         .distinct()
       rankTopK(cands.select(col("probe_id"), col("neighbor_id"),
-        cosSim(s, "pe", "ne").as("cos_sim")))
+        cosSim("pe", "ne").as("cos_sim")))
     },
 
     Q(
@@ -1159,7 +1159,7 @@ object AnnOps {
         .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("pe")), "probe_id")
         .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
         .select(col("probe_id"), col("neighbor_id"),
-          cosSim(s, "pe", "ne").as("cos_sim")))
+          cosSim("pe", "ne").as("cos_sim")))
     },
 
     Q(
@@ -1207,7 +1207,7 @@ object AnnOps {
       val coarse = broadcast(probes)
         .join(pre, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pp", "p").as("pre_sim"))
+          cosSim("pp", "p").as("pre_sim"))
       val cw = Window.partitionBy("probe_id").orderBy(col("pre_sim").desc, col("neighbor_id"))
       val cands = coarse.withColumn("crank", row_number().over(cw))
         .filter(col("crank") <= RerankR)
@@ -1216,7 +1216,7 @@ object AnnOps {
         .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("pe")), "probe_id")
         .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
         .select(col("probe_id"), col("neighbor_id"),
-          cosSim(s, "pe", "ne").as("cos_sim")))
+          cosSim("pe", "ne").as("cos_sim")))
     },
 
     Q(
@@ -1299,7 +1299,7 @@ object AnnOps {
       rankTopK(broadcast(probes)
         .join(dq, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "ne").as("cos_sim")))
+          cosSim("pe", "ne").as("cos_sim")))
     },
 
     Q(
@@ -1352,7 +1352,7 @@ object AnnOps {
         .filter(col("vec_id") =!= col("probe_id"))
         .join(tombstones, Seq("vec_id"), "left_anti")
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
     },
 
     Q(
@@ -1541,7 +1541,7 @@ object AnnOps {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val assign = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminCos("embedding", "cs"))
         .select("vec_id", "embedding", "cent_id")
         .localCheckpoint() // read by sizes, members, and the untouched side
       val sizes = assign.groupBy("cent_id").agg(count(lit(1)).as("n"))
@@ -1556,13 +1556,13 @@ object AnnOps {
         .select(col("embedding").as("ca"))
       val seedB = members.crossJoin(broadcast(seedA))
         .select(col("vec_id"), col("embedding"),
-          cosSim(s, "embedding", "ca").as("c"))
+          cosSim("embedding", "ca").as("c"))
         .orderBy(col("c"), col("vec_id")).limit(1)
         .select(col("embedding").as("cb"))
       val reassigned = members
         .crossJoin(broadcast(seedA)).crossJoin(broadcast(seedB))
         .select(col("vec_id"),
-          when(cosSim(s, "embedding", "ca") >= cosSim(s, "embedding", "cb"),
+          when(cosSim("embedding", "ca") >= cosSim("embedding", "cb"),
             lit(NumCells.toLong))
             .otherwise(lit(NumCells.toLong + 1)).as("cent_id"))
       val after = assign
@@ -1631,7 +1631,7 @@ object AnnOps {
       var st = e
         .crossJoin(broadcast(seed.select(col("embedding").as("ce"))))
         .select(col("vec_id"), col("embedding"),
-          (lit(1.0) - cosSim(s, "embedding", "ce")).as("d"))
+          (lit(1.0) - cosSim("embedding", "ce")).as("d"))
         .localCheckpoint()
       var out = seed.select(lit(1L).as("rank"), col("vec_id"),
         lit(null).cast("double").as("radius"))
@@ -1643,7 +1643,7 @@ object AnnOps {
         st = st
           .crossJoin(broadcast(pick.select(col("embedding").as("ce"))))
           .select(col("vec_id"), col("embedding"),
-            least(col("d"), lit(1.0) - cosSim(s, "embedding", "ce")).as("d"))
+            least(col("d"), lit(1.0) - cosSim("embedding", "ce")).as("d"))
           .localCheckpoint()
       }
       out.orderBy("rank")
@@ -1710,7 +1710,7 @@ object AnnOps {
       val c0 = broadcast(probes)
         .join(e, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("rel"))
+          cosSim("pe", "embedding").as("rel"))
         .withColumn("crank", row_number().over(cw))
         .filter(col("crank") <= MmrR)
         .select(col("probe_id"), col("neighbor_id"),
@@ -1724,7 +1724,7 @@ object AnnOps {
         .join(e.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
         .join(e.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
         .select(col("probe_id"), col("a"), col("b"),
-          round(cosSim(s, "ea", "eb") * lit(1000000)).cast("long").as("sim6"))
+          round(cosSim("ea", "eb") * lit(1000000)).cast("long").as("sim6"))
         .localCheckpoint()
       val sw = Window.partitionBy("probe_id").orderBy(col("score7").desc, col("neighbor_id"))
       var cand = c0.withColumn("ms6", lit(0L))
@@ -1838,7 +1838,7 @@ object AnnOps {
       val ranksP = broadcast(probesP)
         .join(pre, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pp", "p").as("pre_sim"))
+          cosSim("pp", "p").as("pre_sim"))
         .withColumn("r", row_number().over(pw))
         .filter(col("r") <= RerankR)
         .select(col("probe_id"), col("neighbor_id"), col("r").as("rb"))
@@ -1897,7 +1897,7 @@ object AnnOps {
         .join(assign, Seq("cent_id"))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
     },
 
     Q(
@@ -1967,14 +1967,14 @@ object AnnOps {
       val btop = rankTopK(broadcast(probes)
         .join(e, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
         .select("probe_id", "neighbor_id")
       val cents = e.filter(col("vec_id") < NumCells)
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val packed = broadcast(packCents(cents))
       val assign = e.crossJoin(packed)
         .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminCos("embedding", "cs"))
         .select(col("vec_id"), col("embedding"), col("cent_id"))
       val probeCells = e.filter(col("vec_id") < NumProbes)
         .withColumn("vn", sqrt(normSq(col("embedding"))))
@@ -1986,7 +1986,7 @@ object AnnOps {
         .join(assign, Seq("cent_id"))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
         .select(col("probe_id"), col("neighbor_id"), lit(1).as("hit"))
       btop.join(itop, Seq("probe_id", "neighbor_id"), "left")
         .groupBy("probe_id")
@@ -2059,7 +2059,7 @@ object AnnOps {
       val packed = broadcast(packCents(cents))
       val assign = e.crossJoin(packed)
         .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminCos("embedding", "cs"))
         .select(col("vec_id"), col("label"), col("embedding"), col("cent_id"))
       val probeCells = e.filter(col("vec_id") < PairAnchors)
         .withColumn("vn", sqrt(normSq(col("embedding"))))
@@ -2072,7 +2072,7 @@ object AnnOps {
         .filter(col("vec_id") =!= col("anchor_id"))
         .select(col("anchor_id"), col("albl"),
           col("vec_id").as("cand_id"), col("label").as("clbl"),
-          cosSim(s, "pe", "embedding").as("cos_sim"))
+          cosSim("pe", "embedding").as("cos_sim"))
       val w = Window.partitionBy("anchor_id")
         .orderBy(col("cos_sim").desc, col("cand_id"))
       val pos = cand.filter(col("clbl") === col("albl"))
@@ -2122,7 +2122,7 @@ object AnnOps {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val assigned = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("vec_id"), col("embedding"), col("cell_id"))
       val out = Scratch.dir()
       assigned.write.partitionBy("cell_id").parquet(out)
@@ -2166,7 +2166,7 @@ object AnnOps {
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val bands = e.select(col("vec_id"),
-        posexplode(array(bandColsFused(s): _*)).as(Seq("band_id", "band_val")))
+        posexplode(array(bandColsFused: _*)).as(Seq("band_id", "band_val")))
       // Dedupe candidate PAIRS on ids only — a distinct over two longs,
       // not over 256-byte embedding payloads — then fetch the vectors
       // with two keyed joins. At 100 TB this is the difference between
@@ -2180,7 +2180,7 @@ object AnnOps {
       val cands = candIds
         .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea")), Seq("vec_a"))
         .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb")), Seq("vec_b"))
-      val sim = cosSim(s, "ea", "eb")
+      val sim = cosSim("ea", "eb")
       cands
         .select(col("vec_a"), col("vec_b"), sim.as("cos_sim"))
         .filter(col("cos_sim") >= 0.45)
@@ -2235,7 +2235,7 @@ object AnnOps {
       val corpus = e.unionByName(pert)
       val a = corpus.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
       val b = corpus.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
-      val sim = graft.functions.CosSim.cosineSim(s, "ea", "eb")
+      val sim = graft.functions.CosSim.cosineSim("ea", "eb")
       a.join(b, sim >= lit(0.9) && col("vec_a") < col("vec_b"))
         .select(col("vec_a"), col("vec_b"), round(sim, 6).as("cos_sim"))
         .orderBy("vec_a", "vec_b")
@@ -2323,7 +2323,7 @@ object AnnOps {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val assign = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("vec_id"), col("cell_id"), col("embedding"))
       val l = assign.select(col("cell_id"), col("vec_id").as("vec_a"),
         col("embedding").as("ea"))
@@ -2333,7 +2333,7 @@ object AnnOps {
       // dedupes two longs, never embedding payloads.
       val dropped = l.join(r, Seq("cell_id"))
         .filter(col("vec_a") < col("vec_b"))
-        .filter(cosSim(s, "ea", "eb") >= 0.45)
+        .filter(cosSim("ea", "eb") >= 0.45)
         .select(col("vec_b").as("vec_id")).distinct()
         .withColumn("dropped", lit(1L))
       assign.join(dropped, Seq("vec_id"), "left")
@@ -2760,7 +2760,7 @@ object AnnOps {
       // run in one codegen'd loop.
       val assign = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cent_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("vec_id"), col("cent_id"), col("embedding"))
       // n_vecs rides the same (cent_id, pos) group — every assigned
       // vector contributes exactly one row per pos — so the whole
@@ -2841,7 +2841,7 @@ object AnnOps {
       // sorted-slice over the packed centroids (see centMetrics).
       val assign = e.crossJoin(packed)
         .withColumn("cent_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("vec_id"), col("embedding"), col("cent_id"))
       val probeCells = e.filter(col("vec_id") < NumProbes)
         .withColumn("vn2", normSq(col("embedding")))
@@ -2853,7 +2853,7 @@ object AnnOps {
         .join(assign, Seq("cent_id"))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
     },
 
     Q(
@@ -3131,7 +3131,7 @@ object AnnOps {
       // write as a query.
       val sv = e.crossJoin(packed)
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("vec_id"), col("cell_id"),
           posexplode(expr(s"transform(sequence(0, ${PqM - 1}), " +
             s"j -> slice(embedding, j*$PqSubDim+1, $PqSubDim))"))
@@ -3267,7 +3267,7 @@ object AnnOps {
       // the 16-row broadcast, residual subvectors born cell-keyed.
       val sv = e.crossJoin(packed)
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .join(centsByCell, Seq("cell_id"))
         .select(col("vec_id"), col("cell_id"),
           posexplode(resSlices).as(Seq("sp", "sv")))
@@ -3417,7 +3417,7 @@ object AnnOps {
           .join(e.select(col("vec_id").as("cand_id"),
             col("embedding").as("ce")), Seq("cand_id"))
           .select(col("probe_id"), col("cand_id"),
-            cosSim(s, "pe", "ce").as("cos_sim"))
+            cosSim("pe", "ce").as("cos_sim"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= BeamB)
           .select("probe_id", "cand_id", "cos_sim")
@@ -3432,10 +3432,10 @@ object AnnOps {
         .orderBy(col("mcos").desc, col("vec_id"))
       val entries = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .join(broadcast(cents), col("cell_id") === col("cent_id"))
         .select(col("vec_id"), col("cell_id"),
-          cosSim(s, "embedding", "ce").as("mcos"))
+          cosSim("embedding", "ce").as("mcos"))
         .withColumn("mrn", row_number().over(mw))
         .filter(col("mrn") === 1)
         .select(col("vec_id").as("cand_id"))
@@ -3461,7 +3461,7 @@ object AnnOps {
       val btop = rankTopK(broadcast(probes)
         .join(e, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
         .select("probe_id", "neighbor_id")
       // The gtop side is probes × TopK rows off a stats-less
       // checkpoint: broadcast it so the 50-row recall join never
@@ -3567,7 +3567,7 @@ object AnnOps {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val assign = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("cell_id"), col("label"))
       val counts = assign.groupBy("cell_id", "label")
         .agg(count(lit(1)).as("c"))
@@ -3748,7 +3748,7 @@ object AnnOps {
       val packed = broadcast(packCents(cents))
       val assign = e.crossJoin(packed)
         .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminCos("embedding", "cs"))
         .select(col("vec_id"), col("embedding"), col("label"), col("cent_id"))
       val probeCells = e.filter(col("vec_id") < NumProbes)
         .withColumn("vn", sqrt(normSq(col("embedding"))))
@@ -3763,7 +3763,7 @@ object AnnOps {
         .filter(col("vec_id") =!= col("probe_id")
           && col("label") === col("plabel"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
     },
 
     Q(
@@ -3810,7 +3810,7 @@ object AnnOps {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val counts = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminCos(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminCos("embedding", "cs"))
         .groupBy("cell_id").agg(count(lit(1)).as("n"))
       val tot = e.agg(count(lit(1)).cast("double").as("t"))
       // The rank window runs over k cell rows, not the corpus.
@@ -3904,7 +3904,7 @@ object AnnOps {
       val btop = rankTopK(broadcast(probes)
         .join(e, col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim")))
+          cosSim("pe", "embedding").as("cos_sim")))
         .select("probe_id", "neighbor_id")
         .localCheckpoint()
       val cents = e.filter(col("vec_id") < NumCells)
@@ -3912,7 +3912,7 @@ object AnnOps {
       val packed = broadcast(packCents(cents))
       val assign = e.crossJoin(packed)
         .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminCos("embedding", "cs"))
         .select(col("vec_id"), col("embedding"), col("cent_id"))
       val probeCells = e.filter(col("vec_id") < NumProbes)
         .withColumn("vn", sqrt(normSq(col("embedding"))))
@@ -3928,7 +3928,7 @@ object AnnOps {
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("cell_rank"),
           col("vec_id").as("neighbor_id"),
-          cosSim(s, "pe", "embedding").as("cos_sim"))
+          cosSim("pe", "embedding").as("cos_sim"))
         .localCheckpoint()
       RecallSweep.map { np =>
         val itop = rankTopK(cand.filter(col("cell_rank") <= np)
@@ -3996,7 +3996,7 @@ object AnnOps {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val assign = e.crossJoin(broadcast(packCents(cents)))
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("vec_id"), col("cell_id"), col("embedding"))
         .localCheckpoint() // split and pair-joined 3× below
       val base = assign.filter(col("vec_id") < 400)
@@ -4008,7 +4008,7 @@ object AnnOps {
           col("embedding").as("eb"))
         a.join(b, Seq("cell_id"))
           .filter(if (strictLower) col("vec_a") < col("vec_b") else lit(true))
-          .filter(cosSim(s, "ea", "eb") >= 0.45)
+          .filter(cosSim("ea", "eb") >= 0.45)
           .select(col("vec_b").as("vec_id")).distinct()
       }
       val dupBase = pairsOf(base, strictLower = false)
@@ -4355,7 +4355,7 @@ object AnnOps {
       val packed = broadcast(packCents(cents))
       val corpus = e.crossJoin(packed)
         .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2(s, "embedding", "cs"))
+          graft.functions.CentAssign.argminL2("embedding", "cs"))
         .select(col("cell_id"), col("side").as("nb_side"),
           col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
       val queries = e.withColumn("vn2", normSq(col("embedding")))
@@ -4370,7 +4370,7 @@ object AnnOps {
         .filter(col("nb_side") =!= col("side")
           && col("neighbor_id") =!= col("vec_id"))
         .select(col("vec_id"), col("side"), col("neighbor_id"),
-          cosSim(s, "qe", "ne").as("cos_sim"))
+          cosSim("qe", "ne").as("cos_sim"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= BtK)
         .withColumn("c6", round(col("cos_sim") * 1e6, 0).cast("long"))
@@ -4666,7 +4666,7 @@ object AnnOps {
       e0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val e = e0.select("vec_id", "embedding")
     val bands = e.select(col("vec_id"),
-      posexplode(array(bandColsFused(s): _*)).as(Seq("band_id", "band_val")))
+      posexplode(array(bandColsFused: _*)).as(Seq("band_id", "band_val")))
     // id-only pair dedupe, vectors fetched after (q_embed_dup note)
     val candIds = bands.as("l").join(bands.as("r"),
         col("l.band_id") === col("r.band_id")
@@ -4679,7 +4679,7 @@ object AnnOps {
         Seq("vec_a"))
       .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb")),
         Seq("vec_b"))
-      .filter(cosSim(s, "ea", "eb") >= DbscanCosT)
+      .filter(cosSim("ea", "eb") >= DbscanCosT)
       .select("vec_a", "vec_b")
     dbscanFromPairs(e.select("vec_id"), pairs)
   }
@@ -4809,7 +4809,7 @@ object AnnOps {
         transform(col("sv"), _.cast("double")).as("ce"))
     sv.join(broadcast(packSubCents(c0)), Seq("sp"))
       .withColumn("cent_id",
-        graft.functions.CentAssign.argminL2(s, "sv", "cs"))
+        graft.functions.CentAssign.argminL2("sv", "cs"))
       .select(col("sp"), col("cent_id"), posexplode(col("sv")).as(Seq("pos", "v")))
       .groupBy("sp", "cent_id", "pos")
       .agg(round(avg(col("v").cast("double")), 6).as("cval"))

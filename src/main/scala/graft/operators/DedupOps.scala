@@ -274,7 +274,7 @@ object DedupOps {
     // for the composed transform/array_min form — same values, see
     // MinHash60's scaladoc; the oracles are unchanged).
     val mhs = docs
-      .select(col("doc_id"), MinHash60.minhash60(s, "shingles").as("mh"))
+      .select(col("doc_id"), MinHash60.minhash60("shingles").as("mh"))
     val bandKeys = (0 until NumBands).map { j =>
       concat_ws(",",
         (1 to BandSize).map(i => element_at(col("mh"), 4 * j + i).cast("string")): _*)
@@ -356,55 +356,42 @@ object DedupOps {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint() // computed once; reused every round
-    var labels = edges.select(col("src").as("doc_id"))
+    val labels0 = edges.select(col("src").as("doc_id"))
       .distinct()
       .withColumn("label", col("doc_id"))
       .localCheckpoint()
-    // Convergence via EXACT label-sum (r15, the ccPointerJump
-    // discipline) when labels are integral: each round only lowers
-    // labels (min over self + neighbors), so the DECIMAL(38,0) sum is
-    // strictly decreasing until the fixpoint and equal exactly at it —
-    // one scalar agg on the checkpointed frame replaces the per-round
-    // change-detection join. Non-numeric label domains (q_entity_dedup
-    // clusters STRING entity keys) keep the join-based check: there is
-    // no exact monotone scalar for lexicographic min.
-    val numericLabels = labels.schema("label").dataType match {
+    // Convergence via Fixpoint.exactSum when labels are integral: each
+    // round only lowers labels (min over self + neighbors), so the
+    // label sum strictly decreases until the fixpoint. Non-numeric
+    // label domains (q_entity_dedup clusters STRING entity keys) keep
+    // the join-based check: there is no exact monotone scalar for
+    // lexicographic min.
+    val numericLabels = labels0.schema("label").dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.ByteType => true
       case _ => false
     }
-    def labelSum(df: org.apache.spark.sql.DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("label").cast("decimal(38,0)"))).head().get(0)
-      if (v == null) java.math.BigDecimal.ZERO
-      else v.asInstanceOf[java.math.BigDecimal]
-    }
-    var prevSum = if (numericLabels) labelSum(labels) else null
-    var converged = false
-    var rounds = 0
-    val maxRounds = 50
-    while (!converged && rounds < maxRounds) {
+    val init = (labels0,
+      if (numericLabels) Fixpoint.exactSum(labels0, "label") else null)
+    val ((labels, _), _) = Fixpoint.iterate("ccMinLabels", 50,
+        init) { case (labels, prevSum) =>
       val prop = labels.join(edges, labels("doc_id") === edges("src"))
         .select(col("dst").as("doc_id"), col("label"))
       val next = labels.unionAll(prop)
         .groupBy("doc_id").agg(min(col("label")).as("label"))
         .localCheckpoint()
       if (numericLabels) {
-        val nextSum = labelSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
+        val nextSum = Fixpoint.exactSum(next, "label")
+        ((next, nextSum), nextSum.compareTo(prevSum) == 0)
       } else {
-        converged = next.as("n")
+        ((next, null), next.as("n")
           .join(labels.as("o"), "doc_id")
           .filter(col("n.label") =!= col("o.label"))
-          .isEmpty
+          .isEmpty)
       }
-      labels = next
-      rounds += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"ccMinLabels: label propagation not converged after $maxRounds rounds")
     labels
   }
 
@@ -820,7 +807,7 @@ object DedupOps {
       val sim = Tables.documents(s, dir)
         .select(col("doc_id"),
           array_distinct(split(lower(col("text")), " ", -1)).as("dt"))
-        .select(col("doc_id"), SimHash60.simhash60(s, "dt").as("simhash"))
+        .select(col("doc_id"), SimHash60.simhash60("dt").as("simhash"))
       val chunkRows = (0 until NumChunks).map { j =>
         shiftright(col("simhash"), ChunkBits * j).bitwiseAND(lit(32767L))
       }
@@ -875,7 +862,7 @@ object DedupOps {
       val sim = Tables.documents(s, dir)
         .select(col("doc_id"),
           array_distinct(split(lower(col("text")), " ", -1)).as("dt"))
-        .select(col("doc_id"), SimHash60.simhash60(s, "dt").as("simhash"))
+        .select(col("doc_id"), SimHash60.simhash60("dt").as("simhash"))
         .localCheckpoint() // both join sides read it
       val l = sim.select(col("doc_id").as("doc_a"), col("simhash").as("sig_a"))
       val r = sim.select(col("doc_id").as("doc_b"), col("simhash").as("sig_b"))

@@ -1782,9 +1782,6 @@ object GraphOps {
       .orderBy("item")
   }
 
-  /** Undirected distinct-pair weighted edges (u < v, w = summed
-    * directed transition counts) — shared by q_kcore and
-    * q_lpa_modularity. */
   /** q_item_cf's oracle — shared VERBATIM by q_stream_item_cf (the
     * incremental pair-count state readout is, by the set-decomposition
     * argument in that entry, the identical computation). */
@@ -1854,16 +1851,6 @@ object GraphOps {
       .filter(col("rk") <= ItemCfTopK)
   }
 
-  /** Borůvka minimum-spanning-forest core over an undirected
-    * weighted (u, v, w) frame (q_mst + the planted-graph spec): per
-    * round every component picks its minimum outgoing edge under the
-    * TOTAL order (w, u, v) — the lexicographic tie-break makes every
-    * edge rank distinct, so the MSF is unique and cycle-free and the
-    * declarative-Prim oracle lands on the identical edge set. Rounds
-    * at least halve the component count (≤ log₂V, converged rounds
-    * exit); per round one edge-relabel join + one component-keyed
-    * min(struct) agg + a pointer-jump CC over the forest-so-far.
-    * Returns the chosen (u, v, w) edges, unordered. */
   /** Materialize AND reset plan statistics. `localCheckpoint` alone
     * carries the ORIGINAL plan's estimated sizeInBytes into the new
     * leaf (Spark 4's rewriteStatsAndConstraints), and the size-only
@@ -1876,6 +1863,16 @@ object GraphOps {
   private[graft] def freshStats(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.localCheckpoint().rdd, df.schema)
 
+  /** Borůvka minimum-spanning-forest core over an undirected
+    * weighted (u, v, w) frame (q_mst + the planted-graph spec): per
+    * round every component picks its minimum outgoing edge under the
+    * TOTAL order (w, u, v) — the lexicographic tie-break makes every
+    * edge rank distinct, so the MSF is unique and cycle-free and the
+    * declarative-Prim oracle lands on the identical edge set. Rounds
+    * at least halve the component count (≤ log₂V, converged rounds
+    * exit); per round one edge-relabel join + one component-keyed
+    * min(struct) agg + a pointer-jump CC over the forest-so-far.
+    * Returns the chosen (u, v, w) edges, unordered. */
   private[graft] def boruvkaMst(undRaw: DataFrame): DataFrame = {
     // CONTRACTED edge state (r15): each inter-component edge rides as
     // (cu, cv | u, v, w) — current component of each endpoint plus the
@@ -1896,14 +1893,13 @@ object GraphOps {
     // current caller, undirectedWeighted, already filters u =!= v, but
     // a future caller's self-loop would otherwise be picked as its
     // component's min edge in round 1 and emitted into the MSF).
-    var ce = undRaw.filter(col("u") =!= col("v"))
+    val ce0 = undRaw.filter(col("u") =!= col("v"))
       .select(col("u").as("cu"), col("v").as("cv"),
         col("u"), col("v"), col("w")).localCheckpoint()
-    var mst = undRaw.select("u", "v", "w").filter(lit(false)).localCheckpoint()
-    var done = ce.isEmpty
-    var r = 0
-    val maxRounds = 40
-    while (!done && r < maxRounds) {
+    val mst0 = undRaw.select("u", "v", "w").filter(lit(false)).localCheckpoint()
+    if (ce0.isEmpty) return mst0
+    val ((_, mst), _) = Fixpoint.iterate("boruvkaMst", 40,
+        (ce0, mst0)) { case (ce, mstSoFar) =>
       val cand = ce.select(col("cu").as("c"), col("w"), col("u"), col("v"),
           col("cu"), col("cv"))
         .unionAll(ce.select(col("cv").as("c"), col("w"), col("u"), col("v"),
@@ -1919,7 +1915,7 @@ object GraphOps {
           col("m.cu").as("cu"), col("m.cv").as("cv"))
         .distinct()
         .localCheckpoint() // read 2×: mst append + contraction CC
-      mst = freshStats(mst.unionAll(chosen.select("u", "v", "w")))
+      val mst = freshStats(mstSoFar.unionAll(chosen.select("u", "v", "w")))
       // CC over the component graph: nodes are component ids (each the
       // min original id of its component), so the min-label CC yields
       // the merged component's min id — label composition stays exact.
@@ -1931,18 +1927,14 @@ object GraphOps {
       // component-count-sized: broadcast both relabel joins.
       val lu = broadcast(lab.select(col("node").as("cu"), col("label").as("lu")))
       val lv = broadcast(lab.select(col("node").as("cv"), col("label").as("lv")))
-      ce = freshStats(ce.join(lu, Seq("cu"), "left").join(lv, Seq("cv"), "left")
+      val next = freshStats(ce.join(lu, Seq("cu"), "left")
+        .join(lv, Seq("cv"), "left")
         .select(coalesce(col("lu"), col("cu")).as("cu"),
           coalesce(col("lv"), col("cv")).as("cv"),
           col("u"), col("v"), col("w"))
         .filter(col("cu") =!= col("cv")))
-      done = ce.isEmpty
-      r += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"boruvkaMst: not converged in $maxRounds rounds")
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"[boruvkaMst] rounds=$r")
+      ((next, mst), next.isEmpty)
+  }
     mst
   }
 
@@ -1978,6 +1970,9 @@ object GraphOps {
       .filter(col("rk") <= ItemCfTopK)
   }
 
+  /** Undirected distinct-pair weighted edges (u < v, w = summed
+    * directed transition counts) — shared by q_kcore and
+    * q_lpa_modularity. */
   private[graft] def undirectedWeighted(s: SparkSession, dir: String): DataFrame =
     edgesOf(s, dir)
       .filter(col("a") =!= col("b"))
@@ -2090,13 +2085,6 @@ object GraphOps {
       .orderBy("community")
   }
 
-  /** Min-label propagation WITH pointer jumping over an undirected
-    * edge set (u, v): each round takes min over {own label} ∪
-    * {neighbor labels} and then shortcuts through label(label(v)).
-    * Converges in O(log diameter) rounds to label(v) = min(component)
-    * — the same fixpoint as [[DedupOps.ccMinLabels]]'s plain
-    * propagation. Returns (labels(node, label), rounds). Throws after
-    * 50 rounds: unconverged labels are fractured components. */
   /** Exact STRONGLY connected components of a directed edge list
     * (src, dst) — trim + forward-max coloring + same-color backward
     * sweep (Orzan's coloring, the standard distributed SCC), looped
@@ -2123,25 +2111,30 @@ object GraphOps {
     val spark = edges0.sparkSession
     val edgesAll = edges0.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    var remaining = edgesAll.select(col("src").as("node"))
+    val remaining0 = edgesAll.select(col("src").as("node"))
       .unionAll(edgesAll.select(col("dst").as("node")))
       .distinct().localCheckpoint()
-    var result = spark.createDataFrame(
+    val result0 = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("scc_label",
           org.apache.spark.sql.types.LongType))))
-    var outer = 0
-    while (!remaining.isEmpty && outer < SccMaxRounds) {
+    if (remaining0.isEmpty) return result0
+    val ((_, result), _) = Fixpoint.iterate("sccMembership", SccMaxRounds,
+        (remaining0, result0)) { case (remainingIn, resultIn) =>
+      var remaining = remainingIn
+      var result = resultIn
       var edges = edgesAll
         .join(remaining.select(col("node").as("src")), Seq("src"),
           "left_semi")
         .join(remaining.select(col("node").as("dst")), Seq("dst"),
           "left_semi")
         .select("src", "dst").localCheckpoint()
-      // (1) TRIM to the 2-core of the condensation periphery.
+      // (1) TRIM to the 2-core of the condensation periphery. Its cap
+      // is a work bound, not a convergence check: whatever trimming
+      // leaves, coloring finishes.
       var trimming = true
       var trims = 0
       while (trimming && trims < SccMaxRounds) {
@@ -2169,37 +2162,24 @@ object GraphOps {
         trims += 1
       }
       if (!remaining.isEmpty) {
-        // (2) COLOR: max ancestor id, forward fixpoint. Convergence by
-        // EXACT color-sum (r15, the ccPointerJump discipline): max over
-        // self + ancestors only ever RAISES a color, so the
-        // DECIMAL(38,0) sum strictly increases until the fixpoint and
-        // is equal exactly at it — one scalar agg on the checkpointed
-        // frame instead of a per-round change-detection join.
-        def colorSum(df: DataFrame): java.math.BigDecimal = {
-          val v = df.agg(sum(col("c").cast("decimal(38,0)"))).head().get(0)
-          if (v == null) java.math.BigDecimal.ZERO
-          else v.asInstanceOf[java.math.BigDecimal]
-        }
-        var colors = remaining.select(col("node"), col("node").as("c"))
+        // (2) COLOR: max ancestor id, forward fixpoint. Convergence via
+        // Fixpoint.exactSum: max over self + ancestors only ever RAISES
+        // a color, so the color sum strictly increases until the
+        // fixpoint and is equal exactly at it.
+        val colors0 = remaining.select(col("node"), col("node").as("c"))
           .localCheckpoint()
-        var prevColorSum = colorSum(colors)
-        var moved = true
-        var r = 0
-        while (moved && r < SccMaxRounds) {
+        val init = (colors0, Fixpoint.exactSum(colors0, "c"))
+        val ((colors, _), _) = Fixpoint.iterate("sccMembership coloring",
+            SccMaxRounds, init) { case (colors, prevSum) =>
           val prop = colors
             .join(edges, colors("node") === edges("src"))
             .select(col("dst").as("node"), col("c"))
           val next = colors.select("node", "c").unionAll(prop)
             .groupBy("node").agg(max(col("c")).as("c"))
             .localCheckpoint()
-          val s = colorSum(next)
-          moved = s.compareTo(prevColorSum) != 0
-          prevColorSum = s
-          colors = next
-          r += 1
+          val nextSum = Fixpoint.exactSum(next, "c")
+          ((next, nextSum), nextSum.compareTo(prevSum) == 0)
         }
-        if (moved) throw new IllegalStateException(
-          s"sccMembership: coloring not converged in $SccMaxRounds rounds")
         // (3) BACKWARD sweep from each color root within its color.
         val ce = edges
           .join(colors.select(col("node").as("src"), col("c").as("cs")),
@@ -2209,27 +2189,20 @@ object GraphOps {
           .filter(col("cs") === col("cd"))
           .select(col("src"), col("dst"), col("cs").as("c"))
           .localCheckpoint()
-        var inScc = colors.filter(col("node") === col("c"))
+        val inScc0 = colors.filter(col("node") === col("c"))
           .select(col("node"), col("c")).localCheckpoint()
         // The sweep only ever ADDS rows; carry the previous count
         // forward instead of recounting the old frame every round.
-        var prevInScc = inScc.count()
-        moved = true
-        r = 0
-        while (moved && r < SccMaxRounds) {
+        val ((inScc, _), _) = Fixpoint.iterate("sccMembership sweep",
+            SccMaxRounds, (inScc0, inScc0.count())) { case (inScc, prevCount) =>
           val prop = inScc.as("s")
             .join(ce.as("e"), col("s.node") === col("e.dst")
               && col("s.c") === col("e.c"))
             .select(col("e.src").as("node"), col("s.c").as("c"))
           val next = inScc.unionAll(prop).distinct().localCheckpoint()
           val n = next.count()
-          moved = n != prevInScc
-          prevInScc = n
-          inScc = next
-          r += 1
+          ((next, n), n == prevCount)
         }
-        if (moved) throw new IllegalStateException(
-          s"sccMembership: backward sweep not converged in $SccMaxRounds rounds")
         val labs = inScc.groupBy("c").agg(min(col("node")).as("scc_label"))
         val assigned = inScc.join(labs, "c")
           .select(col("node"), col("scc_label")).localCheckpoint()
@@ -2238,39 +2211,34 @@ object GraphOps {
           .join(assigned.select("node"), Seq("node"), "left_anti")
           .localCheckpoint()
       }
-      outer += 1
+      ((remaining, result), remaining.isEmpty)
     }
-    if (!remaining.isEmpty) throw new IllegalStateException(
-      s"sccMembership: not converged in $SccMaxRounds outer rounds")
     result
   }
 
+  /** Min-label propagation WITH pointer jumping over an undirected
+    * edge set (u, v): each round takes min over {own label} ∪
+    * {neighbor labels} and then shortcuts through label(label(v)).
+    * Converges in O(log diameter) rounds to label(v) = min(component)
+    * — the same fixpoint as [[DedupOps.ccMinLabels]]'s plain
+    * propagation. Returns (labels(node, label), rounds). Throws after
+    * 50 rounds: unconverged labels are fractured components. */
   private[graft] def ccPointerJump(und: DataFrame)
       : (DataFrame, Int) = {
     val edges = und.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint()
-    var labels = edges.select(col("src").as("node"))
+    val labels0 = edges.select(col("src").as("node"))
       .distinct()
       .withColumn("label", col("node"))
       .localCheckpoint()
-    // Convergence via EXACT label-sum (r15): every step only ever
-    // LOWERS a node's label (min over self + neighbors, then the jump
-    // to label(label) ≤ label), so the decimal sum of labels is
-    // strictly decreasing until the fixpoint and equal exactly at it —
-    // one scalar agg over the already-checkpointed frame replaces the
-    // r14 per-round change-detection join. DECIMAL(38,0) keeps the sum
-    // exact at any node-id magnitude (no float, no overflow wrap).
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("label").cast("decimal(38,0)"))).head().get(0)
-      if (v == null) java.math.BigDecimal.ZERO
-      else v.asInstanceOf[java.math.BigDecimal]
-    }
-    var prevSum = labelSum(labels)
-    var converged = false
-    var rounds = 0
-    val maxRounds = 50
-    while (!converged && rounds < maxRounds) {
+    // Convergence via Fixpoint.exactSum: every step only ever LOWERS a
+    // node's label (min over self + neighbors, then the jump to
+    // label(label) ≤ label), so the label sum strictly decreases until
+    // the fixpoint and is equal exactly at it.
+    val init = (labels0, Fixpoint.exactSum(labels0, "label"))
+    val ((labels, _), rounds) = Fixpoint.iterate("ccPointerJump", 50,
+        init) { case (labels, prevSum) =>
       val prop = labels.join(edges, labels("node") === edges("src"))
         .select(col("dst").as("node"), col("label"))
       // Checkpoint before the self-join: the jump joins this frame to
@@ -2286,16 +2254,9 @@ object GraphOps {
           col("label").as("jump")).as("y"), "label")
         .select(col("node"), col("jump").as("label"))
         .localCheckpoint()
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      rounds += 1
+      val nextSum = Fixpoint.exactSum(next, "label")
+      ((next, nextSum), nextSum.compareTo(prevSum) == 0)
     }
-    if (!converged) throw new IllegalStateException(
-      s"ccPointerJump: not converged after $maxRounds rounds")
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"[ccPointerJump] rounds=$rounds")
     (labels, rounds)
   }
 }

@@ -887,7 +887,7 @@ object TextOps {
   private[graft] def cdcChunks(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val hs = graft.functions.RollHash
-      .rollhash60(docs.sparkSession, "text", CdcK)
+      .rollhash60("text", CdcK)
     docs.filter(length(col("text")) >= CdcK)
       .select(col("doc_id"), col("text"),
         length(col("text")).cast("long").as("n"), hs.as("hs"))

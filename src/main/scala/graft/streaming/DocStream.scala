@@ -26,7 +26,7 @@ object DocStream {
     val toks = split(lower(col("text")), " ", -1)
     // Tokens ride a named column: the simhash60 Column API quotes its
     // argument as an identifier (it is a column NAME, not raw SQL).
-    val sig = SimHash60.simhash60(docs.sparkSession, "__graft_toks")
+    val sig = SimHash60.simhash60("__graft_toks")
     val withSig = docs
       .withWatermark("ts", "2 hours")
       .filter(length(col("text")) >= 50 && size(toks) >= 5)

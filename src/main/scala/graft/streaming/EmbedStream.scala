@@ -29,6 +29,6 @@ object EmbedStream {
       .withWatermark("ts", "2 hours")
       .crossJoin(broadcast(AnnOps.packCents(cents)))
       .withColumn("cell_id",
-        CentAssign.argminL2(vecs.sparkSession, "embedding", "cs"))
+        CentAssign.argminL2("embedding", "cs"))
       .select(col("ts"), col("vec_id"), col("embedding"), col("cell_id"))
 }

@@ -64,12 +64,18 @@ object StreamOps {
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (String, org.apache.spark.sql.types.StructType) = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
     val scratch = Scratch.dir()
     val srcDir = Paths.get(scratch, "src")
     Files.createDirectories(srcDir)
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+    val eventsFile = srcDir.resolve("events.parquet")
+    Files.copy(Paths.get(s"$dir/events.parquet"), eventsFile,
+      StandardCopyOption.REPLACE_EXISTING)
+    // Pin mtimes so FileStreamSource's oldest-first ordering is a
+    // property we set, not one we inherit from copy-vs-write timing:
+    // events strictly before sentinel (see doc above).
+    Files.setLastModifiedTime(eventsFile, FileTime.fromMillis(1000000000000L))
+    val rawSchema = Tables.load(s, dir, "events").schema
     // The sentinel row must carry ts in the SAME physical type as the
     // copied events file (INT64 epoch-nanos or a timestamp type —
     // Tables.normalizeTs handles both generations), else the mixed-file
@@ -79,25 +85,12 @@ object StreamOps {
       case org.apache.spark.sql.types.LongType => lit(sentinelNs)
       case t => expr(s"timestamp_micros(${sentinelNs / 1000L}L)").cast(t)
     }
-    val sentTmp = Paths.get(scratch, "sentinel")
-    s.range(1).select(
-      lit(-1L).as("event_id"), sentinelTs.as("ts"),
-      lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-      lit(0.0).as("value"), lit("{}").as("props"))
-      .coalesce(1).write.parquet(sentTmp.toString)
-    val listing = Files.list(sentTmp)
-    val part =
-      try listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      finally listing.close()
-    val sentinelFile = srcDir.resolve("zz_sentinel.parquet")
-    Files.move(part, sentinelFile)
-    // Pin mtimes so FileStreamSource's oldest-first ordering is a
-    // property we set, not one we inherit from copy-vs-write timing:
-    // events strictly before sentinel (see doc above).
-    import java.nio.file.attribute.FileTime
-    Files.setLastModifiedTime(
-      srcDir.resolve("events.parquet"), FileTime.fromMillis(1000000000000L))
-    Files.setLastModifiedTime(sentinelFile, FileTime.fromMillis(1000000060000L))
+    stageSlice(
+      s.range(1).select(
+        lit(-1L).as("event_id"), sentinelTs.as("ts"),
+        lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
+        lit(0.0).as("value"), lit("{}").as("props")),
+      scratch, srcDir, "zz_sentinel.parquet", 1000000060000L)
     (srcDir.toString, rawSchema)
   }
 
@@ -181,6 +174,38 @@ object StreamOps {
     s.read.parquet(s"$scratch/out")
   }
 
+  /** The events table as a streaming file source, `ts` normalized
+    * exactly like [[graft.Tables.events]]. The testdata table is a
+    * single parquet file, not a directory: the file source forces
+    * basePath = path unless the path is a glob
+    * (FileStreamSource.optionsWithPartitionBasePath), and a file
+    * basePath is rejected — so glob the one file and pin basePath to
+    * the table root explicitly. */
+  private def eventsStream(
+      s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame =
+    Tables.normalizeTs(
+      s.readStream.schema(Tables.load(s, dir, "events").schema)
+        .option("basePath", dir)
+        .parquet(s"$dir/events.parquet*"))
+
+  /** Runs a streaming aggregate to a COMPLETE-mode memory sink under
+    * AvailableNow and returns the sink table: the final state, which
+    * the live-monitoring rows finish batch-side. Complete mode
+    * re-emits every state row per trigger, so it suits only state
+    * bounded by a catalog or value domain, never by stream volume. */
+  private def runToMemory(agg: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val name = ("m" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
+    agg.writeStream
+      .format("memory").queryName(name)
+      .outputMode("complete")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    agg.sparkSession.table(name)
+  }
+
   val all: Seq[Q] = Seq(
     Q(
       "q_stream_ingest",
@@ -222,26 +247,14 @@ object StreamOps {
       // keeps every doc inside one watermark window, which is exactly
       // the "bounded replay of a batch table" contract AvailableNow
       // models. A live deployment reads real arrival timestamps here.
-      // The testdata table is a single parquet file, not a directory.
-      // The file source forces basePath = path unless the path is a
-      // glob (FileStreamSource.optionsWithPartitionBasePath), and a
-      // file basePath is rejected — so glob the one file and pin
-      // basePath to the table root explicitly.
+      // Single-file glob with basePath pinned, as in eventsStream.
       val src = s.readStream.schema(schema)
         .option("basePath", dir)
         .parquet(s"$dir/documents.parquet*")
         .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
       val out = DocStream.ingest(src)
         .select("content_hash", "sig", "band0", "band1", "band2", "band3")
-      val scratch = Scratch.dir()
-      val q = out.writeStream
-        .format("parquet")
-        .option("path", s"$scratch/out")
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$scratch/out").orderBy("content_hash")
+      runToParquet(s, out).orderBy("content_hash")
     },
 
     Q(
@@ -341,18 +354,8 @@ object StreamOps {
           |  FROM events)
           |GROUP BY bin ORDER BY bin""".stripMargin),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")
-      val name = ("h" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = EventStream.histogram(src, 0.0, 1000.0).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy("bin")
+      runToMemory(EventStream.histogram(eventsStream(s, dir), 0.0, 1000.0))
+        .orderBy("bin")
     },
 
     Q(
@@ -677,14 +680,7 @@ object StreamOps {
         .select(explode(split(lower(col("text")), " ")).as("w"))
         .filter(col("w") =!= "")
         .groupBy("w").agg(count(lit(1)).as("n"))
-      val name = ("t" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = counts.writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("n").desc, col("w")).limit(10)
+      runToMemory(counts).orderBy(col("n").desc, col("w")).limit(10)
     },
 
     Q(
@@ -880,18 +876,9 @@ object StreamOps {
         "the exact mirrored expression text of the batch twin",
       Some(graft.operators.EventsOps.momentsSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")
-      val name = ("m" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.momentSums(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.momentFinish(s.table(name))
+      val src = eventsStream(s, dir)
+      val sink = runToMemory(graft.operators.EventsOps.momentSums(src))
+      graft.operators.EventsOps.momentFinish(sink)
     },
 
     Q(
@@ -911,20 +898,10 @@ object StreamOps {
         "the sums are additive (the q_stream_moments argument)",
       Some(graft.operators.EventsOps.msprtSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(col("ts"), col("user_id"), col("value"))
-      val name = ("ms" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.msprtDaily(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.msprtFinish(s.table(name))
+      val sink = runToMemory(graft.operators.EventsOps.msprtDaily(src))
+      graft.operators.EventsOps.msprtFinish(sink)
     },
 
     Q(
@@ -942,19 +919,10 @@ object StreamOps {
         "sums, the q_stream_moments argument)",
       Some(graft.operators.EventsOps.fdrBhSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")
+      val src = eventsStream(s, dir)
         .select(col("event_type"), col("user_id"), col("value"))
-      val name = ("fd" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.fdrArmSums(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.fdrFinish(s.table(name))
+      val sink = runToMemory(graft.operators.EventsOps.fdrArmSums(src))
+      graft.operators.EventsOps.fdrFinish(sink)
     },
 
     Q(
@@ -975,19 +943,10 @@ object StreamOps {
         "readout runs on state, never history",
       Some(graft.operators.EventsOps.quantileTeSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")
+      val src = eventsStream(s, dir)
         .select(col("event_type"), col("user_id"), col("value"))
-      val name = ("qt" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.quantileTeState(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.quantileTeFinish(s.table(name))
+      val sink = runToMemory(graft.operators.EventsOps.quantileTeState(src))
+      graft.operators.EventsOps.quantileTeFinish(sink)
     },
 
     Q(
@@ -1077,10 +1036,7 @@ object StreamOps {
            |GROUP BY c_mktsegment, event_type
            |ORDER BY c_mktsegment, event_type""".stripMargin),
     ) { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")
+      val src = eventsStream(s, dir)
       val dim = Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
       val enriched = src
@@ -1139,11 +1095,7 @@ object StreamOps {
           |GROUP BY 1, e.event_type
           |ORDER BY state_type, e.event_type""".stripMargin),
     ) { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(schema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(col("user_id").as("e_user"), col("event_type"), col("ts"))
       val dim = graft.operators.EventsOps.scd2Of(s, dir)
         .select(col("user_id"), col("event_type").as("state_type"),
@@ -1258,16 +1210,11 @@ object StreamOps {
         "partials slot",
       Some(graft.operators.EventsOps.thetaIntersectSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val scratch = Scratch.dir()
-      val q = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/events.parquet*")
+      val q = eventsStream(s, dir)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          Tables.normalizeTs(batch)
-            .select(col("event_type"), col("user_id"))
+          batch.select(col("event_type"), col("user_id"))
             .groupBy("event_type")
             .agg(expr("theta_sketch_agg(user_id)").as("sk"))
             .withColumn("batch_id", lit(bid))
@@ -1313,12 +1260,8 @@ object StreamOps {
           |  CAST(1 AS BIGINT) AS stream_equals_batch
           |FROM top ORDER BY n_events DESC, user_id""".stripMargin),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val scratch = Scratch.dir()
-      val q = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/events.parquet*")
+      val q = eventsStream(s, dir)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           batch.select(col("user_id"))
@@ -1470,12 +1413,8 @@ object StreamOps {
           |FROM events GROUP BY event_type ORDER BY event_type"""
           .stripMargin),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val scratch = Scratch.dir()
-      val q = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/events.parquet*")
+      val q = eventsStream(s, dir)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           batch.select(col("event_type"))
@@ -1521,20 +1460,10 @@ object StreamOps {
         "readout never rescans history",
       Some(graft.operators.EventsOps.eventsAnomalySql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(col("ts"), col("event_type"))
-      val name = ("an" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.hourlyTypeRollup(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.anomalyFinish(s.table(name))
+      val sink = runToMemory(graft.operators.EventsOps.hourlyTypeRollup(src))
+      graft.operators.EventsOps.anomalyFinish(sink)
     },
 
     Q(
@@ -1558,21 +1487,11 @@ object StreamOps {
         "corpus",
       Some(graft.operators.EventsOps.ewmaSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(col("ts"))
-      val name = ("ew" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.hourRollup(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val sink = runToMemory(graft.operators.EventsOps.hourRollup(src))
       graft.operators.EventsOps.ewmaControl(
-        graft.operators.EventsOps.seriesOf(s.table(name)))
+        graft.operators.EventsOps.seriesOf(sink))
     },
 
     Q(
@@ -1591,21 +1510,11 @@ object StreamOps {
         "readout rides the #hours-bounded series, never the corpus",
       Some(graft.operators.EventsOps.cusumSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(col("ts"))
-      val name = ("cu" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.hourRollup(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val sink = runToMemory(graft.operators.EventsOps.hourRollup(src))
       graft.operators.EventsOps.cusumOf(
-        graft.operators.EventsOps.seriesOf(s.table(name)))
+        graft.operators.EventsOps.seriesOf(sink))
         .orderBy("t")
     },
 
@@ -1623,21 +1532,11 @@ object StreamOps {
         "state is #hours rows, the readout #hours×3-bounded",
       Some(graft.operators.EventsOps.pacfSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(col("ts"))
-      val name = ("pa" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.hourRollup(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val sink = runToMemory(graft.operators.EventsOps.hourRollup(src))
       graft.operators.EventsOps.pacfOf(
-        graft.operators.EventsOps.seriesOf(s.table(name)))
+        graft.operators.EventsOps.seriesOf(sink))
     },
 
     Q(
@@ -1653,21 +1552,11 @@ object StreamOps {
         "100 TB/day: per-batch deltas are ≤ touched-hours rows",
       Some(graft.operators.EventsOps.grangerSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(col("ts"), col("event_type"))
-      val name = ("gr" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.xyRollup(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val sink = runToMemory(graft.operators.EventsOps.xyRollup(src))
       graft.operators.EventsOps.grangerOf(
-        graft.operators.EventsOps.xySeriesOf(s.table(name)))
+        graft.operators.EventsOps.xySeriesOf(sink))
     },
 
     Q(
@@ -1781,24 +1670,13 @@ object StreamOps {
         "broadcast 1-row state, independent of history",
       Some(graft.operators.EventsOps.logregSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(hour(col("ts")).cast("long").as("x"),
           when(col("event_type") === "purchase", 1L).otherwise(0L)
             .as("hit"))
-      val name = ("lr" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = src.groupBy("x")
-        .agg(count(lit(1)).as("n"), sum(col("hit")).as("h"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.logregFit(s.table(name))
+      val sink = runToMemory(src.groupBy("x")
+        .agg(count(lit(1)).as("n"), sum(col("hit")).as("h")))
+      graft.operators.EventsOps.logregFit(sink)
     },
 
     Q(
@@ -1819,22 +1697,12 @@ object StreamOps {
         "merge), the solve is O(1)",
       Some(graft.operators.EventsOps.olsSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = graft.Tables.normalizeTs(
-        s.readStream.schema(rawSchema)
-          .option("basePath", dir)
-          .parquet(s"$dir/events.parquet*"))
+      val src = eventsStream(s, dir)
         .select(hour(col("ts")).cast("long").as("x"),
           dayofweek(col("ts")).cast("long").as("z"),
           round(col("value") * 100, 0).cast("long").as("y"))
-      val name = ("ol" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.olsMoments(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.olsFinish(s.table(name))
+      val sink = runToMemory(graft.operators.EventsOps.olsMoments(src))
+      graft.operators.EventsOps.olsFinish(sink)
     },
 
     Q(
@@ -1855,19 +1723,10 @@ object StreamOps {
         "rows, the readout never touches history",
       Some(graft.operators.EventsOps.chisqSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")
+      val src = eventsStream(s, dir)
         .select(col("event_type"), col("user_id"))
-      val name = ("ch" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = graft.operators.EventsOps.chisqCells(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.chisqFinish(s.table(name))
+      val sink = runToMemory(graft.operators.EventsOps.chisqCells(src))
+      graft.operators.EventsOps.chisqFinish(sink)
     },
 
     Q(
@@ -1887,22 +1746,12 @@ object StreamOps {
         "values; ranking runs on state, never rows",
       Some(graft.operators.EventsOps.kruskalSql),
     ) { (s, dir) =>
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(rawSchema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")
+      val src = eventsStream(s, dir)
         .select(col("event_type").as("g"),
           round(col("value") * 100, 0).cast("long").as("v"))
-      val name = ("kw" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
-      val q = src.groupBy("g", "v")
-        .agg(count(lit(1)).as("c"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.EventsOps.kruskalFinish(s.table(name))
+      val sink = runToMemory(src.groupBy("g", "v")
+        .agg(count(lit(1)).as("c")))
+      graft.operators.EventsOps.kruskalFinish(sink)
     },
   )
 }

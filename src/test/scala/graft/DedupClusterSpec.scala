@@ -32,4 +32,13 @@ class DedupClusterSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows == Seq((1L, 3L, 9L), (2L, 2L, 7L)), s"got $rows")
   }
+
+  test("ccMinLabels on STRING labels converges by the change-detection join") {
+    import spark.implicits._
+    val pairs = Seq(("c", "b"), ("b", "a"), ("x", "y")).toDF("doc_a", "doc_b")
+    val got = graft.operators.DedupOps.ccMinLabels(pairs).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a",
+      "x" -> "x", "y" -> "x"), s"got $got")
+  }
 }

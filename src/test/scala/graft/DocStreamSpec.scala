@@ -47,7 +47,7 @@ class DocStreamSpec extends AnyFunSuite {
       // LSH-bucket differently.
       val batch = Seq((1L, longA), (4L, longB)).toDF("doc_id", "text")
         .withColumn("toks", split(lower(col("text")), " ", -1))
-        .withColumn("sig", graft.functions.SimHash60.simhash60(spark, "toks"))
+        .withColumn("sig", graft.functions.SimHash60.simhash60("toks"))
         .drop("toks")
       val batchSigs = batch.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
       for ((id, (sig, b0, _, _, b3)) <- out) {

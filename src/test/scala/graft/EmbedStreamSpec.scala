@@ -52,7 +52,7 @@ class EmbedStreamSpec extends AnyFunSuite {
 
       val batch = vecs.toDF()
         .crossJoin(broadcast(AnnOps.packCents(cents)))
-        .withColumn("cell_id", CentAssign.argminL2(spark, "embedding", "cs"))
+        .withColumn("cell_id", CentAssign.argminL2("embedding", "cs"))
         .select("vec_id", "cell_id").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
 

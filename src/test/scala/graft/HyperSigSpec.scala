@@ -51,7 +51,7 @@ class HyperSigSpec extends AnyFunSuite {
     }.reduce(_ + _)
 
     val diff = e.select(
-        HyperSig.hypersig(spark, "embedding").as("fused"),
+        HyperSig.hypersig("embedding").as("fused"),
         composedSig.as("composed"))
       .filter(col("fused") =!= col("composed"))
       .count()

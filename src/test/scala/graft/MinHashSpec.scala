@@ -68,7 +68,7 @@ class MinHashSpec extends AnyFunSuite {
         x => (lit(a) * x + lit(b)) % lit(MinHash60.P)))
     }
     val diff = docs.select(
-        MinHash60.minhash60(spark, "shingles").as("fused"),
+        MinHash60.minhash60("shingles").as("fused"),
         array(composed: _*).as("composed"))
       .filter(col("fused") =!= col("composed"))
       .count()

@@ -56,7 +56,7 @@ class SimHashSpec extends AnyFunSuite {
 
     val fused = docs
       .select(col("doc_id"), array_distinct(split(lower(col("text")), " ", -1)).as("dt"))
-      .select(col("doc_id"), SimHash60.simhash60(spark, "dt").as("simhash"))
+      .select(col("doc_id"), SimHash60.simhash60("dt").as("simhash"))
 
     val aggCols = (0 until 60).map { b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as(s"s$b")
