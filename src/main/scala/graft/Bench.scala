@@ -85,9 +85,11 @@ object Bench {
     // "parsed": null from exactly that truncation). So the per-query
     // data goes to a FILE (overridable via SPARK_GRAFT_BENCH_OUT) and
     // stdout carries one short, never-clipped totals line that points
-    // at it.
+    // at it. The default file is per core count, so a 32-core and an
+    // 8-core run of the same tree both survive.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/tools/bench_last.json")
+      java.nio.file.Paths.get("tools", s"bench_last_c$cpus.json")
+        .toAbsolutePath.toString)
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spikes":$spikes,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full)

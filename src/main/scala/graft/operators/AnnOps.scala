@@ -2246,14 +2246,14 @@ object AnnOps {
       "the SQL-TEXT face of the CosineBandJoin rule: the naive " +
         "cosine-threshold join written as ONE ANSI string over a " +
         "temp view and executed through spark.sql — proving the " +
-        "seventh optimizer rule fires on the parsed-SQL path exactly " +
+        "cosine optimizer rule fires on the parsed-SQL path exactly " +
         "as on DataFrame trees (the q_sql_jaccard contract; pinned " +
         "NestedLoop-free in CosineRuleSpec's sql-text test). The " +
         "0.9 literal parses as DECIMAL, exercising ThresholdLit's " +
         "decimal arm rather than the DataFrame twin's double lit(). " +
         "cosine_sim is the ENGINE's fused function — the rewrite's " +
-        "default trigger; the spelled-out ANSI dot/norm form stays " +
-        "exact unless the session opts in. Runs on the vec_id % 5 " +
+        "only trigger; the spelled-out ANSI dot/norm form always " +
+        "keeps the exact nested loop. Runs on the vec_id % 5 " +
         "slice (the demonstration is the PLAN — q_cos_join already " +
         "pays the full corpus); corpus = slice ∪ planted " +
         "coordinate-halved near-duplicates, the q_cos_join fixture",

@@ -4182,7 +4182,8 @@ object EventsOps {
         "plan-pinned in IntervalRuleSpec; at 100 TB the one " +
         "shuffle is bucket-keyed and AQE-skew-splittable, with " +
         "candidates minimized when the bin width tracks the " +
-        "typical session length (documented knob)",
+        "typical session length (derived from the data's own " +
+        "session lengths at plan time)",
       Some(
         s"""WITH $sessionsSqlCte, sess AS (
            |  SELECT user_id, session_seq,

@@ -2,19 +2,51 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, Sample}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{col, count, lit, max, percentile_approx, sum, when}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, NumericType, StructField, StructType}
 
 import scala.util.control.NonFatal
 
-/** Shared machinery for the two bin-blocking rules ([[RangeBinJoin]],
-  * [[IntervalOverlapJoin]]): the per-row SAFE predicate that routes
-  * interval rows between the binned equi-join and the exact residual
-  * join, and the plan-time statistics pass that both derives the bin
-  * width from the data's own interval lengths and decides whether the
-  * residual branch needs to exist at all.
+/** The blocking-join skeleton the six join rewrites share, and the
+  * bin machinery of the two bin-blocking rules.
+  *
+  * == The skeleton ==
+  *
+  * Every rule brings a join with no equi key back to the keyed shape
+  * the same way: explode each side into block keys, equi-join on the
+  * key, re-apply the original predicate as the verify, and keep one
+  * canonical copy of each pair. The shared pieces live here:
+  *
+  *  - [[Blockable]], the join guard: inner join, deterministic
+  *    condition (the verify re-evaluates it per candidate), no
+  *    [[MarkerPrefix]] column on either side (the rule runs inside a
+  *    fixpoint batch, where pushdown can fold the verify back into the
+  *    blocked join's condition — the marker stops a second rewrite by
+  *    the same rule or a sibling), and no cross-side equi key (the
+  *    re-blocking trap: an already keyed join would only square its
+  *    fan-out);
+  *  - [[oriented]], which turns a matched predicate's operands into
+  *    (left side, right side);
+  *  - [[explodeKey]], which explodes a side into its key column;
+  *  - [[assemble]], the final `Project(j.output, Filter(verify,
+  *    Join(lgen, rgen, Inner, key)))`.
+  *
+  * Each rule keeps only its predicate matcher, its key expression and
+  * its canonical filter. [[Bands]] is the banded-Long geometry of the
+  * two signature rules ([[HammingBandJoin]], [[CosineBandJoin]]).
+  *
+  * == The bin rules ==
+  *
+  * [[RangeBinJoin]] and [[IntervalOverlapJoin]] share [[bucketOf]],
+  * [[explodeBuckets]], the per-row SAFE predicate that routes
+  * interval rows between the binned equi-join and the exact
+  * [[residual]] join, and the plan-time statistics pass that both
+  * derives the bin width from the data's own interval lengths and
+  * decides whether the residual branch needs to exist at all.
   *
   * == The safe predicate ==
   *
@@ -83,7 +115,7 @@ import scala.util.control.NonFatal
   * perturbs because part-file names are randomized per write);
   * anything else is never cached.
   */
-private[plans] object Binning {
+private[plans] object Binning extends PredicateHelper {
 
   /** Marker-name prefix shared by every blocking rule's emitted
     * columns; a join touching ANY such column is rule output and must
@@ -99,6 +131,153 @@ private[plans] object Binning {
 
   def hasMarker(plan: LogicalPlan): Boolean =
     plan.output.exists(_.name.startsWith(MarkerPrefix))
+
+  // ---- the skeleton ------------------------------------------------
+
+  /** The join guard (see the scaladoc) → (left, right, condition). */
+  object Blockable {
+    def unapply(plan: LogicalPlan)
+        : Option[(LogicalPlan, LogicalPlan, Expression)] = plan match {
+      case Join(left, right, Inner, Some(cond), _)
+          if cond.deterministic
+            && !hasMarker(left) && !hasMarker(right)
+            && !hasEquiKey(cond, left, right) => Some((left, right, cond))
+      case _ => None
+    }
+  }
+
+  /** True when any conjunct is a plain cross-side equality. */
+  def hasEquiKey(cond: Expression, left: LogicalPlan,
+      right: LogicalPlan): Boolean =
+    splitConjunctivePredicates(cond).exists {
+      case EqualTo(x, y) => oriented(x, y, left, right).isDefined
+      case _ => false
+    }
+
+  /** (x, y) as (left-side operand, right-side operand), when each
+    * draws only from one side. */
+  def oriented(x: Expression, y: Expression, left: LogicalPlan,
+      right: LogicalPlan): Option[(Expression, Expression)] =
+    if (x.references.subsetOf(left.outputSet)
+        && y.references.subsetOf(right.outputSet)) Some((x, y))
+    else if (y.references.subsetOf(left.outputSet)
+        && x.references.subsetOf(right.outputSet)) Some((y, x))
+    else None
+
+  /** The first conjunct of `cond` that `m` matches. */
+  def firstConjunct[A](cond: Expression)(m: Expression => Option[A])
+      : Option[A] =
+    splitConjunctivePredicates(cond).iterator.flatMap(m(_)).nextOption()
+
+  /** `child` plus one computed column. */
+  def withColumn(child: LogicalPlan, column: Alias): LogicalPlan =
+    Project(child.output :+ column, child)
+
+  /** Explode `child` into the key column `keyName`: project the key
+    * array `arr` (then the `carry` columns) beside the child's output
+    * and generate one row per element. The array stays in the output
+    * (canonical filters read it) unless `dropArray`; a `pos`
+    * attribute switches to PosExplode. */
+  def explodeKey(child: LogicalPlan, arr: Alias, keyName: String,
+      keyType: DataType, carry: Seq[Alias] = Nil,
+      pos: Option[Attribute] = None,
+      dropArray: Boolean = false): (LogicalPlan, Attribute) = {
+    val key = AttributeReference(keyName, keyType, nullable = true)()
+    val gen = Generate(
+      if (pos.isDefined) PosExplode(arr.toAttribute)
+      else Explode(arr.toAttribute),
+      unrequiredChildIndex = if (dropArray) Seq(child.output.size) else Nil,
+      outer = false, qualifier = None, generatorOutput = pos.toSeq :+ key,
+      child = Project(child.output ++ (arr +: carry), child))
+    (gen, key)
+  }
+
+  /** The blocked join on `key`, the `verify` above it, projected back
+    * to the rewritten join's output. */
+  def assemble(j: LogicalPlan, lgen: LogicalPlan, rgen: LogicalPlan,
+      key: Expression, verify: Expression): LogicalPlan =
+    Project(j.output,
+      Filter(verify, Join(lgen, rgen, Inner, Some(key), JoinHint.NONE)))
+
+  /** The branches as one plan: a Union when there is more than one. */
+  def union(branches: Seq[LogicalPlan]): LogicalPlan =
+    if (branches.size == 1) branches.head else Union(branches)
+
+  private def seq(from: Expression, to: Expression): Expression =
+    new Sequence(from, to, None, Some(SQLConf.get.sessionLocalTimeZone))
+
+  /** Banded-Long geometry: `count` disjoint bands of `bits` bits cut
+    * from a 64-bit signature, lowest bits first. Reads past bit 63
+    * mask to zero on both sides, so band equality stays a pure
+    * function of the signatures. Two signatures within `count − 1`
+    * differing bits agree on at least one band (pigeonhole). */
+  final case class Bands(count: Int, bits: Int) {
+    private val mask = (1L << bits) - 1
+
+    private def band(sig: Expression, shift: Expression): Expression =
+      BitwiseAnd(ShiftRightUnsigned(sig, shift), Literal(mask))
+
+    /** Explode `child` into one (i, band value) struct per band of
+      * `sig`; the structs join on equality in one key. */
+    def explode(child: LogicalPlan, sig: Expression, keyName: String,
+        arrName: String): (LogicalPlan, Attribute) = {
+      val structs = (0 until count).map { i =>
+        CreateNamedStruct(Seq(Literal("i"), Literal(i),
+          Literal("v"), band(sig, Literal(i * bits))))
+      }
+      explodeKey(child, Alias(CreateArray(structs), arrName)(), keyName,
+        StructType(Seq(StructField("i", IntegerType, nullable = false),
+          StructField("v", LongType, nullable = true))))
+    }
+
+    /** Keeps the copy whose band is the smallest band index on which
+      * `a` and `b` agree — recomputed from both signatures, so the
+      * exploded join keeps exactly one copy of each pair. */
+    def canonical(key: Attribute, a: Expression, b: Expression)
+        : Expression = {
+      val i = NamedLambdaVariable("i", IntegerType, nullable = false)
+      val eq = EqualTo(band(a, Multiply(i, Literal(bits))),
+        band(b, Multiply(i, Literal(bits))))
+      EqualTo(GetStructField(key, 0, Some("i")),
+        ArrayMin(ArrayFilter(seq(Literal(0), Literal(count - 1)),
+          LambdaFunction(eq, Seq(i)))))
+    }
+  }
+
+  object Bands {
+    /** `count` uniform ceil-width bands over `planes` signature bits. */
+    def over(planes: Int, count: Int): Bands =
+      Bands(count, (planes + count - 1) / count)
+  }
+
+  // ---- the bin rules -----------------------------------------------
+
+  def numeric(e: Expression): Boolean = e.dataType.isInstanceOf[NumericType]
+
+  def bucketOf(e: Expression, width: Double): Expression =
+    Floor(Divide(Cast(e, DoubleType), Literal(width)))
+
+  /** Explode `child` over the buckets its [lo, hi] interval covers. */
+  def explodeBuckets(child: LogicalPlan, lo: Expression, hi: Expression,
+      width: Double, keyName: String, arrName: String)
+      : (LogicalPlan, Attribute) =
+    explodeKey(child,
+      Alias(seq(bucketOf(lo, width), bucketOf(hi, width)), arrName)(),
+      keyName, LongType, dropArray = true)
+
+  /** The exact fallback for `side`'s rows that fail `safe`: they are
+    * marked with `marker` and join `other` on the ORIGINAL condition,
+    * with a BROADCAST hint on the marked side. */
+  def residual(j: LogicalPlan, cond: Expression, side: LogicalPlan,
+      safe: Expression, other: LogicalPlan, sideIsLeft: Boolean,
+      marker: String): LogicalPlan = {
+    val marked = withColumn(Filter(Not(safe), side),
+      Alias(Literal(true), marker)())
+    val bcast = Some(HintInfo(strategy = Some(BROADCAST)))
+    Project(j.output,
+      if (sideIsLeft) Join(marked, other, Inner, Some(cond), JoinHint(bcast, None))
+      else Join(other, marked, Inner, Some(cond), JoinHint(None, bcast)))
+  }
 
   /** The per-row routing predicate (see scaladoc). */
   def safeSpan(lo: Expression, hi: Expression, width: Double): Expression = {
@@ -133,7 +312,7 @@ private[plans] object Binning {
     stats.nonFiniteOrUnknown > 0 ||
       stats.maxFinite.exists(_ / width > (MaxSpanBuckets - 2).toDouble)
 
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.plans.Binning")
+  private val probeLog = org.slf4j.LoggerFactory.getLogger("graft.plans.Binning")
 
   /** Byte budget for the plan-time probe job: a larger interval side
     * probes a deterministic SAMPLE sized to this budget instead (width
@@ -252,7 +431,7 @@ private[plans] object Binning {
             nonFinite)
         } catch {
           case NonFatal(e) =>
-            log.warn(s"graft binning local probe failed, degrading to " +
+            probeLog.warn(s"graft binning local probe failed, degrading to " +
               s"fallback width + residual: $e")
             Unknown
         }
@@ -261,7 +440,7 @@ private[plans] object Binning {
         // (unbounded) and wrong to attempt at plan time; degrade
         // WITHOUT touching the session (BinningProbeSpec pins that no
         // job starts on this path).
-        log.info("graft binning probe skipped for streaming side: " +
+        probeLog.info("graft binning probe skipped for streaming side: " +
           "fallback width, residual ON")
         Unknown
       case _ =>
@@ -297,14 +476,14 @@ private[plans] object Binning {
             if (row.isNullAt(0)) None else Some(row.getDouble(0)),
             if (row.isNullAt(1)) None else Some(row.getDouble(1)),
             nonFinite)
-          log.info(s"graft binning probe: rows=${row.getLong(3)} " +
+          probeLog.info(s"graft binning probe: rows=${row.getLong(3)} " +
             s"sampled=$sampled median=${st.median} " +
             s"maxFinite=${st.maxFinite} " +
             s"nonFiniteOrUnknown=${st.nonFiniteOrUnknown}")
           st
         } catch {
           case NonFatal(e) =>
-            log.warn(s"graft binning probe failed, degrading to " +
+            probeLog.warn(s"graft binning probe failed, degrading to " +
               s"fallback width + residual: $e")
             Unknown
         }

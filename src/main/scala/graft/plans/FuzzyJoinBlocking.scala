@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
@@ -45,14 +44,13 @@ import org.apache.spark.sql.types._
   * null key array, Generate drops the row, and the original predicate
   * would have evaluated to UNKNOWN anyway.
   *
-  * Scope guards: inner joins only, threshold 1 or 2 (d ≥ 3 passes
-  * through — the neighborhood grows as L^d and entity-resolution
-  * practice stops at 2), plain string sides split cleanly across the
-  * join, and the rule never re-fires on its own or a sibling blocking
-  * rule's output (the [[Binning.MarkerPrefix]] blanket guard), which
-  * matters because it runs inside the operator-optimization fixpoint
-  * where predicate pushdown can fold the re-applied verify back into
-  * the join condition.
+  * Scope guards: [[Binning.Blockable]]'s (inner join, deterministic
+  * condition, no marker column, no cross-side equi key — the
+  * re-blocking trap: predicate pushdown can fold a hand-blocked
+  * join's levenshtein verify back into its key-equality condition),
+  * threshold 1 or 2 (d ≥ 3 passes through — the neighborhood grows as
+  * L^d and entity-resolution practice stops at 2), and plain string
+  * sides split cleanly across the join.
   *
   * Cost: the key fan-out is ×(L+1) map-side rows per input at d=1 and
   * ×(1 + L + L(L−1)/2) ≈ L²/2 at d=2 — the keyed-join shape survives
@@ -66,7 +64,8 @@ import org.apache.spark.sql.types._
   * un-rewritten plan, an exhaustive small-universe recall proof at
   * both distances, and the NestedLoop-free shape.
   */
-object FuzzyJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
+object FuzzyJoinBlocking extends Rule[LogicalPlan] {
+  import Binning._
 
   private val LkName = "__graft_lk"
   private val LksName = "__graft_lks"
@@ -123,58 +122,20 @@ object FuzzyJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  private def explodeKeys(child: LogicalPlan, s: Expression, d: Int)
-      : (LogicalPlan, Attribute, Attribute) = {
-    val ks = Alias(delKeys(s, d), LksName)()
-    val proj = Project(child.output :+ ks, child)
-    val lk = AttributeReference(LkName, StringType, nullable = true)()
-    val gen = Generate(Explode(ks.toAttribute), unrequiredChildIndex = Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(lk), child = proj)
-    (gen, lk, ks.toAttribute)
-  }
-
-  /** True when any conjunct is a plain cross-side equality — the join
-    * already has a hash-partitionable key, so blocking would only
-    * square the fan-out (the re-blocking trap: predicate pushdown can
-    * fold a hand-blocked join's levenshtein verify back into its
-    * key-equality condition, and without this guard the rule would
-    * wrap the already-exploded sides in a second neighborhood). */
-  private def hasEquiKey(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Boolean =
-    splitConjunctivePredicates(cond).exists {
-      case EqualTo(x, y) =>
-        (x.references.subsetOf(left.outputSet)
-          && y.references.subsetOf(right.outputSet)) ||
-          (y.references.subsetOf(left.outputSet)
-            && x.references.subsetOf(right.outputSet))
-      case _ => false
-    }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), _)
-        if !Binning.hasMarker(left) && !Binning.hasMarker(right)
-          && !hasEquiKey(cond, left, right) =>
-      val hit: Option[(Expression, Expression, Int)] =
-        splitConjunctivePredicates(cond).iterator.flatMap { p =>
-          edPredicate(p).flatMap { case (x, y, d) =>
-            // Orient (a from left, b from right); both plain strings.
-            if (x.dataType != StringType || y.dataType != StringType) None
-            else if (x.references.subsetOf(left.outputSet)
-                && y.references.subsetOf(right.outputSet)) Some((x, y, d))
-            else if (y.references.subsetOf(left.outputSet)
-                && x.references.subsetOf(right.outputSet)) Some((y, x, d))
-            else None
-          }
-        }.take(1).toList.headOption
-      hit match {
+    case j @ Blockable(left, right, cond) =>
+      firstConjunct(cond)(edPredicate(_).flatMap { case (x, y, d) =>
+        if (x.dataType != StringType || y.dataType != StringType) None
+        else oriented(x, y, left, right).map { case (a, b) => (a, b, d) }
+      }) match {
         case None => j
         case Some((a, b, d)) =>
-          val (lgen, lk, lks) = explodeKeys(left, a, d)
-          val (rgen, rk, rks) = explodeKeys(right, b, d)
-          val blocked = Join(lgen, rgen, Inner, Some(EqualTo(lk, rk)),
-            JoinHint.NONE)
-          val canonical = EqualTo(lk, ArrayMin(ArrayIntersect(lks, rks)))
-          Project(j.output, Filter(And(cond, canonical), blocked))
+          val lks = Alias(delKeys(a, d), LksName)()
+          val rks = Alias(delKeys(b, d), LksName)()
+          val (lgen, lk) = explodeKey(left, lks, LkName, StringType)
+          val (rgen, rk) = explodeKey(right, rks, LkName, StringType)
+          assemble(j, lgen, rgen, EqualTo(lk, rk), And(cond,
+            EqualTo(lk, ArrayMin(ArrayIntersect(lks.toAttribute, rks.toAttribute)))))
       }
   }
 }

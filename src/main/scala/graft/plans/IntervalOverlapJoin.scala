@@ -1,11 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types._
 
 /** Optimizer rule: plan `JOIN ... ON a.lo <= b.hi AND b.lo <= a.hi`
   * (the INTERVAL-OVERLAP theta join — session concurrency, ad
@@ -47,14 +44,13 @@ import org.apache.spark.sql.types._
   * NULL bounds drop from every branch, which is exact: they cannot
   * satisfy the original inequalities of an inner join.
   *
-  * Scope guards: inner joins only; deterministic condition; the two
-  * cross-side `≤`/`<` conjuncts must run in OPPOSITE directions
-  * (L→R and R→L) over numeric expressions; no existing cross-side
-  * equi key (which also keeps this rule off [[RangeBinJoin]]'s
-  * output — its blocked join has a bucket equi key); never re-fires
-  * on its own or a sibling rule's output (the [[Binning.MarkerPrefix]]
-  * blanket guard — a residual join's condition is still an overlap
-  * sandwich, so the marker is what stops a second rewrite).
+  * Scope guards: [[Binning.Blockable]]'s (inner join, deterministic
+  * condition, no cross-side equi key — which also keeps this rule off
+  * [[RangeBinJoin]]'s blocked join — and no marker column: a residual
+  * join's condition is still an overlap sandwich, so the marker is
+  * what stops a second rewrite); the two cross-side `≤`/`<` conjuncts
+  * must run in OPPOSITE directions (L→R and R→L) over numeric
+  * expressions.
   *
   * Bin width is a performance knob only, never correctness:
   * candidates scale with intervals-per-bucket², minimized when the
@@ -71,15 +67,13 @@ import org.apache.spark.sql.types._
   * exactness for NaN/Inf/sentinel rows, and the adaptive width.
   */
 object IntervalOverlapJoin extends Rule[LogicalPlan] with PredicateHelper {
+  import Binning._
 
   private val IkName = "__graft_ik"
   private val IksName = "__graft_iks"
 
   /** Fallback bin width when the stats probe cannot run. */
   val BinWidth = 1800.0
-
-  /** Width chosen by the most recent rewrite (test observability). */
-  @volatile var lastWidth: Double = BinWidth
 
   /** `x <= y` (or strict) in both spellings → (smaller, larger). */
   private def le(e: Expression): Option[(Expression, Expression)] = e match {
@@ -90,111 +84,54 @@ object IntervalOverlapJoin extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  private def numeric(e: Expression): Boolean =
-    e.dataType.isInstanceOf[NumericType]
-
-  private def bucketOf(e: Expression, width: Double): Expression =
-    Floor(Divide(Cast(e, DoubleType), Literal(width)))
-
-  private def hasEquiKey(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Boolean =
-    splitConjunctivePredicates(cond).exists {
-      case EqualTo(x, y) =>
-        (x.references.subsetOf(left.outputSet)
-          && y.references.subsetOf(right.outputSet)) ||
-          (y.references.subsetOf(left.outputSet)
-            && x.references.subsetOf(right.outputSet))
-      case _ => false
-    }
-
   /** (loL, hiL, loR, hiR) when the condition holds the two opposite
     * cross-side inequalities `loL ≤ hiR` and `loR ≤ hiL`. */
   private def overlapSandwich(cond: Expression, left: LogicalPlan,
       right: LogicalPlan)
       : Option[(Expression, Expression, Expression, Expression)] = {
     val les = splitConjunctivePredicates(cond).flatMap(le(_))
-    val l2r = les.filter { case (x, y) =>
-      x.references.subsetOf(left.outputSet) && x.references.nonEmpty &&
-        y.references.subsetOf(right.outputSet) && y.references.nonEmpty &&
-        numeric(x) && numeric(y)
-    }
-    val r2l = les.filter { case (x, y) =>
-      x.references.subsetOf(right.outputSet) && x.references.nonEmpty &&
-        y.references.subsetOf(left.outputSet) && y.references.nonEmpty &&
-        numeric(x) && numeric(y)
+    def crossing(from: LogicalPlan, to: LogicalPlan) = les.filter {
+      case (x, y) =>
+        x.references.subsetOf(from.outputSet) && x.references.nonEmpty &&
+          y.references.subsetOf(to.outputSet) && y.references.nonEmpty &&
+          numeric(x) && numeric(y)
     }
     (for {
-      (loL, hiR) <- l2r.iterator
-      (loR, hiL) <- r2l.iterator
-    } yield (loL, hiL, loR, hiR)).take(1).toList.headOption
-  }
-
-  private def explodeBuckets(child: LogicalPlan, lo: Expression,
-      hi: Expression, width: Double): (LogicalPlan, Attribute) = {
-    val seq = Alias(new Sequence(bucketOf(lo, width), bucketOf(hi, width),
-      None, Some(SQLConf.get.sessionLocalTimeZone)), IksName)()
-    val proj = Project(child.output :+ seq, child)
-    val k = AttributeReference(IkName, LongType, nullable = true)()
-    val gen = Generate(Explode(seq.toAttribute),
-      unrequiredChildIndex = Seq(child.output.size),
-      outer = false, qualifier = None, generatorOutput = Seq(k), child = proj)
-    (gen, k)
+      (loL, hiR) <- crossing(left, right).iterator
+      (loR, hiL) <- crossing(right, left).iterator
+    } yield (loL, hiL, loR, hiR)).nextOption()
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), _)
-        if cond.deterministic
-          && !Binning.hasMarker(left) && !Binning.hasMarker(right)
-          && !hasEquiKey(cond, left, right) =>
+    case j @ Blockable(left, right, cond) =>
       overlapSandwich(cond, left, right) match {
         case None => j
         case Some((loL, hiL, loR, hiR)) =>
-          val statsL = Binning.sideStats(left, loL, hiL)
-          val statsR = Binning.sideStats(right, loR, hiR)
-          val width = math.max(Binning.widthOf(statsL, BinWidth),
-            Binning.widthOf(statsR, BinWidth))
-          lastWidth = width
-          val needL = Binning.unsafePossible(statsL, width)
-          val needR = Binning.unsafePossible(statsR, width)
-          val safeL = Binning.safeSpan(loL, hiL, width)
-          val safeR = Binning.safeSpan(loR, hiR, width)
+          val statsL = sideStats(left, loL, hiL)
+          val statsR = sideStats(right, loR, hiR)
+          val width = math.max(widthOf(statsL, BinWidth),
+            widthOf(statsR, BinWidth))
+          val needL = unsafePossible(statsL, width)
+          val needR = unsafePossible(statsR, width)
+          val safeL = safeSpan(loL, hiL, width)
+          val safeR = safeSpan(loR, hiR, width)
           val binnedL = if (needL) Filter(safeL, left) else left
           val binnedR = if (needR) Filter(safeR, right) else right
-          val (lgen, lk) = explodeBuckets(binnedL, loL, hiL, width)
-          val (rgen, rk) = explodeBuckets(binnedR, loR, hiR, width)
-          val blocked = Join(lgen, rgen, Inner, Some(EqualTo(lk, rk)),
-            JoinHint.NONE)
+          val (lgen, lk) =
+            explodeBuckets(binnedL, loL, hiL, width, IkName, IksName)
+          val (rgen, rk) =
+            explodeBuckets(binnedR, loR, hiR, width, IkName, IksName)
           val canonical = EqualTo(lk,
             Greatest(Seq(bucketOf(loL, width), bucketOf(loR, width))))
-          val binned =
-            Project(j.output, Filter(And(cond, canonical), blocked))
-          val bcast = Some(HintInfo(strategy = Some(BROADCAST)))
           // Residual pairs partition cleanly: (unsafe L × all R) and
           // (safe L × unsafe R) — together with safe×safe they cover
           // every pair exactly once.
-          val res1 =
-            if (!needL) None
-            else {
-              val marked = Project(
-                left.output :+ Alias(Literal(true), IkName)(),
-                Filter(Not(safeL), left))
-              Some(Project(j.output,
-                Join(marked, right, Inner, Some(cond),
-                  JoinHint(bcast, None))))
-            }
-          val res2 =
-            if (!needR) None
-            else {
-              val marked = Project(
-                right.output :+ Alias(Literal(true), IkName)(),
-                Filter(Not(safeR), right))
-              Some(Project(j.output,
-                Join(binnedL, marked, Inner, Some(cond),
-                  JoinHint(None, bcast))))
-            }
-          val branches = binned +: (res1.toSeq ++ res2.toSeq)
-          if (branches.size == 1) binned
-          else Union(branches, byName = false, allowMissingCol = false)
+          val unsafeL = if (!needL) Nil else Seq(residual(j, cond,
+            left, safeL, right, sideIsLeft = true, IkName))
+          val unsafeR = if (!needR) Nil else Seq(residual(j, cond,
+            right, safeR, binnedL, sideIsLeft = false, IkName))
+          union(assemble(j, lgen, rgen, EqualTo(lk, rk), And(cond, canonical))
+            +: (unsafeL ++ unsafeR))
       }
   }
 }

@@ -109,15 +109,13 @@ import org.apache.spark.sql.types._
   * candidate-count drop, result equality on both paths, and the
   * gate staying off on uniform vocabularies.
   *
-  * Scope guards: inner joins only; deterministic condition (the
-  * verify re-evaluates per candidate row); both sides `array<string>`
-  * with containsNull = false (array_intersect treats null elements as
-  * equal, the blocking equi-join would not — split()-produced arrays
-  * are null-free, which is the shape this rule targets); no existing
-  * cross-side equi key (blocking would only multiply an already
-  * partitionable join); never re-fires on its own output (the
-  * `__graft_ok` marker). The threshold literal matches both INT and
-  * BIGINT spellings, with or without the implicit cast analysis wraps
+  * Scope guards: [[Binning.Blockable]]'s (inner join, deterministic
+  * condition, no marker column, no cross-side equi key); both sides
+  * `array<string>` with containsNull = false (array_intersect treats
+  * null elements as equal, the blocking equi-join would not —
+  * split()-produced arrays are null-free, which is the shape this
+  * rule targets). The threshold literal matches both INT and BIGINT
+  * spellings, with or without the implicit cast analysis wraps
   * around `size(...)` when the literal is long.
   *
   * Cost: fan-out is the prefix length per input row, map-side; the
@@ -188,6 +186,7 @@ import org.apache.spark.sql.types._
   * dense-corpus worst case.
   */
 object OverlapJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
+  import Binning._
 
   private val OkName = "__graft_ok"
   private val PosName = "__graft_pos"
@@ -691,9 +690,8 @@ object OverlapJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
       ord: Option[Literal]): (LogicalPlan, Attribute, Attribute, Attribute,
       Option[Attribute], Option[Attribute]) = {
     val sorted = Alias(sortedExpr(s, ord), SortedName)()
-    val proj1 = Project(child.output :+ sorted, child)
+    val proj1 = withColumn(child, sorted)
     val pfx = Alias(prefixFromSorted(sorted.toAttribute, req), "__graft_pfx")()
-    val ok = AttributeReference(OkName, StringType, nullable = true)()
     req match {
       case _: RelJaccard =>
         // The Jaccard face explodes POSITIONALLY: the copy's position
@@ -701,35 +699,16 @@ object OverlapJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
         // a prefix being an initial segment) feeds the positional
         // filter in the join condition.
         val len = Alias(Size(sorted.toAttribute), "__graft_len")()
-        val proj2 = Project(proj1.output ++ Seq(pfx, len), proj1)
         val pos = AttributeReference(PosName, IntegerType, nullable = false)()
-        val gen = Generate(PosExplode(pfx.toAttribute),
-          unrequiredChildIndex = Nil, outer = false, qualifier = None,
-          generatorOutput = Seq(pos, ok), child = proj2)
+        val (gen, ok) = explodeKey(proj1, pfx, OkName, StringType,
+          carry = Seq(len), pos = Some(pos))
         (gen, ok, pfx.toAttribute, sorted.toAttribute,
           Some(len.toAttribute), Some(pos))
       case _ =>
-        val proj2 = Project(proj1.output :+ pfx, proj1)
-        val gen = Generate(Explode(pfx.toAttribute),
-          unrequiredChildIndex = Nil, outer = false, qualifier = None,
-          generatorOutput = Seq(ok), child = proj2)
+        val (gen, ok) = explodeKey(proj1, pfx, OkName, StringType)
         (gen, ok, pfx.toAttribute, sorted.toAttribute, None, None)
     }
   }
-
-  /** The [[FuzzyJoinBlocking]] re-blocking guard: a join that already
-    * has a plain cross-side equality key is hash-partitionable as
-    * written. */
-  private def hasEquiKey(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Boolean =
-    splitConjunctivePredicates(cond).exists {
-      case EqualTo(x, y) =>
-        (x.references.subsetOf(left.outputSet)
-          && y.references.subsetOf(right.outputSet)) ||
-          (y.references.subsetOf(left.outputSet)
-            && x.references.subsetOf(right.outputSet))
-      case _ => false
-    }
 
   private def nullFreeStringArray(e: Expression): Boolean = e.dataType match {
     case ArrayType(StringType, false) => true
@@ -781,42 +760,27 @@ object OverlapJoinBlocking extends Rule[LogicalPlan] with PredicateHelper {
     * 23 s at sf0.1 under this mode). */
   private def tryRewrite(j: Join, parentExprs: Seq[Expression])
       : Option[(LogicalPlan, Expression => Expression)] = j match {
-    case Join(left, right, Inner, Some(cond), _)
-        if cond.deterministic
-          && !left.output.exists(_.name == OkName)
-          && !right.output.exists(_.name == OkName)
-          && !hasEquiKey(cond, left, right) =>
+    case Blockable(left, right, cond) =>
       val conjuncts = splitConjunctivePredicates(cond)
       def sided(ai: ArrayIntersect): Option[(Expression, Expression)] =
         if (!nullFreeStringArray(ai.left) || !nullFreeStringArray(ai.right))
           None
-        else if (ai.left.references.subsetOf(left.outputSet)
-            && ai.right.references.subsetOf(right.outputSet))
-          Some((ai.left, ai.right))
-        else if (ai.right.references.subsetOf(left.outputSet)
-            && ai.left.references.subsetOf(right.outputSet))
-          Some((ai.right, ai.left))
-        else None
+        else oriented(ai.left, ai.right, left, right)
       val hit: Option[(ArrayIntersect, Expression, Expression, Req)] =
-        conjuncts.iterator.flatMap { p =>
+        firstConjunct(cond) { p =>
           val abs = overlapPredicate(p).flatMap { case (ai, t) =>
             sided(ai).map { case (la, ra) => (ai, la, ra, AbsOverlap(t): Req) }
           }
           abs.orElse(jaccardPredicate(p).flatMap {
-            case (ai, au, tLit, slack, strict) =>
-              // The union must range over the SAME pair of arrays.
-              val samePair =
-                (au.left.semanticEquals(ai.left)
-                  && au.right.semanticEquals(ai.right)) ||
-                  (au.left.semanticEquals(ai.right)
-                    && au.right.semanticEquals(ai.left))
-              if (!samePair) None
-              else for {
+            // The union must range over the SAME pair of arrays.
+            case (ai, au, tLit, slack, strict) if unionOfSamePair(au, ai) =>
+              for {
                 t <- fracInfo(tLit)
                 (la, ra) <- sided(ai)
               } yield (ai, la, ra, RelJaccard(t, slack, strict): Req)
+            case _ => None
           })
-        }.take(1).toList.headOption
+        }
       hit.map { case (ai, la, ra, req) =>
         val ord = tokenDfOrder(left, la, right, ra)
         val (lgen, lk, lPfx, lSorted, lLen, lPos) =

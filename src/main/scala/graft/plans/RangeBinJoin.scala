@@ -1,11 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types._
 
 /** Optimizer rule: plan `JOIN ... ON p >= lo AND p <= hi` (the
   * point-in-interval / range theta join, including every `BETWEEN`
@@ -67,16 +64,14 @@ import org.apache.spark.sql.types._
   * backwards, which only creates candidates the verify then rejects —
   * harmless.
   *
-  * Scope guards: inner joins only; deterministic condition; both
-  * bound conjuncts must constrain the SAME point expression (semantic
-  * equality) with both bounds from the single opposite side; all
-  * three expressions numeric; no existing cross-side equi key (the
-  * re-blocking trap: q_interval_join's hand-binned shape already has
-  * a bucket key, and wrapping it again would square the fan-out);
-  * never re-fires on its own or a sibling rule's output (the
-  * [[Binning.MarkerPrefix]] blanket guard — the residual join's
-  * condition is still a range sandwich, so the marker is what stops
-  * a second rewrite).
+  * Scope guards: [[Binning.Blockable]]'s (inner join, deterministic
+  * condition, no cross-side equi key — q_interval_join's hand-binned
+  * shape already has a bucket key, and wrapping it again would square
+  * the fan-out — and no marker column: the residual join's condition
+  * is still a range sandwich, so the marker is what stops a second
+  * rewrite); both bound conjuncts must constrain the SAME point
+  * expression (semantic equality) with both bounds from the single
+  * opposite side; all three expressions numeric.
   *
   * Bin width tunes performance only, never correctness: narrow bins
   * replicate long intervals into more (bounded, broadcastable) dim
@@ -92,15 +87,13 @@ import org.apache.spark.sql.types._
   * width.
   */
 object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
+  import Binning._
 
   private val BkName = "__graft_bk"
   private val BksName = "__graft_bks"
 
   /** Fallback bin width when the stats probe cannot run. */
   val BinWidth = 8.0
-
-  /** Width chosen by the most recent rewrite (test observability). */
-  @volatile var lastWidth: Double = BinWidth
 
   /** `p >= lo` in its four spellings → (point, bound). */
   private def lowerBound(e: Expression): Option[(Expression, Expression)] =
@@ -120,23 +113,6 @@ object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
       case GreaterThanOrEqual(hi, p) => Some((p, hi))
       case GreaterThan(hi, p) => Some((p, hi))
       case _ => None
-    }
-
-  private def numeric(e: Expression): Boolean =
-    e.dataType.isInstanceOf[NumericType]
-
-  private def bucketOf(e: Expression, width: Double): Expression =
-    Floor(Divide(Cast(e, DoubleType), Literal(width)))
-
-  private def hasEquiKey(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Boolean =
-    splitConjunctivePredicates(cond).exists {
-      case EqualTo(x, y) =>
-        (x.references.subsetOf(left.outputSet)
-          && y.references.subsetOf(right.outputSet)) ||
-          (y.references.subsetOf(left.outputSet)
-            && x.references.subsetOf(right.outputSet))
-      case _ => false
     }
 
   /** (point expr, lo, hi, pointSideIsLeft) when the condition holds a
@@ -161,70 +137,29 @@ object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
         else if (pRight && bLeft) Iterator(false)
         else Iterator.empty
       }
-    } yield (p1, lo, hi, side)).take(1).toList.headOption
-  }
-
-  private def bucketPoint(child: LogicalPlan, p: Expression, width: Double)
-      : (LogicalPlan, Attribute) = {
-    val bk = Alias(bucketOf(p, width), BkName)()
-    (Project(child.output :+ bk, child), bk.toAttribute)
-  }
-
-  private def explodeBuckets(child: LogicalPlan, lo: Expression,
-      hi: Expression, width: Double): (LogicalPlan, Attribute) = {
-    val seq = Alias(new Sequence(bucketOf(lo, width), bucketOf(hi, width),
-      None, Some(SQLConf.get.sessionLocalTimeZone)), BksName)()
-    val proj = Project(child.output :+ seq, child)
-    val dk = AttributeReference(BkName, LongType, nullable = true)()
-    val gen = Generate(Explode(seq.toAttribute),
-      unrequiredChildIndex = Seq(child.output.size),
-      outer = false, qualifier = None, generatorOutput = Seq(dk), child = proj)
-    (gen, dk)
+    } yield (p1, lo, hi, side)).nextOption()
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), _)
-        if cond.deterministic
-          && !Binning.hasMarker(left) && !Binning.hasMarker(right)
-          && !hasEquiKey(cond, left, right) =>
+    case j @ Blockable(left, right, cond) =>
       rangeSandwich(cond, left, right) match {
         case None => j
         case Some((p, lo, hi, pointIsLeft)) =>
-          val dim = if (pointIsLeft) right else left
-          val stats = Binning.sideStats(dim, lo, hi)
-          val width = Binning.widthOf(stats, BinWidth)
-          lastWidth = width
-          val needResidual = Binning.unsafePossible(stats, width)
-          val safe = Binning.safeSpan(lo, hi, width)
-          val binnedDim = if (needResidual) Filter(safe, dim) else dim
-          val (newLeft, newRight, pk, dk) =
-            if (pointIsLeft) {
-              val (lp, pk) = bucketPoint(left, p, width)
-              val (rp, dk) = explodeBuckets(binnedDim, lo, hi, width)
-              (lp, rp, pk, dk)
-            } else {
-              val (lp, dk) = explodeBuckets(binnedDim, lo, hi, width)
-              val (rp, pk) = bucketPoint(right, p, width)
-              (lp, rp, pk, dk)
-            }
-          val blocked = Join(newLeft, newRight, Inner,
-            Some(EqualTo(pk, dk)), JoinHint.NONE)
-          val binned = Project(j.output, Filter(cond, blocked))
-          if (!needResidual) binned
-          else {
-            val marked = Project(
-              dim.output :+ Alias(Literal(true), BkName)(),
-              Filter(Not(safe), dim))
-            val bcast = Some(HintInfo(strategy = Some(BROADCAST)))
-            val residual =
-              if (pointIsLeft)
-                Join(left, marked, Inner, Some(cond),
-                  JoinHint(None, bcast))
-              else
-                Join(marked, right, Inner, Some(cond),
-                  JoinHint(bcast, None))
-            Union(binned, Project(j.output, residual))
-          }
+          val (point, dim) = if (pointIsLeft) (left, right) else (right, left)
+          val stats = sideStats(dim, lo, hi)
+          val width = widthOf(stats, BinWidth)
+          val needResidual = unsafePossible(stats, width)
+          val safe = safeSpan(lo, hi, width)
+          val pk = Alias(bucketOf(p, width), BkName)()
+          val pointGen = withColumn(point, pk)
+          val (dimGen, dk) = explodeBuckets(
+            if (needResidual) Filter(safe, dim) else dim,
+            lo, hi, width, BkName, BksName)
+          val (lgen, rgen) =
+            if (pointIsLeft) (pointGen, dimGen) else (dimGen, pointGen)
+          val binned = assemble(j, lgen, rgen, EqualTo(pk.toAttribute, dk), cond)
+          union(binned +: (if (!needResidual) Nil else Seq(residual(j, cond,
+            dim, safe, point, sideIsLeft = !pointIsLeft, BkName))))
       }
   }
 }

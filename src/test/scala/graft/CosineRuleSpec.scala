@@ -123,34 +123,11 @@ class CosineRuleSpec extends AnyFunSuite {
       dot(la, ra) / (nrm(la) * nrm(ra)) >= lit(0.9))
   }
 
-  test("the spelled-out dot/norm form fires UNDER ITS OPT-IN and equals brute force") {
-    // A user without the engine's cosine_sim writes the composed HOF
-    // cosine — aggregate(zip_with)/sqrt(aggregate(transform)). The
-    // LSH rewrite is lossy outside the banding radius, and a plain
-    // ANSI predicate carries no engine contract — so the spelled form
-    // is matched ONLY under the opt-in conf. With it, same banded
-    // plan, same results (the verify re-applies THIS expression, so
-    // arithmetic differences between the spellings never matter for
-    // the rewrite's correctness).
-    spark.conf.set(CosineBandJoin.SpelledKey, "true")
-    try {
-      val joined = dotNormJoin()
-      val p = joined.queryExecution.executedPlan.toString
-      assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"),
-        s"spelled dot/norm form did not fire under opt-in, plan:\n$p")
-      val got = joined.collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
-      // Same pairs as the fused spelling on this corpus (all planted
-      // cosines sit far from 0.9, so fold-order rounding cannot flip
-      // membership).
-      assert(got == brute(0.9), s"got $got want ${brute(0.9)}")
-    } finally spark.conf.unset(CosineBandJoin.SpelledKey)
-  }
-
   test("the spelled-out dot/norm form WITHOUT the opt-in keeps exact semantics") {
     val joined = dotNormJoin()
     val p = joined.queryExecution.executedPlan.toString
     assert(p.contains("NestedLoop") || p.contains("CartesianProduct"),
-      s"spelled form must pass through without ${CosineBandJoin.SpelledKey}, plan:\n$p")
+      s"spelled form must pass through, plan:\n$p")
     assert(!p.contains("__graft_cband"))
   }
 
@@ -177,45 +154,6 @@ class CosineRuleSpec extends AnyFunSuite {
       s"rule re-blocked an equi-key join, plan:\n$pk")
   }
 
-  test("conf-sized geometry: 32 planes / 8 bands fires and equals brute force") {
-    // The "plane count sizes to the corpus" claim made literal: a
-    // wider signature and more bands via session confs, same plan
-    // shape, same results. Qualifying pairs here are scaled copies
-    // (identical signatures at ANY plane count — radius 0), asserted
-    // below so the recall precondition is explicit, not assumed.
-    for ((li, la) <- rows; (ri, ra) <- rows if cosine(la, ra) >= 0.9) {
-      val d = hamming(
-        HyperSig.compute(new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          la.map(x => x: Any)), 32),
-        HyperSig.compute(new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          ra.map(x => x: Any)), 32))
-      assert(d < 8, s"pair ($li,$ri) outside the 32/8 radius")
-    }
-    spark.conf.set(CosineBandJoin.PlanesKey, "32")
-    spark.conf.set(CosineBandJoin.BandsKey, "8")
-    try {
-      val joined = df("lid", "la").join(df("rid", "ra"),
-        expr("cosine_sim(la, ra)") >= lit(0.9))
-      val p = joined.queryExecution.executedPlan.toString
-      assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"),
-        s"rule did not fire under conf geometry, plan:\n$p")
-      assert(p.contains("hypersig"), s"signature missing, plan:\n$p")
-      val got = joined.collect().map(r => (r.getLong(0), r.getLong(2)))
-        .sorted.toSeq
-      assert(got == brute(0.9), s"got $got want ${brute(0.9)}")
-      // Out-of-range confs fall back to the 16/4 defaults rather
-      // than planning a wrapped-shift geometry.
-      spark.conf.set(CosineBandJoin.PlanesKey, "999")
-      val fallback = df("lid", "la").join(df("rid", "ra"),
-        expr("cosine_sim(la, ra)") >= lit(0.9))
-      assert(fallback.collect().map(r => (r.getLong(0), r.getLong(2)))
-        .sorted.toSeq == brute(0.9))
-    } finally {
-      spark.conf.unset(CosineBandJoin.PlanesKey)
-      spark.conf.unset(CosineBandJoin.BandsKey)
-    }
-  }
-
   private def planesInPlan(joined: DataFrame): Set[Int] =
     joined.queryExecution.optimizedPlan.collect { case n =>
       n.expressions.flatMap(_.collect {
@@ -224,9 +162,8 @@ class CosineRuleSpec extends AnyFunSuite {
     }.flatten.toSet
 
   test("stats-derived geometry: small corpus keeps 16/4, web-scale stats pick 64/4") {
-    // With NEITHER geometry conf set, the rule sizes planes/bands from
-    // the plan's own row estimate at rule-fire time (the Binning
-    // precedent). Small corpora keep the certified wide-radius demo
+    // The rule sizes planes/bands from the plan's own row estimate at
+    // rule-fire time (the Binning precedent). Small corpora keep the certified wide-radius demo
     // geometry; a side whose stats say tens of millions of rows gets
     // the Manku et al. 2007 64-bit / 4×16-bit operating point. Both
     // pins read the hypersig plane count out of the optimized plan —
@@ -243,47 +180,6 @@ class CosineRuleSpec extends AnyFunSuite {
     val joined = big.join(bigR, expr("cosine_sim(la, ra)") >= lit(0.9))
     assert(planesInPlan(joined) == Set(HyperSig.MaxPlanes),
       s"web-scale stats must plan 64 planes, got ${planesInPlan(joined)}")
-    // Conf still overrides the probe in BOTH directions.
-    spark.conf.set(CosineBandJoin.PlanesKey, "16")
-    try assert(planesInPlan(big.join(bigR,
-      expr("cosine_sim(la, ra)") >= lit(0.9))) == Set(16))
-    finally spark.conf.unset(CosineBandJoin.PlanesKey)
-  }
-
-  test("full-Long band geometry: planes=64 bands=1 must not wrap the mask") {
-    // (1L << 64) wraps to 1 under Java shift semantics; a wrapped mask
-    // zeroes every band value and degenerates the banded join into a
-    // cross product. The mask special-cases to -1 (all 64 bits).
-    assert(CosineBandJoin.maskFor(64, 1) == -1L)
-    assert(CosineBandJoin.maskFor(16, 4) == 0xFL)
-    assert(CosineBandJoin.maskFor(64, 4) == 0xFFFFL)
-    // End-to-end at 64/1 the radius is ZERO: exactly the qualifying
-    // pairs with IDENTICAL 64-plane signatures come back. A wrapped
-    // mask would zero every band value, degenerate into the cross
-    // product, and return the FULL brute set — this corpus has a
-    // chance cross-cluster near-duplicate whose signatures differ,
-    // so the two outcomes are distinguishable at the result level.
-    def sig64(a: Array[Float]): Long =
-      HyperSig.compute(new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        a.map(x => x: Any)), 64)
-    val want = (for ((li, la) <- rows; (ri, ra) <- rows
-      if cosine(la, ra) >= 0.9 && sig64(la) == sig64(ra)) yield (li, ri)).sorted
-    assert(want != brute(0.9),
-      "corpus must distinguish radius-0 from the wrapped-mask cross product")
-    spark.conf.set(CosineBandJoin.PlanesKey, "64")
-    spark.conf.set(CosineBandJoin.BandsKey, "1")
-    try {
-      val joined = df("lid", "la").join(df("rid", "ra"),
-        expr("cosine_sim(la, ra)") >= lit(0.9))
-      val p = joined.queryExecution.executedPlan.toString
-      assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"))
-      val got = joined.collect().map(r => (r.getLong(0), r.getLong(2)))
-        .sorted.toSeq
-      assert(got == want, s"got $got want $want")
-    } finally {
-      spark.conf.unset(CosineBandJoin.PlanesKey)
-      spark.conf.unset(CosineBandJoin.BandsKey)
-    }
   }
 
   test("the rule fires on the spark.sql TEXT path (q_sql_cos's plan)") {

@@ -146,6 +146,17 @@ class FuzzyRuleSpec extends AnyFunSuite {
     val got = joined.collect().map(r => (r.getString(0), r.getString(2)))
       .sorted.toSeq
     assert(got == Seq(("gadget", "gidget"), ("gizmo", "gzmo")))
+    // A non-deterministic extra conjunct: the verify would re-evaluate
+    // it per candidate copy, so the rule must leave the join alone.
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val plain = Seq("gizmo").toDF("a")
+      .join(Seq("gzmo").toDF("b"), levenshtein(col("a"), col("b")) <= 1)
+      .queryExecution.analyzed
+    val noisy = TestSpark.withNondeterministicConjunct(plain)
+    assert(FuzzyJoinBlocking(plain).exists(_.isInstanceOf[Generate]),
+      "the deterministic twin must be rewritten")
+    assert(!FuzzyJoinBlocking(noisy).exists(_.isInstanceOf[Generate]),
+      s"rule blocked a non-deterministic condition:\n${FuzzyJoinBlocking(noisy)}")
   }
 
   test("empty and null strings behave like the un-rewritten join") {

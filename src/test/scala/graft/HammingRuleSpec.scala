@@ -63,6 +63,32 @@ class HammingRuleSpec extends AnyFunSuite {
       s"unexpected rewrite at radius 9:\n$plan")
   }
 
+  test("equi-key, outer and non-deterministic joins pass through") {
+    import spark.implicits._
+    val l = Seq((1L, 0xF0F0L, 0L), (2L, 0xF0F1L, 1L)).toDF("ida", "sa", "ka")
+    val r = Seq((3L, 0xF0F0L, 0L), (4L, 0xF0F3L, 1L)).toDF("idb", "sb", "kb")
+    val ham = expr("bit_count(sa ^ sb) <= 3")
+    val keyed = l.join(r, col("ka") === col("kb") && ham)
+    val pk = keyed.queryExecution.executedPlan.toString
+    assert(!pk.contains("Generate explode"),
+      s"rule re-blocked an equi-key join, plan:\n$pk")
+    assert(keyed.select("ida", "idb").collect()
+      .map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq ==
+      Seq((1L, 3L), (2L, 4L)))
+    val outer = l.join(r, ham, "left")
+    val po = outer.queryExecution.executedPlan.toString
+    assert(po.contains("NestedLoop") || po.contains("Cartesian"),
+      s"outer join must pass through, plan:\n$po")
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import graft.plans.HammingBandJoin
+    val plain = l.join(r, ham).queryExecution.analyzed
+    val noisy = TestSpark.withNondeterministicConjunct(plain)
+    assert(HammingBandJoin(plain).exists(_.isInstanceOf[Generate]),
+      "the deterministic twin must be rewritten")
+    assert(!HammingBandJoin(noisy).exists(_.isInstanceOf[Generate]),
+      s"rule banded a non-deterministic condition:\n${HammingBandJoin(noisy)}")
+  }
+
   test("q_hamming_join plans banded and matches the hand-banded q_dedup_simhash pairs") {
     val dir = "/root/testdata/sf0.001"
     val q = SparkEntry.queries("q_hamming_join")(spark, dir)

@@ -177,9 +177,7 @@ class IntervalRuleSpec extends AnyFunSuite {
     def fire(rows: Seq[(String, Double, Double)]): Double = {
       val l = rows.toDF("la", "lo1", "hi1")
       val r = rows.toDF("rb", "lo2", "hi2")
-      l.join(r, col("lo1") <= col("hi2") && col("lo2") <= col("hi1"))
-        .queryExecution.optimizedPlan
-      IntervalOverlapJoin.lastWidth
+      TestSpark.bucketWidth(l.join(r, col("lo1") <= col("hi2") && col("lo2") <= col("hi1")))
     }
     // short sessions (~40s) and long shifts (~40000s) through the SAME
     // rule: each must get a width at its own scale — the probed median

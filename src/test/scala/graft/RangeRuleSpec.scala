@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.RangeBinJoin
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -149,9 +148,7 @@ class RangeRuleSpec extends AnyFunSuite {
     def fire(rows: Seq[(String, Double, Double)]): Double = {
       val l = pts.toDF("p")
       val r = rows.toDF("band", "lo", "hi")
-      l.join(r, col("p") >= col("lo") && col("p") <= col("hi"))
-        .queryExecution.optimizedPlan
-      RangeBinJoin.lastWidth
+      TestSpark.bucketWidth(l.join(r, col("p") >= col("lo") && col("p") <= col("hi")))
     }
     // quantity-scale bands (~10 wide) and epoch-scale bands (~40000
     // wide) through the SAME rule: the probed median, quantized to a

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, Divide, Floor, LessThan, Literal, Rand}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.types.DoubleType
 
 /** One shared local session for the whole test run (sessions are
   * expensive; suites must not stop() it). */
@@ -10,4 +13,24 @@ object TestSpark {
   /** Absolute path of a test resource directory/file on disk. */
   def resource(path: String): String =
     new java.io.File(getClass.getClassLoader.getResource(path).toURI).getAbsolutePath
+
+  /** `plan` with an always-true but non-deterministic conjunct added to
+    * every join condition. The analyzer rejects such a condition, so
+    * rule specs splice it into an analyzed plan and apply the rule
+    * directly. */
+  def withNondeterministicConjunct(plan: LogicalPlan): LogicalPlan =
+    plan.transform { case j: Join =>
+      j.copy(condition =
+        j.condition.map(And(_, LessThan(Rand(Literal(0L)), Literal(2.0)))))
+    }
+
+  /** The one bin width in the optimized plan's bucket expressions
+    * (`floor(cast(x as double) / width)`) of a bin-blocking rule. */
+  def bucketWidth(df: DataFrame): Double = {
+    val ws = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+      _.collect { case Floor(Divide(_, Literal(w: Double, DoubleType), _)) => w }))
+      .distinct
+    assert(ws.size == 1, s"expected one bucket width in the plan, got $ws")
+    ws.head
+  }
 }

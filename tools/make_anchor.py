@@ -6,10 +6,10 @@ run > 3x its anchor re-runs once and keeps the min).
 Usage: python3 tools/make_anchor.py out.json in1.json [in2.json ...]
 
 Inputs are graft.Bench per-query files (the "queries" map of
-tools/bench_last.json / tools/bench_r*_*.json). The anchor for each
-query is the MINIMUM across all inputs; failed slots (-1.0) are
-ignored. Regenerate after each round's sealed runs so the refutation
-bar tracks the freshest clean numbers.
+tools/bench_last_c<cpus>.json). The anchor for each query is the
+MINIMUM across all inputs; failed slots (-1.0) are ignored. Feed it
+only the named per-query files of a round's official bench runs,
+never local runs (the anchor rule in BENCH.md).
 """
 import json
 import sys
