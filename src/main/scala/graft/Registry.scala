@@ -69,8 +69,9 @@ object Registry {
     // positives, so it must sit below an exact join.
     fn("bloom_agg", 1)(es => new BloomFilterAggregate(es(0))),
     fn("bloom_might_contain", 2)(es => BloomMightContain(es(0), es(1))),
-    // Mergeable sketch families. The Theta names shadow Spark's
-    // built-ins of the same name.
+    // Mergeable sketch families, each a build and a merge aggregate
+    // plus readouts on the graft.functions.Sketch skeleton. The Theta
+    // names shadow Spark's built-ins of the same name.
     fnArgs("theta_sketch_agg")(ThetaSketchAgg.fromArgs),
     fnArgs("theta_union_agg")(ThetaUnionAgg.fromArgs),
     fn("theta_estimate", 1)(es => ThetaEstimate(es(0))),

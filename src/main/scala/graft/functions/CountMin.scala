@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, QuaternaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 
@@ -48,6 +44,10 @@ object CountMin {
   /** Default width/depth: ε = e/4096 ≈ 0.07%, δ = e^−4 ≈ 1.8%. */
   val DefaultW = 4096
   val DefaultD = 4
+
+  /** Width w in [4, 2^22] and depth d in [1, 16]. */
+  val W: SketchSize = SketchSize("w", 4, 1 << 22)
+  val D: SketchSize = SketchSize("d", 1, 16)
 
   private val GoldenGamma = 0x9e3779b97f4a7c15L
 
@@ -99,6 +99,9 @@ object CountMin {
     bb.array()
   }
 
+  val codec: SketchCodec[Array[Long]] =
+    new SketchCodec[Array[Long]](toBytes, fromBytes, addAll)
+
   def fromBytes(bytes: Array[Byte]): Array[Long] = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val a = new Array[Long](bytes.length / 8)
@@ -121,25 +124,6 @@ object CountMin {
     }
     best
   }
-
-  /** (w, d) must be foldable positive ints, w a sane size. */
-  private[functions] def checkShape(w: Expression, d: Expression,
-      fn: String): TypeCheckResult = {
-    def ok(e: Expression) =
-      (e.dataType == IntegerType || e.dataType == LongType) && e.foldable &&
-        e.eval() != null
-    if (!ok(w) || !ok(d))
-      TypeCheckResult.TypeCheckFailure(
-        s"$fn (w, d) must be foldable integers, got (${w.sql}, ${d.sql})")
-    else {
-      val wv = w.eval().asInstanceOf[Number].intValue()
-      val dv = d.eval().asInstanceOf[Number].intValue()
-      if (wv < 4 || wv > (1 << 22) || dv < 1 || dv > 16)
-        TypeCheckResult.TypeCheckFailure(
-          s"$fn needs w in [4, 2^22], d in [1, 16], got ($wv, $dv)")
-      else TypeCheckResult.TypeCheckSuccess
-    }
-  }
 }
 
 /** `cms_sketch_agg(key[, w, d[, weight]])` → CMS bytes over LONG/INT
@@ -153,59 +137,25 @@ case class CmsSketchAgg(
     weightExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]]
-    with QuaternaryLike[Expression] {
-
-  def this(child: Expression) =
-    this(child, Literal(CountMin.DefaultW), Literal(CountMin.DefaultD),
-      Literal(1L))
-
+    extends WeightedSketchAgg[Array[Long]] with QuaternaryLike[Expression] {
   override def first: Expression = child
   override def second: Expression = w
   override def third: Expression = d
   override def fourth: Expression = weightExpr
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType =>
-      if (weightExpr.dataType != LongType && weightExpr.dataType != IntegerType)
-        TypeCheckResult.TypeCheckFailure(
-          s"cms_sketch_agg weight must be long or int, got ${weightExpr.dataType}")
-      else CountMin.checkShape(w, d, prettyName)
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cms_sketch_agg requires a long or int key, got $other")
-  }
-
-  private lazy val wv = w.eval().asInstanceOf[Number].intValue()
-  private lazy val dv = d.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "cms_sketch_agg"
+  protected def codec: SketchCodec[Array[Long]] = CountMin.codec
+  protected def sizes: Seq[(SketchSize, Expression)] =
+    Seq(CountMin.W -> w, CountMin.D -> d)
+  protected def inputTypes: String = "a long or int key"
+  protected def acceptsInput(dt: DataType): Boolean =
+    dt == LongType || dt == IntegerType
 
+  private lazy val wv = Sketch.intArg(w)
+  private lazy val dv = Sketch.intArg(d)
   override def createAggregationBuffer(): Array[Long] =
     CountMin.newState(wv, dv)
-
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val wt = weightExpr.eval(input)
-      if (wt != null)
-        CountMin.add(buffer, v.asInstanceOf[Number].longValue(),
-          wt.asInstanceOf[Number].longValue())
-    }
-    buffer
-  }
-
-  override def merge(buffer: Array[Long], input: Array[Long]): Array[Long] = {
-    CountMin.addAll(buffer, input)
-    buffer
-  }
-
-  override def eval(buffer: Array[Long]): Any = CountMin.toBytes(buffer)
-  override def serialize(buffer: Array[Long]): Array[Byte] =
-    CountMin.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): Array[Long] =
-    CountMin.fromBytes(bytes)
+  protected def insert(buffer: Array[Long], v: Any, wt: Long): Unit =
+    CountMin.add(buffer, v.asInstanceOf[Number].longValue(), wt)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -220,7 +170,8 @@ case class CmsSketchAgg(
 
 object CmsSketchAgg {
   def fromArgs(exprs: Seq[Expression]): CmsSketchAgg = exprs match {
-    case Seq(c) => new CmsSketchAgg(c)
+    case Seq(c) => CmsSketchAgg(c, Literal(CountMin.DefaultW),
+      Literal(CountMin.DefaultD), Literal(1L))
     case Seq(c, w, d) => CmsSketchAgg(c, w, d, Literal(1L))
     case Seq(c, w, d, wt) => CmsSketchAgg(c, w, d, wt)
     case _ => throw new IllegalArgumentException(
@@ -235,40 +186,22 @@ case class CmsMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cms_merge_agg requires binary, got $other")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+    extends SketchMergeAgg[Array[Long]] with UnaryLike[Expression] {
   override def prettyName: String = "cms_merge_agg"
+  protected def codec: SketchCodec[Array[Long]] = CountMin.codec
+  protected def sizes: Seq[(SketchSize, Expression)] = Nil
 
   /** Empty marker; adopts the first input's shape. */
   override def createAggregationBuffer(): Array[Long] = Array.empty[Long]
 
-  private def fold(buffer: Array[Long], other: Array[Long]): Array[Long] =
+  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] =
     if (other.isEmpty) buffer
     else if (buffer.isEmpty) other.clone()
-    else { CountMin.addAll(buffer, other); buffer }
-
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else fold(buffer, CountMin.fromBytes(v.asInstanceOf[Array[Byte]]))
-  }
-  override def merge(buffer: Array[Long], input: Array[Long]): Array[Long] =
-    fold(buffer, input)
+    else super.merge(buffer, other)
+  /** Zero input sketches roll up to the default-shape zero sketch. */
   override def eval(buffer: Array[Long]): Any =
     CountMin.toBytes(if (buffer.isEmpty)
       CountMin.newState(CountMin.DefaultW, CountMin.DefaultD) else buffer)
-  override def serialize(buffer: Array[Long]): Array[Byte] =
-    CountMin.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): Array[Long] =
-    CountMin.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsMergeAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -281,26 +214,11 @@ case class CmsMergeAgg(
 /** `cms_estimate(cmsBytes, key)` → min-over-rows count estimate
   * (≥ true count always; ≤ true + e·N/w with prob 1 − e^−d). */
 case class CmsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType | IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"cms_estimate requires (binary, long/int), got $other")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cms_estimate"
-  override def nullSafeEval(bin: Any, key: Any): Any = {
-    val k = key match {
-      case l: java.lang.Long => l.longValue()
-      case i: java.lang.Integer => i.longValue()
-    }
-    CountMin.estimate(bin.asInstanceOf[Array[Byte]], k)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (b, k) => s"graft.functions.CountMin.estimate($b, (long)$k)")
+    extends SketchProbe("cms_estimate", LongType, Seq(LongType, IntegerType),
+      "graft.functions.CountMin.estimate") {
+  protected def read(sketch: Array[Byte], key: Any): Any =
+    CountMin.estimate(sketch, key.asInstanceOf[Number].longValue())
+  override protected def probeCode(p: String): String = s"(long)$p"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CmsEstimate =
     copy(left = newLeft, right = newRight)

@@ -2,9 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -55,6 +52,10 @@ object FreqDir {
   /** Default sketch rows: 16 ≪ d=64 exercises real shrinkage on the
     * test corpus; production picks l by the error budget Δ ≤ ‖A‖²F/l. */
   val DefaultL: Int = 16
+
+  /** l in [2, 4096] for both aggregate faces: l = 0 would build a
+    * zero-row buffer that throws at the first merge append. */
+  val L: SketchSize = SketchSize("l", 2, 4096)
 
   final class State(val l: Int) {
     val m: Int = 2 * l
@@ -263,6 +264,9 @@ object FreqDir {
     bb.array()
   }
 
+  val codec: SketchCodec[State] =
+    new SketchCodec[State](serialize, deserialize, _.merge(_))
+
   def deserialize(bytes: Array[Byte]): State = {
     val bb = ByteBuffer.wrap(bytes)
     val st = new State(bb.getInt)
@@ -317,84 +321,39 @@ case class FdSketchAgg(
     weightExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[FreqDir.State]
-    with TernaryLike[Expression] {
-
-  def this(child: Expression) =
-    this(child, Literal(FreqDir.DefaultL), Literal(1L))
-
+    extends WeightedSketchAgg[FreqDir.State] with TernaryLike[Expression] {
   override def first: Expression = child
   override def second: Expression = lExpr
   override def third: Expression = weightExpr
+  override def prettyName: String = "fd_sketch_agg"
+  protected def codec: SketchCodec[FreqDir.State] = FreqDir.codec
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(FreqDir.L -> lExpr)
+  protected def inputTypes: String = "array<float>/array<double>"
+  protected def acceptsInput(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
 
   private lazy val elemType: DataType = child.dataType match {
     case ArrayType(et, _) => et
     case _ => NullType
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) =>
-      val typeOk =
-        lExpr.dataType == IntegerType || lExpr.dataType == LongType
-      if (!typeOk || !lExpr.foldable)
-        TypeCheckResult.TypeCheckFailure(
-          s"fd_sketch_agg l must be a foldable integer, got ${lExpr.sql}")
-      else if (weightExpr.dataType != LongType
-          && weightExpr.dataType != IntegerType)
-        TypeCheckResult.TypeCheckFailure(
-          s"fd_sketch_agg weight must be long or int, got ${weightExpr.dataType}")
-      else {
-        val k = lExpr.eval().asInstanceOf[Number].intValue()
-        if (k < 2 || k > 4096)
-          TypeCheckResult.TypeCheckFailure(
-            s"fd_sketch_agg l must be in [2, 4096], got $k")
-        else TypeCheckResult.TypeCheckSuccess
-      }
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"fd_sketch_agg requires array<float>/array<double>, got $other")
-  }
+  private lazy val l: Int = Sketch.intArg(lExpr)
+  override def createAggregationBuffer(): FreqDir.State = new FreqDir.State(l)
 
-  private lazy val l: Int = lExpr.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "fd_sketch_agg"
-
-  override def createAggregationBuffer(): FreqDir.State =
-    new FreqDir.State(l)
-
-  override def update(buffer: FreqDir.State,
-      input: InternalRow): FreqDir.State = {
-    val v = child.eval(input)
-    if (v != null) {
-      val w = weightExpr.eval(input)
-      if (w != null) {
-        val arr = v.asInstanceOf[ArrayData]
-        val row = new Array[Double](arr.numElements())
-        var i = 0
-        elemType match {
-          case FloatType =>
-            while (i < row.length) { row(i) = arr.getFloat(i).toDouble; i += 1 }
-          case _ =>
-            while (i < row.length) { row(i) = arr.getDouble(i); i += 1 }
-        }
-        buffer.insert(row, w.asInstanceOf[Number].longValue())
-      }
+  protected def insert(buffer: FreqDir.State, v: Any, w: Long): Unit = {
+    val arr = v.asInstanceOf[ArrayData]
+    val row = new Array[Double](arr.numElements())
+    var i = 0
+    elemType match {
+      case FloatType =>
+        while (i < row.length) { row(i) = arr.getFloat(i).toDouble; i += 1 }
+      case _ =>
+        while (i < row.length) { row(i) = arr.getDouble(i); i += 1 }
     }
-    buffer
+    buffer.insert(row, w)
   }
-
-  override def merge(buffer: FreqDir.State,
-      input: FreqDir.State): FreqDir.State = {
-    buffer.merge(input)
-    buffer
-  }
-
-  override def eval(buffer: FreqDir.State): Any = FreqDir.serialize(buffer)
-  override def serialize(buffer: FreqDir.State): Array[Byte] =
-    FreqDir.serialize(buffer)
-  override def deserialize(bytes: Array[Byte]): FreqDir.State =
-    FreqDir.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): FdSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -406,12 +365,10 @@ case class FdSketchAgg(
 }
 
 object FdSketchAgg {
-  def fromArgs(exprs: Seq[Expression]): FdSketchAgg = exprs match {
-    case Seq(c) => new FdSketchAgg(c)
-    case Seq(c, l) => FdSketchAgg(c, l, Literal(1L))
-    case Seq(c, l, w) => FdSketchAgg(c, l, w)
-    case _ => throw new IllegalArgumentException(
-      s"fd_sketch_agg expects (vec[, l[, weight]]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): FdSketchAgg = {
+    val Seq(c, l, w) = Sketch.withDefaults("fd_sketch_agg",
+      "(vec[, l[, weight]])", exprs, Literal(FreqDir.DefaultL), Literal(1L))
+    FdSketchAgg(c, l, w)
   }
 }
 
@@ -424,62 +381,15 @@ case class FdMergeAgg(
     lExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[FreqDir.State]
-    with BinaryLike[Expression] {
-
-  def this(child: Expression) = this(child, Literal(FreqDir.DefaultL))
-
+    extends SketchMergeAgg[FreqDir.State] with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = lExpr
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType =>
-      val typeOk =
-        lExpr.dataType == IntegerType || lExpr.dataType == LongType
-      if (!typeOk || !lExpr.foldable)
-        TypeCheckResult.TypeCheckFailure(
-          s"fd_merge_agg l must be a foldable integer, got ${lExpr.sql}")
-      else {
-        // Same range gate as FdSketchAgg: l=0 would otherwise build a
-        // zero-row buffer that throws at the first merge append.
-        val k = lExpr.eval().asInstanceOf[Number].intValue()
-        if (k < 2 || k > 4096)
-          TypeCheckResult.TypeCheckFailure(
-            s"fd_merge_agg l must be in [2, 4096], got $k")
-        else TypeCheckResult.TypeCheckSuccess
-      }
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"fd_merge_agg requires binary, got $other")
-  }
-
-  private lazy val l: Int = lExpr.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "fd_merge_agg"
+  protected def codec: SketchCodec[FreqDir.State] = FreqDir.codec
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(FreqDir.L -> lExpr)
 
-  override def createAggregationBuffer(): FreqDir.State =
-    new FreqDir.State(l)
-
-  override def update(buffer: FreqDir.State,
-      input: InternalRow): FreqDir.State = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.merge(FreqDir.deserialize(v.asInstanceOf[Array[Byte]]))
-    buffer
-  }
-
-  override def merge(buffer: FreqDir.State,
-      input: FreqDir.State): FreqDir.State = {
-    buffer.merge(input)
-    buffer
-  }
-
-  override def eval(buffer: FreqDir.State): Any = FreqDir.serialize(buffer)
-  override def serialize(buffer: FreqDir.State): Array[Byte] =
-    FreqDir.serialize(buffer)
-  override def deserialize(bytes: Array[Byte]): FreqDir.State =
-    FreqDir.deserialize(bytes)
+  private lazy val l: Int = Sketch.intArg(lExpr)
+  override def createAggregationBuffer(): FreqDir.State = new FreqDir.State(l)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): FdMergeAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -491,10 +401,9 @@ case class FdMergeAgg(
 }
 
 object FdMergeAgg {
-  def fromArgs(exprs: Seq[Expression]): FdMergeAgg = exprs match {
-    case Seq(c) => new FdMergeAgg(c)
-    case Seq(c, l) => FdMergeAgg(c, l)
-    case _ => throw new IllegalArgumentException(
-      s"fd_merge_agg expects (sketch[, l]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): FdMergeAgg = {
+    val Seq(c, l) = Sketch.withDefaults("fd_merge_agg", "(sketch[, l])",
+      exprs, Literal(FreqDir.DefaultL))
+    FdMergeAgg(c, l)
   }
 }

@@ -3,11 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike}
 import org.apache.spark.sql.types._
 
@@ -90,6 +86,9 @@ object Kll {
   /** Default level capacity: ~1% deterministic worst-case rank error
     * at n = 1e9 per group, ~250 KB per open group at n = 1e12. */
   val DefaultK: Int = 1024
+
+  /** k, the uniform level capacity, in [8, 2^20]. */
+  val K: SketchSize = SketchSize("k", 8, 1 << 20)
 
   /** Mutable aggregation state: value buffers per level, weight 2^l.
     * Buffers are UNSORTED between compactions (sorting happens at
@@ -209,6 +208,9 @@ object Kll {
     bb.array()
   }
 
+  val codec: SketchCodec[State] =
+    new SketchCodec[State](serialize, deserialize, _.merge(_))
+
   def deserialize(bytes: Array[Byte]): State = {
     val bb = ByteBuffer.wrap(bytes)
     val st = new State(bb.getInt)
@@ -296,27 +298,6 @@ object Kll {
     else if (st.compactions == 0L) 2.0 / st.n
     else st.levels.length.toDouble / (st.k - 1) + 2.0 / st.n
   }
-
-  private[functions] def checkK(kExpr: Expression,
-      fn: String): TypeCheckResult = {
-    val typeOk =
-      kExpr.dataType == IntegerType || kExpr.dataType == LongType
-    if (!typeOk || !kExpr.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        s"$fn k must be a foldable integer, got ${kExpr.sql}")
-    else {
-      val v = kExpr.eval()
-      if (v == null)
-        TypeCheckResult.TypeCheckFailure(s"$fn k must not be null")
-      else {
-        val k = v.asInstanceOf[Number].intValue()
-        if (k < 8 || k > (1 << 20))
-          TypeCheckResult.TypeCheckFailure(
-            s"$fn k must be in [8, 1048576], got $k")
-        else TypeCheckResult.TypeCheckSuccess
-      }
-    }
-  }
 }
 
 /** `kll_sketch_agg(col[, k[, weight]])` — build a rank sketch from raw
@@ -332,53 +313,23 @@ case class KllSketchAgg(
     weightExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Kll.State] with TernaryLike[Expression] {
-
-  def this(child: Expression) =
-    this(child, Literal(Kll.DefaultK), Literal(1L))
-
+    extends WeightedSketchAgg[Kll.State] with TernaryLike[Expression] {
   override def first: Expression = child
   override def second: Expression = kExpr
   override def third: Expression = weightExpr
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType | FloatType | LongType | IntegerType | ShortType =>
-      if (weightExpr.dataType != LongType && weightExpr.dataType != IntegerType)
-        TypeCheckResult.TypeCheckFailure(
-          s"kll_sketch_agg weight must be long or int, got ${weightExpr.dataType}")
-      else Kll.checkK(kExpr, prettyName)
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kll_sketch_agg requires a numeric column, got $other")
-  }
-
-  private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "kll_sketch_agg"
+  protected def codec: SketchCodec[Kll.State] = Kll.codec
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(Kll.K -> kExpr)
+  protected def inputTypes: String = "a numeric column"
+  protected def acceptsInput(dt: DataType): Boolean = dt match {
+    case DoubleType | FloatType | LongType | IntegerType | ShortType => true
+    case _ => false
+  }
 
+  private lazy val k: Int = Sketch.intArg(kExpr)
   override def createAggregationBuffer(): Kll.State = new Kll.State(k)
-
-  override def update(buffer: Kll.State, input: InternalRow): Kll.State = {
-    val v = child.eval(input)
-    if (v != null) {
-      val w = weightExpr.eval(input)
-      if (w != null) buffer.update(v.asInstanceOf[Number].doubleValue(),
-        w.asInstanceOf[Number].longValue())
-    }
-    buffer
-  }
-
-  override def merge(buffer: Kll.State, input: Kll.State): Kll.State = {
-    buffer.merge(input)
-    buffer
-  }
-
-  override def eval(buffer: Kll.State): Any = Kll.serialize(buffer)
-  override def serialize(buffer: Kll.State): Array[Byte] =
-    Kll.serialize(buffer)
-  override def deserialize(bytes: Array[Byte]): Kll.State =
-    Kll.deserialize(bytes)
+  protected def insert(buffer: Kll.State, v: Any, w: Long): Unit =
+    buffer.update(v.asInstanceOf[Number].doubleValue(), w)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KllSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -390,12 +341,10 @@ case class KllSketchAgg(
 }
 
 object KllSketchAgg {
-  def fromArgs(exprs: Seq[Expression]): KllSketchAgg = exprs match {
-    case Seq(c) => new KllSketchAgg(c)
-    case Seq(c, k) => KllSketchAgg(c, k, Literal(1L))
-    case Seq(c, k, w) => KllSketchAgg(c, k, w)
-    case _ => throw new IllegalArgumentException(
-      s"kll_sketch_agg expects (col[, k[, weight]]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): KllSketchAgg = {
+    val Seq(c, k, w) = Sketch.withDefaults("kll_sketch_agg",
+      "(col[, k[, weight]])", exprs, Literal(Kll.DefaultK), Literal(1L))
+    KllSketchAgg(c, k, w)
   }
 }
 
@@ -407,43 +356,15 @@ case class KllMergeAgg(
     kExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Kll.State] with BinaryLike[Expression] {
-
-  def this(child: Expression) = this(child, Literal(Kll.DefaultK))
-
+    extends SketchMergeAgg[Kll.State] with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = kExpr
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => Kll.checkK(kExpr, prettyName)
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kll_merge_agg requires binary, got $other")
-  }
-
-  private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "kll_merge_agg"
+  protected def codec: SketchCodec[Kll.State] = Kll.codec
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(Kll.K -> kExpr)
 
+  private lazy val k: Int = Sketch.intArg(kExpr)
   override def createAggregationBuffer(): Kll.State = new Kll.State(k)
-
-  override def update(buffer: Kll.State, input: InternalRow): Kll.State = {
-    val v = child.eval(input)
-    if (v != null) buffer.merge(Kll.deserialize(v.asInstanceOf[Array[Byte]]))
-    buffer
-  }
-
-  override def merge(buffer: Kll.State, input: Kll.State): Kll.State = {
-    buffer.merge(input)
-    buffer
-  }
-
-  override def eval(buffer: Kll.State): Any = Kll.serialize(buffer)
-  override def serialize(buffer: Kll.State): Array[Byte] =
-    Kll.serialize(buffer)
-  override def deserialize(bytes: Array[Byte]): Kll.State =
-    Kll.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -455,30 +376,20 @@ case class KllMergeAgg(
 }
 
 object KllMergeAgg {
-  def fromArgs(exprs: Seq[Expression]): KllMergeAgg = exprs match {
-    case Seq(c) => new KllMergeAgg(c)
-    case Seq(c, k) => KllMergeAgg(c, k)
-    case _ => throw new IllegalArgumentException(
-      s"kll_merge_agg expects (sketch[, k]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): KllMergeAgg = {
+    val Seq(c, k) = Sketch.withDefaults("kll_merge_agg", "(sketch[, k])",
+      exprs, Literal(Kll.DefaultK))
+    KllMergeAgg(c, k)
   }
 }
 
 /** `kll_quantile(sketch, q)` → the sketch's discrete lower quantile
   * (DOUBLE; exact-window sketches return the true order statistic). */
 case class KllQuantile(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"kll_quantile requires (binary, double), got $other")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "kll_quantile"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kll.quantile(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kll.quantile($a, $b)")
+    extends SketchProbe("kll_quantile", DoubleType, Seq(DoubleType),
+      "graft.functions.Kll.quantile") {
+  protected def read(sketch: Array[Byte], q: Any): Any =
+    Kll.quantile(sketch, q.asInstanceOf[Double])
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): KllQuantile =
     copy(left = newLeft, right = newRight)
@@ -486,19 +397,10 @@ case class KllQuantile(left: Expression, right: Expression)
 
 /** `kll_rank(sketch, x)` → normalized rank of x (DOUBLE in [0, 1]). */
 case class KllRank(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"kll_rank requires (binary, double), got $other")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "kll_rank"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kll.rank(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kll.rank($a, $b)")
+    extends SketchProbe("kll_rank", DoubleType, Seq(DoubleType),
+      "graft.functions.Kll.rank") {
+  protected def read(sketch: Array[Byte], x: Any): Any =
+    Kll.rank(sketch, x.asInstanceOf[Double])
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): KllRank =
     copy(left = newLeft, right = newRight)
@@ -506,54 +408,27 @@ case class KllRank(left: Expression, right: Expression)
 
 /** `kll_n(sketch)` → exact item count (weight is conserved through
   * every compaction and merge — a hard invariant, not an estimate). */
-case class KllN(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kll_n requires binary, got $other")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "kll_n"
-  override def nullSafeEval(input: Any): Any =
-    Kll.count(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kll.count($c)")
+case class KllN(child: Expression)
+    extends SketchReadout("kll_n", LongType, "graft.functions.Kll.count") {
+  protected def read(sketch: Array[Byte]): Any = Kll.count(sketch)
   override protected def withNewChildInternal(newChild: Expression): KllN =
     copy(child = newChild)
 }
 
 /** `kll_is_exact(sketch)` → true iff no compaction has fired (the
   * sketch retains every item; quantiles are true order statistics). */
-case class KllIsExact(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kll_is_exact requires binary, got $other")
-  }
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "kll_is_exact"
-  override def nullSafeEval(input: Any): Any =
-    Kll.isExact(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kll.isExact($c)")
+case class KllIsExact(child: Expression)
+    extends SketchReadout("kll_is_exact", BooleanType, "graft.functions.Kll.isExact") {
+  protected def read(sketch: Array[Byte]): Any = Kll.isExact(sketch)
   override protected def withNewChildInternal(newChild: Expression): KllIsExact =
     copy(child = newChild)
 }
 
 /** `kll_err_bound(sketch)` → deterministic normalized rank-error
   * bound (DOUBLE) — sound for any merge history; see [[Kll.errBound]]. */
-case class KllErrBound(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kll_err_bound requires binary, got $other")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "kll_err_bound"
-  override def nullSafeEval(input: Any): Any =
-    Kll.errBound(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kll.errBound($c)")
+case class KllErrBound(child: Expression)
+    extends SketchReadout("kll_err_bound", DoubleType, "graft.functions.Kll.errBound") {
+  protected def read(sketch: Array[Byte]): Any = Kll.errBound(sketch)
   override protected def withNewChildInternal(newChild: Expression): KllErrBound =
     copy(child = newChild)
 }

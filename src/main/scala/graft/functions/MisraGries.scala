@@ -4,12 +4,12 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -50,6 +50,9 @@ object MisraGries {
 
   /** Default counters: the heavy-hitter threshold is n/(k+1). */
   val DefaultK: Int = 64
+
+  /** k, the number of counters, in [1, 2^20]. */
+  val K: SketchSize = SketchSize("k", 1, 1 << 20)
 
   /** Counters are stored RAW, relative to a running decrement offset
     * `base`: logical(key) = raw − base, and an entry with raw ≤ base is
@@ -203,6 +206,9 @@ object MisraGries {
     bb.array()
   }
 
+  val codec: SketchCodec[State] =
+    new SketchCodec[State](serialize, deserialize, _.merge(_))
+
   def deserialize(bytes: Array[Byte]): State = {
     val bb = ByteBuffer.wrap(bytes)
     val st = new State(bb.getInt)
@@ -230,26 +236,6 @@ object MisraGries {
   def delta(bytes: Array[Byte]): Long = deserialize(bytes).delta
 
   def count(bytes: Array[Byte]): Long = deserialize(bytes).n
-
-  private[functions] def checkK(kExpr: Expression,
-      fn: String): TypeCheckResult = {
-    val typeOk =
-      kExpr.dataType == IntegerType || kExpr.dataType == LongType
-    if (!typeOk || !kExpr.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        s"$fn k must be a foldable integer, got ${kExpr.sql}")
-    else {
-      val v = kExpr.eval()
-      if (v == null) TypeCheckResult.TypeCheckFailure(s"$fn k must not be null")
-      else {
-        val k = v.asInstanceOf[Number].intValue()
-        if (k < 1 || k > (1 << 20))
-          TypeCheckResult.TypeCheckFailure(
-            s"$fn k must be in [1, 1048576], got $k")
-        else TypeCheckResult.TypeCheckSuccess
-      }
-    }
-  }
 }
 
 /** `mg_sketch_agg(key[, k[, weight]])` — build the k-counter summary
@@ -266,58 +252,22 @@ case class MgSketchAgg(
     weightExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[MisraGries.State]
-    with TernaryLike[Expression] {
-
-  def this(child: Expression) =
-    this(child, Literal(MisraGries.DefaultK), Literal(1L))
-
+    extends WeightedSketchAgg[MisraGries.State] with TernaryLike[Expression] {
   override def first: Expression = child
   override def second: Expression = kExpr
   override def third: Expression = weightExpr
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | LongType | IntegerType =>
-      if (weightExpr.dataType != LongType && weightExpr.dataType != IntegerType)
-        TypeCheckResult.TypeCheckFailure(
-          s"mg_sketch_agg weight must be long or int, got ${weightExpr.dataType}")
-      else MisraGries.checkK(kExpr, prettyName)
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mg_sketch_agg requires string, long, or int keys, got $other")
-  }
-
-  private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mg_sketch_agg"
+  protected def codec: SketchCodec[MisraGries.State] = MisraGries.codec
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(MisraGries.K -> kExpr)
+  protected def inputTypes: String = "string, long, or int keys"
+  protected def acceptsInput(dt: DataType): Boolean =
+    dt == StringType || dt == LongType || dt == IntegerType
 
+  private lazy val k: Int = Sketch.intArg(kExpr)
   override def createAggregationBuffer(): MisraGries.State =
     new MisraGries.State(k)
-
-  override def update(buffer: MisraGries.State,
-      input: InternalRow): MisraGries.State = {
-    val v = child.eval(input)
-    if (v != null) {
-      val w = weightExpr.eval(input)
-      if (w != null) buffer.update(v.toString,
-        w.asInstanceOf[Number].longValue())
-    }
-    buffer
-  }
-
-  override def merge(buffer: MisraGries.State,
-      input: MisraGries.State): MisraGries.State = {
-    buffer.merge(input)
-    buffer
-  }
-
-  override def eval(buffer: MisraGries.State): Any =
-    MisraGries.serialize(buffer)
-  override def serialize(buffer: MisraGries.State): Array[Byte] =
-    MisraGries.serialize(buffer)
-  override def deserialize(bytes: Array[Byte]): MisraGries.State =
-    MisraGries.deserialize(bytes)
+  protected def insert(buffer: MisraGries.State, v: Any, w: Long): Unit =
+    buffer.update(v.toString, w)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): MgSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -329,12 +279,10 @@ case class MgSketchAgg(
 }
 
 object MgSketchAgg {
-  def fromArgs(exprs: Seq[Expression]): MgSketchAgg = exprs match {
-    case Seq(c) => new MgSketchAgg(c)
-    case Seq(c, k) => MgSketchAgg(c, k, Literal(1L))
-    case Seq(c, k, w) => MgSketchAgg(c, k, w)
-    case _ => throw new IllegalArgumentException(
-      s"mg_sketch_agg expects (key[, k[, weight]]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): MgSketchAgg = {
+    val Seq(c, k, w) = Sketch.withDefaults("mg_sketch_agg",
+      "(key[, k[, weight]])", exprs, Literal(MisraGries.DefaultK), Literal(1L))
+    MgSketchAgg(c, k, w)
   }
 }
 
@@ -345,49 +293,16 @@ case class MgMergeAgg(
     kExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[MisraGries.State]
-    with BinaryLike[Expression] {
-
-  def this(child: Expression) = this(child, Literal(MisraGries.DefaultK))
-
+    extends SketchMergeAgg[MisraGries.State] with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = kExpr
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => MisraGries.checkK(kExpr, prettyName)
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mg_merge_agg requires binary, got $other")
-  }
-
-  private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mg_merge_agg"
+  protected def codec: SketchCodec[MisraGries.State] = MisraGries.codec
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(MisraGries.K -> kExpr)
 
+  private lazy val k: Int = Sketch.intArg(kExpr)
   override def createAggregationBuffer(): MisraGries.State =
     new MisraGries.State(k)
-
-  override def update(buffer: MisraGries.State,
-      input: InternalRow): MisraGries.State = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.merge(MisraGries.deserialize(v.asInstanceOf[Array[Byte]]))
-    buffer
-  }
-
-  override def merge(buffer: MisraGries.State,
-      input: MisraGries.State): MisraGries.State = {
-    buffer.merge(input)
-    buffer
-  }
-
-  override def eval(buffer: MisraGries.State): Any =
-    MisraGries.serialize(buffer)
-  override def serialize(buffer: MisraGries.State): Array[Byte] =
-    MisraGries.serialize(buffer)
-  override def deserialize(bytes: Array[Byte]): MisraGries.State =
-    MisraGries.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): MgMergeAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -399,31 +314,21 @@ case class MgMergeAgg(
 }
 
 object MgMergeAgg {
-  def fromArgs(exprs: Seq[Expression]): MgMergeAgg = exprs match {
-    case Seq(c) => new MgMergeAgg(c)
-    case Seq(c, k) => MgMergeAgg(c, k)
-    case _ => throw new IllegalArgumentException(
-      s"mg_merge_agg expects (sketch[, k]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): MgMergeAgg = {
+    val Seq(c, k) = Sketch.withDefaults("mg_merge_agg", "(sketch[, k])",
+      exprs, Literal(MisraGries.DefaultK))
+    MgMergeAgg(c, k)
   }
 }
 
 /** `mg_estimate(sketch, key)` → stored count (BIGINT; 0 when absent —
   * with the certificate true − Δ ≤ stored ≤ true). */
 case class MgEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"mg_estimate requires (binary, string), got $other")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mg_estimate"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    MisraGries.estimate(a.asInstanceOf[Array[Byte]], b.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.MisraGries.estimate($a, $b.toString())")
+    extends SketchProbe("mg_estimate", LongType, Seq(StringType),
+      "graft.functions.MisraGries.estimate") {
+  protected def read(sketch: Array[Byte], key: Any): Any =
+    MisraGries.estimate(sketch, key.toString)
+  override protected def probeCode(p: String): String = s"$p.toString()"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MgEstimate =
     copy(left = newLeft, right = newRight)
@@ -436,60 +341,35 @@ case class MgEstimate(left: Expression, right: Expression)
   * array of structs per call and runs over #sketch-rows frames, never
   * in a corpus-scan hot path. */
 case class MgEntries(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mg_entries requires binary, got $other")
-  }
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("key", StringType, nullable = false),
-      StructField("count", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "mg_entries"
-  override def nullSafeEval(input: Any): Any = {
-    val es = MisraGries.entries(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      es.map { case (k, c) =>
-        org.apache.spark.sql.catalyst.InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(k), c)
-      })
-  }
+    extends SketchReadout("mg_entries",
+      ArrayType(
+        StructType(Seq(
+          StructField("key", StringType, nullable = false),
+          StructField("count", LongType, nullable = false))),
+        containsNull = false),
+      call = null) with CodegenFallback {
+  protected def read(sketch: Array[Byte]): Any =
+    new GenericArrayData(MisraGries.entries(sketch).map { case (k, c) =>
+      InternalRow(UTF8String.fromString(k), c)
+    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    super[CodegenFallback].doGenCode(ctx, ev)
   override protected def withNewChildInternal(newChild: Expression): MgEntries =
     copy(child = newChild)
 }
 
 /** `mg_delta(sketch)` → the exact carried decrement total Δ. */
-case class MgDelta(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mg_delta requires binary, got $other")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mg_delta"
-  override def nullSafeEval(input: Any): Any =
-    MisraGries.delta(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MisraGries.delta($c)")
+case class MgDelta(child: Expression)
+    extends SketchReadout("mg_delta", LongType, "graft.functions.MisraGries.delta") {
+  protected def read(sketch: Array[Byte]): Any = MisraGries.delta(sketch)
   override protected def withNewChildInternal(newChild: Expression): MgDelta =
     copy(child = newChild)
 }
 
 /** `mg_n(sketch)` → exact processed-occurrence count. */
-case class MgN(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mg_n requires binary, got $other")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mg_n"
-  override def nullSafeEval(input: Any): Any =
-    MisraGries.count(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MisraGries.count($c)")
+case class MgN(child: Expression)
+    extends SketchReadout("mg_n", LongType, "graft.functions.MisraGries.count") {
+  protected def read(sketch: Array[Byte]): Any = MisraGries.count(sketch)
   override protected def withNewChildInternal(newChild: Expression): MgN =
     copy(child = newChild)
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, Intersection, SetOperation, Sketches, Union}
+import org.apache.datasketches.theta.{Intersection, SetOperation, Sketches, Union}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
@@ -52,28 +49,18 @@ case class ThetaSketchAgg(
     lgk: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Union] with BinaryLike[Expression] {
-
-  def this(child: Expression) = this(child, Literal(Theta.LgNominalEntries))
-
+    extends SketchAgg[Union] with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = lgk
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | StringType => Theta.checkLgK(lgk, prettyName)
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"theta_sketch_agg requires long, int, or string, got $other")
-  }
-
-  private lazy val nominalEntries: Int =
-    1 << lgk.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "theta_sketch_agg"
+  protected def inputTypes: String = "long, int, or string"
+  protected def acceptsInput(dt: DataType): Boolean =
+    dt == LongType || dt == IntegerType || dt == StringType
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(Theta.LgK -> lgk)
 
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setNominalEntries(nominalEntries).buildUnion()
+  private lazy val nominalEntries = 1 << Sketch.intArg(lgk)
+  @transient protected lazy val codec: SketchCodec[Union] = Theta.codec(nominalEntries)
+  override def createAggregationBuffer(): Union = Theta.union(nominalEntries)
 
   override def update(buffer: Union, input: InternalRow): Union = {
     val v = child.eval(input)
@@ -83,23 +70,6 @@ case class ThetaSketchAgg(
       case StringType => buffer.update(v.toString)
     }
     buffer
-  }
-
-  override def merge(buffer: Union, input: Union): Union = {
-    buffer.union(input.getResult(false, null))
-    buffer
-  }
-
-  override def eval(buffer: Union): Any =
-    buffer.getResult(true, null).toByteArray
-
-  override def serialize(buffer: Union): Array[Byte] =
-    buffer.getResult(true, null).toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = createAggregationBuffer()
-    u.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
-    u
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
@@ -112,14 +82,11 @@ case class ThetaSketchAgg(
 }
 
 object ThetaSketchAgg {
-  def apply(child: Expression): ThetaSketchAgg = new ThetaSketchAgg(child)
-
   /** 1-or-2-argument SQL face (the [[graft.Registry]] builder). */
-  def fromArgs(exprs: Seq[Expression]): ThetaSketchAgg = exprs match {
-    case Seq(c) => new ThetaSketchAgg(c)
-    case Seq(c, k) => ThetaSketchAgg(c, k)
-    case _ => throw new IllegalArgumentException(
-      s"theta_sketch_agg expects (col[, lgK]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): ThetaSketchAgg = {
+    val Seq(c, k) = Sketch.withDefaults("theta_sketch_agg", "(col[, lgK])",
+      exprs, Literal(Theta.LgNominalEntries))
+    ThetaSketchAgg(c, k)
   }
 }
 
@@ -133,50 +100,16 @@ case class ThetaUnionAgg(
     lgk: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Union] with BinaryLike[Expression] {
-
-  def this(child: Expression) = this(child, Literal(Theta.LgNominalEntries))
-
+    extends SketchMergeAgg[Union] with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = lgk
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => Theta.checkLgK(lgk, prettyName)
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"theta_union_agg requires binary, got $other")
-  }
-
-  private lazy val nominalEntries: Int =
-    1 << lgk.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "theta_union_agg"
+  protected def sizes: Seq[(SketchSize, Expression)] = Seq(Theta.LgK -> lgk)
 
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setNominalEntries(nominalEntries).buildUnion()
+  private lazy val nominalEntries = 1 << Sketch.intArg(lgk)
+  @transient protected lazy val codec: SketchCodec[Union] = Theta.codec(nominalEntries)
+  override def createAggregationBuffer(): Union = Theta.union(nominalEntries)
 
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) {
-      buffer.union(Sketches.wrapCompactSketch(
-        Memory.wrap(v.asInstanceOf[Array[Byte]])))
-    }
-    buffer
-  }
-  override def merge(buffer: Union, input: Union): Union = {
-    buffer.union(input.getResult(false, null))
-    buffer
-  }
-  override def eval(buffer: Union): Any =
-    buffer.getResult(true, null).toByteArray
-  override def serialize(buffer: Union): Array[Byte] =
-    buffer.getResult(true, null).toByteArray
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = createAggregationBuffer()
-    u.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
-    u
-  }
   override def withNewMutableAggBufferOffset(newOffset: Int): ThetaUnionAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): ThetaUnionAgg =
@@ -187,31 +120,19 @@ case class ThetaUnionAgg(
 }
 
 object ThetaUnionAgg {
-  def apply(child: Expression): ThetaUnionAgg = new ThetaUnionAgg(child)
-
   /** 1-or-2-argument SQL face (the [[graft.Registry]] builder). */
-  def fromArgs(exprs: Seq[Expression]): ThetaUnionAgg = exprs match {
-    case Seq(c) => new ThetaUnionAgg(c)
-    case Seq(c, k) => ThetaUnionAgg(c, k)
-    case _ => throw new IllegalArgumentException(
-      s"theta_union_agg expects (sketch[, lgK]), got ${exprs.length} arguments")
+  def fromArgs(exprs: Seq[Expression]): ThetaUnionAgg = {
+    val Seq(c, k) = Sketch.withDefaults("theta_union_agg", "(sketch[, lgK])",
+      exprs, Literal(Theta.LgNominalEntries))
+    ThetaUnionAgg(c, k)
   }
 }
 
 /** `theta_estimate(sketchBytes)` → rounded distinct estimate (BIGINT;
   * exact-mode sketches return the true count). */
-case class ThetaEstimate(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"theta_estimate requires binary, got $other")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "theta_estimate"
-  override def nullSafeEval(input: Any): Any =
-    Theta.estimate(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Theta.estimate($c)")
+case class ThetaEstimate(child: Expression)
+    extends SketchReadout("theta_estimate", LongType, "graft.functions.Theta.estimate") {
+  protected def read(sketch: Array[Byte]): Any = Theta.estimate(sketch)
   override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
     copy(child = newChild)
 }
@@ -220,20 +141,10 @@ case class ThetaEstimate(child: Expression) extends UnaryExpression {
   * from the two compact sketches alone — the operation HLL state
   * cannot perform. */
 case class ThetaIntersectEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"theta_intersect_estimate requires (binary, binary), got $other")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "theta_intersect_estimate"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Theta.intersectEstimate(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Theta.intersectEstimate($a, $b)")
+    extends SketchProbe("theta_intersect_estimate", LongType, Seq(BinaryType),
+      "graft.functions.Theta.intersectEstimate") {
+  protected def read(a: Array[Byte], b: Any): Any =
+    Theta.intersectEstimate(a, b.asInstanceOf[Array[Byte]])
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ThetaIntersectEstimate =
     copy(left = newLeft, right = newRight)
@@ -243,20 +154,10 @@ case class ThetaIntersectEstimate(left: Expression, right: Expression)
   * the two compact sketches — with intersection, the full set algebra
   * a sketch state table supports. */
 case class ThetaAnotBEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"theta_anotb_estimate requires (binary, binary), got $other")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "theta_anotb_estimate"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Theta.aNotBEstimate(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Theta.aNotBEstimate($a, $b)")
+    extends SketchProbe("theta_anotb_estimate", LongType, Seq(BinaryType),
+      "graft.functions.Theta.aNotBEstimate") {
+  protected def read(a: Array[Byte], b: Any): Any =
+    Theta.aNotBEstimate(a, b.asInstanceOf[Array[Byte]])
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ThetaAnotBEstimate =
     copy(left = newLeft, right = newRight)
@@ -272,27 +173,23 @@ object Theta {
   /** 4096 nominal entries — kept for callers sizing buffers. */
   val NominalEntries: Int = 1 << LgNominalEntries
 
-  /** The lgK argument must be a foldable INT in DataSketches' valid
-    * 4..26 range (shared by both aggregate faces). */
-  private[functions] def checkLgK(lgk: Expression,
-      fn: String): TypeCheckResult = {
-    val typeOk = lgk.dataType == IntegerType || lgk.dataType == LongType
-    if (!typeOk || !lgk.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        s"$fn lgK must be a foldable integer, got ${lgk.sql}")
-    else {
-      val v = lgk.eval()
-      if (v == null)
-        TypeCheckResult.TypeCheckFailure(s"$fn lgK must not be null")
-      else {
-        val k = v.asInstanceOf[Number].intValue()
-        if (k < 4 || k > 26)
-          TypeCheckResult.TypeCheckFailure(
-            s"$fn lgK must be in [4, 26], got $k")
-        else TypeCheckResult.TypeCheckSuccess
-      }
-    }
-  }
+  /** lgK must lie in DataSketches' valid 4..26 range (shared by both
+    * aggregate faces). */
+  val LgK: SketchSize = SketchSize("lgK", 4, 26)
+
+  /** The union state at `nominalEntries`, the budget of every result. */
+  def union(nominalEntries: Int): Union =
+    SetOperation.builder().setNominalEntries(nominalEntries).buildUnion()
+
+  /** Compact-sketch bytes in and out; merge is the theta union. */
+  def codec(nominalEntries: Int): SketchCodec[Union] = new SketchCodec[Union](
+    _.getResult(true, null).toByteArray,
+    bytes => {
+      val u = union(nominalEntries)
+      u.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
+      u
+    },
+    (into, from) => into.union(from.getResult(false, null)))
 
   def estimate(bytes: Array[Byte]): Long =
     Math.round(Sketches.wrapCompactSketch(Memory.wrap(bytes)).getEstimate)

@@ -71,4 +71,15 @@ class CmsSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(rolled, oneShot),
       "linearity: sum of per-slice sketches == sketch of the union")
   }
+
+  test("cms_merge_agg over zero rows or only null sketches is the default-shape zero sketch") {
+    val zero = CountMin.toBytes(
+      CountMin.newState(CountMin.DefaultW, CountMin.DefaultD))
+    for (from <- Seq("range(0)", "range(3)")) {
+      val got = spark.sql(
+        s"SELECT cms_merge_agg(CAST(NULL AS BINARY)) FROM $from")
+        .collect().head.getAs[Array[Byte]](0)
+      assert(java.util.Arrays.equals(got, zero), from)
+    }
+  }
 }

@@ -74,6 +74,31 @@ class CodegenOnlySpec extends AnyFunSuite {
     baos.toByteArray
   }
 
+  /** Sketch bytes built by a family's own aggregate over `values`. */
+  private def sketch[S](agg: SketchAgg[S], values: Any*): Array[Byte] = {
+    val buf = agg.createAggregationBuffer()
+    values.foreach(v => agg.update(buf, InternalRow(v)))
+    agg.serialize(buf)
+  }
+  private lazy val thetaA = sketch(
+    ThetaSketchAgg(BoundReference(0, LongType, nullable = true), Literal(12)),
+    (1L to 50L): _*)
+  private lazy val thetaB = sketch(
+    ThetaSketchAgg(BoundReference(0, LongType, nullable = true), Literal(12)),
+    (26L to 75L): _*)
+  private lazy val kllBytes = sketch(
+    KllSketchAgg(BoundReference(0, DoubleType, nullable = true), Literal(16),
+      Literal(1L)),
+    (1 to 100).map(_.toDouble): _*)
+  private lazy val mgBytes = sketch(
+    MgSketchAgg(BoundReference(0, StringType, nullable = true), Literal(2),
+      Literal(1L)),
+    Seq("a", "b", "a", "c", "a").map(UTF8String.fromString): _*)
+  private lazy val cmsBytes = sketch(
+    CmsSketchAgg(BoundReference(0, LongType, nullable = true), Literal(64),
+      Literal(4), Literal(1L)),
+    7L, 7L, 3L)
+
   private val dim = HyperSig.Dim
   private val emb: Seq[Float] = (0 until dim).map(i => (i % 7 - 3) * 0.25f)
   private val emb2: Seq[Float] = (0 until dim).map(i => (i % 5 - 2) * 0.5f)
@@ -139,7 +164,32 @@ class CodegenOnlySpec extends AnyFunSuite {
           BoundReference(1, toksType, nullable = false),
           Literal(1), Literal(0)),
         new GenericInternalRow(Array[Any](
-          svec("a", "b", "d"), svec("b", "c", "d")))))
+          svec("a", "b", "d"), svec("b", "c", "d"))))) ++ sketchCases
+  }
+
+  /** The codegen'd sketch readouts over bytes from each family's builder. */
+  private def sketchCases: Seq[(String, Expression, InternalRow)] = {
+    val sk = BoundReference(0, BinaryType, nullable = true)
+    def probe(dt: DataType) = BoundReference(1, dt, nullable = true)
+    def one(bytes: Array[Byte]) = new GenericInternalRow(Array[Any](bytes))
+    def two(bytes: Array[Byte], p: Any) = new GenericInternalRow(Array[Any](bytes, p))
+    Seq(
+      ("theta_estimate", ThetaEstimate(sk), one(thetaA)),
+      ("theta_intersect_estimate",
+        ThetaIntersectEstimate(sk, probe(BinaryType)), two(thetaA, thetaB)),
+      ("theta_anotb_estimate",
+        ThetaAnotBEstimate(sk, probe(BinaryType)), two(thetaA, thetaB)),
+      ("kll_quantile", KllQuantile(sk, Literal(0.5)), one(kllBytes)),
+      ("kll_rank", KllRank(sk, probe(DoubleType)), two(kllBytes, 30.0)),
+      ("kll_n", KllN(sk), one(kllBytes)),
+      ("kll_is_exact", KllIsExact(sk), one(kllBytes)),
+      ("kll_err_bound", KllErrBound(sk), one(kllBytes)),
+      ("mg_estimate", MgEstimate(sk, probe(StringType)),
+        two(mgBytes, UTF8String.fromString("a"))),
+      ("mg_delta", MgDelta(sk), one(mgBytes)),
+      ("mg_n", MgN(sk), one(mgBytes)),
+      // An int probe: the generated call widens it with a (long) cast.
+      ("cms_estimate", CmsEstimate(sk, probe(IntegerType)), two(cmsBytes, 7)))
   }
 
   /** Normalizes a result (boxed scalar or ArrayData) for comparison. */
@@ -241,6 +291,31 @@ class CodegenOnlySpec extends AnyFunSuite {
           |    (SELECT bloom_agg(xxhash64(id)) FROM bloom_cg_t),
           |    xxhash64(1000L)) AS miss""".stripMargin).collect().head
       assert(row.getBoolean(0) && !row.getBoolean(1))
+    }
+  }
+
+  test("sketch readouts over aggregated sketches run under CODEGEN_ONLY with whole-stage fallback off") {
+    // Sketches built by aggregates over range() reach the readouts as
+    // data, so the readout projection is compiled, not folded.
+    val sel = spark.sql(
+      """WITH s AS (
+        |  SELECT theta_sketch_agg(id) AS ta, theta_sketch_agg(id + 50) AS tb,
+        |    kll_sketch_agg(CAST(id AS DOUBLE), 16) AS kl,
+        |    mg_sketch_agg(id % 3, 2) AS mg, cms_sketch_agg(id % 5) AS cm
+        |  FROM range(100))
+        |SELECT theta_estimate(ta), theta_intersect_estimate(ta, tb),
+        |  theta_anotb_estimate(ta, tb), kll_quantile(kl, 0.5D),
+        |  kll_rank(kl, 50.0D), kll_n(kl), kll_is_exact(kl), kll_err_bound(kl),
+        |  mg_estimate(mg, '1'), mg_delta(mg), mg_n(mg), cms_estimate(cm, 3)
+        |FROM s""".stripMargin)
+    val baseline = sel.collect()
+    withStrictCodegen {
+      val strict = sel.collect()
+      assert(strict.toSeq === baseline.toSeq)
+      val r = strict.head
+      assert(r.getLong(0) == 100L && r.getLong(1) == 50L && r.getLong(2) == 50L)
+      assert(r.getLong(5) == 100L && !r.getBoolean(6) && r.getLong(10) == 100L)
+      assert(r.getLong(11) >= 20L, "count-min never underestimates")
     }
   }
 

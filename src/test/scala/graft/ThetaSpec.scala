@@ -151,11 +151,6 @@ class ThetaSpec extends AnyFunSuite {
       .select(expr("theta_estimate(theta_union_agg(sk, 4))").as("e"))
       .collect()(0).getLong(0)
     assert(merged == 10L)
-    // out-of-range lgK must fail analysis, not corrupt at runtime
-    val err = intercept[Exception] {
-      small.select(expr("theta_sketch_agg(v, 30)")).collect()
-    }
-    assert(err.getMessage.contains("lgK"))
   }
 
   test("string inputs hash like any other type") {
