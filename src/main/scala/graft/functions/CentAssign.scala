@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * `cent_argmin_l2(vec, cs)` / `cent_argmin_cos(vec, cs)` take a
   * float vector and the packed centroid array
   * `array<struct<cent_id: long, ce: array<float|double>, cn2: double,
-  * cn: double>>` (see `AnnOps.packCents`) and return the cent_id
+  * cn: double>>` (see `Ivf.packCents`) and return the cent_id
   * minimizing the metric, ties broken by smallest cent_id:
   *
   *  - l2:  m = round(‖v‖² − 2·v·c + cn2, 6)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.{HyperSig, Portable}
+import Ivf.{Dim, cosSimSql, dotCol, dotColSql, normSq, normSqSql, normSql}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,7 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object AnnOps {
 
-  private val Dim = 64
   private val NumPlanes = 16
   private val BandBits = 8
   private val NumBands = NumPlanes / BandBits
@@ -201,14 +201,6 @@ object AnnOps {
 
   // ---- Spark-side vector math over array columns (no UDFs) ----
 
-  private def dotCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  private def normSq(e: Column): Column =
-    aggregate(transform(e, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   private def norm(e: Column): Column = sqrt(normSq(e))
 
   /** The q_simsearch_mips computation over any (vec_id, embedding)
@@ -268,20 +260,6 @@ object AnnOps {
 
   private def dotConstSql(e: String, j: Int): String =
     s"list_sum(list_transform(range($Dim), i -> CAST($e[i+1] AS DOUBLE) * (${wSql(j)})[i+1]))"
-
-  private def dotColSql(a: String, b: String, dim: Int = Dim): String =
-    s"list_sum(list_transform(range($dim), i -> CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)))"
-
-  private def normSqSql(e: String): String =
-    s"list_sum(list_transform($e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-
-  private def normSql(e: String): String = s"sqrt(${normSqSql(e)})"
-
-  /** DuckDB twin of [[cosSim]]; `dim` bounds the dot walk for sliced
-    * prefix vectors (norms walk the list itself, so they adapt). */
-  private def cosSimSql(a: String, b: String, dim: Int = Dim): String =
-    s"""round(${dotColSql(a, b, dim)} /
-       |          (${normSql(a)} * ${normSql(b)}), 6)""".stripMargin
 
   /** DuckDB twin of [[rankTopK]]: the ranked-CTE tail appended after a
     * CTE chain that ends with `scored(probe_id, neighbor_id, cos_sim)`. */
@@ -421,8 +399,7 @@ object AnnOps {
     val rounds = (1 until k).map { i =>
       s"""d$i AS (
          |  SELECT e.vec_id, e.u,
-         |    min(round(e.vn2 - 2 * ${dotColSql("e.embedding", "c.embedding")}
-         |      + ${normSqSql("c.embedding")}, 6)) AS d2
+         |    min(${Ivf.L2.d2Sql("e.vn2", "e.embedding", "c.embedding")}) AS d2
          |  FROM e CROSS JOIN c${i - 1} c GROUP BY e.vec_id, e.u
          |), s$i AS (
          |  SELECT CAST($i AS BIGINT) AS seed_ord, d.vec_id, d.d2, e.embedding
@@ -459,8 +436,8 @@ object AnnOps {
     val rounds = (1 to KbarRounds).map { i =>
       s"""d$i AS (
          |  SELECT e.vec_id,
-         |    CAST(round(min(round(e.vn2 - 2 * ${dotColSql("e.embedding", "c.embedding")}
-         |      + ${normSqSql("c.embedding")}, 6)) * 1000000, 0) AS BIGINT) AS di
+         |    CAST(round(min(${Ivf.L2.d2Sql("e.vn2", "e.embedding", "c.embedding")})
+         |      * 1000000, 0) AS BIGINT) AS di
          |  FROM e CROSS JOIN c${i - 1} c GROUP BY e.vec_id
          |), p$i AS (
          |  SELECT CAST(sum(di) AS BIGINT) AS phi FROM d$i
@@ -474,9 +451,7 @@ object AnnOps {
     val tail =
       s"""dw AS (
          |  SELECT e.vec_id, c.vec_id AS cand_id,
-         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |      round(e.vn2 - 2 * ${dotColSql("e.embedding", "c.embedding")}
-         |        + ${normSqSql("c.embedding")}, 6), c.vec_id) AS rn
+         |    ${Ivf.rankSql(Ivf.L2.d2Sql("e.vn2", "e.embedding", "c.embedding"), "c.vec_id")}
          |  FROM e CROSS JOIN c$KbarRounds c
          |), w AS (
          |  SELECT cand_id, CAST(count(*) AS BIGINT) AS w
@@ -491,9 +466,7 @@ object AnnOps {
     val greedy = (1 until KbarK).map { i =>
       s"""gd$i AS (
          |  SELECT a.vec_id, a.w,
-         |    min(round(${normSqSql("a.embedding")}
-         |      - 2 * ${dotColSql("a.embedding", "g.embedding")}
-         |      + ${normSqSql("g.embedding")}, 6)) AS d2
+         |    min(${Ivf.L2.orderSql("a.embedding", "g.embedding")}) AS d2
          |  FROM cand a CROSS JOIN gc${i - 1} g GROUP BY a.vec_id, a.w
          |), g$i AS (
          |  SELECT CAST($i AS BIGINT) AS center_ord, d.vec_id, c.embedding
@@ -515,9 +488,8 @@ object AnnOps {
     * runs over. */
   private def kbarCorpus(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("vn2", normSq(col("embedding")))
+    Ivf.L2.withNorm(Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("embedding")))
 
   /** Round-r admission uniform: (h60(vec_id#br) mod 2²⁰) + 1. */
   private def kbarM(r: Int): Column =
@@ -532,11 +504,11 @@ object AnnOps {
       e: org.apache.spark.sql.DataFrame,
       cand: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val packed = broadcast(packCents(cand
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))))
-    e.crossJoin(packed)
+    val cells = Ivf.Cells(cand
+      .select(col("vec_id").as("cent_id"), col("embedding").as("ce")), Ivf.L2)
+    cells.withCells(e)
       .withColumn("di",
-        round(array_min(centMetrics).getField("m") * lit(1000000), 0)
+        round(cells.nearest.getField("m") * lit(1000000), 0)
           .cast("long"))
       .select(col("vec_id"), col("embedding"), col("di"))
       .localCheckpoint() // read twice: phi + the admission filter
@@ -642,17 +614,13 @@ object AnnOps {
       cents: org.apache.spark.sql.DataFrame,
       threshold: Double,
       nprobe: Int = 1): org.apache.spark.sql.DataFrame = {
-    val packed = broadcast(packCents(cents))
-    def assign(df: org.apache.spark.sql.DataFrame) = df.crossJoin(packed)
-      .withColumn("cell_id",
-        graft.functions.CentAssign.argminL2("embedding", "cs"))
-      .select(col("vec_id"), col("cell_id"), col("embedding"))
+    val cells = Ivf.Cells(cents, Ivf.L2)
+    def assign(df: org.apache.spark.sql.DataFrame) =
+      cells.assign(df, "cell_id")
+        .select(col("vec_id"), col("cell_id"), col("embedding"))
     // Test side probes its nprobe nearest cells; the reported cell_id
     // stays the primary one (rn=1 twin in the oracle).
-    val tProbes = test
-      .withColumn("vn2", normSq(col("embedding")))
-      .crossJoin(packed)
-      .withColumn("cell", explode(slice(array_sort(centMetrics), 1, nprobe)))
+    val tProbes = cells.probe(test, nprobe)
       .select(col("cell.cent_id").as("cell_id"), col("vec_id"),
         col("embedding").as("te"))
     val r = assign(train)
@@ -673,81 +641,6 @@ object AnnOps {
         when(col("max_cos").isNull, 0L).otherwise(1L).as("contaminated"))
   }
 
-  /** Centroids collapsed to ONE broadcastable row holding
-    * array<struct(cent_id, ce, cn2, cn)> — the carrier for
-    * zero-shuffle assignment. Centroid norms are computed here, once
-    * per centroid at pack time, so the per-(row, centroid) lambda does
-    * a single dot-product fold instead of three. MUST be non-empty:
-    * callers seed with vec_id < k (k ≥ 1 rows on any real table) and
-    * Lloyd recompute preserves non-emptiness. */
-  /** Seed-centroid assignment + nprobe probe routing shared by
-    * q_simsearch_ivf and q_ivf_delete. Nearest-cell assignment and
-    * probe routing are pure per-row expression work against the
-    * packed broadcast centroids — the corpus never shuffles or sorts
-    * for them; assignment is the fused codegen'd argmax-cosine (see
-    * CentArgmin), probe routing the composed sorted-slice (probe
-    * sets are always tiny). Returns (assign(vec_id, embedding,
-    * cent_id), probeCells(probe_id, pe, cent_id)). */
-  private def ivfAssignAndProbes(
-      s: SparkSession, e: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val cents = e.filter(col("vec_id") < NumCells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-    val packed = broadcast(packCents(cents))
-    val assign = e.crossJoin(packed)
-      .withColumn("cent_id",
-        graft.functions.CentAssign.argminCos("embedding", "cs"))
-      .select(col("vec_id"), col("embedding"), col("cent_id"))
-    val probeCells = e.filter(col("vec_id") < NumProbes)
-      .withColumn("vn", sqrt(normSq(col("embedding"))))
-      .crossJoin(packed)
-      .withColumn("cell", explode(slice(array_sort(negCosMetrics), 1, NProbe)))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("cell.cent_id").as("cent_id"))
-    (assign, probeCells)
-  }
-
-  private[graft] def packCents(cents: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    cents.agg(collect_list(struct(col("cent_id"), col("ce"),
-      normSq(col("ce")).as("cn2"),
-      sqrt(normSq(col("ce"))).as("cn"))).as("cs"))
-
-
-  /** Per-row (d2, cent_id) structs against every packed centroid —
-    * d2 = ‖v‖² − 2·v·c + ‖c‖² rounded 6dp (the cross-engine sync
-    * point), reading the precomputed `vn2` row column and `cn2` pack
-    * field so the lambda runs ONE dot fold per centroid. Struct
-    * ordering IS the (metric asc, cent_id asc) tiebreak order, so
-    * `array_min` of this array is the Lloyd argmin and
-    * `slice(array_sort(·), 1, n)` is nprobe routing — pure per-row
-    * expression work. The window/row_number form this replaces
-    * re-shuffled corpus×k rows by vec_id for every assignment; at
-    * 100 TB that exchange, once per Lloyd iteration, dwarfs the
-    * assignment arithmetic itself. */
-  private def centMetrics: Column = transform(col("cs"), c =>
-    struct(
-      round(col("vn2") - lit(2.0) * dotCol(col("embedding"), c.getField("ce"))
-        + c.getField("cn2"), 6).as("m"),
-      c.getField("cent_id").as("cent_id")))
-
-  /** (−cosine, cent_id) variant of [[centMetrics]] for the
-    * cosine-routed IVF: array_min of −cos = argmax cos, ties by
-    * cent_id. Composed fold form (lambda-bound, so the fused
-    * cosine_sim can't be used here) — bit-identical to it by
-    * CosSimSpec's equivalence contract, so the oracle is unchanged. */
-  private def negCosMetrics: Column = transform(col("cs"), c =>
-    struct(
-      (lit(0.0) - round(
-        dotCol(col("embedding"), c.getField("ce")) /
-          (col("vn") * c.getField("cn")), 6)).as("m"),
-      c.getField("cent_id").as("cent_id")))
-
-  private[graft] def d2Sql: String =
-    s"""round(${normSqSql("embedding")}
-       |          - 2 * ${dotColSql("embedding", "ce")}
-       |          + ${normSqSql("ce")}, 6)""".stripMargin
-
   /** Shared kNN-graph candidate machinery (q_knn_graph /
     * q_knn_classify / q_label_spread — one owner, the
     * minhashPairsOf precedent): corpus vectors live in their single
@@ -761,17 +654,11 @@ object AnnOps {
   private def knnTopK(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cents = e.filter(col("vec_id") < KSeeds)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-    val packed = broadcast(packCents(cents))
-    val corpus = e.crossJoin(packed)
-      .withColumn("cell_id",
-        graft.functions.CentAssign.argminL2("embedding", "cs"))
+    val cells = Ivf.Cells(Ivf.seeds(e, KSeeds), Ivf.L2)
+    val corpus = cells.assign(e, "cell_id")
       .select(col("cell_id"), col("vec_id").as("neighbor_id"),
         col("embedding").as("ne"))
-    val queries = e.withColumn("vn2", normSq(col("embedding")))
-      .crossJoin(packed)
-      .withColumn("cell", explode(slice(array_sort(centMetrics), 1, KnnNProbe)))
+    val queries = cells.probe(e, KnnNProbe)
       .select(col("cell.cent_id").as("cell_id"), col("vec_id"),
         col("embedding").as("qe"))
     val w = Window.partitionBy("vec_id")
@@ -789,14 +676,11 @@ object AnnOps {
     * expecting a prior `e(vec_id, embedding, …)` CTE — splice right
     * after it so all three consumers rank the identical graph. */
   private def knnTopkSqlCte: String =
-    s"""cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $KSeeds),
+    s"""cents AS (${Ivf.seedSql(KSeeds)}),
        |routed AS (
-       |  SELECT vec_id, cent_id AS cell_id, embedding, rn FROM (
-       |    SELECT e.vec_id, c.cent_id, e.embedding,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        $d2Sql,
-       |        c.cent_id) AS rn
-       |    FROM e CROSS JOIN cents c) WHERE rn <= $KnnNProbe
+       |  ${Ivf.routeSql(Ivf.L2,
+            "vec_id, cent_id AS cell_id, embedding, rn", "e.vec_id, c.cent_id, e.embedding",
+            KnnNProbe)}
        |), corpus AS (
        |  SELECT vec_id AS neighbor_id, cell_id, embedding FROM routed WHERE rn = 1
        |), queries AS (
@@ -866,9 +750,7 @@ object AnnOps {
     * absorbed instead of compounding across iterations. */
   private def lloydIterLong(e: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    e.crossJoin(broadcast(packCents(cents)))
-      .withColumn("cent_id",
-        graft.functions.CentAssign.argminL2("embedding", "cs"))
+    Ivf.Cells(cents, Ivf.L2).assign(e, "cent_id")
       .select(col("cent_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("cent_id"), col("pos").cast("long").as("pos"),
         col("v").cast("double").as("val"))
@@ -892,9 +774,7 @@ object AnnOps {
     * iteration costs exactly one corpus scan. */
   private def trainCents(e: org.apache.spark.sql.DataFrame, k: Int, iters: Int)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    var cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cent_id"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
+    var cents = Ivf.seeds(e, k, transform(col("embedding"), x => x.cast("double")))
     var centLong: org.apache.spark.sql.DataFrame = null
     for (_ <- 1 to iters) {
       centLong = lloydIterLong(e, cents)
@@ -923,9 +803,7 @@ object AnnOps {
       maxIters: Int, tol: Double)
       : (org.apache.spark.sql.DataFrame, Int, Double) = {
     require(k > 0 && maxIters > 0 && tol >= 0, "k, maxIters > 0; tol >= 0")
-    var cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cent_id"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
+    var cents = Ivf.seeds(e, k, transform(col("embedding"), x => x.cast("double")))
       .localCheckpoint()
     var iters = 0
     var shift = Double.MaxValue
@@ -947,12 +825,8 @@ object AnnOps {
     * (long-form centroids), c_n (array-form), reading c_(n-1). */
   private def lloydIterSql(n: Int): String =
     s"""a$n AS (
-       |  SELECT vec_id, cent_id, embedding FROM (
-       |    SELECT e.vec_id, c.cent_id, e.embedding,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        $d2Sql,
-       |        c.cent_id) AS rn
-       |    FROM e CROSS JOIN c${n - 1} c) WHERE rn = 1
+       |  ${Ivf.assignSql(Ivf.L2,
+            "vec_id, cent_id, embedding", "e.vec_id, c.cent_id, e.embedding", s"c${n - 1}")}
        |), l$n AS (
        |  SELECT cent_id, i AS pos, count(*) AS n_vecs,
        |    round(avg(CAST(embedding[i+1] AS DOUBLE)), 6) AS cval
@@ -968,9 +842,7 @@ object AnnOps {
     val iterCtes = (1 to iters).map(lloydIterSql).mkString(", ")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
        |c0 AS (
-       |  SELECT vec_id AS cent_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ce
-       |  FROM e WHERE vec_id < $k
+       |  ${Ivf.seedSql(k, ce = "list_transform(embedding, x -> CAST(x AS DOUBLE))")}
        |), $iterCtes""".stripMargin
   }
 
@@ -1319,22 +1191,14 @@ object AnnOps {
       Some {
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells)}
            |), assign AS (
-           |  SELECT vec_id, embedding, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
            |), probe_cells AS (
-           |  SELECT vec_id AS probe_id, pe, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding AS pe, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c
-           |    WHERE e.vec_id < $NumProbes) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.Cos,
+                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
+                NProbe, Some(NumProbes))}
            |), scored AS (
            |  SELECT probe_id, a.vec_id AS neighbor_id,
            |    ${cosSimSql("pe", "embedding")} AS cos_sim
@@ -1346,7 +1210,12 @@ object AnnOps {
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val tombstones = e.filter(col("vec_id") % 7 === 3).select("vec_id")
-      val (assign, probeCells) = ivfAssignAndProbes(s, e)
+      val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
+      val assign = cells.assign(e, "cent_id")
+        .select(col("vec_id"), col("embedding"), col("cent_id"))
+      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
+          col("cell.cent_id").as("cent_id"))
       rankTopK(broadcast(probeCells)
         .join(assign, Seq("cent_id"))
         .filter(col("vec_id") =!= col("probe_id"))
@@ -1485,14 +1354,10 @@ object AnnOps {
       Some {
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells)}
            |), assign AS MATERIALIZED (
-           |  SELECT vec_id, embedding, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
            |), sizes AS (
            |  SELECT cent_id, CAST(count(*) AS BIGINT) AS n
            |  FROM assign GROUP BY cent_id
@@ -1537,11 +1402,7 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assign = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos("embedding", "cs"))
+      val assign = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos).assign(e, "cent_id")
         .select("vec_id", "embedding", "cent_id")
         .localCheckpoint() // read by sizes, members, and the untouched side
       val sizes = assign.groupBy("cent_id").agg(count(lit(1)).as("n"))
@@ -1867,22 +1728,14 @@ object AnnOps {
       Some {
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells)}
            |), assign AS (
-           |  SELECT vec_id, embedding, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
            |), probe_cells AS (
-           |  SELECT vec_id AS probe_id, pe, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding AS pe, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c
-           |    WHERE e.vec_id < $NumProbes) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.Cos,
+                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
+                NProbe, Some(NumProbes))}
            |), scored AS (
            |  SELECT probe_id, a.vec_id AS neighbor_id,
            |    ${cosSimSql("pe", "embedding")} AS cos_sim
@@ -1892,7 +1745,12 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val (assign, probeCells) = ivfAssignAndProbes(s, e)
+      val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
+      val assign = cells.assign(e, "cent_id")
+        .select(col("vec_id"), col("embedding"), col("cent_id"))
+      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
+          col("cell.cent_id").as("cent_id"))
       rankTopK(broadcast(probeCells)
         .join(assign, Seq("cent_id"))
         .filter(col("vec_id") =!= col("probe_id"))
@@ -1926,22 +1784,14 @@ object AnnOps {
            |        ORDER BY cos_sim DESC, neighbor_id) AS rank
            |    FROM bscored) WHERE rank <= $TopK
            |), cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells)}
            |), assign AS (
-           |  SELECT vec_id, embedding, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
            |), probe_cells AS (
-           |  SELECT vec_id AS probe_id, pe, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding AS pe, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c
-           |    WHERE e.vec_id < $NumProbes) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.Cos,
+                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
+                NProbe, Some(NumProbes))}
            |), iscored AS (
            |  SELECT probe_id, a.vec_id AS neighbor_id,
            |    ${cosSimSql("pe", "embedding")} AS cos_sim
@@ -1969,17 +1819,10 @@ object AnnOps {
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
           cosSim("pe", "embedding").as("cos_sim")))
         .select("probe_id", "neighbor_id")
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val packed = broadcast(packCents(cents))
-      val assign = e.crossJoin(packed)
-        .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos("embedding", "cs"))
+      val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
+      val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = e.filter(col("vec_id") < NumProbes)
-        .withColumn("vn", sqrt(normSq(col("embedding"))))
-        .crossJoin(packed)
-        .withColumn("cell", explode(slice(array_sort(negCosMetrics), 1, NProbe)))
+      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
           col("cell.cent_id").as("cent_id"))
       val itop = rankTopK(broadcast(probeCells)
@@ -2013,22 +1856,16 @@ object AnnOps {
       Some {
         s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells)}
            |), assign AS (
-           |  SELECT vec_id, label, embedding, cent_id FROM (
-           |    SELECT e.vec_id, e.label, e.embedding, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, label, embedding, cent_id",
+                "e.vec_id, e.label, e.embedding, c.cent_id")}
            |), probe_cells AS (
-           |  SELECT vec_id AS anchor_id, albl, pe, cent_id FROM (
-           |    SELECT e.vec_id, e.label AS albl, e.embedding AS pe, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c
-           |    WHERE e.vec_id < $PairAnchors) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.Cos,
+                "vec_id AS anchor_id, albl, pe, cent_id",
+                "e.vec_id, e.label AS albl, e.embedding AS pe, c.cent_id", NProbe,
+                Some(PairAnchors))}
            |), cand AS (
            |  SELECT anchor_id, albl, a.vec_id AS cand_id, a.label AS clbl,
            |    ${cosSimSql("pe", "embedding")} AS cos_sim
@@ -2054,17 +1891,10 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val packed = broadcast(packCents(cents))
-      val assign = e.crossJoin(packed)
-        .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos("embedding", "cs"))
+      val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
+      val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("label"), col("embedding"), col("cent_id"))
-      val probeCells = e.filter(col("vec_id") < PairAnchors)
-        .withColumn("vn", sqrt(normSq(col("embedding"))))
-        .crossJoin(packed)
-        .withColumn("cell", explode(slice(array_sort(negCosMetrics), 1, NProbe)))
+      val probeCells = cells.probe(e.filter(col("vec_id") < PairAnchors), NProbe)
         .select(col("vec_id").as("anchor_id"), col("label").as("albl"),
           col("embedding").as("pe"), col("cell.cent_id").as("cent_id"))
       val cand = broadcast(probeCells)
@@ -2103,14 +1933,10 @@ object AnnOps {
         "single row is read. Reports per-probed-cell inventory",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells),
+           |cents AS (${Ivf.seedSql(NumCells)}),
            |assign AS (
-           |  SELECT vec_id, cent_id AS cell_id FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, cent_id AS cell_id", "e.vec_id, c.cent_id")}
            |)
            |SELECT cell_id, count(*) AS n_vecs,
            |  min(vec_id) AS min_vec, max(vec_id) AS max_vec
@@ -2118,11 +1944,7 @@ object AnnOps {
            |GROUP BY cell_id ORDER BY cell_id""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assigned = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val assigned = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.L2).assign(e, "cell_id")
         .select(col("vec_id"), col("embedding"), col("cell_id"))
       val out = Scratch.dir()
       assigned.write.partitionBy("cell_id").parquet(out)
@@ -2298,14 +2120,10 @@ object AnnOps {
         "broadcast). Verdict per vector: (vec_id, cell_id, keep)",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $KSeeds),
+           |cents AS (${Ivf.seedSql(KSeeds)}),
            |assign AS (
-           |  SELECT vec_id, cent_id AS cell_id, embedding FROM (
-           |    SELECT e.vec_id, c.cent_id, e.embedding,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, cent_id AS cell_id, embedding", "e.vec_id, c.cent_id, e.embedding")}
            |), dropped AS (
            |  SELECT DISTINCT b.vec_id
            |  FROM assign a JOIN assign b
@@ -2319,11 +2137,7 @@ object AnnOps {
            |ORDER BY s.vec_id""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assign = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val assign = Ivf.Cells(Ivf.seeds(e, KSeeds), Ivf.L2).assign(e, "cell_id")
         .select(col("vec_id"), col("cell_id"), col("embedding"))
       val l = assign.select(col("cell_id"), col("vec_id").as("vec_a"),
         col("embedding").as("ea"))
@@ -2361,14 +2175,11 @@ object AnnOps {
         "reported cell_id is the primary cell",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $KSeeds),
+           |cents AS (${Ivf.seedSql(KSeeds)}),
            |routed AS (
-           |  SELECT vec_id, cent_id AS cell_id, embedding, rn FROM (
-           |    SELECT e.vec_id, c.cent_id, e.embedding,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn <= $DecontamNProbe
+           |  ${Ivf.routeSql(Ivf.L2,
+                "vec_id, cent_id AS cell_id, embedding, rn", "e.vec_id, c.cent_id, e.embedding",
+                DecontamNProbe)}
            |), test AS (
            |  SELECT vec_id, cell_id, embedding FROM routed
            |  WHERE vec_id < $DecontamSplit AND rn = 1
@@ -2394,8 +2205,7 @@ object AnnOps {
            |ORDER BY t.vec_id""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
+      val cents = Ivf.seeds(e, KSeeds)
       embedDecontaminate(s,
         e.filter(col("vec_id") < DecontamSplit),
         e.filter(col("vec_id") >= DecontamSplit),
@@ -2732,16 +2542,10 @@ object AnnOps {
         "seed table; the per-iteration cost is one corpus scan",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $KSeeds),
+           |cents AS (${Ivf.seedSql(KSeeds)}),
            |assign AS (
-           |  SELECT vec_id, cent_id, embedding FROM (
-           |    SELECT e.vec_id, c.cent_id, e.embedding,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        round(${normSqSql("embedding")}
-           |          - 2 * ${dotColSql("embedding", "ce")}
-           |          + ${normSqSql("ce")}, 6),
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, cent_id, embedding", "e.vec_id, c.cent_id, e.embedding")}
            |), ev AS (
            |  SELECT cent_id, i AS pos, CAST(embedding[i+1] AS DOUBLE) AS val
            |  FROM assign, range($Dim) AS u(i)
@@ -2751,16 +2555,13 @@ object AnnOps {
            |ORDER BY cent_id, pos""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
+      val cents = Ivf.seeds(e, KSeeds)
       // Zero-shuffle fused argmin (see CentArgmin): squared L2 via
       // ||v||² − 2·v·c + ||c||², same op order as the oracle, the 6dp
       // round absorbing last-ulp libm drift; the corpus never
       // shuffles or sorts for the assignment, and the k dot products
       // run in one codegen'd loop.
-      val assign = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cent_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val assign = Ivf.Cells(cents, Ivf.L2).assign(e, "cent_id")
         .select(col("vec_id"), col("cent_id"), col("embedding"))
       // n_vecs rides the same (cent_id, pos) group — every assigned
       // vector contributes exactly one row per pos — so the whole
@@ -2812,20 +2613,12 @@ object AnnOps {
       Some {
         val c = s"c$KmIvfIters"
         s"""${kmeansTrainSql(NumCells, KmIvfIters)}, assign AS (
-           |  SELECT vec_id, embedding, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN $c c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id", cents = c)}
            |), probe_cells AS (
-           |  SELECT vec_id AS probe_id, pe, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding AS pe, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN $c c
-           |    WHERE e.vec_id < $NumProbes) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.L2,
+                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
+                NProbe, Some(NumProbes), cents = c)}
            |), scored AS (
            |  SELECT probe_id, a.vec_id AS neighbor_id,
            |    ${cosSimSql("pe", "embedding")} AS cos_sim
@@ -2836,17 +2629,12 @@ object AnnOps {
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val (cents, _) = trainCents(e, NumCells, KmIvfIters)
-      val packed = broadcast(packCents(cents))
-      // Zero-shuffle cell assignment and probe routing: array_min /
-      // sorted-slice over the packed centroids (see centMetrics).
-      val assign = e.crossJoin(packed)
-        .withColumn("cent_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val cells = Ivf.Cells(cents, Ivf.L2)
+      // Zero-shuffle cell assignment and probe routing against the
+      // packed centroids (see Ivf).
+      val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = e.filter(col("vec_id") < NumProbes)
-        .withColumn("vn2", normSq(col("embedding")))
-        .crossJoin(packed)
-        .withColumn("cell", explode(slice(array_sort(centMetrics), 1, NProbe)))
+      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
           col("cell.cent_id").as("cent_id"))
       rankTopK(broadcast(probeCells)
@@ -3069,23 +2857,15 @@ object AnnOps {
         "changes no plan shape",
       Some(
         s"""$pqChainSql, cc AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
-           |  WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells, "embeddings")}
            |), cells AS (
-           |  SELECT vec_id, cent_id AS cell_id FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM embeddings e CROSS JOIN cc c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, cent_id AS cell_id", "e.vec_id, c.cent_id", cents = "cc",
+                from = "embeddings e")}
            |), pc AS (
-           |  SELECT vec_id AS probe_id, cent_id AS cell_id FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM embeddings e CROSS JOIN cc c
-           |    WHERE e.vec_id < $PqProbes) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.L2,
+                "vec_id AS probe_id, cent_id AS cell_id", "e.vec_id, c.cent_id", NProbe,
+                Some(PqProbes), cents = "cc", from = "embeddings e")}
            |), dt AS (
            |  SELECT q.vec_id AS probe_id, q.sp, c.cent_id,
            |    ${pqD2Sql("q.sv", "c.ce")} AS dt
@@ -3113,13 +2893,8 @@ object AnnOps {
       // Coarse quantizer: broadcast argmin cell assignment (the
       // corpus never shuffles for it) + probe routing over the same
       // packed centroids.
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val packed = broadcast(packCents(cents))
-      val probeCells = e.filter(col("vec_id") < PqProbes)
-        .withColumn("vn2", normSq(col("embedding")))
-        .crossJoin(packed)
-        .withColumn("cell", explode(slice(array_sort(centMetrics), 1, NProbe)))
+      val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.L2)
+      val probeCells = cells.probe(e.filter(col("vec_id") < PqProbes), NProbe)
         .select(col("vec_id").as("probe_id"), col("cell.cent_id").as("cell_id"))
       // ONE corpus pass assigns the cell and explodes the subvectors
       // with cell_id riding along — the codes are born cell-keyed
@@ -3129,9 +2904,7 @@ object AnnOps {
       // consumers (training, encode, distance tables); a deployed
       // index pays it at ingest and writes it — q_ivf_layout is that
       // write as a query.
-      val sv = e.crossJoin(packed)
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val sv = cells.assign(e, "cell_id")
         .select(col("vec_id"), col("cell_id"),
           posexplode(expr(s"transform(sequence(0, ${PqM - 1}), " +
             s"j -> slice(embedding, j*$PqSubDim+1, $PqSubDim))"))
@@ -3191,15 +2964,11 @@ object AnnOps {
              |        - CAST(cc.ce[sp*$PqSubDim + i + 1] AS DOUBLE) AS FLOAT)
              |        AS DOUBLE))""".stripMargin
         s"""WITH cc AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
-           |  WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells, "embeddings")}
            |), cells AS (
-           |  SELECT vec_id, cent_id AS cell_id FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM embeddings e CROSS JOIN cc c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, cent_id AS cell_id", "e.vec_id, c.cent_id", cents = "cc",
+                from = "embeddings e")}
            |), sv AS (
            |  SELECT e.vec_id, sp,
            |    $resSubSql AS sv
@@ -3208,13 +2977,9 @@ object AnnOps {
            |  JOIN cc ON cc.cent_id = cl.cell_id,
            |       unnest(range($PqM)) AS u(sp)
            |), ${pqChainBodySql(NumCells)}, pc AS (
-           |  SELECT vec_id AS probe_id, cent_id AS cell_id FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM embeddings e CROSS JOIN cc c
-           |    WHERE e.vec_id < $PqProbes) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.L2,
+                "vec_id AS probe_id, cent_id AS cell_id", "e.vec_id, c.cent_id", NProbe,
+                Some(PqProbes), cents = "cc", from = "embeddings e")}
            |), qsv AS (
            |  SELECT pc.probe_id, pc.cell_id, sp,
            |    $resSubSql AS sv
@@ -3246,15 +3011,11 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val packed = broadcast(packCents(cents))
+      val cents = Ivf.seeds(e, NumCells)
+      val cells = Ivf.Cells(cents, Ivf.L2)
       val centsByCell =
         broadcast(cents.select(col("cent_id").as("cell_id"), col("ce")))
-      val probeCells = e.filter(col("vec_id") < PqProbes)
-        .withColumn("vn2", normSq(col("embedding")))
-        .crossJoin(packed)
-        .withColumn("cell", explode(slice(array_sort(centMetrics), 1, NProbe)))
+      val probeCells = cells.probe(e.filter(col("vec_id") < PqProbes), NProbe)
         .select(col("vec_id").as("probe_id"), col("cell.cent_id").as("cell_id"))
       // Residual subvectors: exact double difference rounded to float
       // (identical to IEEE float subtraction; spelled out so the
@@ -3265,9 +3026,7 @@ object AnnOps {
         "(x, y) -> CAST(CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS FLOAT)))")
       // ONE corpus pass: broadcast-argmin cell, centroid fetch from
       // the 16-row broadcast, residual subvectors born cell-keyed.
-      val sv = e.crossJoin(packed)
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val sv = cells.assign(e, "cell_id")
         .join(centsByCell, Seq("cell_id"))
         .select(col("vec_id"), col("cell_id"),
           posexplode(resSlices).as(Seq("sp", "sv")))
@@ -3426,13 +3185,10 @@ object AnnOps {
       // family's coarse centroids (the knnTopK shape), keep each
       // cell's cosine-closest vector. 8 rows, space-covering by
       // construction.
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
+      val cents = Ivf.seeds(e, KSeeds)
       val mw = Window.partitionBy("cell_id")
         .orderBy(col("mcos").desc, col("vec_id"))
-      val entries = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val entries = Ivf.Cells(cents, Ivf.L2).assign(e, "cell_id")
         .join(broadcast(cents), col("cell_id") === col("cent_id"))
         .select(col("vec_id"), col("cell_id"),
           cosSim("embedding", "ce").as("mcos"))
@@ -3538,14 +3294,10 @@ object AnnOps {
         "never on corpus rows. Output is k rows at any corpus size",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding, label FROM embeddings),
-           |cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $KSeeds),
+           |cents AS (${Ivf.seedSql(KSeeds)}),
            |assign AS (
-           |  SELECT vec_id, label, cent_id AS cell_id FROM (
-           |    SELECT e.vec_id, e.label, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, label, cent_id AS cell_id", "e.vec_id, e.label, c.cent_id")}
            |), counts AS (
            |  SELECT cell_id, label, count(*) AS c
            |  FROM assign GROUP BY cell_id, label
@@ -3563,11 +3315,7 @@ object AnnOps {
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir)
         .select("vec_id", "embedding", "label")
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assign = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val assign = Ivf.Cells(Ivf.seeds(e, KSeeds), Ivf.L2).assign(e, "cell_id")
         .select(col("cell_id"), col("label"))
       val counts = assign.groupBy("cell_id", "label")
         .agg(count(lit(1)).as("c"))
@@ -3658,15 +3406,11 @@ object AnnOps {
         "100 TB. Emits every vector with its keep verdict",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $KSeeds),
+           |cents AS (${Ivf.seedSql(KSeeds)}),
            |assigned AS (
-           |  SELECT vec_id, cent_id AS cell_id, cos_sim FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      ${cosSimSql("embedding", "ce")} AS cos_sim,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, cent_id AS cell_id, cos_sim",
+                s"e.vec_id, c.cent_id,\n      ${cosSimSql("embedding", "ce")} AS cos_sim")}
            |), ranked AS (
            |  SELECT vec_id, cell_id, cos_sim,
            |    row_number() OVER (PARTITION BY cell_id
@@ -3679,16 +3423,15 @@ object AnnOps {
            |FROM ranked ORDER BY vec_id""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
+      val cents = Ivf.seeds(e, KSeeds)
       // array_min over (−cos, cent_id) structs = argmax cosine with
       // cent_id tiebreak — and carries the achieved cosine out, which
       // the fused id-only argmin can't; 0.0−(0.0−r) restores the 6dp
       // cosine exactly.
-      val assigned = e
-        .withColumn("vn", sqrt(normSq(col("embedding"))))
-        .crossJoin(broadcast(packCents(cents)))
-        .withColumn("best", array_min(negCosMetrics))
+      val normed = Ivf.Cos.withNorm(e)
+      val cells = Ivf.Cells(cents, Ivf.Cos)
+      val assigned = cells.withCells(normed)
+        .withColumn("best", cells.nearest)
         .select(col("vec_id"), col("best.cent_id").as("cell_id"),
           (lit(0.0) - col("best.m")).as("cos_to_centroid"))
       val byCell = Window.partitionBy("cell_id")
@@ -3718,22 +3461,16 @@ object AnnOps {
       Some {
         s"""WITH e AS (SELECT vec_id, embedding, label FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells)}
            |), assign AS (
-           |  SELECT vec_id, embedding, label, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding, e.label, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, embedding, label, cent_id",
+                "e.vec_id, e.embedding, e.label, c.cent_id")}
            |), probe_cells AS (
-           |  SELECT vec_id AS probe_id, pe, plabel, cent_id FROM (
-           |    SELECT e.vec_id, e.embedding AS pe, e.label AS plabel, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c
-           |    WHERE e.vec_id < $NumProbes) WHERE rn <= $NProbe
+           |  ${Ivf.routeSql(Ivf.Cos,
+                "vec_id AS probe_id, pe, plabel, cent_id",
+                "e.vec_id, e.embedding AS pe, e.label AS plabel, c.cent_id", NProbe,
+                Some(NumProbes))}
            |), scored AS (
            |  SELECT probe_id, a.vec_id AS neighbor_id,
            |    ${cosSimSql("pe", "embedding")} AS cos_sim
@@ -3743,17 +3480,10 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding", "label")
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val packed = broadcast(packCents(cents))
-      val assign = e.crossJoin(packed)
-        .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos("embedding", "cs"))
+      val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
+      val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("label"), col("cent_id"))
-      val probeCells = e.filter(col("vec_id") < NumProbes)
-        .withColumn("vn", sqrt(normSq(col("embedding"))))
-        .crossJoin(packed)
-        .withColumn("cell", explode(slice(array_sort(negCosMetrics), 1, NProbe)))
+      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
           col("label").as("plabel"), col("cell.cent_id").as("cent_id"))
       // Label predicate lands on the candidate stream right at the
@@ -3782,15 +3512,10 @@ object AnnOps {
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e
-           |  WHERE vec_id < $NumCells
+           |  ${Ivf.seedSql(NumCells)}
            |), assign AS (
-           |  SELECT vec_id, cent_id FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cosSimSql("embedding", "ce")} DESC,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.Cos,
+                "vec_id, cent_id", "e.vec_id, c.cent_id")}
            |), sizes AS (
            |  SELECT c.cent_id AS cell_id,
            |    CAST(coalesce(n.n, 0) AS BIGINT) AS n_vecs
@@ -3806,11 +3531,8 @@ object AnnOps {
            |ORDER BY cell_id""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val counts = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminCos("embedding", "cs"))
+      val cents = Ivf.seeds(e, NumCells)
+      val counts = Ivf.Cells(cents, Ivf.Cos).assign(e, "cell_id")
         .groupBy("cell_id").agg(count(lit(1)).as("n"))
       val tot = e.agg(count(lit(1)).cast("double").as("t"))
       // The rank window runs over k cell rows, not the corpus.
@@ -3854,22 +3576,14 @@ object AnnOps {
              |        ORDER BY cos_sim DESC, neighbor_id) AS rank
              |    FROM bscored) WHERE rank <= $TopK
              |), cents AS (
-             |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $NumCells
+             |  ${Ivf.seedSql(NumCells)}
              |), assign AS (
-             |  SELECT vec_id, embedding, cent_id FROM (
-             |    SELECT e.vec_id, e.embedding, c.cent_id,
-             |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-             |        ${cosSimSql("embedding", "ce")} DESC,
-             |        c.cent_id) AS rn
-             |    FROM e CROSS JOIN cents c) WHERE rn = 1
+             |  ${Ivf.assignSql(Ivf.Cos,
+                  "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
              |), probe_cells AS (
-             |  SELECT vec_id AS probe_id, pe, cent_id, rn AS cell_rank FROM (
-             |    SELECT e.vec_id, e.embedding AS pe, c.cent_id,
-             |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-             |        ${cosSimSql("embedding", "ce")} DESC,
-             |        c.cent_id) AS rn
-             |    FROM e CROSS JOIN cents c
-             |    WHERE e.vec_id < $NumProbes) WHERE rn <= $NProbe
+             |  ${Ivf.routeSql(Ivf.Cos,
+                  "vec_id AS probe_id, pe, cent_id, rn AS cell_rank",
+                  "e.vec_id, e.embedding AS pe, c.cent_id", NProbe, Some(NumProbes))}
              |), cand AS (
              |  SELECT probe_id, cell_rank, a.vec_id AS neighbor_id,
              |    ${cosSimSql("pe", "embedding")} AS cos_sim
@@ -3907,21 +3621,11 @@ object AnnOps {
           cosSim("pe", "embedding").as("cos_sim")))
         .select("probe_id", "neighbor_id")
         .localCheckpoint()
-      val cents = e.filter(col("vec_id") < NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val packed = broadcast(packCents(cents))
-      val assign = e.crossJoin(packed)
-        .withColumn("cent_id",
-          graft.functions.CentAssign.argminCos("embedding", "cs"))
+      val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
+      val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = e.filter(col("vec_id") < NumProbes)
-        .withColumn("vn", sqrt(normSq(col("embedding"))))
-        .crossJoin(packed)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          posexplode(slice(array_sort(negCosMetrics), 1, NProbe)))
-        .select(col("probe_id"), col("pe"),
-          col("col.cent_id").as("cent_id"),
-          (col("pos") + 1).as("cell_rank"))
+      val probeCells = cells.probeRanked(e.filter(col("vec_id") < NumProbes),
+        NProbe, col("vec_id").as("probe_id"), col("embedding").as("pe"))
       // ONE corpus-sized candidate pass, shared by every sweep point.
       val cand = broadcast(probeCells)
         .join(assign, Seq("cent_id"))
@@ -3961,15 +3665,10 @@ object AnnOps {
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e
-           |  WHERE vec_id < $KSeeds
+           |  ${Ivf.seedSql(KSeeds)}
            |), assign AS (
-           |  SELECT vec_id, cent_id AS cell_id, embedding FROM (
-           |    SELECT e.vec_id, c.cent_id, e.embedding,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, cent_id AS cell_id, embedding", "e.vec_id, c.cent_id, e.embedding")}
            |), base AS (SELECT * FROM assign WHERE vec_id < 400),
            |batch AS (SELECT * FROM assign WHERE vec_id >= 400),
            |dup_base AS (
@@ -3992,11 +3691,7 @@ object AnnOps {
            |ORDER BY s.vec_id""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assign = e.crossJoin(broadcast(packCents(cents)))
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val assign = Ivf.Cells(Ivf.seeds(e, KSeeds), Ivf.L2).assign(e, "cell_id")
         .select(col("vec_id"), col("cell_id"), col("embedding"))
         .localCheckpoint() // split and pair-joined 3× below
       val base = assign.filter(col("vec_id") < 400)
@@ -4048,9 +3743,8 @@ object AnnOps {
            |SELECT seed_ord, vec_id, d2
            |FROM c${KppSeeds - 1} ORDER BY seed_ord""".stripMargin),
     ) { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("vn2", normSq(col("embedding")))
+      val e = Ivf.L2.withNorm(Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding")))
       val u = (pmod(Portable.md5Hash60(col("vec_id").cast("string")),
         lit(1048576L)).cast("double") + lit(1.0)) / lit(1048576.0)
       var seeds = e
@@ -4061,10 +3755,10 @@ object AnnOps {
           lit(0.0).as("d2"), col("embedding"))
         .localCheckpoint()
       for (i <- 1 until KppSeeds) {
-        val packed = broadcast(packCents(seeds
-          .select(col("seed_ord").as("cent_id"), col("embedding").as("ce"))))
-        val next = e.crossJoin(packed)
-          .withColumn("d2", array_min(centMetrics).getField("m"))
+        val cells = Ivf.Cells(seeds
+          .select(col("seed_ord").as("cent_id"), col("embedding").as("ce")), Ivf.L2)
+        val next = cells.withCells(e)
+          .withColumn("d2", cells.nearest.getField("m"))
           .filter(col("d2") > 0)
           .select(col("vec_id"), col("embedding"), col("d2"),
             round(lit(1000.0) * log(u) / col("d2"), 6).as("key"))
@@ -4111,25 +3805,24 @@ object AnnOps {
     ) { (s, dir) =>
       val e = kbarCorpus(s, dir)
       val (cand, _) = kmeansParallelCandidates(e, KbarL, KbarRounds, None)
-      val packedAll = broadcast(packCents(cand
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))))
-      val w = e.crossJoin(packedAll)
-        .select(array_min(centMetrics).getField("cent_id").as("cand_id"))
+      val candCells = Ivf.Cells(cand
+        .select(col("vec_id").as("cent_id"), col("embedding").as("ce")), Ivf.L2)
+      val w = candCells.withCells(e)
+        .select(candCells.nearest.getField("cent_id").as("cand_id"))
         .groupBy("cand_id").agg(count(lit(1)).as("w"))
-      val cands = cand.join(
+      val cands = Ivf.L2.withNorm(cand.join(
         w.withColumnRenamed("cand_id", "vec_id"), Seq("vec_id"), "left")
         .select(col("r"), col("vec_id"),
-          coalesce(col("w"), lit(0L)).as("w"), col("embedding"))
-        .withColumn("vn2", normSq(col("embedding")))
+          coalesce(col("w"), lit(0L)).as("w"), col("embedding")))
         .localCheckpoint()
       var centers = cands.orderBy(col("w").desc, col("vec_id")).limit(1)
         .select(lit(0L).as("center_ord"), col("vec_id"), col("embedding"))
         .localCheckpoint()
       for (i <- 1 until KbarK) {
-        val packed = broadcast(packCents(centers
-          .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))))
-        val next = cands.crossJoin(packed)
-          .withColumn("d2", array_min(centMetrics).getField("m"))
+        val cells = Ivf.Cells(centers
+          .select(col("vec_id").as("cent_id"), col("embedding").as("ce")), Ivf.L2)
+        val next = cells.withCells(cands)
+          .withColumn("d2", cells.nearest.getField("m"))
           .filter(col("d2") > 0)
           .orderBy(round(col("w") * col("d2"), 6).desc, col("vec_id"))
           .limit(1)
@@ -4292,14 +3985,11 @@ object AnnOps {
         s"""WITH e AS (
            |  SELECT vec_id, embedding, label % 2 AS side FROM embeddings
            |), cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < $KSeeds
+           |  ${Ivf.seedSql(KSeeds)}
            |), routed AS (
-           |  SELECT vec_id, side, cent_id AS cell_id, embedding, rn FROM (
-           |    SELECT e.vec_id, e.side, c.cent_id, e.embedding,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        $d2Sql,
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn <= $KnnNProbe
+           |  ${Ivf.routeSql(Ivf.L2,
+                "vec_id, side, cent_id AS cell_id, embedding, rn",
+                "e.vec_id, e.side, c.cent_id, e.embedding", KnnNProbe)}
            |), corpus AS (
            |  SELECT vec_id AS neighbor_id, side, cell_id, embedding
            |  FROM routed WHERE rn = 1
@@ -4350,18 +4040,11 @@ object AnnOps {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"),
           (col("label") % 2).cast("int").as("side"))
-      val cents = e.filter(col("vec_id") < KSeeds)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val packed = broadcast(packCents(cents))
-      val corpus = e.crossJoin(packed)
-        .withColumn("cell_id",
-          graft.functions.CentAssign.argminL2("embedding", "cs"))
+      val cells = Ivf.Cells(Ivf.seeds(e, KSeeds), Ivf.L2)
+      val corpus = cells.assign(e, "cell_id")
         .select(col("cell_id"), col("side").as("nb_side"),
           col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-      val queries = e.withColumn("vn2", normSq(col("embedding")))
-        .crossJoin(packed)
-        .withColumn("cell",
-          explode(slice(array_sort(centMetrics), 1, KnnNProbe)))
+      val queries = cells.probe(e, KnnNProbe)
         .select(col("cell.cent_id").as("cell_id"), col("vec_id"),
           col("side"), col("embedding").as("qe"))
       val w = Window.partitionBy("vec_id")

@@ -1,16 +1,16 @@
 package graft.streaming
 
-import graft.functions.CentAssign
-import graft.operators.AnnOps
+import graft.operators.Ivf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming embedding ingestion — the streaming face of the ANN
   * pillar: vectors arriving on a stream are routed to their IVF cell
-  * with the SAME fused `cent_argmin_l2` expression and packed-centroid
-  * broadcast the batch path uses (AnnOps.q_simsearch_ivf_learned), so
-  * a vector gets the same cell_id whether it arrived in batch or on
-  * the stream and the downstream cell-keyed index ingests both.
+  * by the SAME [[Ivf.Cells.assign]] (fused `cent_argmin_l2` against the
+  * packed-centroid broadcast) the batch path uses
+  * (AnnOps.q_simsearch_ivf_learned), so a vector gets the same cell_id
+  * whether it arrived in batch or on the stream and the downstream
+  * cell-keyed index ingests both.
   *
   * Scale: cell assignment is pure per-row expression work against a
   * broadcast stream-static cross join of ONE packed row — zero
@@ -19,16 +19,12 @@ import org.apache.spark.sql.functions._
   *
   * Input schema: `ts TIMESTAMP, vec_id, embedding ARRAY<FLOAT>` from
   * any readStream source; `cents` is the batch-trained centroid table
-  * (cent_id, ce) from [[AnnOps.trainKMeans]] or the fixed-iteration
-  * training query.
+  * (cent_id, ce) from [[graft.operators.AnnOps.trainKMeans]] or the
+  * fixed-iteration training query.
   */
 object EmbedStream {
 
   def assigned(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs
-      .withWatermark("ts", "2 hours")
-      .crossJoin(broadcast(AnnOps.packCents(cents)))
-      .withColumn("cell_id",
-        CentAssign.argminL2("embedding", "cs"))
+    Ivf.Cells(cents, Ivf.L2).assign(vecs.withWatermark("ts", "2 hours"), "cell_id")
       .select(col("ts"), col("vec_id"), col("embedding"), col("cell_id"))
 }

@@ -122,6 +122,34 @@ object EventStream {
         col("click_id"), col("purchase_ts"), col("click_ts"), col("value"))
   }
 
+  /** The interval join behind [[attributedOuter]], [[attributedFull]]
+    * and [[attributedLast]]: one watermark on the event stream, the
+    * click and purchase sides each keeping their own event type plus
+    * `sentinelType` (see [[attributedOuter]] for why the sentinel must
+    * pass both filters), joined as `joinType` on same user and click
+    * within the hour at or before the purchase. */
+  private def attributionJoin(events: DataFrame,
+      sentinelType: Option[String], joinType: String): DataFrame = {
+    val wm = events.withWatermark("ts", "2 hours")
+    def keep(t: String) = sentinelType match {
+      case Some(st) => col("event_type").isin(t, st)
+      case None => col("event_type") === t
+    }
+    val clicks = wm
+      .filter(keep("click"))
+      .select(col("ts").as("click_ts"), col("user_id").as("click_user"),
+        col("event_id").as("click_id"))
+    val purchases = wm
+      .filter(keep("purchase"))
+      .select(col("ts").as("purchase_ts"), col("user_id").as("purchase_user"),
+        col("event_id").as("purchase_id"), col("value"))
+    purchases.join(clicks,
+      col("purchase_user") === col("click_user") &&
+        col("click_ts") <= col("purchase_ts") &&
+        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"),
+      joinType)
+  }
+
   /** LEFT-OUTER stream-stream attribution — [[attributed]] plus the
     * rows production attribution actually needs: purchases with NO
     * click in the preceding hour, emitted with null click columns.
@@ -153,24 +181,7 @@ object EventStream {
     */
   def attributedOuter(events: DataFrame,
       sentinelType: Option[String] = None): DataFrame = {
-    val wm = events.withWatermark("ts", "2 hours")
-    def keep(t: String) = sentinelType match {
-      case Some(st) => col("event_type").isin(t, st)
-      case None => col("event_type") === t
-    }
-    val clicks = wm
-      .filter(keep("click"))
-      .select(col("ts").as("click_ts"), col("user_id").as("click_user"),
-        col("event_id").as("click_id"))
-    val purchases = wm
-      .filter(keep("purchase"))
-      .select(col("ts").as("purchase_ts"), col("user_id").as("purchase_user"),
-        col("event_id").as("purchase_id"), col("value"))
-    purchases.join(clicks,
-      col("purchase_user") === col("click_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"),
-      "left_outer")
+    attributionJoin(events, sentinelType, "left_outer")
       .select(col("purchase_user").as("user_id"), col("purchase_id"),
         col("click_id"), col("purchase_ts"), col("click_ts"), col("value"))
   }
@@ -202,24 +213,7 @@ object EventStream {
     */
   def attributedFull(events: DataFrame,
       sentinelType: Option[String] = None): DataFrame = {
-    val wm = events.withWatermark("ts", "2 hours")
-    def keep(t: String) = sentinelType match {
-      case Some(st) => col("event_type").isin(t, st)
-      case None => col("event_type") === t
-    }
-    val clicks = wm
-      .filter(keep("click"))
-      .select(col("ts").as("click_ts"), col("user_id").as("click_user"),
-        col("event_id").as("click_id"))
-    val purchases = wm
-      .filter(keep("purchase"))
-      .select(col("ts").as("purchase_ts"), col("user_id").as("purchase_user"),
-        col("event_id").as("purchase_id"), col("value"))
-    purchases.join(clicks,
-      col("purchase_user") === col("click_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"),
-      "full_outer")
+    attributionJoin(events, sentinelType, "full_outer")
       .select(coalesce(col("purchase_user"), col("click_user")).as("user_id"),
         col("purchase_id"), col("click_id"), col("purchase_ts"),
         col("click_ts"), col("value"))
@@ -244,23 +238,7 @@ object EventStream {
     */
   def attributedLast(events: DataFrame,
       sentinelType: Option[String] = None): DataFrame = {
-    val wm = events.withWatermark("ts", "2 hours")
-    def keep(t: String) = sentinelType match {
-      case Some(st) => col("event_type").isin(t, st)
-      case None => col("event_type") === t
-    }
-    val clicks = wm
-      .filter(keep("click"))
-      .select(col("ts").as("click_ts"), col("user_id").as("click_user"),
-        col("event_id").as("click_id"))
-    val purchases = wm
-      .filter(keep("purchase"))
-      .select(col("ts").as("purchase_ts"), col("user_id").as("purchase_user"),
-        col("event_id").as("purchase_id"), col("value"))
-    purchases.join(clicks,
-      col("purchase_user") === col("click_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"))
+    attributionJoin(events, sentinelType, "inner")
       .groupBy(window(col("purchase_ts"), "1 hour"),
         col("purchase_user"), col("purchase_id"), col("value"))
       .agg(max(struct(col("click_ts"), col("click_id"))).as("last"))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Q, Tables}
-import graft.operators.{AnnOps, DedupOps, Scratch}
+import graft.operators.{AnnOps, DedupOps, Ivf, Scratch}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -623,21 +623,15 @@ object StreamOps {
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |cents AS (
-           |  SELECT vec_id AS cent_id, embedding AS ce FROM e
-           |  WHERE vec_id < ${AnnOps.NumCells}
+           |  ${Ivf.seedSql(AnnOps.NumCells)}
            |), assign AS (
-           |  SELECT vec_id, cent_id AS cell_id FROM (
-           |    SELECT e.vec_id, c.cent_id,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${AnnOps.d2Sql},
-           |        c.cent_id) AS rn
-           |    FROM e CROSS JOIN cents c) WHERE rn = 1
+           |  ${Ivf.assignSql(Ivf.L2,
+                "vec_id, cent_id AS cell_id", "e.vec_id, c.cent_id")}
            |)
            |SELECT vec_id, cell_id FROM assign ORDER BY vec_id""".stripMargin),
     ) { (s, dir) =>
       val batch = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val cents = batch.filter(col("vec_id") < AnnOps.NumCells)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
+      val cents = Ivf.seeds(batch, AnnOps.NumCells)
       // Same single-file glob + pinned-ts staging as q_stream_ingest
       // (embeddings carry no event time; a live deployment reads real
       // arrival timestamps here).

@@ -21,7 +21,7 @@ class CentAssignSpec extends AnyFunSuite {
   private def randVec(dim: Int): Array[Float] =
     Array.fill(dim)((rnd.nextDouble() * 2 - 1).toFloat)
 
-  /** Packs centroids exactly like AnnOps.packCents: norms via the same
+  /** Packs centroids exactly like Ivf.packCents: norms via the same
     * sequential aggregate folds, computed in Spark, not in Scala. */
   private def packedDf(vecs: Seq[(Long, Array[Float])], cents: org.apache.spark.sql.DataFrame) = {
     import spark.implicits._

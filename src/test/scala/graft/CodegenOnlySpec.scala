@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{GenerateMutableProjection, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.{LocalTableScanExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -330,6 +331,9 @@ class CodegenOnlySpec extends AnyFunSuite {
             lit(0.0), (a, x) => a + x).as("cn2"),
           sqrt(aggregate(transform(col("e2"), x => x.cast("double") * x.cast("double")),
             lit(0.0), (a, x) => a + x)).as("cn"))).as("cs"))
+      // A checkpointed row is not a LocalRelation: the optimizer cannot
+      // fold the projection below into the plan, so it runs as code.
+      .localCheckpoint()
     val sel = df.select(
       expr("cent_argmin_l2(e1, cs)").as("a"),
       expr("cent_argmin_cos(e1, cs)").as("b"),
@@ -346,6 +350,9 @@ class CodegenOnlySpec extends AnyFunSuite {
     withStrictCodegen {
       val strict = sel.collect()
       assert(strict.toSeq === baseline.toSeq)
+      val plan = sel.queryExecution.executedPlan
+      assert(plan.find(_.isInstanceOf[WholeStageCodegenExec]).isDefined, plan)
+      assert(plan.find(_.isInstanceOf[LocalTableScanExec]).isEmpty, plan)
     }
   }
 }

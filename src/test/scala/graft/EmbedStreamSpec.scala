@@ -2,7 +2,7 @@ package graft
 
 import graft.streaming.EmbedStream
 import graft.functions.CentAssign
-import graft.operators.AnnOps
+import graft.operators.Ivf
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,7 +51,7 @@ class EmbedStreamSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
       val batch = vecs.toDF()
-        .crossJoin(broadcast(AnnOps.packCents(cents)))
+        .crossJoin(Ivf.packCents(cents))
         .withColumn("cell_id", CentAssign.argminL2("embedding", "cs"))
         .select("vec_id", "cell_id").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
