@@ -2912,12 +2912,9 @@ object AnnOps {
         .localCheckpoint()
       val books = pqCodebooks(s, sv).localCheckpoint()
       // pqEncode's metric, inlined to keep cell_id on the code rows.
-      val mets = transform(col("cs"), c => struct(
-        round(col("vn2") - lit(2.0) * dotCol(col("sv"), c.getField("ce"))
-          + c.getField("cn2"), 6).as("m"),
-        c.getField("cent_id").as("cent_id")))
+      val mets = Ivf.L2.metricsOf("sv")
       val codes = sv.withColumn("vn2", normSq(col("sv")))
-        .join(broadcast(packSubCents(books)), Seq("sp"))
+        .join(Ivf.packCents(books, "sp"), Seq("sp"))
         .withColumn("best", array_min(mets))
         .select(col("vec_id"), col("cell_id"), col("sp"),
           col("best.cent_id").as("cent_id"))
@@ -3034,12 +3031,9 @@ object AnnOps {
       // Codebook seeds start PAST the centroid vectors — their own
       // residuals are all-zero and would collapse the codebooks.
       val books = pqCodebooks(s, sv, NumCells).localCheckpoint()
-      val mets = transform(col("cs"), c => struct(
-        round(col("vn2") - lit(2.0) * dotCol(col("sv"), c.getField("ce"))
-          + c.getField("cn2"), 6).as("m"),
-        c.getField("cent_id").as("cent_id")))
+      val mets = Ivf.L2.metricsOf("sv")
       val codes = sv.withColumn("vn2", normSq(col("sv")))
-        .join(broadcast(packSubCents(books)), Seq("sp"))
+        .join(Ivf.packCents(books, "sp"), Seq("sp"))
         .withColumn("best", array_min(mets))
         .select(col("vec_id"), col("cell_id"), col("sp"),
           col("best.cent_id").as("cent_id"))
@@ -4469,13 +4463,6 @@ object AnnOps {
         s"j -> slice(embedding, j*$PqSubDim+1, $PqSubDim))"))
         .as(Seq("sp", "sv")))
 
-  /** Per-subspace centroid pack (cs rows keyed by sp, broadcastable). */
-  private def packSubCents(c: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    c.groupBy("sp").agg(collect_list(struct(col("cent_id"), col("ce"),
-      normSq(col("ce")).as("cn2"),
-      sqrt(normSq(col("ce"))).as("cn"))).as("cs"))
-
   /** One unrolled Lloyd iteration from first-PqK seeds → long-form
     * codebooks (sp, cent_id, ce). Fused argmin assignment (6dp metric,
     * cent_id tiebreak — identical to the composed form in [[pqEncode]]
@@ -4490,7 +4477,7 @@ object AnnOps {
     val c0 = sv.filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + PqK)
       .select(col("sp"), col("vec_id").as("cent_id"),
         transform(col("sv"), _.cast("double")).as("ce"))
-    sv.join(broadcast(packSubCents(c0)), Seq("sp"))
+    sv.join(Ivf.packCents(c0, "sp"), Seq("sp"))
       .withColumn("cent_id",
         graft.functions.CentAssign.argminL2("sv", "cs"))
       .select(col("sp"), col("cent_id"), posexplode(col("sv")).as(Seq("pos", "v")))
@@ -4506,12 +4493,9 @@ object AnnOps {
     * reconstruction error / ADC tables. Returns (vec_id, sp, cent_id, m). */
   private def pqEncode(s: SparkSession, sv: org.apache.spark.sql.DataFrame,
       books: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val mets = transform(col("cs"), c => struct(
-      round(col("vn2") - lit(2.0) * dotCol(col("sv"), c.getField("ce"))
-        + c.getField("cn2"), 6).as("m"),
-      c.getField("cent_id").as("cent_id")))
+    val mets = Ivf.L2.metricsOf("sv")
     sv.withColumn("vn2", normSq(col("sv")))
-      .join(broadcast(packSubCents(books)), Seq("sp"))
+      .join(Ivf.packCents(books, "sp"), Seq("sp"))
       .withColumn("best", array_min(mets))
       .select(col("vec_id"), col("sp"),
         col("best.cent_id").as("cent_id"), col("best.m").as("m"))

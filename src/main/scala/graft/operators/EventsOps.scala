@@ -209,15 +209,10 @@ object EventsOps {
     * cents, arm) rollup ≡ the batch vc CTE at any split, so one SQL
     * text serves both). Declared above the registry (init order). */
   private[graft] val quantileTeSql: String =
-    """WITH e AS (
-      |  SELECT event_type, user_id % 2 AS grp,
-      |    CAST(round(value * 100) AS BIGINT) AS v
-      |  FROM events
+    s"""WITH e AS (
+      |  ${Arms.armedSql(Seq("event_type"), "v")}
       |), vc AS (
-      |  SELECT event_type, v,
-      |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-      |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-      |  FROM e GROUP BY event_type, v
+      |  ${Arms.valueCountsSql(Seq("event_type", "v"))}
       |), cum AS (
       |  SELECT event_type, v,
       |    CAST(sum(ca) OVER (PARTITION BY event_type ORDER BY v)
@@ -252,8 +247,8 @@ object EventsOps {
     * complete-mode (type, arm) cell rollup equals the batch `cells`
     * CTE at any split). Declared above the registry (init order). */
   private[graft] val chisqSql: String =
-    """WITH e AS (
-      |  SELECT event_type, user_id % 2 AS grp FROM events
+    s"""WITH e AS (
+      |  SELECT event_type, ${Arms.ParitySql} AS grp FROM events
       |), cells AS (
       |  SELECT event_type, grp, CAST(count(*) AS BIGINT) AS o
       |  FROM e GROUP BY event_type, grp
@@ -447,15 +442,22 @@ object EventsOps {
     * rollup ≡ the batch `hr` CTE at any split). A def, not a val: it
     * interpolates [[hourlySeriesSqlCte]], declared further down (the
     * registry-interpolation init-order rule). */
-  /** PACF lags 1–3 over a (t, x) series (q_pacf + q_stream_pacf):
-    * exact-DECIMAL centered products band-joined at ≤3 lags, then the
-    * Durbin-Levinson closed forms on the 6dp grid. Ordered. */
-  private[graft] def pacfOf(seriesRaw: DataFrame): DataFrame = {
-    val series = seriesRaw.localCheckpoint() // read thrice: stats, pairs ×2, denom
+  /** The centered lag products of a (t, x) series, shared by q_acf,
+    * q_pacf/q_stream_pacf and q_ljung_box: `num` = (lag, num) with
+    * num = Σ (x_t·n − S)(x_{t+lag}·n − S) over the band self-join at
+    * lags 1..maxLag, and `den` = the lag-0 sum plus `denExtra`. The
+    * factors scale as the total event count, so each is cast to
+    * DECIMAL(38,0) BEFORE the first overflow-able product (the
+    * mannWhitney convention) and μ never materializes as a float. The
+    * series is read thrice (stats, pairs ×2, denom): checkpointed. */
+  private[graft] def lagProducts(seriesRaw: DataFrame, maxLag: Int,
+      denExtra: Column*): (DataFrame, DataFrame) = {
+    val series = seriesRaw.localCheckpoint()
     val st = series.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
     val a = series.select(col("t").as("at"), col("x").as("ax"))
     val b = series.select(col("t").as("bt"), col("x").as("bx"))
-    val num = a.join(b, col("bt") > col("at") && col("bt") <= col("at") + 3)
+    val num = a.join(b,
+        col("bt") > col("at") && col("bt") <= col("at") + maxLag)
       .crossJoin(broadcast(st))
       .groupBy((col("bt") - col("at")).as("lag"))
       .agg(sum((col("ax") * col("n") - col("sx")).cast("decimal(38,0)")
@@ -464,7 +466,32 @@ object EventsOps {
     val den = series.crossJoin(broadcast(st))
       .agg(sum((col("x") * col("n") - col("sx")).cast("decimal(38,0)")
         * (col("x") * col("n") - col("sx")).cast("decimal(38,0)"))
-        .as("den"))
+        .as("den"), denExtra: _*)
+    (num, den)
+  }
+
+  /** Twin of [[lagProducts]]: the `st`, `num` and `den` CTEs over a
+    * `series` CTE, HUGEINT carrying the exact products. */
+  private[graft] def lagProductsSql(maxLag: Int, denExtra: String = ""): String =
+    s"""st AS (
+       |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx
+       |  FROM series
+       |), num AS (
+       |  SELECT b.t - a.t AS lag,
+       |    sum(CAST(a.x * n - sx AS HUGEINT) * (b.x * n - sx)) AS num
+       |  FROM series a JOIN series b
+       |    ON b.t > a.t AND b.t <= a.t + $maxLag
+       |  CROSS JOIN st GROUP BY b.t - a.t
+       |), den AS (
+       |  SELECT sum(CAST(x * n - sx AS HUGEINT) * (x * n - sx)) AS den$denExtra
+       |  FROM series CROSS JOIN st
+       |)""".stripMargin
+
+  /** PACF lags 1–3 over a (t, x) series (q_pacf + q_stream_pacf):
+    * exact-DECIMAL centered products band-joined at ≤3 lags, then the
+    * Durbin-Levinson closed forms on the 6dp grid. Ordered. */
+  private[graft] def pacfOf(series: DataFrame): DataFrame = {
+    val (num, den) = lagProducts(series, 3)
     def acfAt(k: Int): Column = max(when(col("lag") === k,
       round(col("num").cast("double") / col("den").cast("double"), 6)))
     val r = num.crossJoin(broadcast(den))
@@ -490,19 +517,7 @@ object EventsOps {
     * streaming face folds the same additive hour rollup as
     * complete-mode state). */
   private[graft] def pacfSql: String =
-    s"""WITH $hourlySeriesSqlCte, st AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx
-          |  FROM series
-          |), num AS (
-          |  SELECT b.t - a.t AS lag,
-          |    sum(CAST(a.x * n - sx AS HUGEINT) * (b.x * n - sx)) AS num
-          |  FROM series a JOIN series b
-          |    ON b.t > a.t AND b.t <= a.t + 3
-          |  CROSS JOIN st GROUP BY b.t - a.t
-          |), den AS (
-          |  SELECT sum(CAST(x * n - sx AS HUGEINT) * (x * n - sx)) AS den
-          |  FROM series CROSS JOIN st
-          |), r AS (
+    s"""WITH $hourlySeriesSqlCte, ${lagProductsSql(3)}, r AS (
           |  SELECT
           |    max(CASE WHEN lag = 1
           |      THEN round(CAST(num AS DOUBLE) / den, 6) END) AS r1,
@@ -1429,37 +1444,11 @@ object EventsOps {
         "the hour rollup; everything after is bounded by #hours×24 " +
         "(a band self-join of the spine)",
       Some(
-        s"""WITH $hourlySeriesSqlCte, st AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx
-          |  FROM series
-          |), num AS (
-          |  SELECT b.t - a.t AS lag,
-          |    sum(CAST(a.x * n - sx AS HUGEINT) * (b.x * n - sx)) AS num
-          |  FROM series a JOIN series b
-          |    ON b.t > a.t AND b.t <= a.t + 24
-          |  CROSS JOIN st GROUP BY b.t - a.t
-          |), den AS (
-          |  SELECT sum(CAST(x * n - sx AS HUGEINT) * (x * n - sx)) AS den
-          |  FROM series CROSS JOIN st
-          |)
+        s"""WITH $hourlySeriesSqlCte, ${lagProductsSql(24)}
           |SELECT lag, round(CAST(num AS DOUBLE) / den, 6) AS acf
           |FROM num CROSS JOIN den ORDER BY lag""".stripMargin),
     ) { (s, dir) =>
-      val series = hourlySeries(s, dir)
-        .localCheckpoint() // read thrice: stats, pairs (twice), denom
-      val st = series.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
-      val a = series.select(col("t").as("at"), col("x").as("ax"))
-      val b = series.select(col("t").as("bt"), col("x").as("bx"))
-      val num = a.join(b, col("bt") > col("at") && col("bt") <= col("at") + 24)
-        .crossJoin(broadcast(st))
-        .groupBy((col("bt") - col("at")).as("lag"))
-        .agg(sum((col("ax") * col("n") - col("sx")).cast("decimal(38,0)")
-          * (col("bx") * col("n") - col("sx")).cast("decimal(38,0)"))
-          .as("num"))
-      val den = series.crossJoin(broadcast(st))
-        .agg(sum((col("x") * col("n") - col("sx")).cast("decimal(38,0)")
-          * (col("x") * col("n") - col("sx")).cast("decimal(38,0)"))
-          .as("den"))
+      val (num, den) = lagProducts(hourlySeries(s, dir), 24)
       num.crossJoin(broadcast(den))
         .select(col("lag"),
           round(col("num").cast("double") / col("den").cast("double"), 6)
@@ -2021,12 +2010,11 @@ object EventsOps {
         "can't drift either engine. The null result on the uniform " +
         "hash split is itself the correctness check",
       Some {
-        val h = graft.functions.Portable.md5Hash60Sql("CAST(user_id AS VARCHAR)")
         s"""WITH anchor AS (
            |  SELECT max(epoch_us(CAST(ts AS TIMESTAMP))) AS a_us FROM events
            |), per AS (
            |  SELECT user_id,
-           |    CASE WHEN ($h) % 2 = 0 THEN 1 ELSE 0 END AS is_a,
+           |    CASE WHEN ${Arms.Md5Sql} = 0 THEN 1 ELSE 0 END AS is_a,
            |    (max(epoch_us(CAST(ts AS TIMESTAMP)))
            |      - min(epoch_us(CAST(ts AS TIMESTAMP)))) // 86400000000 AS lt,
            |    CASE WHEN a_us - max(epoch_us(CAST(ts AS TIMESTAMP)))
@@ -2076,8 +2064,7 @@ object EventsOps {
     ) { (s, dir) =>
       val ev = Tables.events(s, dir)
       val anchor = ev.agg(max(unix_micros(col("ts"))).as("a_us"))
-      val isA = when(graft.functions.Portable.md5Hash60(
-        col("user_id").cast("string")) % 2 === 0, 1L).otherwise(0L)
+      val isA = when(Arms.md5 === 0, 1L).otherwise(0L)
       val per = ev.groupBy("user_id")
         .agg(min(unix_micros(col("ts"))).as("first_us"),
           max(unix_micros(col("ts"))).as("last_us"))
@@ -2464,9 +2451,8 @@ object EventsOps {
         "data is itself the correctness check: a biased hash or a " +
         "leaky split would light the flag",
       Some {
-        val h = graft.functions.Portable.md5Hash60Sql("CAST(user_id AS VARCHAR)")
         s"""WITH a AS (
-           |  SELECT CASE WHEN ($h) % 2 = 0 THEN 'A' ELSE 'B' END AS grp,
+           |  SELECT CASE WHEN ${Arms.Md5Sql} = 0 THEN 'A' ELSE 'B' END AS grp,
            |    CAST(count(*) AS BIGINT) AS n_events,
            |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
            |      AS BIGINT) AS n_purch
@@ -2493,8 +2479,7 @@ object EventsOps {
            |FROM z""".stripMargin
       },
     ) { (s, dir) =>
-      val grp = when(graft.functions.Portable.md5Hash60(
-        col("user_id").cast("string")) % 2 === 0, "A").otherwise("B")
+      val grp = when(Arms.md5 === 0, "A").otherwise("B")
       val a = Tables.events(s, dir)
         .groupBy(grp.as("grp"))
         .agg(count(lit(1)).as("n_events"),
@@ -3628,8 +3613,8 @@ object EventsOps {
       "q_srm_check",
       "SAMPLE RATIO MISMATCH guardrail (the check every experiment " +
         "readout must pass FIRST — an assignment imbalance invalidates " +
-        "q_ab_test/q_cuped/q_winsorized_ab downstream, and SRM is the " +
-        "single most common way experiments silently rot): USERS " +
+        "the md5-split rows q_ab_test/q_logrank downstream, and SRM is " +
+        "the single most common way experiments silently rot): USERS " +
         "(the assignment unit, not events — event-level counts " +
         "conflate activity with assignment) split by the same sticky " +
         "md5 hash q_ab_test uses, compared to the expected 50/50 via " +
@@ -3642,10 +3627,9 @@ object EventsOps {
         "(activity differs; only the USER split is guaranteed). " +
         "Two keyed aggs, 1-row output, zero windows",
       Some {
-        val h = graft.functions.Portable.md5Hash60Sql("CAST(user_id AS VARCHAR)")
         s"""WITH u AS (
            |  SELECT DISTINCT user_id,
-           |    CASE WHEN ($h) % 2 = 0 THEN 0 ELSE 1 END AS grp
+           |    CASE WHEN ${Arms.Md5Sql} = 0 THEN 0 ELSE 1 END AS grp
            |  FROM events
            |), uc AS (
            |  SELECT
@@ -3654,9 +3638,9 @@ object EventsOps {
            |  FROM u
            |), ec AS (
            |  SELECT
-           |    CAST(sum(CASE WHEN ($h) % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+           |    CAST(sum(CASE WHEN ${Arms.Md5Sql} = 0 THEN 1 ELSE 0 END) AS BIGINT)
            |      AS ea,
-           |    CAST(sum(CASE WHEN ($h) % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           |    CAST(sum(CASE WHEN ${Arms.Md5Sql} = 1 THEN 1 ELSE 0 END) AS BIGINT)
            |      AS eb
            |  FROM events
            |)
@@ -3668,8 +3652,7 @@ object EventsOps {
            |FROM uc CROSS JOIN ec""".stripMargin
       },
     ) { (s, dir) =>
-      val grp = graft.functions.Portable
-        .md5Hash60(col("user_id").cast("string")) % 2
+      val grp = Arms.md5
       val uc = Tables.events(s, dir).select(col("user_id")).distinct()
         .agg(sum(when(grp === 0, 1L).otherwise(0L)).as("ua"),
           sum(when(grp === 1, 1L).otherwise(0L)).as("ub"))
@@ -3705,10 +3688,8 @@ object EventsOps {
         "scaladoc): two-decimal money makes the distinct-cents " +
         "rollup finite by construction",
       Some(
-        """WITH e AS (
-          |  SELECT user_id % 2 AS grp, CAST(round(value * 100) AS BIGINT)
-          |    AS v_c
-          |  FROM events
+        s"""WITH e AS (
+          |  ${Arms.armedSql(Nil, "v_c")}
           |), n AS (
           |  SELECT CAST(count(*) AS BIGINT) AS ntot,
           |    CAST(ceil(count(*) * 0.99) AS BIGINT) AS kk
@@ -3723,18 +3704,7 @@ object EventsOps {
           |), wz AS (
           |  SELECT grp, least(v_c, cap_c) AS w_c FROM e CROSS JOIN cap
           |), s AS (
-          |  SELECT
-          |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-          |    CAST(sum(CASE WHEN grp = 0 THEN w_c ELSE 0 END) AS BIGINT)
-          |      AS sa,
-          |    CAST(sum(CASE WHEN grp = 0 THEN w_c * w_c ELSE 0 END) AS BIGINT)
-          |      AS qa,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN w_c ELSE 0 END) AS BIGINT)
-          |      AS sb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN w_c * w_c ELSE 0 END) AS BIGINT)
-          |      AS qb
-          |  FROM wz
+          |  ${Arms.powerSumsSql(Nil, "w_c", from = "wz")}
           |), f AS (
           |  SELECT na, nb, sa, sb,
           |    CAST(CAST(qa AS HUGEINT) * na - CAST(sa AS HUGEINT) * sa
@@ -3760,9 +3730,7 @@ object EventsOps {
           |    > 1.96 AS BIGINT) AS significant
           |FROM f CROSS JOIN cap""".stripMargin),
     ) { (s, dir) =>
-      val e = Tables.events(s, dir).select(
-        pmod(col("user_id"), lit(2)).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("v_c"))
+      val e = Arms.armed(Tables.events(s, dir), Nil, "v_c")
       val n = e.agg(count(lit(1)).as("ntot"),
         ceil(count(lit(1)) * 0.99).cast("long").as("kk"))
       val w = Window.orderBy("v_c")
@@ -3774,15 +3742,7 @@ object EventsOps {
         .agg(min(col("v_c")).as("cap_c"))
       val wz = e.crossJoin(broadcast(cap))
         .select(col("grp"), least(col("v_c"), col("cap_c")).as("w_c"))
-      wz.agg(
-        sum(when(col("grp") === 0, 1L).otherwise(0L)).as("na"),
-        sum(when(col("grp") === 0, col("w_c")).otherwise(0L)).as("sa"),
-        sum(when(col("grp") === 0, col("w_c") * col("w_c")).otherwise(0L))
-          .as("qa"),
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("nb"),
-        sum(when(col("grp") === 1, col("w_c")).otherwise(0L)).as("sb"),
-        sum(when(col("grp") === 1, col("w_c") * col("w_c")).otherwise(0L))
-          .as("qb"))
+      Arms.powerSums(wz, "w_c")
         .selectExpr("na", "nb", "sa", "sb",
           """CAST(CAST(qa AS DECIMAL(38,0)) * na - CAST(sa AS DECIMAL(38,0))
             |  * sa AS DOUBLE) AS va""".stripMargin,
@@ -3825,20 +3785,13 @@ object EventsOps {
         "value-domain window, 1-row output (the VALUE-DOMAIN WINDOW " +
         "CLASS — one shared argument, EventsOps scaladoc)",
       Some(
-        """WITH e AS (
-          |  SELECT user_id % 2 AS grp, CAST(round(value * 100) AS BIGINT)
-          |    AS v_c
-          |  FROM events
+        s"""WITH e AS (
+          |  ${Arms.armedSql(Nil, "v_c")}
           |), n AS (
-          |  SELECT CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS na,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb
+          |  SELECT ${Arms.countsSql("na", "nb")}
           |  FROM e
           |), vc AS (
-          |  SELECT v_c,
-          |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-          |  FROM e GROUP BY v_c
+          |  ${Arms.valueCountsSql(Seq("v_c"))}
           |), cum AS (
           |  SELECT v_c,
           |    sum(ca) OVER (ORDER BY v_c) AS cuma,
@@ -3854,17 +3807,11 @@ object EventsOps {
           |    * sqrt(CAST(na AS DOUBLE) * nb / (na + nb)), 6) AS ks_lambda
           |FROM d CROSS JOIN n""".stripMargin),
     ) { (s, dir) =>
-      val e = Tables.events(s, dir).select(
-        pmod(col("user_id"), lit(2)).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("v_c"))
-      val n = e.agg(
-        sum(when(col("grp") === 0, 1L).otherwise(0L)).as("na"),
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("nb"))
+      val e = Arms.armed(Tables.events(s, dir), Nil, "v_c")
+      val n = Arms.counts(e, "na", "nb")
       val w = Window.orderBy("v_c")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = e.groupBy("v_c")
-        .agg(sum(when(col("grp") === 0, 1L).otherwise(0L)).as("ca"),
-          sum(when(col("grp") === 1, 1L).otherwise(0L)).as("cb"))
+      val cum = Arms.valueCounts(e)
         .withColumn("cuma", sum(col("ca")).over(w))
         .withColumn("cumb", sum(col("cb")).over(w))
       cum.crossJoin(broadcast(n))
@@ -3896,14 +3843,14 @@ object EventsOps {
         "(cells bounded at 2 groups × 3 windows), zero windows, " +
         "zero joins",
       Some(
-        """WITH e AS (
-          |  SELECT user_id % 2 AS grp,
+        s"""WITH e AS (
+          |  SELECT ${Arms.ParitySql} AS grp,
           |    CASE WHEN CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-08'
           |           THEN 0
           |         WHEN CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-16'
           |           THEN 1
           |         ELSE 2 END AS win,
-          |    CAST(round(value * 100) AS BIGINT) AS v_c
+          |    ${Arms.CentsSql} AS v_c
           |  FROM events
           |), c AS (
           |  SELECT grp, win, CAST(count(*) AS BIGINT) AS n,
@@ -3927,11 +3874,11 @@ object EventsOps {
           |FROM w""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.events(s, dir).select(
-        pmod(col("user_id"), lit(2)).as("grp"),
+        Arms.parity.as("grp"),
         when(col("ts") < lit("2024-01-08").cast("timestamp"), 0)
           .when(col("ts") < lit("2024-01-16").cast("timestamp"), 1)
           .otherwise(2).as("win"),
-        round(col("value") * 100, 0).cast("long").as("v_c"))
+        Arms.cents.as("v_c"))
       e.groupBy("grp", "win")
         .agg(count(lit(1)).as("n"), sum(col("v_c")).as("s"))
         .agg(
@@ -3974,13 +3921,13 @@ object EventsOps {
         "momentFinish convention). At 100 TB: one user-keyed " +
         "rollup, one 1-row agg, zero windows",
       Some(
-        """WITH e AS (
-          |  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS v_c,
+        s"""WITH e AS (
+          |  SELECT user_id, ${Arms.CentsSql} AS v_c,
           |    CASE WHEN CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-16'
           |      THEN 0 ELSE 1 END AS period
           |  FROM events
           |), u AS (
-          |  SELECT user_id, user_id % 2 AS grp,
+          |  SELECT user_id, ${Arms.ParitySql} AS grp,
           |    CAST(sum(CASE WHEN period = 0 THEN v_c ELSE 0 END) AS BIGINT)
           |      AS x_c,
           |    CAST(sum(CASE WHEN period = 1 THEN v_c ELSE 0 END) AS BIGINT)
@@ -4024,13 +3971,13 @@ object EventsOps {
           |FROM f""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.events(s, dir).select(col("user_id"),
-        round(col("value") * 100, 0).cast("long").as("v_c"),
+        Arms.cents.as("v_c"),
         when(col("ts") < lit("2024-01-16").cast("timestamp"), 0)
           .otherwise(1).as("period"))
       val u = e.groupBy("user_id").agg(
         sum(when(col("period") === 0, col("v_c")).otherwise(0L)).as("x_c"),
         sum(when(col("period") === 1, col("v_c")).otherwise(0L)).as("y_c"))
-        .withColumn("grp", pmod(col("user_id"), lit(2)))
+        .withColumn("grp", Arms.parity)
       u.agg(count(lit(1)).as("n"),
         sum(col("x_c")).as("sx"), sum(col("y_c")).as("sy"),
         sum(col("x_c") * col("x_c")).as("sxx"),
@@ -4488,15 +4435,10 @@ object EventsOps {
         "division 6dp-rounded. At 100 TB: one corpus pass to (type, " +
         "arm, cents) counts, domain-bounded windows, #types rows out",
       Some(
-        """WITH e AS (
-          |  SELECT event_type, user_id % 2 AS grp,
-          |    CAST(round(value * 100) AS BIGINT) AS v
-          |  FROM events
+        s"""WITH e AS (
+          |  ${Arms.armedSql(Seq("event_type"), "v")}
           |), vc AS (
-          |  SELECT event_type, v,
-          |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-          |  FROM e GROUP BY event_type, v
+          |  ${Arms.valueCountsSql(Seq("event_type", "v"))}
           |), cw AS (
           |  SELECT event_type, v,
           |    CAST(sum(ca) OVER (PARTITION BY event_type ORDER BY v)
@@ -4542,15 +4484,10 @@ object EventsOps {
         "rows. At 100 TB: one corpus pass to (type, cents) counts, " +
         "domain-bounded windows, #types rows out",
       Some(
-        """WITH e AS (
-          |  SELECT event_type, user_id % 2 AS grp,
-          |    CAST(round(value * 100) AS BIGINT) AS v
-          |  FROM events
+        s"""WITH e AS (
+          |  ${Arms.armedSql(Seq("event_type"), "v")}
           |), vc AS (
-          |  SELECT event_type, v,
-          |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-          |  FROM e GROUP BY event_type, v
+          |  ${Arms.valueCountsSql(Seq("event_type", "v"))}
           |), cw AS (
           |  SELECT event_type, ca, cb, ca + cb AS t,
           |    CAST(sum(ca + cb) OVER (PARTITION BY event_type ORDER BY v)
@@ -5306,13 +5243,13 @@ object EventsOps {
            |  FROM events GROUP BY user_id
            |), obs AS (
            |  SELECT
-           |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN nu ELSE 0 END)
+           |    CAST(sum(CASE WHEN ${Arms.ParitySql} = 0 THEN nu ELSE 0 END)
            |      AS BIGINT) AS na,
-           |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN su ELSE 0 END)
+           |    CAST(sum(CASE WHEN ${Arms.ParitySql} = 0 THEN su ELSE 0 END)
            |      AS BIGINT) AS sa,
-           |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN nu ELSE 0 END)
+           |    CAST(sum(CASE WHEN ${Arms.ParitySql} = 1 THEN nu ELSE 0 END)
            |      AS BIGINT) AS nb,
-           |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN su ELSE 0 END)
+           |    CAST(sum(CASE WHEN ${Arms.ParitySql} = 1 THEN su ELSE 0 END)
            |      AS BIGINT) AS sb
            |  FROM u
            |), g AS (
@@ -5549,8 +5486,8 @@ object EventsOps {
         "division each. At 100 TB: one user-keyed corpus pass, then " +
         "#bands-bounded state",
       Some(
-        """WITH u AS (
-          |  SELECT user_id, user_id % 2 AS t,
+        s"""WITH u AS (
+          |  SELECT user_id, ${Arms.ParitySql} AS t,
           |    CAST(count(*) AS BIGINT) AS n_u,
           |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
           |  FROM events GROUP BY user_id
@@ -5679,25 +5616,14 @@ object EventsOps {
         "planted two-point arms and the 1/sqrt(n) scaling law. At " +
         "100 TB: ONE map-side-combined corpus pass to #types rows",
       Some(
-        """WITH e AS (
-          |  SELECT event_type, user_id % 2 AS grp,
-          |    CAST(round(value * 100) AS BIGINT) AS c
-          |  FROM events
+        s"""WITH e AS (
+          |  ${Arms.armedSql(Seq("event_type"), "c")}
           |), a AS (
-          |  SELECT event_type,
-          |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-          |    CAST(sum(CASE WHEN grp = 0 THEN c ELSE 0 END) AS BIGINT) AS sa,
-          |    CAST(sum(CASE WHEN grp = 0 THEN c * c ELSE 0 END) AS BIGINT) AS qa,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN c ELSE 0 END) AS BIGINT) AS sb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN c * c ELSE 0 END) AS BIGINT) AS qb
-          |  FROM e GROUP BY event_type
+          |  ${Arms.powerSumsSql(Seq("event_type"))}
           |), f AS (
           |  SELECT event_type, na, nb,
           |    (CAST(sa AS DOUBLE) + sb) / (na + nb) AS mc,
-          |    ((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa) / na
-          |      + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb) / nb)
-          |      / (na + nb - 2) AS s2
+          |    ${Arms.PooledVarSql} AS s2
           |  FROM a WHERE na > 1 AND nb > 1
           |)
           |SELECT event_type, na, nb,
@@ -5839,8 +5765,8 @@ object EventsOps {
         "100 TB: one keyed corpus pass to #days cells; everything " +
         "after is #days-bounded, 1-row output",
       Some(
-        """WITH e AS (
-          |  SELECT CAST(ts AS DATE) AS day, user_id % 2 AS grp,
+        s"""WITH e AS (
+          |  SELECT CAST(ts AS DATE) AS day, ${Arms.ParitySql} AS grp,
           |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS hit
           |  FROM events
           |), cells AS (
@@ -5990,26 +5916,13 @@ object EventsOps {
         "#types rows out",
       Some(
         s"""WITH e AS (
-          |  SELECT event_type, user_id % 2 AS grp,
-          |    CAST(round(value * 100) AS BIGINT) AS c
-          |  FROM events
+          |  ${Arms.armedSql(Seq("event_type"), "c")}
           |), su AS (
-          |  SELECT event_type,
-          |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-          |    CAST(sum(CASE WHEN grp = 0 THEN c ELSE 0 END) AS BIGINT) AS sa,
-          |    CAST(sum(CASE WHEN grp = 0 THEN c * c ELSE 0 END) AS BIGINT) AS qa,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN c ELSE 0 END) AS BIGINT) AS sb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN c * c ELSE 0 END) AS BIGINT) AS qb
-          |  FROM e GROUP BY event_type
+          |  ${Arms.powerSumsSql(Seq("event_type"))}
           |), g AS (
           |  SELECT event_type, na + nb AS n,
-          |    round(CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb, 6)
-          |      AS dc6,
-          |    round(sqrt((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa)
-          |        / (CAST(na AS DOUBLE) * na * (na - 1))
-          |      + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb)
-          |        / (CAST(nb AS DOUBLE) * nb * (nb - 1))), 6) AS se6
+          |    round(${Arms.MeanDiffSql}, 6) AS dc6,
+          |    round(${Arms.WelchSeSql}, 6) AS se6
           |  FROM su WHERE na > 1 AND nb > 1
           |), z AS (
           |  SELECT event_type, n, round(dc6 / 100, 6) AS diff,
@@ -6046,25 +5959,12 @@ object EventsOps {
         "rows out",
       Some(
         s"""WITH e AS (
-          |  SELECT event_type, user_id % 2 AS grp,
-          |    CAST(round(value * 100) AS BIGINT) AS c
-          |  FROM events
+          |  ${Arms.armedSql(Seq("event_type"), "c")}
           |), su AS (
-          |  SELECT event_type,
-          |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-          |    CAST(sum(CASE WHEN grp = 0 THEN c ELSE 0 END) AS BIGINT) AS sa,
-          |    CAST(sum(CASE WHEN grp = 0 THEN c * c ELSE 0 END) AS BIGINT) AS qa,
-          |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN c ELSE 0 END) AS BIGINT) AS sb,
-          |    CAST(sum(CASE WHEN grp = 1 THEN c * c ELSE 0 END) AS BIGINT) AS qb
-          |  FROM e GROUP BY event_type
+          |  ${Arms.powerSumsSql(Seq("event_type"))}
           |), f AS (
           |  SELECT event_type, na + nb AS n,
-          |    round((CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
-          |      / sqrt((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa)
-          |          / (CAST(na AS DOUBLE) * na * (na - 1))
-          |        + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb)
-          |          / (CAST(nb AS DOUBLE) * nb * (nb - 1))), 6) AS z
+          |    round((${Arms.MeanDiffSql}) / ${Arms.WelchSeSql}, 6) AS z
           |  FROM su WHERE na > 1 AND nb > 1
           |), p AS (
           |  SELECT event_type, n, z, ${pNorm6Sql("z")} AS p6i FROM f
@@ -6087,8 +5987,9 @@ object EventsOps {
           |  CAST(1 - cumfail AS BIGINT) AS rejected
           |FROM sd ORDER BY event_type""".stripMargin),
     ) { (s, dir) =>
-      holmReadout(welchScored(fdrArmSums(Tables.events(s, dir)
-        .select(col("event_type"), col("user_id"), col("value")))))
+      holmReadout(welchScored(Arms.powerSums(Arms.armed(Tables.events(s, dir)
+        .select(col("event_type"), col("user_id"), col("value")),
+        Seq(col("event_type"))))))
     },
 
     Q(
@@ -6110,20 +6011,8 @@ object EventsOps {
         "corpus scan to the hour rollup, a 12-lag band self-join of " +
         "the #hours-bounded spine, 1-row output",
       Some(
-        s"""WITH $hourlySeriesSqlCte, st AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx
-          |  FROM series
-          |), num AS (
-          |  SELECT b.t - a.t AS lag,
-          |    sum(CAST(a.x * n - sx AS HUGEINT) * (b.x * n - sx)) AS num
-          |  FROM series a JOIN series b
-          |    ON b.t > a.t AND b.t <= a.t + $LjungBoxLags
-          |  CROSS JOIN st GROUP BY b.t - a.t
-          |), den AS (
-          |  SELECT sum(CAST(x * n - sx AS HUGEINT) * (x * n - sx)) AS den,
-          |    max(n) AS n
-          |  FROM series CROSS JOIN st
-          |), terms AS (
+        s"""WITH $hourlySeriesSqlCte,
+          |${lagProductsSql(LjungBoxLags, ",\n    max(n) AS n")}, terms AS (
           |  SELECT n, lag,
           |    round(CAST(num AS DOUBLE) / den, 6) AS r6
           |  FROM num CROSS JOIN den
@@ -6187,8 +6076,8 @@ object EventsOps {
         "At 100 TB: one corpus pass to the per-user (x, y) rollup " +
         "(shuffle on user_id), one 2-arm agg, 1-row output",
       Some(
-        """WITH u AS (
-          |  SELECT user_id % 2 AS z,
+        s"""WITH u AS (
+          |  SELECT ${Arms.ParitySql} AS z,
           |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
           |      AS BIGINT) AS x,
           |    CAST(sum(CASE WHEN event_type = 'purchase'
@@ -6842,37 +6731,18 @@ object EventsOps {
     * mirrored A&S grid p6i → [[bhReadout]]. Factored so FdrBhSpec can
     * plant per-type lifts and pin exactly which types reject. */
   private[graft] def fdrBhCurve(events: DataFrame): DataFrame =
-    fdrFinish(fdrArmSums(events))
+    fdrFinish(Arms.powerSums(Arms.armed(events, Seq(col("event_type")))))
 
-  /** The streamable state stage of q_fdr_bh: per-type exact BIGINT
-    * arm power sums — purely additive, so a Structured Streaming
-    * groupBy folds it as #types-bounded complete-mode state
-    * (q_stream_fdr) and equals the batch rollup at any split. */
-  private[graft] def fdrArmSums(events: DataFrame): DataFrame =
-    events.select(col("event_type"),
-        (col("user_id") % 2).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("c"))
-      .groupBy("event_type").agg(
-        sum(when(col("grp") === 0, 1L).otherwise(0L)).as("na"),
-        sum(when(col("grp") === 0, col("c")).otherwise(0L)).as("sa"),
-        sum(when(col("grp") === 0, col("c") * col("c")).otherwise(0L)).as("qa"),
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("nb"),
-        sum(when(col("grp") === 1, col("c")).otherwise(0L)).as("sb"),
-        sum(when(col("grp") === 1, col("c") * col("c")).otherwise(0L)).as("qb"))
-
-  /** Welch z + mirrored A&S grid p over a [[fdrArmSums]] frame — the
-    * shared test stage of q_fdr_bh and q_holm_bonferroni. Returns
-    * (event_type, n, z, p6i). */
+  /** Welch z + mirrored A&S grid p over per-type [[Arms.powerSums]] —
+    * the shared test stage of q_fdr_bh and q_holm_bonferroni. The sums
+    * are purely additive, so q_stream_fdr folds them as #types-bounded
+    * complete-mode state that equals the batch rollup at any split.
+    * Returns (event_type, n, z, p6i). */
   private[graft] def welchScored(sums: DataFrame): DataFrame =
     sums
       .filter(col("na") > 1 && col("nb") > 1)
       .selectExpr("event_type", "na + nb AS n",
-        """round((CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
-          |  / sqrt((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa)
-          |      / (CAST(na AS DOUBLE) * na * (na - 1))
-          |    + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb)
-          |      / (CAST(nb AS DOUBLE) * nb * (nb - 1))), 6) AS z"""
-          .stripMargin)
+        s"round((${Arms.MeanDiffSql}) / ${Arms.WelchSeSql}, 6) AS z")
       .selectExpr("event_type", "n", "z", s"${pNorm6Sql("z")} AS p6i")
 
   /** The finishing stage of q_fdr_bh over the per-type state: Welch z
@@ -6912,16 +6782,11 @@ object EventsOps {
     * BEFORE the z divisions so both engines decide identically. */
   private[graft] def tostEquivalence(events: DataFrame,
       marginCents: Long): DataFrame =
-    fdrArmSums(events)
+    Arms.powerSums(Arms.armed(events, Seq(col("event_type"))))
       .filter(col("na") > 1 && col("nb") > 1)
       .selectExpr("event_type", "na + nb AS n",
-        """round(CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb, 6)
-          |  AS dc6""".stripMargin,
-        """round(sqrt((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa)
-          |    / (CAST(na AS DOUBLE) * na * (na - 1))
-          |  + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb)
-          |    / (CAST(nb AS DOUBLE) * nb * (nb - 1))), 6) AS se6"""
-          .stripMargin)
+        s"round(${Arms.MeanDiffSql}, 6) AS dc6",
+        s"round(${Arms.WelchSeSql}, 6) AS se6")
       .selectExpr("event_type", "n", "round(dc6 / 100, 6) AS diff",
         s"""CASE WHEN se6 = 0 THEN NULL ELSE
            |  round((dc6 + $marginCents) / se6, 6) END AS z_lower"""
@@ -6943,23 +6808,8 @@ object EventsOps {
     * division per lag), each lag's r²/(n−k) term quantizes to the
     * 1e-9 grid and sums exactly, and the Box-Ljung Q plus its
     * Wilson-Hilferty z finish as mirrored IEEE expressions. */
-  private[graft] def ljungBox(seriesRaw: DataFrame, maxLag: Int): DataFrame = {
-    val series = seriesRaw.localCheckpoint() // stats + pairs ×2 + denom
-    val st = series.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
-    val a = series.select(col("t").as("at"), col("x").as("ax"))
-    val b = series.select(col("t").as("bt"), col("x").as("bx"))
-    val num = a.join(b,
-        col("bt") > col("at") && col("bt") <= col("at") + maxLag)
-      .crossJoin(broadcast(st))
-      .groupBy((col("bt") - col("at")).as("lag"))
-      .agg(sum((col("ax") * col("n") - col("sx")).cast("decimal(38,0)")
-        * (col("bx") * col("n") - col("sx")).cast("decimal(38,0)"))
-        .as("num"))
-    val den = series.crossJoin(broadcast(st))
-      .agg(sum((col("x") * col("n") - col("sx")).cast("decimal(38,0)")
-        * (col("x") * col("n") - col("sx")).cast("decimal(38,0)"))
-        .as("den"),
-        max(col("n")).as("n"))
+  private[graft] def ljungBox(series: DataFrame, maxLag: Int): DataFrame = {
+    val (num, den) = lagProducts(series, maxLag, max(col("n")).as("n"))
     num.crossJoin(broadcast(den))
       .select(col("n"), col("lag"),
         round(col("num").cast("double") / col("den").cast("double"), 6)
@@ -7049,14 +6899,14 @@ object EventsOps {
   /** The q_propensity_strat computation over any (user_id, value)
     * frame — factored so PropensityStratSpec can plant activity-
     * confounded assignment and pin exact bias removal. Treatment is
-    * the sticky user_id % 2 arm; see the registry entry. */
+    * the user-parity arm ([[Arms.parity]]); see the registry entry. */
   private[graft] def propensityStrat(events: DataFrame): DataFrame = {
     val u = events
       .select(col("user_id"),
         round(col("value") * 100, 0).cast("long").as("c"))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_u"), sum(col("c")).as("y"))
-      .select((col("user_id") % 2).as("t"),
+      .select(Arms.parity.as("t"),
         least(floor(col("n_u") / 20), lit(7L)).as("band"), col("y"))
       .localCheckpoint() // read by the stratum AND naive rollups
     val st = u.groupBy("band").agg(
@@ -7092,21 +6942,11 @@ object EventsOps {
     * value) frame — factored so PowerMdeSpec can plant known-variance
     * arms and pin the closed form + the 1/sqrt(n) scaling law. */
   private[graft] def powerMde(events: DataFrame): DataFrame =
-    events.select(col("event_type"), (col("user_id") % 2).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("c"))
-      .groupBy("event_type").agg(
-        sum(when(col("grp") === 0, 1L).otherwise(0L)).as("na"),
-        sum(when(col("grp") === 0, col("c")).otherwise(0L)).as("sa"),
-        sum(when(col("grp") === 0, col("c") * col("c")).otherwise(0L)).as("qa"),
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("nb"),
-        sum(when(col("grp") === 1, col("c")).otherwise(0L)).as("sb"),
-        sum(when(col("grp") === 1, col("c") * col("c")).otherwise(0L)).as("qb"))
+    Arms.powerSums(Arms.armed(events, Seq(col("event_type"))))
       .filter(col("na") > 1 && col("nb") > 1)
       .selectExpr("event_type", "na", "nb",
         "(CAST(sa AS DOUBLE) + sb) / (na + nb) AS mc",
-        """((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa) / na
-          |  + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb) / nb)
-          |  / (na + nb - 2) AS s2""".stripMargin)
+        s"${Arms.PooledVarSql} AS s2")
       .selectExpr("event_type", "na", "nb",
         "round(mc / 100, 6) AS mean",
         "round(sqrt(s2) / 100, 6) AS sd",
@@ -7177,12 +7017,7 @@ object EventsOps {
     * value) frame — factored so WassersteinSpec can plant shifted
     * distributions and pin the translation property exactly. */
   private[graft] def wasserstein1(events: DataFrame): DataFrame = {
-    val vc = events.select(col("event_type"),
-        (col("user_id") % 2).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("v"))
-      .groupBy("event_type", "v").agg(
-        sum(when(col("grp") === 0, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("cb"))
+    val vc = Arms.valueCounts(Arms.armed(events, Seq(col("event_type")), "v"))
     val wO = Window.partitionBy("event_type").orderBy("v")
     val wP = Window.partitionBy("event_type")
     vc.withColumn("cuma", sum(col("ca")).over(wO))
@@ -7211,12 +7046,7 @@ object EventsOps {
     * where DuckDB errors — the engines would diverge at scale); see
     * the registry entry. */
   private[graft] def mannWhitney(events: DataFrame): DataFrame = {
-    val vc = events.select(col("event_type"),
-        (col("user_id") % 2).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("v"))
-      .groupBy("event_type", "v").agg(
-        sum(when(col("grp") === 0, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("cb"))
+    val vc = Arms.valueCounts(Arms.armed(events, Seq(col("event_type")), "v"))
       .withColumn("t", col("ca") + col("cb"))
     val wO = Window.partitionBy("event_type").orderBy("v")
     vc.withColumn("cumt", sum(col("t")).over(wO))
@@ -7262,7 +7092,7 @@ object EventsOps {
     * (q_stream_chisq folds it live as complete-mode state). */
   private[graft] def chisqCells(events: DataFrame): DataFrame =
     events
-      .select(col("event_type"), (col("user_id") % 2).as("grp"))
+      .select(col("event_type"), Arms.parity.as("grp"))
       .groupBy("event_type", "grp").agg(count(lit(1)).as("o"))
 
   /** The finishing stage of q_chisq_independence over the bounded
@@ -7597,10 +7427,10 @@ object EventsOps {
       .agg(count(lit(1)).as("nu"), sum(col("c")).as("su"))
       .localCheckpoint() // read by the observed agg AND the draw explode
     val obs = u.agg(
-      sum(when(col("user_id") % 2 === 0, col("nu")).otherwise(0L)).as("na"),
-      sum(when(col("user_id") % 2 === 0, col("su")).otherwise(0L)).as("sa"),
-      sum(when(col("user_id") % 2 === 1, col("nu")).otherwise(0L)).as("nb"),
-      sum(when(col("user_id") % 2 === 1, col("su")).otherwise(0L)).as("sb"))
+      sum(when(Arms.parity === 0, col("nu")).otherwise(0L)).as("na"),
+      sum(when(Arms.parity === 0, col("su")).otherwise(0L)).as("sa"),
+      sum(when(Arms.parity === 1, col("nu")).otherwise(0L)).as("nb"),
+      sum(when(Arms.parity === 1, col("su")).otherwise(0L)).as("sb"))
     val draws = u
       .withColumn("r", explode(sequence(lit(0), lit(PermDraws - 1))))
       .withColumn("grp", md5Hash60(
@@ -7723,28 +7553,15 @@ object EventsOps {
     * factored out so MsprtSpec can plant a lifted arm and pin the
     * crossing day. ln-domain throughout (see the registry entry). */
   private[graft] def msprtCurve(events: DataFrame): DataFrame =
-    msprtFinish(msprtDaily(events))
+    msprtFinish(Arms.powerSums(
+      Arms.armed(events, Seq(col("ts").cast("date").as("day"))), suffix = "_d"))
 
-  /** The streamable state stage of q_msprt: per-day exact BIGINT arm
-    * power sums — purely additive, so a Structured Streaming groupBy
-    * folds it as #days-bounded complete-mode state (q_stream_msprt)
-    * and equals the batch rollup at any micro-batch split. */
-  private[graft] def msprtDaily(events: DataFrame): DataFrame = {
-    val e = events.select(col("ts").cast("date").as("day"),
-      (col("user_id") % 2).as("grp"),
-      round(col("value") * 100, 0).cast("long").as("c"))
-    e.groupBy("day").agg(
-      sum(when(col("grp") === 0, 1L).otherwise(0L)).as("na_d"),
-      sum(when(col("grp") === 0, col("c")).otherwise(0L)).as("sa_d"),
-      sum(when(col("grp") === 0, col("c") * col("c")).otherwise(0L)).as("qa_d"),
-      sum(when(col("grp") === 1, 1L).otherwise(0L)).as("nb_d"),
-      sum(when(col("grp") === 1, col("c")).otherwise(0L)).as("sb_d"),
-      sum(when(col("grp") === 1, col("c") * col("c")).otherwise(0L)).as("qb_d"))
-  }
-
-  /** The finishing stage of q_msprt over the per-day state table:
-    * #days-bounded cumulative windows + ln-domain likelihood finals
-    * (see the registry entry). Batch-side in both twins. */
+  /** The finishing stage of q_msprt over the per-day arm power sums
+    * ([[Arms.powerSums]] keyed by day, suffixed `_d`): #days-bounded
+    * cumulative windows + ln-domain likelihood finals (see the
+    * registry entry). The sums are purely additive, so q_stream_msprt
+    * folds them as #days-bounded complete-mode state that equals the
+    * batch rollup at any micro-batch split; batch-side in both twins. */
   private[graft] def msprtFinish(d: DataFrame): DataFrame = {
     val w = Window.orderBy("day")
     val cumul = d.select(col("day"),
@@ -7753,10 +7570,8 @@ object EventsOps {
       sum(col("sb_d")).over(w).as("sb"), sum(col("qb_d")).over(w).as("qb"))
     val f = cumul.filter(col("na") > 1 && col("nb") > 1)
       .selectExpr("day", "na + nb AS n",
-        "CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb AS delta_c",
-        """((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa) / na
-          |  + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb) / nb)
-          |  / (na + nb - 2) * (1.0 / na + 1.0 / nb) AS vn""".stripMargin)
+        s"${Arms.MeanDiffSql} AS delta_c",
+        s"${Arms.PooledVarSql} * (1.0 / na + 1.0 / nb) AS vn")
     val ll = f.selectExpr("day", "n", "delta_c",
       s"""CASE WHEN vn > 0 THEN round(
          |  0.5 * ln(vn / (vn + $MsprtTau2))
@@ -7776,25 +7591,12 @@ object EventsOps {
     * its definition. */
   private[graft] lazy val fdrBhSql: String =
     s"""WITH e AS (
-           |  SELECT event_type, user_id % 2 AS grp,
-           |    CAST(round(value * 100) AS BIGINT) AS c
-           |  FROM events
+           |  ${Arms.armedSql(Seq("event_type"))}
            |), a AS (
-           |  SELECT event_type,
-           |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-           |    CAST(sum(CASE WHEN grp = 0 THEN c ELSE 0 END) AS BIGINT) AS sa,
-           |    CAST(sum(CASE WHEN grp = 0 THEN c * c ELSE 0 END) AS BIGINT) AS qa,
-           |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-           |    CAST(sum(CASE WHEN grp = 1 THEN c ELSE 0 END) AS BIGINT) AS sb,
-           |    CAST(sum(CASE WHEN grp = 1 THEN c * c ELSE 0 END) AS BIGINT) AS qb
-           |  FROM e GROUP BY event_type
+           |  ${Arms.powerSumsSql(Seq("event_type"))}
            |), f AS (
            |  SELECT event_type, na + nb AS n,
-           |    round((CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
-           |      / sqrt((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa)
-           |          / (CAST(na AS DOUBLE) * na * (na - 1))
-           |        + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb)
-           |          / (CAST(nb AS DOUBLE) * nb * (nb - 1))), 6) AS z
+           |    round((${Arms.MeanDiffSql}) / ${Arms.WelchSeSql}, 6) AS z
            |  FROM a WHERE na > 1 AND nb > 1
            |), pp AS (
            |  SELECT event_type, n, z, ${pNorm6Sql("z")} AS p6i FROM f
@@ -7950,18 +7752,9 @@ object EventsOps {
     * definition (the thetaIntersectSql init-order rule). */
   private[graft] lazy val msprtSql: String =
     s"""WITH e AS (
-       |  SELECT CAST(ts AS DATE) AS day, user_id % 2 AS grp,
-       |    CAST(round(value * 100) AS BIGINT) AS c
-       |  FROM events
+       |  ${Arms.armedSql(Seq("CAST(ts AS DATE) AS day"))}
        |), d AS (
-       |  SELECT day,
-       |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na_d,
-       |    CAST(sum(CASE WHEN grp = 0 THEN c ELSE 0 END) AS BIGINT) AS sa_d,
-       |    CAST(sum(CASE WHEN grp = 0 THEN c * c ELSE 0 END) AS BIGINT) AS qa_d,
-       |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb_d,
-       |    CAST(sum(CASE WHEN grp = 1 THEN c ELSE 0 END) AS BIGINT) AS sb_d,
-       |    CAST(sum(CASE WHEN grp = 1 THEN c * c ELSE 0 END) AS BIGINT) AS qb_d
-       |  FROM e GROUP BY day
+       |  ${Arms.powerSumsSql(Seq("day"), suffix = "_d")}
        |), cumul AS (
        |  SELECT day,
        |    CAST(sum(na_d) OVER (ORDER BY day) AS BIGINT) AS na,
@@ -7973,10 +7766,8 @@ object EventsOps {
        |  FROM d
        |), f AS (
        |  SELECT day, na + nb AS n,
-       |    CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb AS delta_c,
-       |    ((CAST(na AS DOUBLE) * qa - CAST(sa AS DOUBLE) * sa) / na
-       |      + (CAST(nb AS DOUBLE) * qb - CAST(sb AS DOUBLE) * sb) / nb)
-       |      / (na + nb - 2) * (1.0 / na + 1.0 / nb) AS vn
+       |    ${Arms.MeanDiffSql} AS delta_c,
+       |    ${Arms.PooledVarSql} * (1.0 / na + 1.0 / nb) AS vn
        |  FROM cumul WHERE na > 1 AND nb > 1
        |), ll AS (
        |  SELECT day, n, delta_c,
@@ -8847,22 +8638,12 @@ object EventsOps {
     * user parity; quartile indices k = ceil(p·n) in pure integers
     * (p = j/4 exact); quantile = smallest cents whose arm cumulative
     * reaches k — the inverse-CDF definition, window_dist's index
-    * machinery on the per-arm cumulative. */
+    * machinery on the per-arm cumulative. The (type, cents, ca, cb)
+    * rollup is purely additive, so q_stream_quantile_te folds the
+    * same [[Arms.valueCounts]] as complete-mode state. */
   private[graft] def quantileTe(events: DataFrame): DataFrame =
-    quantileTeFinish(quantileTeState(events))
-
-  /** The streamable state stage of q_quantile_te: the (type, cents,
-    * arm counts) rollup — purely ADDITIVE, so a Structured Streaming
-    * complete-mode groupBy folds it as cents-domain-bounded state
-    * that equals the batch rollup at any split (q_stream_quantile_te
-    * runs it live; the q_stream_fdr argument). */
-  private[graft] def quantileTeState(events: DataFrame): DataFrame =
-    events.select(col("event_type"),
-        (col("user_id") % 2).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("v"))
-      .groupBy("event_type", "v").agg(
-        sum(when(col("grp") === 0, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("cb"))
+    quantileTeFinish(
+      Arms.valueCounts(Arms.armed(events, Seq(col("event_type")), "v")))
 
   /** The finishing stage of q_quantile_te over the bounded rollup:
     * per-arm cumulatives + exact quartile-index probe. Arm totals
@@ -8905,7 +8686,7 @@ object EventsOps {
   private[graft] def cmhTest(events: DataFrame, target: String): DataFrame = {
     val cells = events.select(
         col("ts").cast("date").as("day"),
-        (col("user_id") % 2).as("grp"),
+        Arms.parity.as("grp"),
         when(col("event_type") === target, 1L).otherwise(0L).as("hit"))
       .groupBy("day").agg(
         sum(when(col("grp") === 0, col("hit")).otherwise(0L)).as("a"),
@@ -9008,7 +8789,7 @@ object EventsOps {
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
         sum(when(col("event_type") === "purchase",
           round(col("value") * 100, 0).cast("long")).otherwise(0L)).as("y"))
-      .select((col("user_id") % 2).as("z"), col("x"), col("y"))
+      .select(Arms.parity.as("z"), col("x"), col("y"))
       .agg(
         count(lit(1)).as("nu"),
         sum(when(col("z") === 1, 1L).otherwise(0L)).as("n1"),

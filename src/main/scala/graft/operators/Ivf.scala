@@ -95,9 +95,13 @@ object Ivf {
   object L2 extends Metric("vn2") {
     protected def norm: Column = normSq(col("embedding"))
     def argmin: Column = CentAssign.argminL2("embedding", "cs")
-    def metrics: Column = transform(col("cs"), c =>
+    def metrics: Column = metricsOf("embedding")
+
+    /** [[metrics]] of vector column `v`, whose squared norm is in `vn2`:
+      * the PQ fold runs it per sub-space over the `sv` slices. */
+    def metricsOf(v: String): Column = transform(col("cs"), c =>
       struct(
-        round(col("vn2") - lit(2.0) * dotCol(col("embedding"), c.getField("ce"))
+        round(col("vn2") - lit(2.0) * dotCol(col(v), c.getField("ce"))
           + c.getField("cn2"), 6).as("m"),
         c.getField("cent_id").as("cent_id")))
     def orderSql(v: String, c: String): String = d2Sql(normSqSql(v), v, c)
@@ -133,14 +137,16 @@ object Ivf {
     e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cent_id"), ce.as("ce"))
 
-  /** Centroids (cent_id, ce) collapsed to ONE broadcast row holding
-    * `cs` = array<struct(cent_id, ce, cn2, cn)>, the carrier of
-    * zero-shuffle assignment; norms are computed once per centroid
-    * here, so the per-(row, centroid) metric runs one dot fold. `cents`
-    * MUST be non-empty: [[seeds]] gives k ≥ 1 rows on any real table
-    * and Lloyd recompute preserves non-emptiness. */
-  private[graft] def packCents(cents: DataFrame): DataFrame =
-    broadcast(cents.agg(collect_list(struct(col("cent_id"), col("ce"),
+  /** Centroids (cent_id, ce) collapsed to ONE broadcast row per value
+    * of `keys` (the PQ fold packs per sub-space `sp`; a cell index
+    * takes no key) holding `cs` = array<struct(cent_id, ce, cn2, cn)>,
+    * the carrier of zero-shuffle assignment; norms are computed once
+    * per centroid here, so the per-(row, centroid) metric runs one dot
+    * fold. `cents` MUST be non-empty: [[seeds]] gives k ≥ 1 rows on any
+    * real table and Lloyd recompute preserves non-emptiness. */
+  private[graft] def packCents(cents: DataFrame, keys: String*): DataFrame =
+    broadcast(cents.groupBy(keys.map(col): _*).agg(collect_list(struct(
+      col("cent_id"), col("ce"),
       normSq(col("ce")).as("cn2"),
       sqrt(normSq(col("ce"))).as("cn"))).as("cs")))
 

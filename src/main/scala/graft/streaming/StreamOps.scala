@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Q, Tables}
-import graft.operators.{AnnOps, DedupOps, Ivf, Scratch}
+import graft.operators.{AnnOps, Arms, DedupOps, Ivf, Scratch}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -894,7 +894,8 @@ object StreamOps {
     ) { (s, dir) =>
       val src = eventsStream(s, dir)
         .select(col("ts"), col("user_id"), col("value"))
-      val sink = runToMemory(graft.operators.EventsOps.msprtDaily(src))
+      val sink = runToMemory(Arms.powerSums(
+        Arms.armed(src, Seq(col("ts").cast("date").as("day"))), suffix = "_d"))
       graft.operators.EventsOps.msprtFinish(sink)
     },
 
@@ -915,7 +916,8 @@ object StreamOps {
     ) { (s, dir) =>
       val src = eventsStream(s, dir)
         .select(col("event_type"), col("user_id"), col("value"))
-      val sink = runToMemory(graft.operators.EventsOps.fdrArmSums(src))
+      val sink = runToMemory(
+        Arms.powerSums(Arms.armed(src, Seq(col("event_type")))))
       graft.operators.EventsOps.fdrFinish(sink)
     },
 
@@ -939,7 +941,8 @@ object StreamOps {
     ) { (s, dir) =>
       val src = eventsStream(s, dir)
         .select(col("event_type"), col("user_id"), col("value"))
-      val sink = runToMemory(graft.operators.EventsOps.quantileTeState(src))
+      val sink = runToMemory(
+        Arms.valueCounts(Arms.armed(src, Seq(col("event_type")), "v")))
       graft.operators.EventsOps.quantileTeFinish(sink)
     },
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.EventsOps
+import graft.operators.{Arms, EventsOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +31,8 @@ class MsprtStreamSpec extends AnyFunSuite {
     } yield ev(d, (2 * i + arm).toLong,
       (if (i % 2 == 0) 9.00 else 11.00) + (if (arm == 1) 0.25 else 0.0))
     val src = MemoryStream[MsEv]
-    val q = EventsOps.msprtDaily(src.toDF()).writeStream
+    val q = Arms.powerSums(Arms.armed(src.toDF(),
+        Seq(col("ts").cast("date").as("day"))), suffix = "_d").writeStream
       .format("memory").queryName("msprt_state")
       .outputMode("complete").start()
     try {

@@ -1,7 +1,8 @@
 package graft
 
-import graft.operators.EventsOps
+import graft.operators.{Arms, EventsOps}
 import java.sql.Timestamp
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-exact pins for the round-11 classical-statistics additions:
@@ -117,7 +118,8 @@ class Round11StatsSpec extends AnyFunSuite {
     val rows = arm("a", 100, 80) ++ arm("b", 100, 50) ++
       arm("c", 100, 40) ++ arm("nul", 100, 0)
     val got = EventsOps.holmReadout(EventsOps.welchScored(
-      EventsOps.fdrArmSums(rows.toDF("user_id", "event_type", "value"))))
+      Arms.powerSums(Arms.armed(rows.toDF("user_id", "event_type", "value"),
+        Seq(col("event_type"))))))
       .collect().map(r => r.getString(0) -> r.getLong(5)).toMap
     assert(got == Map("a" -> 1L, "b" -> 1L, "c" -> 1L, "nul" -> 0L),
       s"got $got")
