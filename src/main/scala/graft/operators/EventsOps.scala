@@ -437,11 +437,6 @@ object EventsOps {
       |    WHEN base_cnt = 24 THEN CAST(0 AS BIGINT) END AS burst
       |FROM w ORDER BY event_type, hour""".stripMargin
 
-  /** The q_ewma_control oracle, shared VERBATIM by q_stream_ewma (the
-    * eventsAnomalySql precedent — the stream's complete-mode hour
-    * rollup ≡ the batch `hr` CTE at any split). A def, not a val: it
-    * interpolates [[hourlySeriesSqlCte]], declared further down (the
-    * registry-interpolation init-order rule). */
   /** The centered lag products of a (t, x) series, shared by q_acf,
     * q_pacf/q_stream_pacf and q_ljung_box: `num` = (lag, num) with
     * num = Σ (x_t·n − S)(x_{t+lag}·n − S) over the band self-join at
@@ -642,6 +637,11 @@ object EventsOps {
       |  CAST(s_up > h OR s_dn > h AS BIGINT) AS alarm
       |FROM s ORDER BY t""".stripMargin
 
+  /** The q_ewma_control oracle, shared VERBATIM by q_stream_ewma (the
+    * eventsAnomalySql precedent — the stream's complete-mode hour
+    * rollup ≡ the batch `hr` CTE at any split). A def, not a val: it
+    * interpolates [[hourlySeriesSqlCte]], declared further down (the
+    * registry-interpolation init-order rule). */
   private[graft] def ewmaSql: String =
     s"""WITH RECURSIVE $hourlySeriesSqlCte, x0 AS (
        |  SELECT t, CAST(x AS DOUBLE) AS x FROM series
