@@ -3,7 +3,8 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.{HyperSig, Portable}
 import Ivf.{Dim, cosSimSql, dotCol, dotColSql, normSq, normSqSql, normSql}
-import org.apache.spark.sql.{Column, SparkSession}
+import Knn.{NumProbes, cosSim}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,7 +33,6 @@ object AnnOps {
   private val BandBits = 8
   private val NumBands = NumPlanes / BandBits
   private val TopK = 10
-  private val NumProbes = 5
   private[graft] val NumCells = 16
 
   /** q_sql_cos's ANSI text (factored for CosineRuleSpec's sql-text
@@ -64,6 +64,9 @@ object AnnOps {
   private val ElbowKs = Seq(2, 4, 8)
   private val ElbowIters = 2
 
+  /** q_silhouette: each vector's own (nearest) centroid by 6dp L2. */
+  private val OwnCent = Knn.Rank(Knn.asc("d6"), "cent_id", 1, "rn", "vec_id")
+
   /** q_dbscan: the ε-ball is cosine ≥ this. 0.2 fits the synthetic
     * near-orthogonal corpus (0.4+ leaves every vector noise — the
     * q_embed_dup threshold note; real corpora use ≥ 0.9, the
@@ -80,6 +83,13 @@ object AnnOps {
   /** q_knn_graph: neighbors per vector and query-side probe width. */
   private val KnnK = 5
 
+  /** The k-NN graph's neighbor lists: every vector's top [[KnnK]]. */
+  private val ByCosKnn = Knn.Rank(Knn.desc("cos_sim"), "neighbor_id", KnnK, by = "vec_id")
+
+  /** q_al_uncertainty / q_knn_classify / q_label_spread: each vector's
+    * neighbor-vote argmax, ties to the smaller label. */
+  private val TopVote = Knn.Rank(Knn.desc("c"), "vote", 1, "rn", "vec_id")
+
   /** q_graph_ann: beam width and unrolled hop count for the graph-ANN
     * beam search (the NSW search shape over the persisted
     * q_knn_graph). The hop count is a COMPILE-TIME constant because
@@ -94,13 +104,18 @@ object AnnOps {
     * panel costs one windowed argmax over the cell assignment. */
   private val BeamB = 16
   private val BeamHops = 5
+  private val ByBeam = Knn.Rank(Knn.desc("cos_sim"), "cand_id", BeamB, "rn")
+  private val GraphTop = ByBeam.copy(k = TopK, as = "rank")
 
   /** q_bitext_mine: cross-side neighborhood size for the margin
     * denominator (Artetxe & Schwenk use k=4). */
   private val BtK = 4
+  private val ByCosBt = Knn.Rank(Knn.desc("cos_sim"), "neighbor_id", BtK, by = "vec_id")
+  private val ByMargin = Knn.Rank(Knn.desc("margin"), "neighbor_id", 1, "mrank", "vec_id")
 
   /** q_contrastive_pairs: anchor panel size. */
   private val PairAnchors = 10
+  private val ByAnchor = Knn.Rank(Knn.desc("cos_sim"), "cand_id", 1, "rn", "anchor_id")
   private val KnnNProbe = 2
 
   /** q_embed_prune: fraction of each cell pruned (the MOST
@@ -125,6 +140,8 @@ object AnnOps {
   private val MmrK = 5
   private val MmrLambdaE1 = 7L
   private val MmrOneMinusE1 = 3L
+  private val MmrPool = Knn.Rank(Knn.desc("rel"), "neighbor_id", MmrR, "crank")
+  private val MmrPick = Knn.Rank(Knn.desc("score7"), "neighbor_id", 1, "rn")
 
   /** One unrolled greedy MMR round for q_mmr_rerank's oracle: score
     * surviving candidates (exact BIGINT fixed point), pick the
@@ -136,11 +153,7 @@ object AnnOps {
        |    $MmrLambdaE1 * rel6 - $MmrOneMinusE1 * ms6 AS score7
        |  FROM c${i - 1}
        |), sel$i AS (
-       |  SELECT probe_id, neighbor_id, score7 FROM (
-       |    SELECT probe_id, neighbor_id, score7,
-       |      row_number() OVER (PARTITION BY probe_id
-       |        ORDER BY score7 DESC, neighbor_id) AS rn
-       |    FROM s$i) WHERE rn = 1
+       |  ${MmrPick.cutSql("probe_id, neighbor_id, score7", "probe_id, neighbor_id, score7", s"s$i")}
        |), c$i AS (
        |  SELECT c.probe_id, c.neighbor_id, c.rel6, greatest(c.ms6, p.sim6) AS ms6
        |  FROM c${i - 1} c
@@ -159,9 +172,7 @@ object AnnOps {
        |  FROM topk t JOIN l${i - 1} l ON l.vec_id = t.neighbor_id
        |  WHERE l.lab IS NOT NULL GROUP BY t.vec_id, l.lab
        |), m$i AS (
-       |  SELECT vec_id, vote FROM (
-       |    SELECT vec_id, vote, row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY c DESC, vote) AS rn FROM v$i) WHERE rn = 1
+       |  ${TopVote.cutSql("vec_id, vote", "vec_id, vote", s"v$i")}
        |), l$i AS (
        |  SELECT p.vec_id, coalesce(l0.lab, m$i.vote, p.lab) AS lab
        |  FROM l${i - 1} p
@@ -176,6 +187,15 @@ object AnnOps {
   /** q_matryoshka_search: prefix dims the coarse pass reads. */
   private val MatPrefix = 16
 
+  /** The coarse candidate pools of q_bq_search, q_matryoshka_search and
+    * q_rrf_fusion: top [[RerankR]] per probe by hamming distance over
+    * the sign bits, and by 6dp prefix cosine. */
+  private val ByHamming = Knn.Rank(Knn.asc("hamming"), "neighbor_id", RerankR, "crank")
+  private val ByPrefix = Knn.Rank(Knn.desc("pre_sim"), "neighbor_id", RerankR, "crank")
+
+  /** q_rrf_fusion's fused list: top [[TopK]] by 6dp reciprocal-rank sum. */
+  private val ByRrf = Knn.Rank(Knn.desc("rrf"), "neighbor_id", TopK)
+
   /** q_fps_coreset: selected points (oracle-unrolled rounds). */
   private val FpsK = 8
 
@@ -187,6 +207,7 @@ object AnnOps {
   private val PqK = 8
   private val PqProbes = 5
   private val PqTopK = 10
+  private val ByAdist = Knn.Rank(Knn.asc("adist"), "neighbor_id", PqTopK)
 
   /** Fixed pseudo-random hyperplanes — owned by [[HyperSig]] (the
     * fused native expression that computes the 16-bit signature); this
@@ -203,43 +224,44 @@ object AnnOps {
 
   private def norm(e: Column): Column = sqrt(normSq(e))
 
+  /** The cosine neighbor list of the search rows: per probe, top
+    * [[TopK]] by 6dp cosine, ties by neighbor id. */
+  private val ByCos = Knn.Rank(Knn.desc("cos_sim"), "neighbor_id", TopK)
+
+  /** q_simsearch_mips' list: top [[TopK]] by 6dp inner product. */
+  private val ByIp = Knn.Rank(Knn.desc("ip"), "neighbor_id", TopK)
+
   /** The q_simsearch_mips computation over any (vec_id, embedding)
     * frame — factored so MipsSpec can plant norm-skewed corpora and
     * prove the M-augmentation order equivalence. See the registry
     * entry for the determinism contract. */
-  private[graft] def mipsTopK(e: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val probes = e.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    val scored = broadcast(probes)
-      .join(e, col("vec_id") =!= col("probe_id"))
+  private[graft] def mipsTopK(e: DataFrame): DataFrame =
+    ByIp.ranked(Knn.pairs(Knn.panel(e, col("embedding").as("pe")), e)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         round(dotCol(col("pe"), col("embedding")), 6).as("ip"),
-        round(norm(col("embedding")), 6).as("vec_norm"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("ip").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-      .orderBy("probe_id", "rank")
-  }
+        round(norm(col("embedding")), 6).as("vec_norm")))
 
-  /** The ANN determinism contract, shared by every search query: cosine
-    * in double, rounded to 6dp BEFORE ranking (so both engines rank the
-    * same values), ties broken by id. Backed by the fused native
-    * [[graft.functions.CosSim]] expression (one codegen'd pass) —
-    * bit-identical to the three-fold higher-order form it replaced,
-    * which CosSimSpec asserts. */
-  private def cosSim(a: String, b: String): Column =
-    round(graft.functions.CosSim.cosineSim(a, b), 6)
+  /** (probe_id, neighbor_id, cos_sim) of probe/corpus pairs whose
+    * probe vector is `pe` and corpus row (vec_id, embedding). */
+  private def scoredCos(pairs: DataFrame): DataFrame =
+    pairs.select(col("probe_id"), col("vec_id").as("neighbor_id"),
+      cosSim("pe", "embedding").as("cos_sim"))
 
-  /** Per-probe top-k over a (probe_id, neighbor_id, cos_sim) frame:
-    * row_number window = per-partition heap + one shuffle of survivors. */
-  private def rankTopK(scored: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy("probe_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-      .orderBy("probe_id", "rank")
+  /** Brute-force ground truth: the probe panel's cosine neighbor list
+    * over all of `e` (vec_id, embedding). */
+  private def bruteTop(e: DataFrame): DataFrame =
+    ByCos.ranked(scoredCos(Knn.pairs(Knn.panel(e, col("embedding").as("pe")), e)))
+
+  /** The IVF candidate pairs: each probe routed to its [[NProbe]]
+    * nearest `cells`, joined on the cell to `assign` (vec_id,
+    * embedding, cent_id, …), its own row dropped; the probe side
+    * carries (probe_id, pe, `carried`…, cent_id). */
+  private def ivfPairs(cells: Ivf.Cells, e: DataFrame, assign: DataFrame,
+      carried: Column*): DataFrame = {
+    val probeCells = cells.probe(Knn.probeRows(e), NProbe)
+      .select(Seq(col("vec_id").as("probe_id"), col("embedding").as("pe")) ++ carried
+        :+ col("cell.cent_id").as("cent_id"): _*)
+    broadcast(probeCells).join(assign, Seq("cent_id")).filter(Knn.notSelf())
   }
 
   /** Band values sliced from the fused 16-bit hypersig expression
@@ -254,6 +276,12 @@ object AnnOps {
     }
   }
 
+  /** The LSH band table of q_simsearch_lsh, q_embed_dup and q_dbscan:
+    * `e` once per band, keeping `carried`, with (band_id, band_val). */
+  private def bandTable(e: DataFrame, carried: String*): DataFrame =
+    e.select(carried.map(col) :+
+      posexplode(array(bandColsFused: _*)).as(Seq("band_id", "band_val")): _*)
+
   // ---- DuckDB-side twins ----
 
   private def wSql(j: Int): String = W(j).map(fmt).mkString("[", ", ", "]")
@@ -261,17 +289,107 @@ object AnnOps {
   private def dotConstSql(e: String, j: Int): String =
     s"list_sum(list_transform(range($Dim), i -> CAST($e[i+1] AS DOUBLE) * (${wSql(j)})[i+1]))"
 
-  /** DuckDB twin of [[rankTopK]]: the ranked-CTE tail appended after a
-    * CTE chain that ends with `scored(probe_id, neighbor_id, cos_sim)`. */
-  private def rankTopKSqlTail: String =
-    s""", ranked AS (
-       |  SELECT probe_id, neighbor_id, cos_sim,
-       |    row_number() OVER (PARTITION BY probe_id
-       |      ORDER BY cos_sim DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT probe_id, neighbor_id, cos_sim, rank
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY probe_id, rank""".stripMargin
+  /** Twin of [[bruteTop]]'s pairs: `probes` and a `scored`-named CTE
+    * of (probe_id, neighbor_id, cos_sim), after the `e` CTE. */
+  private def bruteScoredSql(scored: String = "scored"): String =
+    s"""probes AS (${Knn.panelSql("embedding AS pe")}),
+       |$scored AS (
+       |  SELECT probe_id, e.vec_id AS neighbor_id,
+       |    ${cosSimSql("pe", "embedding")} AS cos_sim
+       |  FROM ${Knn.pairsSql("e")}
+       |)""".stripMargin
+
+  /** [[bruteScoredSql]] cut to the ground-truth ids `btop(probe_id,
+    * neighbor_id)`. */
+  private def bruteTopSql: String =
+    s"""${bruteScoredSql("bscored")}, btop AS (
+       |  ${ByCos.cutSql("probe_id, neighbor_id", "probe_id, neighbor_id", "bscored")}
+       |)""".stripMargin
+
+  /** Twin of [[ivfPairs]]' probe side: the `probe_cells` CTE routing
+    * the probe panel to its [[NProbe]] nearest `cents` under `m`, with
+    * `extra` columns (read from `e` by `extraFrom`) before `cent_id`. */
+  private def probeCellsSql(m: Ivf.Metric, cents: String = "cents",
+      extra: String = "", extraFrom: String = ""): String =
+    s"""probe_cells AS (
+       |  ${Ivf.routeSql(m, s"vec_id AS probe_id, pe, ${extra}cent_id",
+            s"e.vec_id, e.embedding AS pe, ${extraFrom}c.cent_id", NProbe, Some(NumProbes), cents)}
+       |)""".stripMargin
+
+  /** Twin of [[ivfPairs]] scored: a `scored(probe_id, neighbor_id,
+    * cos_sim)` CTE over `probe_cells` and `assign` CTEs, with `and`
+    * appended to the join condition. */
+  private def ivfScoredSql(and: String = ""): String =
+    s"""scored AS (
+       |  SELECT probe_id, a.vec_id AS neighbor_id,
+       |    ${cosSimSql("pe", "embedding")} AS cos_sim
+       |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
+       |   AND a.vec_id <> p.probe_id$and
+       |)""".stripMargin
+
+  /** [[ByCos]]'s tail after a `scored(probe_id, neighbor_id, cos_sim)`
+    * CTE. */
+  private def cosTailSql: String = ByCos.tailSql("probe_id, neighbor_id, cos_sim")
+
+  /** Binary quantization: each vector's 64 sign bits as two 32-bit
+    * BIGINT halves, and every (probe, vector) pair's hamming distance
+    * (probe_id, neighbor_id, hamming). */
+  private def bqHamming(e: DataFrame): DataFrame = {
+    def sigHalf(off: Int): Column = expr(
+      s"aggregate(sequence(0, 31), CAST(0 AS BIGINT), (acc, i) -> acc + " +
+        s"IF(element_at(embedding, i + ${off + 1}) > 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))")
+    val sigs = e.select(col("vec_id"),
+      sigHalf(0).as("sig_lo"), sigHalf(32).as("sig_hi"))
+    Knn.pairs(Knn.panel(sigs, col("sig_lo").as("p_lo"), col("sig_hi").as("p_hi")), sigs)
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+        (bit_count(col("p_lo").bitwiseXOR(col("sig_lo"))) +
+          bit_count(col("p_hi").bitwiseXOR(col("sig_hi")))).as("hamming"))
+  }
+
+  /** Twin of [[bqHamming]]: `sigs`, the `probes` panel and `ham` CTEs
+    * after the `e` CTE. */
+  private def bqHammingSql(probes: String = "probes"): String = {
+    def sigSql(off: Int): String =
+      s"CAST(list_sum(list_transform(range(32), i -> CASE WHEN embedding[i + ${off + 1}] > 0 " +
+        "THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
+    s"""sigs AS (
+       |  SELECT vec_id, ${sigSql(0)} AS sig_lo, ${sigSql(32)} AS sig_hi FROM e
+       |), $probes AS (
+       |  ${Knn.panelSql("sig_lo AS p_lo, sig_hi AS p_hi", "sigs")}
+       |), ham AS (
+       |  SELECT probe_id, s.vec_id AS neighbor_id,
+       |    bit_count(xor(p_lo, sig_lo)) + bit_count(xor(p_hi, sig_hi)) AS hamming
+       |  FROM ${Knn.pairsSql("sigs s", probes)}
+       |)""".stripMargin
+  }
+
+  /** Matryoshka coarse pass: every (probe, vector) pair's 6dp cosine
+    * over the first [[MatPrefix]] dims (probe_id, neighbor_id,
+    * pre_sim). */
+  private def prefixCoarse(e: DataFrame): DataFrame = {
+    val pre = e.select(col("vec_id"), slice(col("embedding"), 1, MatPrefix).as("p"))
+    Knn.pairs(Knn.panel(pre, col("p").as("pp")), pre)
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+        cosSim("pp", "p").as("pre_sim"))
+  }
+
+  /** Twin of [[prefixCoarse]]: `pre`, the `probes` panel and `coarse`
+    * CTEs after the `e` CTE. */
+  private def prefixCoarseSql(probes: String = "probes"): String =
+    s"""pre AS (SELECT vec_id, embedding[1:$MatPrefix] AS p FROM e),
+       |$probes AS (
+       |  ${Knn.panelSql("p AS pp", "pre")}
+       |), coarse AS (
+       |  SELECT probe_id, pre.vec_id AS neighbor_id,
+       |    ${cosSimSql("pp", "p", MatPrefix)} AS pre_sim
+       |  FROM ${Knn.pairsSql("pre", probes)}
+       |)""".stripMargin
+
+  /** Twin of [[bandTable]]: the UNION ALL body of a `bands(vec_id,
+    * embedding, band_id, band_val)` CTE over `e`. */
+  private def bandTableSql: String = (0 until NumBands).map(b =>
+    s"SELECT vec_id, embedding, $b AS band_id, ${bandSql("embedding", b)} AS band_val FROM e")
+    .mkString("\n  UNION ALL\n  ")
 
   // ---- PCA top component (q_embed_pca), both engines ----
 
@@ -486,8 +604,7 @@ object AnnOps {
 
   /** The (vec_id, embedding, vn2) corpus frame the k-means‖ machinery
     * runs over. */
-  private def kbarCorpus(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
+  private def kbarCorpus(s: SparkSession, dir: String): DataFrame =
     Ivf.L2.withNorm(Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding")))
 
@@ -501,9 +618,9 @@ object AnnOps {
     * ×1e6-integer min-D² to the candidate set) — shared by the
     * fixed-R oracled loop and the cost-adaptive library variant. */
   private def kbarDistances(
-      e: org.apache.spark.sql.DataFrame,
-      cand: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+      e: DataFrame,
+      cand: DataFrame)
+      : DataFrame = {
     val cells = Ivf.Cells(cand
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce")), Ivf.L2)
     cells.withCells(e)
@@ -519,9 +636,9 @@ object AnnOps {
     * in-plan (broadcast 1-row agg, zero collects) while the adaptive
     * path passes the collected literal — identical arithmetic. */
   private def kbarAdmit(
-      d: org.apache.spark.sql.DataFrame,
+      d: DataFrame,
       phi: Column, r: Int, lOversample: Int)
-      : org.apache.spark.sql.DataFrame =
+      : DataFrame =
     d.filter(kbarM(r).cast("decimal(38,0)") * phi.cast("decimal(38,0)")
       <= lit(1048576L * lOversample).cast("decimal(38,0)")
         * col("di").cast("decimal(38,0)"))
@@ -541,11 +658,11 @@ object AnnOps {
     * @return (candidates (r, vec_id, embedding), rounds actually run)
     */
   private[graft] def kmeansParallelCandidates(
-      e: org.apache.spark.sql.DataFrame,
+      e: DataFrame,
       lOversample: Int,
       maxRounds: Int,
       stopRatio: Option[Double])
-      : (org.apache.spark.sql.DataFrame, Int) = {
+      : (DataFrame, Int) = {
     val u0 = (pmod(Portable.md5Hash60(col("vec_id").cast("string")),
       lit(1048576L)).cast("double") + lit(1.0)) / lit(1048576.0)
     var cand = e
@@ -609,13 +726,13 @@ object AnnOps {
     */
   private[graft] def embedDecontaminate(
       s: SparkSession,
-      test: org.apache.spark.sql.DataFrame,
-      train: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame,
+      test: DataFrame,
+      train: DataFrame,
+      cents: DataFrame,
       threshold: Double,
-      nprobe: Int = 1): org.apache.spark.sql.DataFrame = {
+      nprobe: Int = 1): DataFrame = {
     val cells = Ivf.Cells(cents, Ivf.L2)
-    def assign(df: org.apache.spark.sql.DataFrame) =
+    def assign(df: DataFrame) =
       cells.assign(df, "cell_id")
         .select(col("vec_id"), col("cell_id"), col("embedding"))
     // Test side probes its nprobe nearest cells; the reported cell_id
@@ -651,8 +768,7 @@ object AnnOps {
     * id). Scores shrink to (ids, cos) before the ranking window — the
     * only corpus-sized shuffle — and embeddings never ride through
     * it. Returns (vec_id, neighbor_id, cos_sim, rank). */
-  private def knnTopK(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
+  private def knnTopK(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val cells = Ivf.Cells(Ivf.seeds(e, KSeeds), Ivf.L2)
     val corpus = cells.assign(e, "cell_id")
@@ -661,14 +777,10 @@ object AnnOps {
     val queries = cells.probe(e, KnnNProbe)
       .select(col("cell.cent_id").as("cell_id"), col("vec_id"),
         col("embedding").as("qe"))
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    queries.join(corpus, Seq("cell_id"))
+    ByCosKnn.top(queries.join(corpus, Seq("cell_id"))
       .filter(col("neighbor_id") =!= col("vec_id"))
       .select(col("vec_id"), col("neighbor_id"),
-        cosSim("qe", "ne").as("cos_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= KnnK)
+        cosSim("qe", "ne").as("cos_sim")))
   }
 
   /** DuckDB twin of [[knnTopK]]: CTE chain cents → routed → corpus →
@@ -691,16 +803,12 @@ object AnnOps {
        |  FROM queries q JOIN corpus c
        |    ON q.cell_id = c.cell_id AND c.neighbor_id <> q.vec_id
        |), topk AS (
-       |  SELECT vec_id, neighbor_id, cos_sim, rank FROM (
-       |    SELECT vec_id, neighbor_id, cos_sim,
-       |      row_number() OVER (PARTITION BY vec_id
-       |        ORDER BY cos_sim DESC, neighbor_id) AS rank
-       |    FROM scored) WHERE rank <= $KnnK
+       |  ${ByCosKnn.cutSql("vec_id, neighbor_id, cos_sim, rank", "vec_id, neighbor_id, cos_sim", "scored")}
        |)""".stripMargin
 
   /** DuckDB twin of the beam-search loop: b0 scores the fixed entry
     * panel, then [[BeamHops]] unrolled (candidate-expand, rescore,
-    * top-B) CTE pairs — expecting prior `e`, `pr(probe_id, pe)` and
+    * top-B) CTE pairs — expecting prior `e`, `probes(probe_id, pe)` and
     * `topk` (the graph) CTEs; exposes `b$BeamHops(probe_id, cand_id,
     * cos_sim)`. Each hop's candidate set is the previous beam plus
     * its graph neighbors, deduplicated, probe excluded — the
@@ -708,17 +816,13 @@ object AnnOps {
     * + id-tie contract, identical in both engines. */
   private def beamHopsSqlCtes: String = {
     def rank(src: String): String =
-      s"""  SELECT probe_id, cand_id, cos_sim FROM (
-         |    SELECT probe_id, cand_id, cos_sim, row_number() OVER (
-         |      PARTITION BY probe_id
-         |      ORDER BY cos_sim DESC, cand_id) AS rn
-         |    FROM ($src)) WHERE rn <= $BeamB""".stripMargin
+      "  " + ByBeam.cutSql("probe_id, cand_id, cos_sim", "probe_id, cand_id, cos_sim", s"($src)")
     val b0 =
       s"""b0 AS (
          |${rank(
         s"""SELECT p.probe_id, c.cand_id,
            |      ${cosSimSql("p.pe", "ce.embedding")} AS cos_sim
-           |    FROM pr p CROSS JOIN entries c
+           |    FROM probes p CROSS JOIN entries c
            |    JOIN e ce ON ce.vec_id = c.cand_id
            |    WHERE c.cand_id <> p.probe_id""".stripMargin)}
          |)""".stripMargin
@@ -737,7 +841,7 @@ object AnnOps {
          |${rank(
         s"""SELECT c.probe_id, c.cand_id,
            |      ${cosSimSql("p.pe", "ce.embedding")} AS cos_sim
-           |    FROM c$i c JOIN pr p ON p.probe_id = c.probe_id
+           |    FROM c$i c JOIN probes p ON p.probe_id = c.probe_id
            |    JOIN e ce ON ce.vec_id = c.cand_id""".stripMargin)}
          |)""".stripMargin
     }
@@ -748,8 +852,8 @@ object AnnOps {
     * cval). cval is rounded to 6dp so the NEXT iteration starts from
     * bit-identical centroids in both engines — per-step float drift is
     * absorbed instead of compounding across iterations. */
-  private def lloydIterLong(e: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def lloydIterLong(e: DataFrame,
+      cents: DataFrame): DataFrame = {
     Ivf.Cells(cents, Ivf.L2).assign(e, "cent_id")
       .select(col("cent_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("cent_id"), col("pos").cast("long").as("pos"),
@@ -760,8 +864,7 @@ object AnnOps {
 
   /** Long-form → array-form centroids; collect_list order is fixed by
     * sorting the (pos, cval) structs, so the array is deterministic. */
-  private def toCentArrays(centLong: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private def toCentArrays(centLong: DataFrame): DataFrame =
     centLong.groupBy("cent_id")
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("cval")))),
@@ -772,10 +875,10 @@ object AnnOps {
     * linear — iteration i's broadcast build side replays only
     * iterations 1..i−1 over the tiny centroid tables, and each
     * iteration costs exactly one corpus scan. */
-  private def trainCents(e: org.apache.spark.sql.DataFrame, k: Int, iters: Int)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def trainCents(e: DataFrame, k: Int, iters: Int)
+      : (DataFrame, DataFrame) = {
     var cents = Ivf.seeds(e, k, transform(col("embedding"), x => x.cast("double")))
-    var centLong: org.apache.spark.sql.DataFrame = null
+    var centLong: DataFrame = null
     for (_ <- 1 to iters) {
       centLong = lloydIterLong(e, cents)
       cents = toCentArrays(centLong)
@@ -799,9 +902,9 @@ object AnnOps {
     *
     * @return (centroids (cent_id, ce), iterations run, last max shift²)
     */
-  def trainKMeans(e: org.apache.spark.sql.DataFrame, k: Int,
+  def trainKMeans(e: DataFrame, k: Int,
       maxIters: Int, tol: Double)
-      : (org.apache.spark.sql.DataFrame, Int, Double) = {
+      : (DataFrame, Int, Double) = {
     require(k > 0 && maxIters > 0 && tol >= 0, "k, maxIters > 0; tol >= 0")
     var cents = Ivf.seeds(e, k, transform(col("embedding"), x => x.cast("double")))
       .localCheckpoint()
@@ -862,20 +965,9 @@ object AnnOps {
         "ranking, ties by vec_id",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |probes AS (SELECT vec_id AS probe_id, embedding AS pe FROM e WHERE vec_id < $NumProbes),
-           |scored AS (
-           |  SELECT probe_id, e.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM probes JOIN e ON e.vec_id <> probe_id
-           |)$rankTopKSqlTail""".stripMargin),
+           |${bruteScoredSql()}$cosTailSql""".stripMargin),
     ) { (s, dir) =>
-      val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val probes = e.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      rankTopK(broadcast(probes)
-        .join(e, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
+      bruteTop(Tables.embeddings(s, dir).select("vec_id", "embedding"))
     },
 
     Q(
@@ -899,21 +991,13 @@ object AnnOps {
         "data and pins MIPS ≠ cosine on norm-skewed corpora)",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |probes AS (SELECT vec_id AS probe_id, embedding AS pe
-           |  FROM e WHERE vec_id < $NumProbes),
+           |probes AS (${Knn.panelSql("embedding AS pe")}),
            |scored AS (
            |  SELECT probe_id, e.vec_id AS neighbor_id,
            |    round(${dotColSql("pe", "embedding")}, 6) AS ip,
            |    round(${normSql("embedding")}, 6) AS vec_norm
-           |  FROM probes JOIN e ON e.vec_id <> probe_id
-           |), ranked AS (
-           |  SELECT probe_id, neighbor_id, ip, vec_norm,
-           |    row_number() OVER (PARTITION BY probe_id
-           |      ORDER BY ip DESC, neighbor_id) AS rank
-           |  FROM scored)
-           |SELECT probe_id, neighbor_id, ip, vec_norm, rank
-           |FROM ranked WHERE rank <= $TopK
-           |ORDER BY probe_id, rank""".stripMargin),
+           |  FROM ${Knn.pairsSql("e")}
+           |)${ByIp.tailSql("probe_id, neighbor_id, ip, vec_norm")}""".stripMargin),
     ) { (s, dir) =>
       mipsTopK(Tables.embeddings(s, dir).select("vec_id", "embedding"))
     },
@@ -926,15 +1010,11 @@ object AnnOps {
         "scan per probe), exact cosine re-rank on candidates only — the " +
         "recall/cost dial is (bands × band bits)",
       Some {
-        val corpusBands = (0 until NumBands).map(b =>
-          s"SELECT vec_id, embedding, $b AS band_id, ${bandSql("embedding", b)} AS band_val FROM e")
-          .mkString("\n  UNION ALL\n  ")
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |bands AS (
-           |  $corpusBands
+           |  $bandTableSql
            |), probes AS (
-           |  SELECT vec_id AS probe_id, embedding AS pe, band_id, band_val
-           |  FROM bands WHERE vec_id < $NumProbes
+           |  ${Knn.panelSql("embedding AS pe, band_id, band_val", "bands")}
            |), cands AS (
            |  SELECT DISTINCT probe_id, pe, b.vec_id AS neighbor_id, b.embedding AS ne
            |  FROM probes p JOIN bands b
@@ -944,15 +1024,12 @@ object AnnOps {
            |  SELECT probe_id, neighbor_id,
            |    ${cosSimSql("pe", "ne")} AS cos_sim
            |  FROM cands
-           |)$rankTopKSqlTail""".stripMargin
+           |)$cosTailSql""".stripMargin
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val bands = e.select(col("vec_id"), col("embedding"),
-        posexplode(array(bandColsFused: _*)).as(Seq("band_id", "band_val")))
-      val probes = bands.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("band_id"), col("band_val"))
+      val bands = bandTable(e, "vec_id", "embedding")
+      val probes = Knn.panel(bands, col("embedding").as("pe"), col("band_id"), col("band_val"))
       val cands = probes.join(bands.as("b"),
           probes("band_id") === col("b.band_id")
             && probes("band_val") === col("b.band_val")
@@ -960,7 +1037,7 @@ object AnnOps {
         .select(col("probe_id"), col("pe"),
           col("b.vec_id").as("neighbor_id"), col("b.embedding").as("ne"))
         .distinct()
-      rankTopK(cands.select(col("probe_id"), col("neighbor_id"),
+      ByCos.ranked(cands.select(col("probe_id"), col("neighbor_id"),
         cosSim("pe", "ne").as("cos_sim")))
     },
 
@@ -979,59 +1056,14 @@ object AnnOps {
         s"rows and exact 6dp cosine re-ranks the top-$TopK. At 100 TB " +
         "the signature scan touches 1/32 of the raw bytes and the " +
         "re-rank joins move candidates×dim floats, never the corpus",
-      Some {
-        def sigSql(off: Int): String =
-          s"CAST(list_sum(list_transform(range(32), i -> CASE WHEN embedding[i + ${off + 1}] > 0 " +
-            "THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
+      Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |sigs AS (
-           |  SELECT vec_id, ${sigSql(0)} AS sig_lo, ${sigSql(32)} AS sig_hi FROM e
-           |), probes AS (
-           |  SELECT vec_id AS probe_id, sig_lo AS p_lo, sig_hi AS p_hi
-           |  FROM sigs WHERE vec_id < $NumProbes
-           |), ham AS (
-           |  SELECT probe_id, s.vec_id AS neighbor_id,
-           |    bit_count(xor(p_lo, sig_lo)) + bit_count(xor(p_hi, sig_hi)) AS hamming
-           |  FROM probes JOIN sigs s ON s.vec_id <> probe_id
-           |), cands AS (
-           |  SELECT probe_id, neighbor_id FROM (
-           |    SELECT probe_id, neighbor_id,
-           |      row_number() OVER (PARTITION BY probe_id
-           |        ORDER BY hamming, neighbor_id) AS crank
-           |    FROM ham) WHERE crank <= $RerankR
-           |), scored AS (
-           |  SELECT probe_id, neighbor_id, ${cosSimSql("pe", "ne")} AS cos_sim
-           |  FROM (SELECT c.probe_id, c.neighbor_id,
-           |          ep.embedding AS pe, en.embedding AS ne
-           |        FROM cands c
-           |        JOIN e ep ON ep.vec_id = c.probe_id
-           |        JOIN e en ON en.vec_id = c.neighbor_id)
-           |)$rankTopKSqlTail""".stripMargin
-      },
+           |${bqHammingSql()}, cands AS (
+           |  ${ByHamming.cutSql("probe_id, neighbor_id", "probe_id, neighbor_id", "ham")}
+           |)${Knn.rerankSql(ByCos)}""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      def sigHalf(off: Int): Column = expr(
-        s"aggregate(sequence(0, 31), CAST(0 AS BIGINT), (acc, i) -> acc + " +
-          s"IF(element_at(embedding, i + ${off + 1}) > 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))")
-      val sigs = e.select(col("vec_id"),
-        sigHalf(0).as("sig_lo"), sigHalf(32).as("sig_hi"))
-      val probes = sigs.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"),
-          col("sig_lo").as("p_lo"), col("sig_hi").as("p_hi"))
-      val ham = broadcast(probes)
-        .join(sigs, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          (bit_count(col("p_lo").bitwiseXOR(col("sig_lo"))) +
-            bit_count(col("p_hi").bitwiseXOR(col("sig_hi")))).as("hamming"))
-      val cw = Window.partitionBy("probe_id").orderBy(col("hamming"), col("neighbor_id"))
-      val cands = ham.withColumn("crank", row_number().over(cw))
-        .filter(col("crank") <= RerankR)
-        .select("probe_id", "neighbor_id")
-      rankTopK(cands
-        .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("pe")), "probe_id")
-        .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
-        .select(col("probe_id"), col("neighbor_id"),
-          cosSim("pe", "ne").as("cos_sim")))
+      Knn.rerank(ByHamming.cut(bqHamming(e)).select("probe_id", "neighbor_id"), e, ByCos)
     },
 
     Q(
@@ -1050,45 +1082,12 @@ object AnnOps {
         "q_bq_search, trading popcount for truncated dot products",
       Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |pre AS (SELECT vec_id, embedding[1:$MatPrefix] AS p FROM e),
-           |probes AS (
-           |  SELECT vec_id AS probe_id, p AS pp FROM pre WHERE vec_id < $NumProbes
-           |), coarse AS (
-           |  SELECT probe_id, pre.vec_id AS neighbor_id,
-           |    ${cosSimSql("pp", "p", MatPrefix)} AS pre_sim
-           |  FROM probes JOIN pre ON pre.vec_id <> probe_id
-           |), cands AS (
-           |  SELECT probe_id, neighbor_id FROM (
-           |    SELECT probe_id, neighbor_id,
-           |      row_number() OVER (PARTITION BY probe_id
-           |        ORDER BY pre_sim DESC, neighbor_id) AS crank
-           |    FROM coarse) WHERE crank <= $RerankR
-           |), scored AS (
-           |  SELECT probe_id, neighbor_id, ${cosSimSql("pe", "ne")} AS cos_sim
-           |  FROM (SELECT c.probe_id, c.neighbor_id,
-           |          ep.embedding AS pe, en.embedding AS ne
-           |        FROM cands c
-           |        JOIN e ep ON ep.vec_id = c.probe_id
-           |        JOIN e en ON en.vec_id = c.neighbor_id)
-           |)$rankTopKSqlTail""".stripMargin),
+           |${prefixCoarseSql()}, cands AS (
+           |  ${ByPrefix.cutSql("probe_id, neighbor_id", "probe_id, neighbor_id", "coarse")}
+           |)${Knn.rerankSql(ByCos)}""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val pre = e.select(col("vec_id"), slice(col("embedding"), 1, MatPrefix).as("p"))
-      val probes = pre.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("p").as("pp"))
-      val coarse = broadcast(probes)
-        .join(pre, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pp", "p").as("pre_sim"))
-      val cw = Window.partitionBy("probe_id").orderBy(col("pre_sim").desc, col("neighbor_id"))
-      val cands = coarse.withColumn("crank", row_number().over(cw))
-        .filter(col("crank") <= RerankR)
-        .select("probe_id", "neighbor_id")
-      rankTopK(cands
-        .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("pe")), "probe_id")
-        .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
-        .select(col("probe_id"), col("neighbor_id"),
-          cosSim("pe", "ne").as("cos_sim")))
+      Knn.rerank(ByPrefix.cut(prefixCoarse(e)).select("probe_id", "neighbor_id"), e, ByCos)
     },
 
     Q(
@@ -1132,13 +1131,12 @@ object AnnOps {
            |      AS FLOAT[]) AS ne
            |  FROM codes CROSS JOIN stats
            |), probes AS (
-           |  SELECT vec_id AS probe_id, embedding AS pe FROM e
-           |  WHERE vec_id < $NumProbes
+           |  ${Knn.panelSql("embedding AS pe")}
            |), scored AS (
            |  SELECT probe_id, d.vec_id AS neighbor_id,
            |    ${cosSimSql("pe", "ne")} AS cos_sim
-           |  FROM probes JOIN dq d ON d.vec_id <> probe_id
-           |)$rankTopKSqlTail""".stripMargin),
+           |  FROM ${Knn.pairsSql("dq d")}
+           |)$cosTailSql""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val dimstats = e
@@ -1166,10 +1164,7 @@ object AnnOps {
              |  element_at(mins, i + 1) + element_at(code, i + 1)
              |    * (element_at(maxs, i + 1) - element_at(mins, i + 1)) / 255.0D)
              |  AS ARRAY<FLOAT>)""".stripMargin).as("ne"))
-      val probes = e.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      rankTopK(broadcast(probes)
-        .join(dq, col("vec_id") =!= col("probe_id"))
+      ByCos.ranked(Knn.pairs(Knn.panel(e, col("embedding").as("pe")), dq)
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
           cosSim("pe", "ne").as("cos_sim")))
     },
@@ -1195,17 +1190,7 @@ object AnnOps {
            |), assign AS (
            |  ${Ivf.assignSql(Ivf.Cos,
                 "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
-           |), probe_cells AS (
-           |  ${Ivf.routeSql(Ivf.Cos,
-                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
-                NProbe, Some(NumProbes))}
-           |), scored AS (
-           |  SELECT probe_id, a.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
-           |   AND a.vec_id <> p.probe_id
-           |  WHERE a.vec_id % 7 <> 3
-           |)$rankTopKSqlTail""".stripMargin
+           |), ${probeCellsSql(Ivf.Cos)}, ${ivfScoredSql("\n  WHERE a.vec_id % 7 <> 3")}$cosTailSql""".stripMargin
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
@@ -1213,15 +1198,8 @@ object AnnOps {
       val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
       val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("cell.cent_id").as("cent_id"))
-      rankTopK(broadcast(probeCells)
-        .join(assign, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .join(tombstones, Seq("vec_id"), "left_anti")
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
+      ByCos.ranked(scoredCos(ivfPairs(cells, e, assign)
+        .join(tombstones, Seq("vec_id"), "left_anti")))
     },
 
     Q(
@@ -1244,8 +1222,7 @@ object AnnOps {
            |  FROM topk t JOIN e l ON l.vec_id = t.neighbor_id
            |  GROUP BY t.vec_id, l.label
            |), rankedv AS (
-           |  SELECT vec_id, vote, c, row_number() OVER (PARTITION BY vec_id
-           |    ORDER BY c DESC, vote) AS rn
+           |  SELECT vec_id, vote, c, ${TopVote.overSql}
            |  FROM votes
            |), m AS (
            |  SELECT a.vec_id, a.vote AS top_vote, a.c AS c1,
@@ -1263,8 +1240,7 @@ object AnnOps {
         .join(e.select(col("vec_id").as("neighbor_id"),
           col("label").as("vote")), "neighbor_id")
         .groupBy("vec_id", "vote").agg(count(lit(1)).as("c"))
-      val rv = Window.partitionBy("vec_id").orderBy(col("c").desc, col("vote"))
-      val ranked = votes.withColumn("rn", row_number().over(rv))
+      val ranked = votes.withColumn("rn", TopVote.number)
         .localCheckpoint() // read twice: top vote + runner-up
       val a = ranked.filter(col("rn") === 1)
         .select(col("vec_id"), col("vote").as("top_vote"), col("c").as("c1"))
@@ -1431,7 +1407,7 @@ object AnnOps {
         .select("vec_id", "cent_id")
         .unionByName(reassigned)
         .groupBy("cent_id").agg(count(lit(1)).as("n"))
-      def statsOf(stage: String, szs: org.apache.spark.sql.DataFrame) =
+      def statsOf(stage: String, szs: DataFrame) =
         szs.agg(count(lit(1)).as("n_cells"), max(col("n")).as("max_cell"),
           sum(col("n")).as("tot"))
           .select(lit(stage).as("stage"), col("n_cells"), col("max_cell"),
@@ -1534,19 +1510,14 @@ object AnnOps {
           .mkString("\n  UNION ALL ")
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |probes AS (
-           |  SELECT vec_id AS probe_id, embedding AS pe FROM e WHERE vec_id < $NumProbes
+           |  ${Knn.panelSql("embedding AS pe")}
            |), scored0 AS (
            |  SELECT probe_id, e.vec_id AS neighbor_id,
            |    ${cosSimSql("pe", "e.embedding")} AS rel
-           |  FROM probes JOIN e ON e.vec_id <> probe_id
+           |  FROM ${Knn.pairsSql("e")}
            |), c0 AS (
-           |  SELECT probe_id, neighbor_id,
-           |    CAST(round(rel * 1000000) AS BIGINT) AS rel6,
-           |    CAST(0 AS BIGINT) AS ms6 FROM (
-           |    SELECT probe_id, neighbor_id, rel,
-           |      row_number() OVER (PARTITION BY probe_id
-           |        ORDER BY rel DESC, neighbor_id) AS crank
-           |    FROM scored0) WHERE crank <= $MmrR
+           |  ${MmrPool.cutSql("probe_id, neighbor_id, CAST(round(rel * 1000000) AS BIGINT) AS rel6, " +
+                "CAST(0 AS BIGINT) AS ms6", "probe_id, neighbor_id, rel", "scored0")}
            |), ps AS (
            |  SELECT ca.probe_id, ca.neighbor_id AS a, cb.neighbor_id AS b,
            |    CAST(round(${cosSimSql("ea.embedding", "eb.embedding")} * 1000000) AS BIGINT) AS sim6
@@ -1561,19 +1532,13 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val probes = e.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val cw = Window.partitionBy("probe_id").orderBy(col("rel").desc, col("neighbor_id"))
       // Candidate pool: ids + scaled relevance only, checkpointed —
       // the one corpus-sized scan in the whole operator. ms6 starts
       // at 0 (the max-sim floor), so round 1 scores are exactly
       // λ·rel and the argmax is pure relevance in both engines.
-      val c0 = broadcast(probes)
-        .join(e, col("vec_id") =!= col("probe_id"))
+      val c0 = MmrPool.cut(Knn.pairs(Knn.panel(e, col("embedding").as("pe")), e)
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("rel"))
-        .withColumn("crank", row_number().over(cw))
-        .filter(col("crank") <= MmrR)
+          cosSim("pe", "embedding").as("rel")))
         .select(col("probe_id"), col("neighbor_id"),
           round(col("rel") * lit(1000000)).cast("long").as("rel6"))
         .localCheckpoint()
@@ -1587,15 +1552,12 @@ object AnnOps {
         .select(col("probe_id"), col("a"), col("b"),
           round(cosSim("ea", "eb") * lit(1000000)).cast("long").as("sim6"))
         .localCheckpoint()
-      val sw = Window.partitionBy("probe_id").orderBy(col("score7").desc, col("neighbor_id"))
       var cand = c0.withColumn("ms6", lit(0L))
-      var selected: org.apache.spark.sql.DataFrame = null
+      var selected: DataFrame = null
       for (i <- 1 to MmrK) {
-        val sel = cand
+        val sel = MmrPick.cut(cand
           .withColumn("score7", lit(MmrLambdaE1) * col("rel6")
-            - lit(MmrOneMinusE1) * col("ms6"))
-          .withColumn("rn", row_number().over(sw))
-          .filter(col("rn") === 1)
+            - lit(MmrOneMinusE1) * col("ms6")))
           .select(col("probe_id"), col("neighbor_id"), col("score7"))
           .localCheckpoint()
         val out = sel.select(col("probe_id"), lit(i.toLong).as("rank"),
@@ -1631,87 +1593,30 @@ object AnnOps {
         s"$RerankR-bounded lists per probe. 1/(60+rank) is one " +
         "division of identical ints and the two-term sum has fixed " +
         "order, so 6dp-rounded scores cannot drift; ties by id",
-      Some {
-        def sigSql(off: Int): String =
-          s"CAST(list_sum(list_transform(range(32), i -> CASE WHEN embedding[i + ${off + 1}] > 0 " +
-            "THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
+      Some(
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |sigs AS (
-           |  SELECT vec_id, ${sigSql(0)} AS sig_lo, ${sigSql(32)} AS sig_hi FROM e
-           |), probes_h AS (
-           |  SELECT vec_id AS probe_id, sig_lo AS p_lo, sig_hi AS p_hi
-           |  FROM sigs WHERE vec_id < $NumProbes
-           |), ranks_h AS (
-           |  SELECT probe_id, neighbor_id, r FROM (
-           |    SELECT probe_id, s.vec_id AS neighbor_id,
-           |      row_number() OVER (PARTITION BY probe_id ORDER BY
-           |        bit_count(xor(p_lo, sig_lo)) + bit_count(xor(p_hi, sig_hi)),
-           |        s.vec_id) AS r
-           |    FROM probes_h JOIN sigs s ON s.vec_id <> probe_id)
-           |  WHERE r <= $RerankR
-           |), pre AS (SELECT vec_id, embedding[1:$MatPrefix] AS p FROM e),
-           |probes_p AS (
-           |  SELECT vec_id AS probe_id, p AS pp FROM pre WHERE vec_id < $NumProbes
-           |), ranks_p AS (
-           |  SELECT probe_id, neighbor_id, r FROM (
-           |    SELECT probe_id, pre.vec_id AS neighbor_id,
-           |      row_number() OVER (PARTITION BY probe_id ORDER BY
-           |        ${cosSimSql("pp", "p", MatPrefix)} DESC, pre.vec_id) AS r
-           |    FROM probes_p JOIN pre ON pre.vec_id <> probe_id)
-           |  WHERE r <= $RerankR
+           |${bqHammingSql("probes_h")}, ranks_h AS (
+           |  ${ByHamming.copy(as = "r").cutSql("probe_id, neighbor_id, r", "probe_id, neighbor_id", "ham")}
+           |), ${prefixCoarseSql("probes_p")}, ranks_p AS (
+           |  ${ByPrefix.copy(as = "r").cutSql("probe_id, neighbor_id, r", "probe_id, neighbor_id", "coarse")}
            |), fused AS (
            |  SELECT coalesce(a.probe_id, b.probe_id) AS probe_id,
            |    coalesce(a.neighbor_id, b.neighbor_id) AS neighbor_id,
            |    round(coalesce(1.0 / (60 + a.r), 0) + coalesce(1.0 / (60 + b.r), 0), 6) AS rrf
            |  FROM ranks_h a FULL OUTER JOIN ranks_p b
            |    ON b.probe_id = a.probe_id AND b.neighbor_id = a.neighbor_id
-           |)
-           |SELECT probe_id, neighbor_id, rrf, rank FROM (
-           |  SELECT probe_id, neighbor_id, rrf,
-           |    CAST(row_number() OVER (PARTITION BY probe_id
-           |      ORDER BY rrf DESC, neighbor_id) AS BIGINT) AS rank
-           |  FROM fused) WHERE rank <= $TopK
-           |ORDER BY probe_id, rank""".stripMargin
-      },
+           |)${ByRrf.tailSql("probe_id, neighbor_id, rrf", "fused")}""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      def sigHalf(off: Int): Column = expr(
-        s"aggregate(sequence(0, 31), CAST(0 AS BIGINT), (acc, i) -> acc + " +
-          s"IF(element_at(embedding, i + ${off + 1}) > 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))")
-      val sigs = e.select(col("vec_id"),
-        sigHalf(0).as("sig_lo"), sigHalf(32).as("sig_hi"))
-      val probesH = sigs.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"),
-          col("sig_lo").as("p_lo"), col("sig_hi").as("p_hi"))
-      val hw = Window.partitionBy("probe_id").orderBy(col("hamming"), col("neighbor_id"))
-      val ranksH = broadcast(probesH)
-        .join(sigs, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          (bit_count(col("p_lo").bitwiseXOR(col("sig_lo"))) +
-            bit_count(col("p_hi").bitwiseXOR(col("sig_hi")))).as("hamming"))
-        .withColumn("r", row_number().over(hw))
-        .filter(col("r") <= RerankR)
+      val ranksH = ByHamming.copy(as = "r").cut(bqHamming(e))
         .select(col("probe_id"), col("neighbor_id"), col("r").as("ra"))
-      val pre = e.select(col("vec_id"), slice(col("embedding"), 1, MatPrefix).as("p"))
-      val probesP = pre.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("p").as("pp"))
-      val pw = Window.partitionBy("probe_id").orderBy(col("pre_sim").desc, col("neighbor_id"))
-      val ranksP = broadcast(probesP)
-        .join(pre, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pp", "p").as("pre_sim"))
-        .withColumn("r", row_number().over(pw))
-        .filter(col("r") <= RerankR)
+      val ranksP = ByPrefix.copy(as = "r").cut(prefixCoarse(e))
         .select(col("probe_id"), col("neighbor_id"), col("r").as("rb"))
-      val fused = ranksH.join(ranksP, Seq("probe_id", "neighbor_id"), "full_outer")
+      ByRrf.ranked(ranksH.join(ranksP, Seq("probe_id", "neighbor_id"), "full_outer")
         .select(col("probe_id"), col("neighbor_id"),
           round(
             coalesce(lit(1.0) / (lit(60) + col("ra")), lit(0.0))
-              + coalesce(lit(1.0) / (lit(60) + col("rb")), lit(0.0)), 6).as("rrf"))
-      val fw = Window.partitionBy("probe_id").orderBy(col("rrf").desc, col("neighbor_id"))
-      fused.withColumn("rank", row_number().over(fw).cast("long"))
-        .filter(col("rank") <= TopK)
-        .orderBy("probe_id", "rank")
+              + coalesce(lit(1.0) / (lit(60) + col("rb")), lit(0.0)), 6).as("rrf")))
     },
 
     Q(
@@ -1732,30 +1637,14 @@ object AnnOps {
            |), assign AS (
            |  ${Ivf.assignSql(Ivf.Cos,
                 "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
-           |), probe_cells AS (
-           |  ${Ivf.routeSql(Ivf.Cos,
-                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
-                NProbe, Some(NumProbes))}
-           |), scored AS (
-           |  SELECT probe_id, a.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
-           |   AND a.vec_id <> p.probe_id
-           |)$rankTopKSqlTail""".stripMargin
+           |), ${probeCellsSql(Ivf.Cos)}, ${ivfScoredSql()}$cosTailSql""".stripMargin
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
       val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("cell.cent_id").as("cent_id"))
-      rankTopK(broadcast(probeCells)
-        .join(assign, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
+      ByCos.ranked(scoredCos(ivfPairs(cells, e, assign)))
     },
 
     Q(
@@ -1772,37 +1661,13 @@ object AnnOps {
         "fixed probe panel (standard ann-benchmarks methodology)",
       Some {
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |probes AS (SELECT vec_id AS probe_id, embedding AS pe FROM e WHERE vec_id < $NumProbes),
-           |bscored AS (
-           |  SELECT probe_id, e.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM probes JOIN e ON e.vec_id <> probe_id
-           |), btop AS (
-           |  SELECT probe_id, neighbor_id FROM (
-           |    SELECT probe_id, neighbor_id,
-           |      row_number() OVER (PARTITION BY probe_id
-           |        ORDER BY cos_sim DESC, neighbor_id) AS rank
-           |    FROM bscored) WHERE rank <= $TopK
-           |), cents AS (
+           |$bruteTopSql, cents AS (
            |  ${Ivf.seedSql(NumCells)}
            |), assign AS (
            |  ${Ivf.assignSql(Ivf.Cos,
                 "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
-           |), probe_cells AS (
-           |  ${Ivf.routeSql(Ivf.Cos,
-                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
-                NProbe, Some(NumProbes))}
-           |), iscored AS (
-           |  SELECT probe_id, a.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
-           |   AND a.vec_id <> p.probe_id
-           |), itop AS (
-           |  SELECT probe_id, neighbor_id FROM (
-           |    SELECT probe_id, neighbor_id,
-           |      row_number() OVER (PARTITION BY probe_id
-           |        ORDER BY cos_sim DESC, neighbor_id) AS rank
-           |    FROM iscored) WHERE rank <= $TopK
+           |), ${probeCellsSql(Ivf.Cos)}, ${ivfScoredSql()}, itop AS (
+           |  ${ByCos.cutSql("probe_id, neighbor_id", "probe_id, neighbor_id", "scored")}
            |)
            |SELECT b.probe_id AS probe_id, count(i.neighbor_id) AS n_hits,
            |  round(CAST(count(i.neighbor_id) AS DOUBLE) / $TopK, 6) AS recall
@@ -1812,24 +1677,11 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val probes = e.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val btop = rankTopK(broadcast(probes)
-        .join(e, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
-        .select("probe_id", "neighbor_id")
+      val btop = bruteTop(e).select("probe_id", "neighbor_id")
       val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
       val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("cell.cent_id").as("cent_id"))
-      val itop = rankTopK(broadcast(probeCells)
-        .join(assign, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
+      val itop = ByCos.ranked(scoredCos(ivfPairs(cells, e, assign)))
         .select(col("probe_id"), col("neighbor_id"), lit(1).as("hit"))
       btop.join(itop, Seq("probe_id", "neighbor_id"), "left")
         .groupBy("probe_id")
@@ -1872,17 +1724,11 @@ object AnnOps {
            |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
            |   AND a.vec_id <> p.anchor_id
            |), pos AS (
-           |  SELECT anchor_id, cand_id AS pos_id, cos_sim AS pos_cos FROM (
-           |    SELECT anchor_id, cand_id, cos_sim,
-           |      row_number() OVER (PARTITION BY anchor_id
-           |        ORDER BY cos_sim DESC, cand_id) AS rn
-           |    FROM cand WHERE clbl = albl) WHERE rn = 1
+           |  ${ByAnchor.cutSql("anchor_id, cand_id AS pos_id, cos_sim AS pos_cos",
+                "anchor_id, cand_id, cos_sim", "cand WHERE clbl = albl")}
            |), neg AS (
-           |  SELECT anchor_id, cand_id AS neg_id, cos_sim AS neg_cos FROM (
-           |    SELECT anchor_id, cand_id, cos_sim,
-           |      row_number() OVER (PARTITION BY anchor_id
-           |        ORDER BY cos_sim DESC, cand_id) AS rn
-           |    FROM cand WHERE clbl <> albl) WHERE rn = 1
+           |  ${ByAnchor.cutSql("anchor_id, cand_id AS neg_id, cos_sim AS neg_cos",
+                "anchor_id, cand_id, cos_sim", "cand WHERE clbl <> albl")}
            |)
            |SELECT p.anchor_id AS anchor_id, pos_id, pos_cos, neg_id, neg_cos,
            |  round(pos_cos - neg_cos, 6) AS margin
@@ -1903,14 +1749,10 @@ object AnnOps {
         .select(col("anchor_id"), col("albl"),
           col("vec_id").as("cand_id"), col("label").as("clbl"),
           cosSim("pe", "embedding").as("cos_sim"))
-      val w = Window.partitionBy("anchor_id")
-        .orderBy(col("cos_sim").desc, col("cand_id"))
-      val pos = cand.filter(col("clbl") === col("albl"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      val pos = ByAnchor.cut(cand.filter(col("clbl") === col("albl")))
         .select(col("anchor_id"), col("cand_id").as("pos_id"),
           col("cos_sim").as("pos_cos"))
-      val neg = cand.filter(col("clbl") =!= col("albl"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      val neg = ByAnchor.cut(cand.filter(col("clbl") =!= col("albl")))
         .select(col("anchor_id"), col("cand_id").as("neg_id"),
           col("cos_sim").as("neg_cos"))
       pos.join(neg, Seq("anchor_id"))
@@ -1966,12 +1808,9 @@ object AnnOps {
         "corpus (max pairwise cosine ≈ 0.51; real corpora use ≥ 0.95, " +
         "the machinery is identical)",
       Some {
-        val corpusBands = (0 until NumBands).map(b =>
-          s"SELECT vec_id, embedding, $b AS band_id, ${bandSql("embedding", b)} AS band_val FROM e")
-          .mkString("\n  UNION ALL\n  ")
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
            |bands AS (
-           |  $corpusBands
+           |  $bandTableSql
            |), cands AS (
            |  SELECT DISTINCT l.vec_id AS vec_a, l.embedding AS ea,
            |                  r.vec_id AS vec_b, r.embedding AS eb
@@ -1987,8 +1826,7 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val bands = e.select(col("vec_id"),
-        posexplode(array(bandColsFused: _*)).as(Seq("band_id", "band_val")))
+      val bands = bandTable(e, "vec_id")
       // Dedupe candidate PAIRS on ids only — a distinct over two longs,
       // not over 256-byte embedding payloads — then fetch the vectors
       // with two keyed joins. At 100 TB this is the difference between
@@ -2615,16 +2453,7 @@ object AnnOps {
         s"""${kmeansTrainSql(NumCells, KmIvfIters)}, assign AS (
            |  ${Ivf.assignSql(Ivf.L2,
                 "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id", cents = c)}
-           |), probe_cells AS (
-           |  ${Ivf.routeSql(Ivf.L2,
-                "vec_id AS probe_id, pe, cent_id", "e.vec_id, e.embedding AS pe, c.cent_id",
-                NProbe, Some(NumProbes), cents = c)}
-           |), scored AS (
-           |  SELECT probe_id, a.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
-           |   AND a.vec_id <> p.probe_id
-           |)$rankTopKSqlTail""".stripMargin
+           |), ${probeCellsSql(Ivf.L2, c)}, ${ivfScoredSql()}$cosTailSql""".stripMargin
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
@@ -2634,14 +2463,7 @@ object AnnOps {
       // packed centroids (see Ivf).
       val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("cell.cent_id").as("cent_id"))
-      rankTopK(broadcast(probeCells)
-        .join(assign, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
+      ByCos.ranked(scoredCos(ivfPairs(cells, e, assign)))
     },
 
     Q(
@@ -2804,14 +2626,7 @@ object AnnOps {
            |    ${graft.functions.Portable.exactSumSql("dt", 6)} AS adist
            |  FROM a2 a JOIN dt ON dt.sp = a.sp AND dt.cent_id = a.cent_id
            |  GROUP BY probe_id, a.vec_id
-           |), ranked AS (
-           |  SELECT probe_id, neighbor_id, adist,
-           |    row_number() OVER (PARTITION BY probe_id
-           |      ORDER BY adist, neighbor_id) AS rank
-           |  FROM scored WHERE neighbor_id <> probe_id)
-           |SELECT probe_id, neighbor_id, adist, rank
-           |FROM ranked WHERE rank <= $PqTopK
-           |ORDER BY probe_id, rank""".stripMargin),
+           |)${ByAdist.tailSql("probe_id, neighbor_id, adist", "scored WHERE neighbor_id <> probe_id")}""".stripMargin),
     ) { (s, dir) =>
       val sv = pqSv(Tables.embeddings(s, dir).select("vec_id", "embedding"))
       // The 16-row codebook table feeds TWO broadcast consumers (the
@@ -2825,16 +2640,7 @@ object AnnOps {
         .select(col("vec_id").as("probe_id"), col("sp"), col("cent_id"),
           round(normSq(col("sv")) - lit(2.0) * dotCol(col("sv"), col("ce"))
             + normSq(col("ce")), 6).as("dt"))
-      val w = Window.partitionBy("probe_id").orderBy(col("adist"), col("vec_id"))
-      codes.join(broadcast(dt), Seq("sp", "cent_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .groupBy("probe_id", "vec_id")
-        .agg(graft.functions.Portable.exactSum(col("dt"), 6).as("adist"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= PqTopK)
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          col("adist"), col("rank"))
-        .orderBy("probe_id", "rank")
+      adcTop(codes.join(broadcast(dt), Seq("sp", "cent_id")).filter(Knn.notSelf()))
     },
 
     Q(
@@ -2880,14 +2686,7 @@ object AnnOps {
            |   AND dt.cent_id = a.cent_id
            |  WHERE a.vec_id <> dt.probe_id
            |  GROUP BY dt.probe_id, a.vec_id
-           |), ranked AS (
-           |  SELECT probe_id, neighbor_id, adist,
-           |    row_number() OVER (PARTITION BY probe_id
-           |      ORDER BY adist, neighbor_id) AS rank
-           |  FROM scored)
-           |SELECT probe_id, neighbor_id, adist, rank
-           |FROM ranked WHERE rank <= $PqTopK
-           |ORDER BY probe_id, rank""".stripMargin),
+           |)${ByAdist.tailSql("probe_id, neighbor_id, adist")}""".stripMargin),
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       // Coarse quantizer: broadcast argmin cell assignment (the
@@ -2923,17 +2722,9 @@ object AnnOps {
         .select(col("vec_id").as("probe_id"), col("sp"), col("cent_id"),
           round(normSq(col("sv")) - lit(2.0) * dotCol(col("sv"), col("ce"))
             + normSq(col("ce")), 6).as("dt"))
-      val w = Window.partitionBy("probe_id").orderBy(col("adist"), col("vec_id"))
-      codes.join(broadcast(probeCells), Seq("cell_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .join(broadcast(dt), Seq("probe_id", "sp", "cent_id"))
-        .groupBy("probe_id", "vec_id")
-        .agg(graft.functions.Portable.exactSum(col("dt"), 6).as("adist"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= PqTopK)
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          col("adist"), col("rank"))
-        .orderBy("probe_id", "rank")
+      adcTop(codes.join(broadcast(probeCells), Seq("cell_id"))
+        .filter(Knn.notSelf())
+        .join(broadcast(dt), Seq("probe_id", "sp", "cent_id")))
     },
 
     Q(
@@ -2997,14 +2788,7 @@ object AnnOps {
            |   AND dt.cent_id = a.cent_id
            |  WHERE a.vec_id <> dt.probe_id
            |  GROUP BY dt.probe_id, a.vec_id
-           |), ranked AS (
-           |  SELECT probe_id, neighbor_id, adist,
-           |    row_number() OVER (PARTITION BY probe_id
-           |      ORDER BY adist, neighbor_id) AS rank
-           |  FROM scored)
-           |SELECT probe_id, neighbor_id, adist, rank
-           |FROM ranked WHERE rank <= $PqTopK
-           |ORDER BY probe_id, rank""".stripMargin
+           |)${ByAdist.tailSql("probe_id, neighbor_id, adist")}""".stripMargin
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
@@ -3049,17 +2833,9 @@ object AnnOps {
         .select(col("probe_id"), col("cell_id"), col("sp"), col("cent_id"),
           round(normSq(col("sv")) - lit(2.0) * dotCol(col("sv"), col("ce"))
             + normSq(col("ce")), 6).as("dt"))
-      val w = Window.partitionBy("probe_id").orderBy(col("adist"), col("vec_id"))
-      codes.join(broadcast(probeCells), Seq("cell_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .join(broadcast(dt), Seq("probe_id", "cell_id", "sp", "cent_id"))
-        .groupBy("probe_id", "vec_id")
-        .agg(graft.functions.Portable.exactSum(col("dt"), 6).as("adist"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= PqTopK)
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          col("adist"), col("rank"))
-        .orderBy("probe_id", "rank")
+      adcTop(codes.join(broadcast(probeCells), Seq("cell_id"))
+        .filter(Knn.notSelf())
+        .join(broadcast(dt), Seq("probe_id", "cell_id", "sp", "cent_id")))
     },
 
     Q(
@@ -3110,7 +2886,7 @@ object AnnOps {
         "expressed as the same declarative plan the batch engine runs",
       Some {
         s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-           |$knnTopkSqlCte,
+           |$knnTopkSqlCte, $bruteTopSql,
            |entries AS (
            |  SELECT cand_id FROM (
            |    SELECT c.neighbor_id AS cand_id, row_number() OVER (
@@ -3119,26 +2895,9 @@ object AnnOps {
            |        c.neighbor_id) AS mrn
            |    FROM corpus c JOIN cents ct ON ct.cent_id = c.cell_id)
            |  WHERE mrn = 1
-           |), pr AS (
-           |  SELECT vec_id AS probe_id, embedding AS pe FROM e
-           |  WHERE vec_id < $NumProbes
            |), $beamHopsSqlCtes,
            |gtop AS (
-           |  SELECT probe_id, cand_id FROM (
-           |    SELECT probe_id, cand_id, row_number() OVER (
-           |      PARTITION BY probe_id
-           |      ORDER BY cos_sim DESC, cand_id) AS rank
-           |    FROM b$BeamHops) WHERE rank <= $TopK
-           |), bscored AS (
-           |  SELECT probe_id, e.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM pr JOIN e ON e.vec_id <> probe_id
-           |), btop AS (
-           |  SELECT probe_id, neighbor_id FROM (
-           |    SELECT probe_id, neighbor_id,
-           |      row_number() OVER (PARTITION BY probe_id
-           |        ORDER BY cos_sim DESC, neighbor_id) AS rank
-           |    FROM bscored) WHERE rank <= $TopK
+           |  ${GraphTop.cutSql("probe_id, cand_id", "probe_id, cand_id", s"b$BeamHops")}
            |)
            |SELECT b.probe_id AS probe_id, count(g.cand_id) AS n_hits,
            |  round(CAST(count(g.cand_id) AS DOUBLE) / $TopK, 6) AS recall
@@ -3148,8 +2907,7 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val probes = e.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = Knn.panel(e, col("embedding").as("pe"))
       // The persisted index: neighbor lists, built once (q_knn_graph's
       // machinery), SYMMETRIZED (NSW navigability is a property of the
       // undirected graph — a directed 5-NN graph strands probes whose
@@ -3161,20 +2919,14 @@ object AnnOps {
         .unionAll(edges.select(col("neighbor_id").as("src"),
           col("src").as("neighbor_id")))
         .localCheckpoint()
-      def scoreTopB(cands: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        val w = Window.partitionBy("probe_id")
-          .orderBy(col("cos_sim").desc, col("cand_id"))
-        cands
+      def scoreTopB(cands: DataFrame): DataFrame =
+        ByBeam.cut(cands
           .join(broadcast(probes), Seq("probe_id"))
           .join(e.select(col("vec_id").as("cand_id"),
             col("embedding").as("ce")), Seq("cand_id"))
           .select(col("probe_id"), col("cand_id"),
-            cosSim("pe", "ce").as("cos_sim"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= BeamB)
+            cosSim("pe", "ce").as("cos_sim")))
           .select("probe_id", "cand_id", "cos_sim")
-      }
       // Entry panel = per-IVF-cell medoids: assign the corpus to the
       // family's coarse centroids (the knnTopK shape), keep each
       // cell's cosine-closest vector. 8 rows, space-covering by
@@ -3191,28 +2943,21 @@ object AnnOps {
         .select(col("vec_id").as("cand_id"))
       var beam = scoreTopB(probes.select(col("probe_id"))
         .crossJoin(broadcast(entries))
-        .filter(col("cand_id") =!= col("probe_id")))
+        .filter(Knn.notSelf("cand_id")))
         .localCheckpoint()
       for (_ <- 1 to BeamHops) {
         val expanded = beam.select("probe_id", "cand_id")
           .join(graph, col("cand_id") === col("src"))
           .select(col("probe_id"), col("neighbor_id").as("cand_id"))
           .unionAll(beam.select("probe_id", "cand_id"))
-          .filter(col("cand_id") =!= col("probe_id"))
+          .filter(Knn.notSelf("cand_id"))
           .distinct()
         beam = scoreTopB(expanded).localCheckpoint()
       }
-      val gw = Window.partitionBy("probe_id")
-        .orderBy(col("cos_sim").desc, col("cand_id"))
-      val gtop = beam.withColumn("rank", row_number().over(gw))
-        .filter(col("rank") <= TopK)
+      val gtop = GraphTop.cut(beam)
         .select(col("probe_id"), col("cand_id").as("neighbor_id"),
           lit(1).as("hit"))
-      val btop = rankTopK(broadcast(probes)
-        .join(e, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
-        .select("probe_id", "neighbor_id")
+      val btop = bruteTop(e).select("probe_id", "neighbor_id")
       // The gtop side is probes × TopK rows off a stats-less
       // checkpoint: broadcast it so the 50-row recall join never
       // plans a sort-merge.
@@ -3242,10 +2987,7 @@ object AnnOps {
            |  FROM topk t JOIN e l ON l.vec_id = t.neighbor_id
            |  GROUP BY t.vec_id, l.label
            |), pred AS (
-           |  SELECT vec_id, vote AS pred FROM (
-           |    SELECT vec_id, vote, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY c DESC, vote) AS rn
-           |    FROM votes) WHERE rn = 1
+           |  ${TopVote.cutSql("vec_id, vote AS pred", "vec_id, vote", "votes")}
            |)
            |SELECT t.label, count(*) AS n,
            |  CAST(sum(CASE WHEN p.pred = t.label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
@@ -3260,10 +3002,7 @@ object AnnOps {
         .join(labels.select(col("vec_id").as("neighbor_id"),
           col("label").as("vote")), "neighbor_id")
         .groupBy("vec_id", "vote").agg(count(lit(1)).as("c"))
-      val vw = Window.partitionBy("vec_id")
-        .orderBy(col("c").desc, col("vote"))
-      val pred = votes.withColumn("rn", row_number().over(vw))
-        .filter(col("rn") === 1)
+      val pred = TopVote.cut(votes)
         .select(col("vec_id"), col("vote").as("pred"))
       pred.join(labels, "vec_id")
         .groupBy("label").agg(
@@ -3358,8 +3097,6 @@ object AnnOps {
       // checkpointed so rounds don't re-run the candidate join.
       val topk = knnTopK(s, dir).select("vec_id", "neighbor_id")
         .localCheckpoint()
-      val vw = Window.partitionBy("vec_id")
-        .orderBy(col("c").desc, col("vote"))
       var labs = Tables.embeddings(s, dir)
         .select(col("vec_id"),
           when(pmod(col("vec_id"), lit(SpreadSeedMod)) === 0, col("label"))
@@ -3367,13 +3104,11 @@ object AnnOps {
         .withColumn("lab", col("seed_lab"))
         .localCheckpoint()
       for (_ <- 1 to SpreadRounds) {
-        val maj = topk
+        val maj = TopVote.cut(topk
           .join(labs.select(col("vec_id").as("neighbor_id"),
             col("lab").as("vote")), "neighbor_id")
           .filter(col("vote").isNotNull)
-          .groupBy("vec_id", "vote").agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(vw))
-          .filter(col("rn") === 1)
+          .groupBy("vec_id", "vote").agg(count(lit(1)).as("c")))
           .select(col("vec_id"), col("vote"))
         labs = labs.join(maj, Seq("vec_id"), "left")
           .select(col("vec_id"), col("seed_lab"),
@@ -3460,34 +3195,18 @@ object AnnOps {
            |  ${Ivf.assignSql(Ivf.Cos,
                 "vec_id, embedding, label, cent_id",
                 "e.vec_id, e.embedding, e.label, c.cent_id")}
-           |), probe_cells AS (
-           |  ${Ivf.routeSql(Ivf.Cos,
-                "vec_id AS probe_id, pe, plabel, cent_id",
-                "e.vec_id, e.embedding AS pe, e.label AS plabel, c.cent_id", NProbe,
-                Some(NumProbes))}
-           |), scored AS (
-           |  SELECT probe_id, a.vec_id AS neighbor_id,
-           |    ${cosSimSql("pe", "embedding")} AS cos_sim
-           |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
-           |   AND a.vec_id <> p.probe_id AND a.label = p.plabel
-           |)$rankTopKSqlTail""".stripMargin
+           |), ${probeCellsSql(Ivf.Cos, extra = "plabel, ", extraFrom = "e.label AS plabel, ")},
+           |${ivfScoredSql(" AND a.label = p.plabel")}$cosTailSql""".stripMargin
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding", "label")
       val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
       val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("label"), col("cent_id"))
-      val probeCells = cells.probe(e.filter(col("vec_id") < NumProbes), NProbe)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("label").as("plabel"), col("cell.cent_id").as("cent_id"))
       // Label predicate lands on the candidate stream right at the
       // cell equi-join — before any cosine is computed or ranked.
-      rankTopK(broadcast(probeCells)
-        .join(assign, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("probe_id")
-          && col("label") === col("plabel"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
+      ByCos.ranked(scoredCos(ivfPairs(cells, e, assign, col("label").as("plabel"))
+        .filter(col("label") === col("plabel"))))
     },
 
     Q(
@@ -3558,27 +3277,12 @@ object AnnOps {
       Some {
         val base =
           s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-             |probes AS (SELECT vec_id AS probe_id, embedding AS pe FROM e WHERE vec_id < $NumProbes),
-             |bscored AS (
-             |  SELECT probe_id, e.vec_id AS neighbor_id,
-             |    ${cosSimSql("pe", "embedding")} AS cos_sim
-             |  FROM probes JOIN e ON e.vec_id <> probe_id
-             |), btop AS (
-             |  SELECT probe_id, neighbor_id FROM (
-             |    SELECT probe_id, neighbor_id,
-             |      row_number() OVER (PARTITION BY probe_id
-             |        ORDER BY cos_sim DESC, neighbor_id) AS rank
-             |    FROM bscored) WHERE rank <= $TopK
-             |), cents AS (
+             |$bruteTopSql, cents AS (
              |  ${Ivf.seedSql(NumCells)}
              |), assign AS (
              |  ${Ivf.assignSql(Ivf.Cos,
                   "vec_id, embedding, cent_id", "e.vec_id, e.embedding, c.cent_id")}
-             |), probe_cells AS (
-             |  ${Ivf.routeSql(Ivf.Cos,
-                  "vec_id AS probe_id, pe, cent_id, rn AS cell_rank",
-                  "e.vec_id, e.embedding AS pe, c.cent_id", NProbe, Some(NumProbes))}
-             |), cand AS (
+             |), ${probeCellsSql(Ivf.Cos, extra = "rn AS cell_rank, ")}, cand AS (
              |  SELECT probe_id, cell_rank, a.vec_id AS neighbor_id,
              |    ${cosSimSql("pe", "embedding")} AS cos_sim
              |  FROM probe_cells p JOIN assign a ON a.cent_id = p.cent_id
@@ -3586,11 +3290,7 @@ object AnnOps {
              |)""".stripMargin
         val points = RecallSweep.map { np =>
           s""", it$np AS (
-             |  SELECT probe_id, neighbor_id FROM (
-             |    SELECT probe_id, neighbor_id,
-             |      row_number() OVER (PARTITION BY probe_id
-             |        ORDER BY cos_sim DESC, neighbor_id) AS rank
-             |    FROM cand WHERE cell_rank <= $np) WHERE rank <= $TopK
+             |  ${ByCos.cutSql("probe_id, neighbor_id", "probe_id, neighbor_id", s"cand WHERE cell_rank <= $np")}
              |), r$np AS (
              |  SELECT CAST($np AS BIGINT) AS nprobe,
              |    CAST(count(i.neighbor_id) AS BIGINT) AS n_hits,
@@ -3607,29 +3307,22 @@ object AnnOps {
       },
     ) { (s, dir) =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val probes = e.filter(col("vec_id") < NumProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val btop = rankTopK(broadcast(probes)
-        .join(e, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cosSim("pe", "embedding").as("cos_sim")))
-        .select("probe_id", "neighbor_id")
-        .localCheckpoint()
+      val btop = bruteTop(e).select("probe_id", "neighbor_id").localCheckpoint()
       val cells = Ivf.Cells(Ivf.seeds(e, NumCells), Ivf.Cos)
       val assign = cells.assign(e, "cent_id")
         .select(col("vec_id"), col("embedding"), col("cent_id"))
-      val probeCells = cells.probeRanked(e.filter(col("vec_id") < NumProbes),
+      val probeCells = cells.probeRanked(Knn.probeRows(e),
         NProbe, col("vec_id").as("probe_id"), col("embedding").as("pe"))
       // ONE corpus-sized candidate pass, shared by every sweep point.
       val cand = broadcast(probeCells)
         .join(assign, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
+        .filter(Knn.notSelf())
         .select(col("probe_id"), col("cell_rank"),
           col("vec_id").as("neighbor_id"),
           cosSim("pe", "embedding").as("cos_sim"))
         .localCheckpoint()
       RecallSweep.map { np =>
-        val itop = rankTopK(cand.filter(col("cell_rank") <= np)
+        val itop = ByCos.ranked(cand.filter(col("cell_rank") <= np)
           .select("probe_id", "neighbor_id", "cos_sim"))
           .select(col("probe_id"), col("neighbor_id"), lit(1).as("hit"))
         btop.join(itop, Seq("probe_id", "neighbor_id"), "left")
@@ -3690,7 +3383,7 @@ object AnnOps {
         .localCheckpoint() // split and pair-joined 3× below
       val base = assign.filter(col("vec_id") < 400)
       val batch = assign.filter(col("vec_id") >= 400)
-      def pairsOf(l: org.apache.spark.sql.DataFrame, strictLower: Boolean) = {
+      def pairsOf(l: DataFrame, strictLower: Boolean) = {
         val a = l.select(col("cell_id"), col("vec_id").as("vec_a"),
           col("embedding").as("ea"))
         val b = batch.select(col("cell_id"), col("vec_id").as("vec_b"),
@@ -3996,11 +3689,8 @@ object AnnOps {
            |    ON q.cell_id = c.cell_id AND c.side <> q.side
            |      AND c.neighbor_id <> q.vec_id
            |), topk AS (
-           |  SELECT vec_id, side, neighbor_id, cos_sim,
-           |    CAST(round(cos_sim * 1000000) AS BIGINT) AS c6, rank FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY cos_sim DESC, neighbor_id) AS rank
-           |    FROM scored) WHERE rank <= $BtK
+           |  ${ByCosBt.cutSql("vec_id, side, neighbor_id, cos_sim, " +
+                "CAST(round(cos_sim * 1000000) AS BIGINT) AS c6, rank", "*", "scored")}
            |), stats AS (
            |  SELECT vec_id, CAST(count(*) AS BIGINT) AS n_nb,
            |    CAST(sum(c6) AS BIGINT) AS s6
@@ -4014,15 +3704,9 @@ object AnnOps {
            |  JOIN stats sb ON sb.vec_id = t.neighbor_id
            |  WHERE sa.s6 + sb.s6 > 0
            |), fwd AS (
-           |  SELECT vec_id, neighbor_id, cos_sim, margin FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY margin DESC, neighbor_id) AS mrank
-           |    FROM cand WHERE side = 0) WHERE mrank = 1
+           |  ${ByMargin.cutSql("vec_id, neighbor_id, cos_sim, margin", "*", "cand WHERE side = 0")}
            |), bwd AS (
-           |  SELECT vec_id, neighbor_id FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY margin DESC, neighbor_id) AS mrank
-           |    FROM cand WHERE side = 1) WHERE mrank = 1
+           |  ${ByMargin.cutSql("vec_id, neighbor_id", "*", "cand WHERE side = 1")}
            |)
            |SELECT f.vec_id AS vec_a, f.neighbor_id AS vec_b, f.cos_sim,
            |  f.margin
@@ -4041,15 +3725,11 @@ object AnnOps {
       val queries = cells.probe(e, KnnNProbe)
         .select(col("cell.cent_id").as("cell_id"), col("vec_id"),
           col("side"), col("embedding").as("qe"))
-      val w = Window.partitionBy("vec_id")
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      val topk = queries.join(corpus, Seq("cell_id"))
+      val topk = ByCosBt.cut(queries.join(corpus, Seq("cell_id"))
         .filter(col("nb_side") =!= col("side")
           && col("neighbor_id") =!= col("vec_id"))
         .select(col("vec_id"), col("side"), col("neighbor_id"),
-          cosSim("qe", "ne").as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= BtK)
+          cosSim("qe", "ne").as("cos_sim")))
         .withColumn("c6", round(col("cos_sim") * 1e6, 0).cast("long"))
         .localCheckpoint()
       val stats = topk.groupBy("vec_id")
@@ -4063,14 +3743,8 @@ object AnnOps {
         .withColumn("margin",
           round((col("c6") * (col("na") + col("nb"))).cast("double")
             / (col("sa") + col("sb")), 6))
-      val mw = Window.partitionBy("vec_id")
-        .orderBy(col("margin").desc, col("neighbor_id"))
-      val fwd = cand.filter(col("side") === 0)
-        .withColumn("mrank", row_number().over(mw))
-        .filter(col("mrank") === 1)
-      val bwd = cand.filter(col("side") === 1)
-        .withColumn("mrank", row_number().over(mw))
-        .filter(col("mrank") === 1)
+      val fwd = ByMargin.cut(cand.filter(col("side") === 0))
+      val bwd = ByMargin.cut(cand.filter(col("side") === 1))
         .select(col("vec_id").as("b_vec"), col("neighbor_id").as("b_nb"))
       fwd
         .join(bwd, col("b_vec") === col("neighbor_id")
@@ -4103,12 +3777,9 @@ object AnnOps {
         "separately (q_ann_recall). At 100 TB: band join + degree " +
         "agg + diameter-bounded CC rounds, never all-pairs",
       Some {
-        val corpusBands = (0 until NumBands).map(b =>
-          s"SELECT vec_id, embedding, $b AS band_id, ${bandSql("embedding", b)} AS band_val FROM e")
-          .mkString("\n  UNION ALL\n  ")
         s"""WITH RECURSIVE e AS (SELECT vec_id, embedding FROM embeddings),
            |bands AS (
-           |  $corpusBands
+           |  $bandTableSql
            |), cand AS (
            |  SELECT DISTINCT l.vec_id AS vec_a, r.vec_id AS vec_b
            |  FROM bands l JOIN bands r
@@ -4228,11 +3899,7 @@ object AnnOps {
            |      + ${normSqSql("ce")}, 6)), 6) AS d6
            |  FROM e CROSS JOIN $c c
            |), own AS (
-           |  SELECT vec_id, cent_id, d6 AS a6 FROM (
-           |    SELECT vec_id, cent_id, d6,
-           |      row_number() OVER (PARTITION BY vec_id
-           |        ORDER BY d6, cent_id) AS rn
-           |    FROM dists) WHERE rn = 1
+           |  ${OwnCent.cutSql("vec_id, cent_id, d6 AS a6", "vec_id, cent_id, d6", "dists")}
            |), sil AS (
            |  SELECT o.vec_id, o.cent_id,
            |    CAST(round(CASE WHEN greatest(o.a6, min(d.d6)) = 0 THEN 0
@@ -4285,8 +3952,7 @@ object AnnOps {
     }
   }
 
-  private[graft] def kmeansElbow(e: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private[graft] def kmeansElbow(e: DataFrame): DataFrame =
     ElbowKs.map { k =>
       val (cents, _) = trainCents(e, k, ElbowIters)
       e.crossJoin(broadcast(cents))
@@ -4304,8 +3970,8 @@ object AnnOps {
   /** The q_silhouette computation over any (vec_id, embedding)
     * frame — factored so Round11AnnSpec can plant two far blobs
     * (mean_sil ≈ 1 per cluster) and one split blob (≈ 0). */
-  private[graft] def silhouetteOf(e: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def silhouetteOf(e: DataFrame,
+      k: Int): DataFrame = {
     val (cents, _) = trainCents(e, k, ElbowIters)
     val dists = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),
@@ -4313,9 +3979,7 @@ object AnnOps {
           - lit(2.0) * dotCol(col("embedding"), col("ce"))
           + normSq(col("ce")), 6)), 6).as("d6"))
       .localCheckpoint() // read by the own-assignment AND rival min
-    val w = Window.partitionBy("vec_id").orderBy("d6", "cent_id")
-    val own = dists.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val own = OwnCent.cut(dists)
       .select(col("vec_id"), col("cent_id"), col("d6").as("a6"))
     own.join(dists.select(col("vec_id"), col("cent_id").as("oc"),
           col("d6")),
@@ -4340,10 +4004,9 @@ object AnnOps {
     * semantics core with brute-force pairs (band recall is a separate,
     * separately-priced concern). */
   private[graft] def dbscanLabels(s: SparkSession,
-      e0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      e0: DataFrame): DataFrame = {
     val e = e0.select("vec_id", "embedding")
-    val bands = e.select(col("vec_id"),
-      posexplode(array(bandColsFused: _*)).as(Seq("band_id", "band_val")))
+    val bands = bandTable(e, "vec_id")
     // id-only pair dedupe, vectors fetched after (q_embed_dup note)
     val candIds = bands.as("l").join(bands.as("r"),
         col("l.band_id") === col("r.band_id")
@@ -4367,9 +4030,9 @@ object AnnOps {
     * = min core-neighbor label, noise −1. The pair list is computed
     * ONCE (localCheckpoint) and read by the degree, CC, and border
     * passes. */
-  private[graft] def dbscanFromPairs(allVecs: org.apache.spark.sql.DataFrame,
-      pairs0: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private[graft] def dbscanFromPairs(allVecs: DataFrame,
+      pairs0: DataFrame)
+      : DataFrame = {
     val pairs = pairs0.localCheckpoint()
     val und = pairs.select(col("vec_a").as("vec_id"), col("vec_b").as("nb"))
       .unionAll(pairs.select(col("vec_b").as("vec_id"), col("vec_a").as("nb")))
@@ -4454,10 +4117,19 @@ object AnnOps {
        |    FROM a2pre) WHERE rn = 1
        |)""".stripMargin
 
+  /** ADC top-[[PqTopK]] over (probe_id, vec_id, dt) table lookups: per
+    * (probe, vector) the fixed-point sum of its sub-space distances,
+    * nearest first. It ranks before vec_id is renamed neighbor_id, so
+    * [[ByAdist]] breaks its ties on vec_id here. */
+  private def adcTop(lookups: DataFrame): DataFrame =
+    ByAdist.copy(tie = "vec_id").top(lookups.groupBy("probe_id", "vec_id")
+        .agg(graft.functions.Portable.exactSum(col("dt"), 6).as("adist")))
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("adist"), col("rank"))
+      .orderBy("probe_id", "rank")
+
   /** Long-form (vec_id, sp, 16-dim float slice): subspace becomes a
     * grouping key, so one Lloyd pass trains all PqM codebooks. */
-  private def pqSv(e: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private def pqSv(e: DataFrame): DataFrame =
     e.select(col("vec_id"),
       posexplode(expr(s"transform(sequence(0, ${PqM - 1}), " +
         s"j -> slice(embedding, j*$PqSubDim+1, $PqSubDim))"))
@@ -4467,9 +4139,9 @@ object AnnOps {
     * codebooks (sp, cent_id, ce). Fused argmin assignment (6dp metric,
     * cent_id tiebreak — identical to the composed form in [[pqEncode]]
     * by CentAssignSpec's equivalence), per-(sp,cent,pos) 6dp mean. */
-  private def pqCodebooks(s: SparkSession, sv: org.apache.spark.sql.DataFrame,
+  private def pqCodebooks(s: SparkSession, sv: DataFrame,
       seedLo: Int = 0)
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     // seedLo shifts the deterministic seed window: the residual
     // variant must NOT seed from vec_id < NumCells — those vectors
     // ARE the cell centroids, so their residuals are all-zero and
@@ -4491,8 +4163,8 @@ object AnnOps {
   /** Final PQ encode: composed (m, cent_id) array_min against the
     * broadcast codebook pack, so the 6dp metric rides along for the
     * reconstruction error / ADC tables. Returns (vec_id, sp, cent_id, m). */
-  private def pqEncode(s: SparkSession, sv: org.apache.spark.sql.DataFrame,
-      books: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def pqEncode(s: SparkSession, sv: DataFrame,
+      books: DataFrame): DataFrame = {
     val mets = Ivf.L2.metricsOf("sv")
     sv.withColumn("vn2", normSq(col("sv")))
       .join(Ivf.packCents(books, "sp"), Seq("sp"))

@@ -218,6 +218,16 @@ object MultimodalOps {
       doc_id: Long, width: Long, height: Long, n_pixels: Long,
       sum_b: Long, sum_g: Long, sum_r: Long, y_moment: Long, edge_x: Long)
 
+  /** Unsigned little-endian field reads at a byte offset: the one
+    * reader the BMP, RLE8 and WAV container parsers share. */
+  private object LittleEndian {
+    def le32(p: Array[Byte], off: Int): Int =
+      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
+        ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
+    def le16(p: Array[Byte], off: Int): Int =
+      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
+  }
+
   /** The REAL decoder behind the batch seam: parses the BMP container
     * from its published byte layout — magic, little-endian data offset
     * (10), width (18), height (22), bpp (28), compression (30),
@@ -225,11 +235,7 @@ object MultimodalOps {
     * and emits per-asset statistics where the stub emitted digests.
     * Offset/stride arithmetic only; no imaging library. */
   private[graft] object BmpDecoder {
-    private def le32(p: Array[Byte], off: Int): Int =
-      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-        ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-    private def le16(p: Array[Byte], off: Int): Int =
-      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
+    import LittleEndian.{le16, le32}
 
     def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[BmpStats] =
       batch.map { case (id, p) => decodeOne(id, p) }
@@ -375,11 +381,7 @@ object MultimodalOps {
     * for skipped pixels), then palette-mapped statistics. Offset
     * arithmetic only; no imaging library. */
   private[graft] object RleDecoder {
-    private def le32(p: Array[Byte], off: Int): Int =
-      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-        ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-    private def le16(p: Array[Byte], off: Int): Int =
-      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
+    import LittleEndian.{le16, le32}
 
     def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[RleStats] =
       batch.map { case (id, p) => decodeOne(id, p) }
@@ -752,11 +754,7 @@ object MultimodalOps {
     * PCM16 frames — and emits per-asset statistics. Offset/stride
     * arithmetic only; no audio library. */
   private[graft] object WavDecoder {
-    private def le32(p: Array[Byte], off: Int): Int =
-      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-        ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-    private def le16(p: Array[Byte], off: Int): Int =
-      (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
+    import LittleEndian.{le16, le32}
     private def s16(p: Array[Byte], off: Int): Int = le16(p, off).toShort.toInt
     private def tag(p: Array[Byte], off: Int): String =
       new String(p, off, 4, "US-ASCII")

@@ -59,6 +59,10 @@ object TextOps {
     * identically. */
   private[graft] val ChampK = 64
 
+  /** q_lexical_knn's champion lists: each term's top [[ChampK]]
+    * postings by (tf DESC, doc_id). */
+  private val ChampList = Knn.Rank(Knn.desc("tf"), "doc_id", ChampK, "rk", "term")
+
   /** Per-lang sample size q_ppl_buckets fits its tercile cutoffs on.
     * CCNet fits its perplexity-bucket thresholds on a sample too: the
     * cutoff fit is the only ranked computation, and capping it keeps
@@ -206,17 +210,23 @@ object TextOps {
        |  FROM hashed GROUP BY doc_id, dim
        |)""".stripMargin
 
+  /** Each probe doc's top 10 by 6dp sparse cosine, ties by doc id. */
+  private val BySparseCos = Knn.Rank(Knn.desc("cos_sim"), "neighbor_id", 10)
+
+  /** q_maxsim_rerank's list: each probe's top 5 candidates by MaxSim. */
+  private val ByMaxSim = Knn.Rank(Knn.desc("maxsim"), "neighbor_id", 5)
+
   /** Doc-level sparse ranking shared by q_sparse_search (direct
     * output) and q_maxsim_rerank (candidate generation) — splice
     * after [[hashDimsSqlCte]]; exposes `ranked(probe_id, neighbor_id,
-    * cos_sim, rank)`. */
+    * cos_sim, rank)`, each probe's top 10. */
   private[graft] val sparseRankedSqlCte: String =
-    """norms AS (
+    s"""norms AS (
       |  SELECT doc_id, CAST(sum(v * v) AS BIGINT) AS n2
       |  FROM dims GROUP BY doc_id
       |), p AS (
       |  SELECT doc_id AS probe_id, dim, v AS pv FROM dims
-      |  WHERE doc_id < 5
+      |  WHERE doc_id < ${Knn.NumProbes}
       |), dots AS (
       |  SELECT probe_id, d.doc_id AS neighbor_id,
       |    CAST(sum(pv * v) AS BIGINT) AS dot
@@ -231,20 +241,18 @@ object TextOps {
       |  JOIN norms np ON np.doc_id = probe_id
       |  JOIN norms nn ON nn.doc_id = neighbor_id
       |), ranked AS (
-      |  SELECT probe_id, neighbor_id, cos_sim, row_number() OVER (
-      |    PARTITION BY probe_id
-      |    ORDER BY cos_sim DESC, neighbor_id) AS rank
-      |  FROM scored
+      |  ${BySparseCos.cutSql("probe_id, neighbor_id, cos_sim, rank",
+            "probe_id, neighbor_id, cos_sim", "scored")}
       |)""".stripMargin
 
   /** Spark twin of [[sparseRankedSqlCte]] over a (doc_id, dim, v)
     * frame: inverted dim-keyed dot join + norm joins + per-probe
-    * rank. Returns every ranked candidate; callers cut at k. */
+    * top 10. */
   private[graft] def sparseRanked(dimsIn: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val dims = dimsIn.localCheckpoint() // reused 3×: probes, corpus, norms
     val norms = dims.groupBy("doc_id").agg(sum(col("v") * col("v")).as("n2"))
-    val p = dims.filter(col("doc_id") < 5)
+    val p = Knn.probeRows(dims, "doc_id")
       .select(col("doc_id").as("probe_id"), col("dim"), col("v").as("pv"))
     val dots = p
       .join(dims.select(col("doc_id").as("neighbor_id"), col("dim"),
@@ -252,17 +260,14 @@ object TextOps {
       .filter(col("neighbor_id") =!= col("probe_id"))
       .groupBy("probe_id", "neighbor_id")
       .agg(sum(col("pv") * col("v")).as("dot"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    dots
+    BySparseCos.top(dots
       .join(norms.select(col("doc_id").as("probe_id"),
         col("n2").as("pn2")), "probe_id")
       .join(norms.select(col("doc_id").as("neighbor_id"),
         col("n2").as("nn2")), "neighbor_id")
       .select(col("probe_id"), col("neighbor_id"),
         round(col("dot") / (sqrt(col("pn2").cast("double"))
-          * sqrt(col("nn2").cast("double"))), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
+          * sqrt(col("nn2").cast("double"))), 6).as("cos_sim")))
   }
 
   /** Shared oracle for q_hash_embed AND q_stream_hash_embed (the
@@ -1813,11 +1818,7 @@ object TextOps {
            |), nrm AS (
            |  SELECT doc_id, sqrt(sum(w * w)) AS nrm FROM wgt GROUP BY doc_id
            |), champ AS (
-           |  SELECT doc_id, term, w FROM (
-           |    SELECT doc_id, term, w,
-           |      row_number() OVER (PARTITION BY term
-           |        ORDER BY tf DESC, doc_id) AS rk
-           |    FROM wgt) WHERE rk <= $ChampK
+           |  ${ChampList.cutSql("doc_id, term, w", "doc_id, term, w", "wgt")}
            |), dots AS (
            |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
            |    sum(x.w * y.w) AS dot
@@ -1842,11 +1843,7 @@ object TextOps {
           (col("tf") * log(col("n_docs").cast("double") / col("df"))).as("w"))
       val nrm = wgt.groupBy("doc_id")
         .agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-      val champ = wgt
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("term").orderBy(col("tf").desc, col("doc_id"))))
-        .filter(col("rk") <= ChampK)
-        .select("doc_id", "term", "w")
+      val champ = ChampList.cut(wgt).select("doc_id", "term", "w")
       val dots = champ.as("x")
         .join(champ.as("y"),
           col("x.term") === col("y.term") && col("x.doc_id") < col("y.doc_id"))
@@ -3994,11 +3991,10 @@ object TextOps {
            |$sparseRankedSqlCte
            |SELECT probe_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
            |  cos_sim
-           |FROM ranked WHERE rank <= 10
+           |FROM ranked
            |ORDER BY probe_id, rank""".stripMargin),
     ) { (s, dir) =>
       sparseRanked(hashDims(Tables.documents(s, dir)))
-        .filter(col("rank") <= 10)
         .select("probe_id", "rank", "neighbor_id", "cos_sim")
         .orderBy("probe_id", "rank")
     },
@@ -4024,7 +4020,7 @@ object TextOps {
       Some(
         s"""WITH $hashDimsSqlCte,
            |$sparseRankedSqlCte,
-           |cand AS (SELECT probe_id, neighbor_id FROM ranked WHERE rank <= 10),
+           |cand AS (SELECT probe_id, neighbor_id FROM ranked),
            |csrc AS (
            |  SELECT doc_id * 100 + c AS cid,
            |    array_to_string(t[c*$MsChunk+1 : (c+1)*$MsChunk], ' ') AS text
@@ -4071,17 +4067,15 @@ object TextOps {
            |      AS DOUBLE) AS maxsim
            |  FROM pmax GROUP BY 1, 2
            |), mrank AS (
-           |  SELECT probe_id, neighbor_id, maxsim, row_number() OVER (
-           |    PARTITION BY probe_id ORDER BY maxsim DESC, neighbor_id) AS rank
-           |  FROM msum
+           |  ${ByMaxSim.cutSql("probe_id, neighbor_id, maxsim, rank",
+                "probe_id, neighbor_id, maxsim", "msum")}
            |)
            |SELECT probe_id, CAST(rank AS BIGINT) AS rank, neighbor_id, maxsim
-           |FROM mrank WHERE rank <= 5
+           |FROM mrank
            |ORDER BY probe_id, rank""".stripMargin),
     ) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val cand = sparseRanked(hashDims(docs))
-        .filter(col("rank") <= 10)
         .select("probe_id", "neighbor_id")
         .localCheckpoint()
       val t = split(lower(col("text")), " ", -1)
@@ -4099,7 +4093,7 @@ object TextOps {
         .localCheckpoint() // reused: probe side, neighbor side, norms
       val cnorms = cdims.groupBy("cid")
         .agg(sum(col("v") * col("v")).as("n2")).filter(col("n2") > 0)
-      val pcd = cdims.filter(col("cdoc") < 5)
+      val pcd = Knn.probeRows(cdims, "cdoc")
         .select(col("cdoc").as("probe_id"), col("cid").as("pcid"),
           col("dim"), col("v").as("pv"))
       val ncd = cdims.select(col("cdoc").as("neighbor_id"),
@@ -4117,15 +4111,11 @@ object TextOps {
         .select(col("probe_id"), col("neighbor_id"), col("pcid"),
           round(col("dot") / (sqrt(col("pn2").cast("double"))
             * sqrt(col("nn2").cast("double"))), 6).as("cs"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("maxsim").desc, col("neighbor_id"))
-      ccos.groupBy("probe_id", "neighbor_id", "pcid")
+      ByMaxSim.top(ccos.groupBy("probe_id", "neighbor_id", "pcid")
         .agg(greatest(lit(0.0), max(col("cs"))).as("mx"))
         .groupBy("probe_id", "neighbor_id")
         .agg((sum(round(col("mx") * 1000000, 0).cast("long"))
-          / lit(1000000.0)).cast("double").as("maxsim"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+          / lit(1000000.0)).cast("double").as("maxsim")))
         .select("probe_id", "rank", "neighbor_id", "maxsim")
         .orderBy("probe_id", "rank")
     },

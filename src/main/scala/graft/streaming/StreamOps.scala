@@ -245,7 +245,10 @@ object StreamOps {
     * AvailableNow and returns the sink table: the final state, which
     * the live-monitoring rows finish batch-side. Complete mode
     * re-emits every state row per trigger, so it suits only state
-    * bounded by a catalog or value domain, never by stream volume. */
+    * bounded by a catalog or value domain, never by stream volume.
+    * The sink registers its table as a session temp view; the returned
+    * frame is resolved against it and the view dropped, so the sink's
+    * rows live only as long as that frame. */
   private[graft] def runToMemory(agg: DataFrame): DataFrame = {
     val name = ("m" + Scratch.dir()).replaceAll("[^A-Za-z0-9]", "_")
     agg.writeStream
@@ -254,7 +257,9 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    agg.sparkSession.table(name)
+    val out = agg.sparkSession.table(name)
+    agg.sparkSession.catalog.dropTempView(name)
+    out
   }
 
   val all: Seq[Q] = Seq(

@@ -123,4 +123,19 @@ class ReplaySpec extends AnyFunSuite {
     assert(StreamOps.runToState(stream())((b, _) => b).count() == 9L)
     assert(spark.streams.active.isEmpty)
   }
+
+  test("runToMemory leaves no sink view behind; its frames still collect") {
+    val ev = planted(epochNanos = false)
+    def counts(by: String) = StreamOps.runToMemory(
+      new Stager(ev.schema).stage(Stager.idSlices(ev): _*).stream(spark)
+        .groupBy(by).count())
+    val byType = counts("event_type")
+    val byUser = counts("user_id")
+    val sinkViews = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.matches("m_.*graft_scratch.*"))
+    assert(sinkViews.isEmpty, sinkViews.map(_.name).mkString(", "))
+    assert(byType.collect().map(_.getLong(1)).toSeq == Seq(9L))
+    assert(byUser.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 3L, 1L -> 3L, 2L -> 2L, 3L -> 1L))
+  }
 }

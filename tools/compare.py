@@ -10,14 +10,17 @@ order-insensitive (sorted row hash) like the driver does.
 
 With jsonOut (e.g. tools/correctness_last.json) the per-query verdicts
 are ALSO written as machine-readable JSON:
-  {"queries": {name: {"rows": N, "pass": bool}}, "n_pass", "n_fail",
-   "sf", "git_sha"} —
+  {"queries": {name: {"rows": N, "pass": bool, "sec": S}}, "n_pass",
+   "n_fail", "sf", "git_sha"} —
 the committed correctness record every closing tree carries so the
 round's hard signal is never single-sourced through a driver artifact
 (CORRECTNESS_r14.json came back empty `{}`; the judge had to re-run
 the whole sweep to replace it).
+
+`sec` is the oracle query's DuckDB wall time (seconds, 0 when no
+Spark output was found); every PASS/FAIL line prints it too.
 """
-import json, subprocess, sys, duckdb, glob, os
+import json, subprocess, sys, duckdb, glob, os, time
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -47,25 +50,29 @@ def main(sf_dir, out_dir, json_out=None):
         files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
         if not files:
             print(f"MISSING  {name} (no spark output)")
-            verdicts[name] = {"rows": -1, "pass": False}
+            verdicts[name] = {"rows": -1, "pass": False, "sec": 0.0}
             n_fail += 1
             continue
         spark = con.execute(
             f"SELECT * FROM read_parquet({files!r})").fetch_df()
-        verdicts[name] = {"rows": len(spark), "pass": False}
+        t0 = time.perf_counter()
         try:
             duck = con.execute(oracle[name]).fetch_df()
         except Exception as e:
-            print(f"ORACLE-ERR {name}: {e}")
+            duck, err = None, e
+        sec = round(time.perf_counter() - t0, 3)
+        verdicts[name] = {"rows": len(spark), "pass": False, "sec": sec}
+        if duck is None:
+            print(f"ORACLE-ERR {name} [{sec:.2f}s]: {err}")
             n_fail += 1
             continue
         s_cols, d_cols = sorted(spark.columns), sorted(duck.columns)
         if s_cols != d_cols:
-            print(f"SCHEMA   {name}: spark={s_cols} duck={d_cols}")
+            print(f"SCHEMA   {name} [{sec:.2f}s]: spark={s_cols} duck={d_cols}")
             n_fail += 1
             continue
         if len(spark) != len(duck):
-            print(f"ROWS     {name}: spark={len(spark)} duck={len(duck)}")
+            print(f"ROWS     {name} [{sec:.2f}s]: spark={len(spark)} duck={len(duck)}")
             n_fail += 1
             continue
         s_rows = sorted(tuple(norm(v) for v in r)
@@ -74,10 +81,10 @@ def main(sf_dir, out_dir, json_out=None):
                         for r in duck[d_cols].itertuples(index=False))
         if s_rows != d_rows:
             diff = [(a, b) for a, b in zip(s_rows, d_rows) if a != b][:3]
-            print(f"VALUES   {name}: first diffs {diff}")
+            print(f"VALUES   {name} [{sec:.2f}s]: first diffs {diff}")
             n_fail += 1
             continue
-        print(f"PASS     {name} ({len(spark)} rows)")
+        print(f"PASS     {name} ({len(spark)} rows) [{sec:.2f}s]")
         verdicts[name]["pass"] = True
         n_pass += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
