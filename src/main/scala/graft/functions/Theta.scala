@@ -170,9 +170,6 @@ object Theta {
     * beyond. Call-site override: `theta_sketch_agg(col, lgK)`. */
   val LgNominalEntries: Int = 12
 
-  /** 4096 nominal entries — kept for callers sizing buffers. */
-  val NominalEntries: Int = 1 << LgNominalEntries
-
   /** lgK must lie in DataSketches' valid 4..26 range (shared by both
     * aggregate faces). */
   val LgK: SketchSize = SketchSize("lgK", 4, 26)

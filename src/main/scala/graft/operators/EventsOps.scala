@@ -4114,7 +4114,8 @@ object EventsOps {
         "<= a.en AND a.user < b.user` — no equi keys, nested-loop " +
         "territory for Spark alone — is planned by the engine's " +
         "IntervalOverlapJoin optimizer rule (the FIFTH declarative-" +
-        "scale rule): both sides explode over 1800s buckets, " +
+        "scale rule): both sides explode over buckets of the mean " +
+        "session span rounded to a power of two (32 s at sf0.1), " +
         "equi-join on the bucket, original predicate re-verified, " +
         "and the canonical shared-bucket filter (greatest of the two " +
         "lo-buckets) keeps exactly one match per qualifying pair — " +

@@ -2,10 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.{Inner, QueryPlan}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
-import org.apache.spark.sql.functions.{col, count, lit, max, percentile_approx, sum, when}
+import org.apache.spark.sql.functions.{avg, col, count, lit, max, percentile_approx, sum, when}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, NumericType, StructField, StructType}
 
@@ -66,20 +67,31 @@ import scala.util.control.NonFatal
   *
   * == The stats pass ==
   *
-  * Candidate volume scales with rows-per-bucket² and fan-out with
-  * interval-length/width, so the sweet spot tracks the typical
-  * interval length. At rule-fire time [[sideStats]] takes ONE pass
-  * over the interval side — a driver-side evaluation for an in-plan
-  * [[LocalRelation]] (VALUES lists, literal band tables), a single
-  * column-pruned aggregate job for anything else — producing the
-  * median |hi−lo|, the maximum FINITE |hi−lo|, and the count of
-  * non-finite lengths. From those:
+  * At rule-fire time [[sideStats]] takes ONE pass over the interval
+  * side — a driver-side evaluation for an in-plan [[LocalRelation]]
+  * (VALUES lists, literal band tables), a single column-pruned
+  * aggregate job for anything else — producing the median and the mean
+  * |hi−lo|, the maximum FINITE |hi−lo|, and the count of non-finite
+  * lengths. From those:
   *
-  *  - the bin width is the median quantized to a power of two (so
-  *    near-identical datasets get identical widths), falling back to
-  *    the rule's static default when the sample is empty/degenerate.
-  *    Any positive width is CORRECT — the floor-division binning
-  *    identity is monotone — the width only tunes candidate volume.
+  *  - the bin width is a typical length quantized to a power of two
+  *    (so near-identical datasets get identical widths), falling back
+  *    to the rule's static default when the sample is empty or the
+  *    length is zero. Which typical length is the rule's cost model:
+  *    [[IntervalOverlapJoin]] takes the MEAN, because at width G each
+  *    interval meets about λ·(G + L̄) others per bucket and spans about
+  *    1 + L/G buckets, so the candidates are ≈ N·λ·(G + L̄)²/G, smallest
+  *    at G = L̄ (λ = intervals per unit of time, L̄ = mean length); a
+  *    median would be blind to the tail that makes the candidates (on
+  *    the session data most sessions are one event long, so the median
+  *    is 0, which gives the fallback, while the mean is ~43).
+  *    [[RangeBinJoin]] keeps the MEDIAN for its robustness to a few
+  *    huge spans, which would drag a mean up until every point shares
+  *    one bucket (its scaladoc works RangeRuleSpec's sentinel case
+  *    through). Any positive width
+  *    is CORRECT — the floor-division binning identity is monotone —
+  *    the width only tunes candidate volume (a mean dragged up by a
+  *    few huge spans costs candidates, never rows).
   *  - the residual branch is emitted ONLY when unsafe rows provably
   *    can exist (a non-finite length, or a max finite length within
   *    two buckets of the cap). Clean data — the overwhelmingly common
@@ -98,21 +110,24 @@ import scala.util.control.NonFatal
   * correct — it only tunes candidate volume) while the residual
   * decision stays conservative (a sample cannot prove the absence of
   * unsafe rows), so plan latency is bounded on arbitrarily large
-  * inputs. Every probe logs its outcome (rows scanned, median, and
-  * failure cause on the degradation path).
+  * inputs. Every probe logs its outcome (rows scanned, median, mean,
+  * and failure cause on the degradation path).
   *
-  * Results are cached per canonicalized (side, lo, hi) PLUS a
-  * data-version fingerprint, so re-planning the same query never
-  * re-scans — and a side whose underlying files changed (append,
-  * overwrite) misses the cache and re-derives, because the residual
-  * decision is CORRECTNESS-bearing: serving a stale
-  * nonFiniteOrUnknown = 0 for data that has since gained a NaN/Inf
-  * bound would omit the residual branch and mis-bin those rows. The
-  * fingerprint covers exactly the leaf shapes whose data version is
-  * knowable (LocalRelation — its rows live inside the canonicalized
-  * key itself — and file-source relations via root paths + size + a
-  * per-file (name, length, mtime) digest, which an overwrite always
-  * perturbs because part-file names are randomized per write);
+  * Results are cached per canonicalized side, with lo and hi
+  * normalized against the side's output (so both sides of a
+  * self-join share one entry and one probe), PLUS a data-version
+  * fingerprint, so re-planning the same query never re-scans — and a
+  * side whose data changed (append, overwrite) misses the cache and
+  * re-derives, because the residual decision is CORRECTNESS-bearing:
+  * serving a stale nonFiniteOrUnknown = 0 for data that has since
+  * gained a NaN/Inf bound would omit the residual branch and mis-bin
+  * those rows. The fingerprint covers exactly the leaf shapes whose
+  * data version is knowable: LocalRelation (its rows live inside the
+  * canonicalized key itself), a checkpointed LogicalRDD (its blocks
+  * never change, so the RDD id is the version — a fresh checkpoint is
+  * a new RDD and misses), and file-source relations via root paths +
+  * size + a per-file (name, length, mtime) digest, which an overwrite
+  * always perturbs because part-file names are randomized per write;
   * anything else is never cached.
   */
 private[plans] object Binning extends PredicateHelper {
@@ -288,17 +303,18 @@ private[plans] object Binning extends PredicateHelper {
       Literal(MaxSpanBuckets.toDouble))
   }
 
-  /** One interval side's plan-time statistics. `None` medians mean
-    * "no finite lengths seen"; `nonFiniteOrUnknown` is conservative —
-    * any probe failure reports it as positive. */
-  final case class SideStats(median: Option[Double],
+  /** One interval side's plan-time statistics over its finite lengths
+    * (a `None` median or mean: no finite length was seen);
+    * `nonFiniteOrUnknown` is conservative — any probe failure reports
+    * it as positive. */
+  final case class SideStats(median: Option[Double], mean: Option[Double],
       maxFinite: Option[Double], nonFiniteOrUnknown: Long)
 
-  private val Unknown = SideStats(None, None, 1L)
+  private val Unknown = SideStats(None, None, None, 1L)
 
-  /** Width from the stats: median quantized to a power of two, else
-    * the rule's fallback. */
-  def widthOf(stats: SideStats, fallback: Double): Double = stats.median match {
+  /** Width from a typical length (the rule picks the median or the
+    * mean): quantized to a power of two, else the rule's fallback. */
+  def widthOf(typical: Option[Double], fallback: Double): Double = typical match {
     case Some(len) if len > 0 && java.lang.Double.isFinite(len) =>
       math.pow(2.0, math.round(math.log(len) / math.log(2.0)).toDouble)
     case _ => fallback
@@ -321,12 +337,13 @@ private[plans] object Binning extends PredicateHelper {
     * planning latency is bounded however large the side is. */
   val MaxProbeBytes: Long = 32L << 30
 
-  // Stats cache, keyed by the canonicalized (side, lo, hi) triple PLUS
-  // a data-version fingerprint (see the class doc: staleness of
-  // unsafePossible is correctness-bearing, so a key must change
-  // whenever the data can have). Leaves without a knowable version are
-  // never cached. The size bound stops unbounded growth in long-lived
-  // sessions; losing an entry only re-runs a probe.
+  // Stats cache, keyed by the canonicalized side, its lo and hi
+  // normalized against the side's output, PLUS a data-version
+  // fingerprint (see the class doc: staleness of unsafePossible is
+  // correctness-bearing, so a key must change whenever the data can
+  // have). Leaves without a knowable version are never cached. The
+  // size bound stops unbounded growth in long-lived sessions; losing
+  // an entry only re-runs a probe.
   private val statsCache =
     new java.util.concurrent.ConcurrentHashMap[
       (LogicalPlan, Expression, Expression, String), SideStats]()
@@ -334,7 +351,12 @@ private[plans] object Binning extends PredicateHelper {
   /** A string that changes whenever `plan`'s underlying DATA can have
     * changed; `None` when a leaf's data version is unknowable (then
     * the caller must not cache). LocalRelation rows are part of the
-    * canonicalized plan itself, so a constant suffices; file sources
+    * canonicalized plan itself, so a constant suffices; a CHECKPOINTED
+    * LogicalRDD's blocks never change, so its RDD id (with the owning
+    * application's id, as ids restart per SparkContext) is its
+    * version — a fresh checkpoint of the same rows is a new RDD and
+    * misses; an unmaterialized RDD may recompute from changed inputs
+    * and stays unversioned; file sources
     * fingerprint as root paths + total size + an order-insensitive
     * digest of every file's (name, length, mtime) (the listing is
     * already cached on the FileIndex — no extra I/O). Per-FILE names
@@ -347,6 +369,9 @@ private[plans] object Binning extends PredicateHelper {
   private[plans] def dataFingerprint(plan: LogicalPlan): Option[String] = {
     val parts = plan.collectLeaves().map {
       case _: LocalRelation => Some("local")
+      case r: LogicalRDD =>
+        if (r.isStreaming || !r.rdd.isCheckpointed) None
+        else Some(s"rdd:${r.rdd.sparkContext.applicationId}:${r.rdd.id}")
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation =>
           try {
@@ -396,7 +421,15 @@ private[plans] object Binning extends PredicateHelper {
         // (streaming children short-circuit inside computeStats).
         computeStats(child, lo, hi)
       case Some(fp) =>
-        val key = (child.canonicalized, lo.canonicalized, hi.canonicalized, fp)
+        // lo and hi by ordinal in the side's output, so the two sides
+        // of a self-join (same plan, fresh exprIds) share one key; the
+        // RDD leaves become empty relations of their output, so the
+        // cache pins no checkpoint (the fingerprint holds their ids).
+        val side = child.canonicalized.transform {
+          case r: LogicalRDD => LocalRelation(r.output)
+        }
+        val key = (side, QueryPlan.normalizeExpressions(lo, child.output),
+          QueryPlan.normalizeExpressions(hi, child.output), fp)
         val hit = statsCache.get(key)
         if (hit != null) hit
         else {
@@ -425,10 +458,9 @@ private[plans] object Binning extends PredicateHelper {
             case _ => nonFinite += 1
           })
           val vals = finite.result().sorted
-          SideStats(
-            if (vals.isEmpty) None else Some(vals(vals.length / 2)),
-            if (vals.isEmpty) None else Some(vals.last),
-            nonFinite)
+          if (vals.isEmpty) SideStats(None, None, None, nonFinite)
+          else SideStats(Some(vals(vals.length / 2)),
+            Some(vals.sum / vals.length), Some(vals.last), nonFinite)
         } catch {
           case NonFatal(e) =>
             probeLog.warn(s"graft binning local probe failed, degrading to " +
@@ -468,16 +500,14 @@ private[plans] object Binning extends PredicateHelper {
             && !(l >= lit(0.0) && l <= lit(Double.MaxValue)), lit(1L))
             .otherwise(lit(0L))
           val row = lens.agg(
-            percentile_approx(fin, lit(0.5), lit(1000)),
+            percentile_approx(fin, lit(0.5), lit(1000)), avg(fin),
             max(fin), sum(nf), count(lit(1))).head()
-          val nonFinite = (if (row.isNullAt(2)) 0L else row.getLong(2)) +
+          def opt(i: Int) = if (row.isNullAt(i)) None else Some(row.getDouble(i))
+          val nonFinite = (if (row.isNullAt(3)) 0L else row.getLong(3)) +
             (if (sampled) 1L else 0L)
-          val st = SideStats(
-            if (row.isNullAt(0)) None else Some(row.getDouble(0)),
-            if (row.isNullAt(1)) None else Some(row.getDouble(1)),
-            nonFinite)
-          probeLog.info(s"graft binning probe: rows=${row.getLong(3)} " +
-            s"sampled=$sampled median=${st.median} " +
+          val st = SideStats(opt(0), opt(1), opt(2), nonFinite)
+          probeLog.info(s"graft binning probe: rows=${row.getLong(4)} " +
+            s"sampled=$sampled median=${st.median} mean=${st.mean} " +
             s"maxFinite=${st.maxFinite} " +
             s"nonFiniteOrUnknown=${st.nonFiniteOrUnknown}")
           st

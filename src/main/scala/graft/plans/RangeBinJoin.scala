@@ -77,14 +77,22 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * replicate long intervals into more (bounded, broadcastable) dim
   * rows; wide bins admit more verify candidates. The width is
   * STATS-DERIVED at rule-fire time from the same one-pass stats: the
-  * interval side's median length (a driver-side evaluation for
+  * interval side's MEDIAN length (a driver-side evaluation for
   * LocalRelations, one column-pruned aggregate job otherwise, cached
   * per canonicalized plan) quantized to a power of two, falling back
-  * to [[RangeBinJoin.BinWidth]] when the pass cannot run. q_range_join
-  * runs the naive spelling through this rule; RangeRuleSpec pins
-  * brute-force equality, the NestedLoop-free plan shape,
-  * NaN/Inf/sentinel exactness through the residual, and the adaptive
-  * width.
+  * to [[RangeBinJoin.BinWidth]] when the pass cannot run. Not the mean
+  * [[IntervalOverlapJoin]] takes, because the median ignores a few
+  * huge spans and the mean does not. In RangeRuleSpec's sentinel case
+  * (40 bands of length 10 plus one [0, 2.53e17] band) the median gives
+  * width 8: the sentinel spans past the bucket cap and goes to the
+  * residual. The mean (≈ 6.2e15) would give width 2^52: the sentinel
+  * would span ~56 buckets and stay binned, and every non-negative point
+  * and every band would share bucket 0, so the binned join would verify
+  * all of those point × band pairs.
+  * q_range_join runs the naive spelling through this rule;
+  * RangeRuleSpec pins brute-force equality, the NestedLoop-free plan
+  * shape, NaN/Inf/sentinel exactness through the residual, and the
+  * adaptive width.
   */
 object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
   import Binning._
@@ -147,7 +155,7 @@ object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
         case Some((p, lo, hi, pointIsLeft)) =>
           val (point, dim) = if (pointIsLeft) (left, right) else (right, left)
           val stats = sideStats(dim, lo, hi)
-          val width = widthOf(stats, BinWidth)
+          val width = widthOf(stats.median, BinWidth)
           val needResidual = unsafePossible(stats, width)
           val safe = safeSpan(lo, hi, width)
           val pk = Alias(bucketOf(p, width), BkName)()

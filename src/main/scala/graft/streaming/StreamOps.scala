@@ -173,7 +173,9 @@ object StreamOps {
       |FROM pairs ORDER BY prev_type, event_type""".stripMargin
 
   /** Runs a streaming frame to a parquet sink under AvailableNow and
-    * reads the sink back as a batch frame. */
+    * reads the sink back as a batch frame, with the stream's own schema:
+    * the read-back infers nothing (no footer-merge job), and a stream
+    * that emitted no rows gives an empty frame. */
   private[graft] def runToParquet(s: SparkSession, out: DataFrame): DataFrame = {
     // Every sentinel-driven replay here relies on the trailing
     // NO-DATA micro-batch: the sentinel batch advances the watermark,
@@ -194,7 +196,7 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(s"$scratch/out")
+    s.read.schema(out.schema).parquet(s"$scratch/out")
   }
 
   /** Runs `src` under AvailableNow through an append-only foreachBatch

@@ -151,10 +151,11 @@ class IntervalRuleSpec extends AnyFunSuite {
 
   test("a sentinel-span row (epoch-micros against a seconds width) no longer fails") {
     import spark.implicits._
-    // One outlier interval among many sane ones, whose span is ~1e14
-    // buckets at the probed width: the pre-r10 rewrite threw 'Too
-    // long sequence'; now the outlier routes to the residual and the
-    // query answers exactly.
+    // One outlier interval among sane ones: the pre-r10 rewrite threw
+    // 'Too long sequence'. Among 41 rows the outlier drags the mean
+    // span, and so the width, up with it (it then spans ~56 buckets
+    // and stays on the binned path); among many rows it routes to the
+    // residual (next test). Either way the query answers exactly.
     val lrows = (0 until 40).map(i =>
       (s"L$i", i * 5000.0, i * 5000.0 + 4000.0)) :+ ("Lsent", 0.0, 2.53e17)
     val l = lrows.toDF("la", "lo1", "hi1")
@@ -168,8 +169,51 @@ class IntervalRuleSpec extends AnyFunSuite {
       if lo1 <= hi2 && lo2 <= hi1
     } yield (la, rb)).sorted
     assert(got == want)
-    // the sentinel matches everything — proof the residual kept it
+    // the sentinel matches everything, and every match survives on
+    // the path it took
     assert(got.count(_._1 == "Lsent") == rs.size)
+  }
+
+  test("a sentinel-span row among many sane rows takes the residual") {
+    import spark.implicits._
+    // 400 sane rows keep the mean span near 6e14, so the sentinel
+    // spans ~450 buckets, past the cap: the probe's max finite length
+    // switches the residual on and the outlier joins exactly there.
+    val lrows = (0 until 400).map(i =>
+      (s"L$i", i * 5000.0, i * 5000.0 + 4000.0)) :+ ("Lsent", 0.0, 2.53e17)
+    val l = lrows.toDF("la", "lo1", "hi1")
+    val r = rs.toDF("rb", "lo2", "hi2")
+    val joined = l.join(r,
+      col("lo1") <= col("hi2") && col("lo2") <= col("hi1"))
+    val p = joined.queryExecution.executedPlan.toString
+    assert(p.contains("BroadcastNestedLoopJoin"), s"residual missing, plan:\n$p")
+    val got = joined.collect().map(x => (x.getString(0), x.getString(3)))
+      .sorted.toSeq
+    val want = (for {
+      (la, lo1, hi1) <- lrows; (rb, lo2, hi2) <- rs
+      if lo1 <= hi2 && lo2 <= hi1
+    } yield (la, rb)).sorted
+    assert(got == want)
+    assert(got.count(_._1 == "Lsent") == rs.size)
+  }
+
+  test("the bin width tracks the MEAN span when most intervals are points") {
+    import spark.implicits._
+    // 95 zero-length intervals and 5 of 800: the median is 0 (it
+    // would give the BinWidth fallback), the mean is 40. Both the
+    // driver-side path (a local side) and the probe job (a
+    // checkpointed side) must land within 2x of the mean.
+    val rows = (0 until 100).map(i =>
+      (s"i$i", i * 1000.0, i * 1000.0 + (if (i % 20 == 0) 800.0 else 0.0)))
+    def width(l: org.apache.spark.sql.DataFrame): Double = {
+      val r = l.toDF("rb", "lo2", "hi2")
+      TestSpark.bucketWidth(l.join(r, col("lo1") <= col("hi2") && col("lo2") <= col("hi1")))
+    }
+    val local = rows.toDF("la", "lo1", "hi1")
+    for ((name, side) <- Seq("local" -> local, "checkpointed" -> local.localCheckpoint())) {
+      val w = width(side)
+      assert(w >= 20.0 && w <= 80.0 && w != G, s"$name side: width $w, mean span 40")
+    }
   }
 
   test("the bin width adapts to the data's interval lengths (stats probe)") {
@@ -180,7 +224,7 @@ class IntervalRuleSpec extends AnyFunSuite {
       TestSpark.bucketWidth(l.join(r, col("lo1") <= col("hi2") && col("lo2") <= col("hi1")))
     }
     // short sessions (~40s) and long shifts (~40000s) through the SAME
-    // rule: each must get a width at its own scale — the probed median
+    // rule: each must get a width at its own scale — the probed mean
     // quantized to a power of two, within 2x either side.
     val short = (0 until 50).map(i => (s"s$i", i * 100.0, i * 100.0 + 40.0))
     val long = (0 until 50).map(i => (s"l$i", i * 1e5, i * 1e5 + 40000.0))

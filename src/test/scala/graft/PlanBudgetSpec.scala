@@ -1020,6 +1020,20 @@ class PlanBudgetSpec extends AnyFunSuite {
       s"feature extraction promises map-side decode, plan:\n$p")
   }
 
+  test("q_session_overlap plans with one binning probe, at the mean-span width") {
+    // Building the frame runs the session checkpoint; planning it may
+    // run only the IntervalOverlapJoin stats probe, once for both
+    // sides of the self-join (a probe is one aggregate: up to two jobs
+    // under AQE). The width is the mean span quantized to a power of
+    // two — sf0.001's 946 sessions average 47.3 s, so 64 (sf0.01 and
+    // sf0.1 average ~43 s: 32) — not the 1800 fallback of a zero
+    // median (894 of the 946 are single-event).
+    val df = SparkEntry.queries("q_session_overlap")(spark, dir)
+    val (_, jobs) = TestSpark.jobsDuring(df.queryExecution.optimizedPlan)
+    assert(jobs <= 2, s"planning ran $jobs jobs")
+    assert(TestSpark.bucketWidth(df) == 64.0)
+  }
+
   test("q1_agg aggregates inside whole-stage codegen") {
     // The plain plan string hides codegen stage boundaries; the
     // codegen explain mode lists every WholeStageCodegen subtree.

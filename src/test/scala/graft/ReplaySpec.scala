@@ -124,6 +124,21 @@ class ReplaySpec extends AnyFunSuite {
     assert(spark.streams.active.isEmpty)
   }
 
+  test("runToParquet reads back with the stream's schema; an empty sink is an empty frame") {
+    val ev = planted(epochNanos = false)
+    def stream() = new Stager(ev.schema).stage(Stager.idSlices(ev): _*)
+      .stream(spark)
+    // A file source reads every column as nullable, as inference did.
+    def fields(df: DataFrame) = df.schema.map(f => (f.name, f.dataType, f.nullable))
+    val want = ev.schema.map(f => (f.name, f.dataType, true))
+    val none = StreamOps.runToParquet(spark, stream().filter(lit(false)))
+    assert(fields(none) == want)
+    assert(none.count() == 0L)
+    val all = StreamOps.runToParquet(spark, stream())
+    assert(fields(all) == want)
+    assert(all.collect().toSet == ev.collect().toSet)
+  }
+
   test("runToMemory leaves no sink view behind; its frames still collect") {
     val ev = planted(epochNanos = false)
     def counts(by: String) = StreamOps.runToMemory(

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Divide, Floor, LessThan, Literal, Rand}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
@@ -32,5 +36,37 @@ object TestSpark {
       .distinct
     assert(ws.size == 1, s"expected one bucket width in the plan, got $ws")
     ws.head
+  }
+
+  private val MarkerKey = "graft.test.jobsDuring"
+
+  /** `body`'s value and the number of Spark jobs that start while it
+    * runs. The listener bus is asynchronous, so a marker job before
+    * and after `body` brackets it: once a marker's start has arrived,
+    * every earlier job's has too. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val markers = new Semaphore(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(MarkerKey) != null))
+          markers.release()
+        else jobs.incrementAndGet()
+    }
+    def marker(): Unit = {
+      sc.setLocalProperty(MarkerKey, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(MarkerKey, null)
+      assert(markers.tryAcquire(60, TimeUnit.SECONDS), "marker job never seen")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker()
+      jobs.set(0)
+      val out = body
+      marker()
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
   }
 }

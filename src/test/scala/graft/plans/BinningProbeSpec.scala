@@ -1,13 +1,10 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.TestSpark
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the two hidden-work seams of the [[Binning]] plan-time stats
+/** Pins the hidden-work seams of the [[Binning]] plan-time stats
   * probe (the one place this engine runs work during optimization):
   *
   *  1. A STREAMING interval side must degrade to the conservative
@@ -20,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     that has since gained a NaN/Inf bound would omit the residual
   *     branch and mis-bin those rows), so the cache key carries a
   *     data-version fingerprint and an overwritten side re-derives.
+  *  3. A checkpointed side is versioned by its RDD id, and lo/hi are
+  *     keyed by their place in the side's output: the two sides of a
+  *     self-join over one checkpoint share one probe, and a fresh
+  *     checkpoint of the same rows probes again.
   */
 class BinningProbeSpec extends AnyFunSuite {
 
@@ -34,25 +35,14 @@ class BinningProbeSpec extends AnyFunSuite {
     assert(plan.isStreaming)
     val lo = plan.output.find(_.name == "lo").get
     val hi = plan.output.find(_.name == "hi").get
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val st = Binning.sideStats(plan, lo, hi)
-      // Conservative degradation: no data-derived width, residual ON.
-      assert(st.median.isEmpty)
-      assert(st.nonFiniteOrUnknown > 0)
-      assert(Binning.widthOf(st, fallback = 64.0) == 64.0)
-      assert(Binning.unsafePossible(st, 64.0))
-      // The listener bus is async; give any (wrongly started) job's
-      // event time to surface before asserting none did.
-      Thread.sleep(750)
-      assert(jobs.get() == 0,
-        s"streaming side must not run a probe job, saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (st, jobs) = TestSpark.jobsDuring(Binning.sideStats(plan, lo, hi))
+    // Conservative degradation: no data-derived width, residual ON.
+    assert(st.median.isEmpty)
+    assert(st.mean.isEmpty)
+    assert(st.nonFiniteOrUnknown > 0)
+    assert(Binning.widthOf(st.median, fallback = 64.0) == 64.0)
+    assert(Binning.unsafePossible(st, 64.0))
+    assert(jobs == 0, s"streaming side must not run a probe job, saw $jobs")
   }
 
   test("file overwrite invalidates the cached residual decision") {
@@ -111,5 +101,32 @@ class BinningProbeSpec extends AnyFunSuite {
     assert(f1.isDefined && f2.isDefined, s"file source must fingerprint: $f1")
     assert(f1 != f2,
       s"same-size/count/mtime overwrite must change the fingerprint: $f1")
+  }
+
+  test("a self-join over one checkpointed side probes once; a fresh checkpoint misses") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    def side() = spark.range(0, 200)
+      .selectExpr("id AS k", "id * 10.0 AS lo", "id * 10.0 + 5.0 AS hi")
+      .localCheckpoint()
+    def probe(plan: LogicalPlan, lo: String, hi: String): Binning.SideStats =
+      Binning.sideStats(plan, plan.output.find(_.name == lo).get,
+        plan.output.find(_.name == hi).get)
+    val sess = side()
+    val a = sess.select(col("k").as("ka"), col("lo").as("lo1"), col("hi").as("hi1"))
+    val b = sess.select(col("k").as("kb"), col("lo").as("lo2"), col("hi").as("hi2"))
+    val Join(left, right, _, _, _) =
+      a.join(b, col("lo1") <= col("hi2") && col("lo2") <= col("hi1"))
+        .queryExecution.analyzed: @unchecked
+    assert(Binning.dataFingerprint(left).isDefined,
+      "a checkpointed side must have a data version")
+    val (stL, first) = TestSpark.jobsDuring(probe(left, "lo1", "hi1"))
+    val (stR, second) = TestSpark.jobsDuring(probe(right, "lo2", "hi2"))
+    assert(first > 0, "the first side must run the probe")
+    assert(second == 0, s"the second side must reuse the first's probe, ran $second jobs")
+    assert(stL == stR && stL.mean.contains(5.0), s"$stL vs $stR")
+    val fresh = side().queryExecution.analyzed
+    assert(TestSpark.jobsDuring(probe(fresh, "lo", "hi"))._2 > 0,
+      "a fresh checkpoint is a new data version and must probe again")
   }
 }
