@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -61,7 +62,13 @@ object Bench {
     // run never re-runs, so only the slow tail is ever minimized).
     val spiked =
       scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
+    // Generated classes each slot compiled (a spike's re-run included),
+    // from the JVM-wide codegen counter: 0 means every class came from
+    // the codegen cache.
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiled = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val results = selected.map { case (name, fn) =>
+      val c0 = compiles
       val t1 = timeOne(name, fn)
       val bar = anchors.get(name).map(a => math.max(3.0 * a, 2.0))
       val t = (t1, bar) match {
@@ -70,6 +77,7 @@ object Bench {
           if (t2 >= 0 && t2 < x) { spiked += ((name, x, t2)); t2 } else x
         case _ => t1
       }
+      compiled += name -> (compiles - c0)
       name -> t
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -79,6 +87,8 @@ object Bench {
     val failed = results.values.count(_ < 0)
     val spikes = spiked
       .map { case (n, raw, kept) => "\"" + n + "\":[" + raw + "," + kept + "]" }
+      .mkString("{", ",", "}")
+    val codegen = compiled.map { case (n, c) => "\"" + n + "\":" + c }
       .mkString("{", ",", "}")
     // The full per-query map is ~12 KB of JSON — longer than the
     // driver's stdout tail-capture window (BENCH_r12.json recorded
@@ -91,7 +101,7 @@ object Bench {
       java.nio.file.Paths.get("tools", s"bench_last_c$cpus.json")
         .toAbsolutePath.toString)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spikes":$spikes,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"codegen":$codegen,"spikes":$spikes,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full)
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: $e")

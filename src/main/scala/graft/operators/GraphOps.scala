@@ -152,11 +152,16 @@ object GraphOps {
 
   /** Weighted PageRank, one declarative round: contrib(b) = Σ_a
     * r(a)·p(a→b) (edge-keyed join, node-keyed agg), dangling mass as
-    * a broadcast 1-row sum, new iterate rounded to 9dp. Returns
-    * (node, r) for `rounds` rounds from the uniform start.
+    * one scalar sum, new iterate rounded to 9dp. Returns (node, r) for
+    * `rounds` rounds from the uniform start.
     *
-    * All driver-free: node count and dangling mass stay in broadcast
-    * 1-row DataFrames, per-round lineage cut by localCheckpoint. */
+    * The loop invariants are computed once: the transition
+    * probabilities, and each node's `dangling` flag (no out-edge) in
+    * the checkpointed node table. The node count is read once and the
+    * dangling mass once per round, as driver scalars (one tiny agg
+    * job each, the [[Fixpoint.exactSum]] pattern); the divisions by
+    * the node count are the same IEEE double divisions, moved to the
+    * driver. Per-round lineage is cut by localCheckpoint. */
   private[graft] def pageRank(
       s: SparkSession, edges: DataFrame, rounds: Int): DataFrame = {
     val e = edges.localCheckpoint()
@@ -166,33 +171,31 @@ object GraphOps {
     val eprob = e.join(outw, "a")
       .select(col("a"), col("b"), (col("n") / col("outw")).as("p"))
       .localCheckpoint()
-    val nodes = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .distinct()
+    // a node is dangling iff it never appears as a source
+    val nodes = e.select(col("a").as("node"), lit(false).as("dangling"))
+      .unionAll(e.select(col("b").as("node"), lit(true).as("dangling")))
+      .groupBy("node").agg(bool_and(col("dangling")).as("dangling"))
       .localCheckpoint()
-    val nCnt = nodes.agg(count(lit(1)).cast("double").as("nn"))
-    var ranks = nodes.crossJoin(broadcast(nCnt))
-      .select(col("node"), round(lit(1.0) / col("nn"), 9).as("r"))
+    val nn = nodes.count().toDouble
+    var ranks = nodes
+      .select(col("node"), col("dangling"), round(lit(1.0 / nn), 9).as("r"))
       .localCheckpoint()
     for (_ <- 1 to rounds) {
       val contrib = ranks.join(eprob, ranks("node") === eprob("a"))
         .groupBy(col("b").as("cnode"))
         .agg(sum(col("r") * col("p")).as("contrib"))
-      val dang = ranks.join(outw, ranks("node") === outw("a"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0.0)).as("dang"))
-      ranks = ranks.select(col("node"))
+      val dang = ranks.filter(col("dangling"))
+        .agg(coalesce(sum(col("r")), lit(0.0))).head().getDouble(0)
+      ranks = ranks.select(col("node"), col("dangling"))
         .join(contrib, col("node") === col("cnode"), "left")
-        .crossJoin(broadcast(dang))
-        .crossJoin(broadcast(nCnt))
-        .select(col("node"),
+        .select(col("node"), col("dangling"),
           round(
-            lit(1.0 - PrDamp) / col("nn") +
-              lit(PrDamp) * (coalesce(col("contrib"), lit(0.0)) +
-                col("dang") / col("nn")),
+            lit((1.0 - PrDamp) / nn) +
+              lit(PrDamp) * (coalesce(col("contrib"), lit(0.0)) + lit(dang / nn)),
             9).as("r"))
         .localCheckpoint()
     }
-    ranks
+    ranks.select("node", "r")
   }
 
   /** DuckDB twin of [[pageRank]]: unrolled r0..r`rounds` CTEs over the
@@ -270,10 +273,11 @@ object GraphOps {
         "(a,b)-keyed agg bounded by distinct transitions; every round " +
         "is an edge-keyed join + node-keyed agg with per-round " +
         "localCheckpoint (the ccMinLabels/trainKMeans lineage " +
-        "discipline), and node count / dangling mass travel as " +
-        "broadcast 1-row aggregates — nothing ever collects to the " +
-        "driver. Per-round 9dp rounding pins both engines to the same " +
-        "grid so float SUM order cannot drift the oracle. At 100 TB " +
+        "discipline); each node's dangling flag rides the checkpointed " +
+        "node table, and node count / dangling mass come back to the " +
+        "driver as one scalar each (once, and once per round). " +
+        "Per-round 9dp rounding pins both engines to the same grid so " +
+        "float SUM order cannot drift the oracle. At 100 TB " +
         "ranks and edges shuffle on node keys; nothing here is " +
         "event-volume-sized after the first agg",
       Some(

@@ -4584,7 +4584,7 @@ object TextOps {
         "keeps the graph pair-vocab-bounded at web scale) feeds the " +
         "EXACT q_pagerank engine (GraphOps.pageRank: edge-keyed " +
         "join + node-keyed agg per round, 9dp iterate grid, " +
-        "dangling mass as a broadcast 1-row agg) on the " +
+        "dangling mass as one scalar per round) on the " +
         "symmetrized weighted edges; top-30 by (rank, word) via " +
         "TakeOrdered. At 100 TB: one corpus explode to pairs, " +
         "then every round runs on the pair-vocab-bounded graph",

@@ -203,20 +203,25 @@ object StreamOps {
     * STATE TABLE — each micro-batch's `fold(batch, batchId)` rows are
     * appended to one parquet dir, never rewritten — and reads the
     * table back as a batch frame: the state a live pipeline persists,
-    * where each trigger scans only the new batch. */
+    * where each trigger scans only the new batch. The read-back takes
+    * the first batch's fold schema, so it infers nothing (no
+    * footer-merge job); only a run with no batch at all infers. */
   private[graft] def runToState(src: DataFrame)(
       fold: (DataFrame, Long) => DataFrame): DataFrame = {
     val scratch = Scratch.dir()
+    val schema = new java.util.concurrent.atomic.AtomicReference[StructType]
     src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        fold(batch, batchId).write.mode("append").parquet(s"$scratch/state")
-        ()
+        val out = fold(batch, batchId)
+        schema.compareAndSet(null, out.schema)
+        out.write.mode("append").parquet(s"$scratch/state")
       }
       .option("checkpointLocation", s"$scratch/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    src.sparkSession.read.parquet(s"$scratch/state")
+    val read = src.sparkSession.read
+    Option(schema.get).fold(read)(read.schema).parquet(s"$scratch/state")
   }
 
   /** A testdata table as a streaming file source. The table is a
@@ -971,9 +976,9 @@ object StreamOps {
       val slices = Stager.idSlices(raw)
       val staged = new Stager(raw.schema)
       val scratch = Scratch.dir()
+      def projected() = staged.stream(s).select(col("event_type"), col("value"))
       def runOnce(): Unit = {
-        val q = staged.stream(s)
-          .select(col("event_type"), col("value"))
+        val q = projected()
           .writeStream
           .format("parquet")
           .option("path", s"$scratch/out")
@@ -986,7 +991,8 @@ object StreamOps {
       runOnce() // run 1: slices 0 and 1
       staged.stage(slices(2)) // the file that arrives while the pipeline is down
       runOnce() // run 2: resumes from the checkpoint, sees only slice 2
-      s.read.parquet(s"$scratch/out")
+      // the sink read back with the stream's schema, as runToParquet
+      s.read.schema(projected().schema).parquet(s"$scratch/out")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           graft.functions.Portable.exactSum(col("value")).as("sum_value"))

@@ -139,6 +139,43 @@ class ReplaySpec extends AnyFunSuite {
     assert(all.collect().toSet == ev.collect().toSet)
   }
 
+  test("runToState reads its state table back with the fold's schema, inferring nothing") {
+    val ev = planted(epochNanos = false)
+    def stream() = new Stager(ev.schema).stage(Stager.idSlices(ev): _*)
+      .stream(spark)
+    val fold = (b: DataFrame, id: Long) => b.withColumn("batch_id", lit(id))
+    // Both sources are staged before any count starts. The same run
+    // without the read-back spends every job runToState may spend.
+    val (bare, src) = (stream(), stream())
+    val (_, runJobs) = TestSpark.jobsDuring {
+      val dir = ckpt()
+      bare.writeStream
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          fold(b, id).write.mode("append").parquet(s"$dir/state")
+        }
+        .option("checkpointLocation", s"$dir/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    val (state, jobs) = TestSpark.jobsDuring(StreamOps.runToState(src)(fold))
+    assert(jobs == runJobs)
+    // Every column nullable, as inference read them; batch_id's lit is not.
+    assert(state.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+      ev.schema.map(f => (f.name, f.dataType, true)) :+ (("batch_id", LongType, true)))
+  }
+
+  test("q_stream_resume reads its sink back with the stream's schema, inferring nothing") {
+    val dir = "/root/testdata/sf0.001"
+    Tables.load(spark, dir, "events") // the table's schema, cached first
+    val (out, jobs) = TestSpark.jobsDuring(
+      SparkEntry.queries("q_stream_resume")(spark, dir))
+    // Three slice files staged, one job each, and one job per sink
+    // batch: two in the first run, one in the resumed run.
+    assert(jobs == 3 + 2 + 1)
+    assert(out.count() > 0)
+  }
+
   test("runToMemory leaves no sink view behind; its frames still collect") {
     val ev = planted(epochNanos = false)
     def counts(by: String) = StreamOps.runToMemory(
